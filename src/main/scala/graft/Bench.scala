@@ -14,15 +14,23 @@ import org.apache.spark.sql.SparkSession
   * session, UTC, UI off.
   */
 object Bench {
+
+  /** The bench session's config. It leaves Spark's codegen cache at its
+    * default size, unlike [[Sessions.local]]: the cold-pass protocol
+    * measures each lane's compiles too. */
+  def sessionConf(cpus: String): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false"
+  )
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(sessionConf(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

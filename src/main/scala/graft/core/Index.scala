@@ -28,9 +28,66 @@ object Index {
     q.replace("/", "//").replace("%", "/%").replace("_", "/_").replace("*", "%")
 
   /** LIKE with `/` escape — Column form of the reference's
-    * `LIKE ? ESCAPE '/'`. */
-  def likeEscaped(c: Column, pattern: String): Column =
-    like(c, lit(pattern), lit("/"))
+    * `LIKE ? ESCAPE '/'`.
+    *
+    * `Like` compiles its regex into the generated class, so every new
+    * pattern costs a Janino compile, and Spark's `LikeSimplification`
+    * skips any pattern that contains the escape char (every sanitized
+    * path pattern does). Patterns without a `_` wildcard are lowered
+    * here to string predicates whose literals the generated code
+    * references rather than inlines, so one class serves every pattern
+    * of the same shape; parquet can also push `StartsWith`. With
+    * literal segments `a`, `m`, `b`:
+    *  - `a` → `c = a`;
+    *  - `a%b` → `StartsWith(a) && EndsWith(b)`, plus a length guard only
+    *    when `a` and `b` can overlap in a short string;
+    *  - `a%m%b` → `StartsWith(a) && EndsWith(b) && Contains(m)` when no
+    *    occurrence of `m` can overlap `a` or `b`, so any occurrence lies
+    *    between them.
+    * Everything else (a `_` wildcard, more `%`s, overlapping segments,
+    * a malformed escape) stays a `like`. All forms are null on a null
+    * input, as `like` is. */
+  def likeEscaped(c: Column, pattern: String): Column = {
+    def affix(a: String, b: String): Column =
+      Seq(a -> c.startsWith(a), b -> c.endsWith(b)).collect { case (s, p) if s.nonEmpty => p }
+        .reduceOption(_ && _).getOrElse(c.startsWith(""))
+    likeSegments(pattern) match {
+      case Some(Seq(exact)) => c === exact
+      case Some(Seq(a, b)) if overlap(a, b) =>
+        affix(a, b) && length(c) >= a.codePointCount(0, a.length) + b.codePointCount(0, b.length)
+      case Some(Seq(a, b)) => affix(a, b)
+      case Some(Seq(a, m, b)) if !a.contains(m) && !overlap(a, m) && !b.contains(m) && !overlap(m, b) =>
+        affix(a, b) && c.contains(m)
+      case _ => like(c, lit(pattern), lit("/"))
+    }
+  }
+
+  /** The literal segments of a `/`-escaped LIKE pattern around its
+    * unescaped `%`s (runs of `%` count as one), or None when the
+    * pattern has a `_` wildcard or an escape `like` would reject. */
+  private def likeSegments(pattern: String): Option[Seq[String]] = {
+    val segs = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var lastWasWild = false
+    var i = 0
+    while (i < pattern.length) {
+      pattern.charAt(i) match {
+        case '/' if i + 1 < pattern.length && "/%_".indexOf(pattern.charAt(i + 1)) >= 0 =>
+          cur.append(pattern.charAt(i + 1)); lastWasWild = false; i += 2
+        case '/' | '_' => return None
+        case '%' =>
+          if (!lastWasWild) { segs += cur.toString; cur.clear() }
+          lastWasWild = true; i += 1
+        case ch => cur.append(ch); lastWasWild = false; i += 1
+      }
+    }
+    Some((segs += cur.toString).result())
+  }
+
+  /** True when some non-empty suffix of `a` is a prefix of `b`: an
+    * occurrence of `b` can then start inside a leading `a`. */
+  private def overlap(a: String, b: String): Boolean =
+    (1 to math.min(a.length, b.length)).exists(k => a.endsWith(b.take(k)))
 
   /** Path match predicate — ref `getMatchingEntries`
     * (`dbops.cpp:916-987`): sanitized pattern, folder rows also match
@@ -40,9 +97,14 @@ object Index {
     val self = likeEscaped(col("path"), pat)
     // folder expansion appends escaped-'/' + wildcard: 'folder' also
     // matches 'folder/%' (ref appends `//%`, dbops.cpp:916-987)
-    if (expandFolders) self || likeEscaped(col("path"), pat + "//%")
+    if (expandFolders && !endsInPercent(pat)) self || likeEscaped(col("path"), pat + "//%")
     else self
   }
+
+  /** A pattern ending in an unescaped `%` already matches every path
+    * beneath its matches, so its folder expansion adds nothing. */
+  private def endsInPercent(pat: String): Boolean =
+    likeSegments(pat).exists(s => s.size > 1 && s.last.isEmpty)
 
   /** Depth from path — ref `dbops.cpp` (`depth` = number of '/'). */
   def depthOf(path: Column): Column =
@@ -85,7 +147,10 @@ object Index {
       // non-recursive folder listing shows direct children only (ls
       // semantics, ddb_test.cpp matrix); recursive shows all
       val patDepth = p.count(_ == '/') + 1
-      val pred = if (recursive) self || children else self || (children && col("depth") <= patDepth)
+      val pred =
+        if (endsInPercent(pat)) self
+        else if (recursive) self || children
+        else self || (children && col("depth") <= patDepth)
       entries.filter(pred)
     }
     val unioned = parts.reduce(_ unionByName _).dropDuplicates("path")

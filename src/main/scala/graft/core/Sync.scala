@@ -18,23 +18,24 @@ object Sync {
     * driver one partition at a time via `toLocalIterator` — a global
     * sort range-partitions the data, so partition-by-partition
     * iteration preserves global order and driver memory stays bounded
-    * by one partition even at a 100M-file index.
+    * by one partition even at a 100M-file index. Entries and meta ids
+    * go through ONE sort as a tagged union — `(0, path, hash)` rows
+    * before `(1, id, null)` rows — so a stamp pays one sort pipeline,
+    * not two, and folds the same bytes in the same order.
     */
   def stampChecksum(entries: DataFrame, meta: DataFrame): String = {
     import scala.jdk.CollectionConverters._
     val md = MessageDigest.getInstance("SHA-256")
     entries
-      .select(col("path"), col("hash"))
-      .orderBy("path")
+      .select(lit(0).as("tag"), col("path").as("key"), col("hash").as("value"))
+      .unionByName(meta.select(lit(1).as("tag"), col("id").as("key"), lit(null).cast("string").as("value")))
+      .orderBy("tag", "key")
       .toLocalIterator()
       .asScala
-      .foreach { r => md.update(r.getString(0).getBytes("UTF-8")); md.update(r.getString(1).getBytes("UTF-8")) }
-    meta
-      .select(col("id"))
-      .orderBy("id")
-      .toLocalIterator()
-      .asScala
-      .foreach(r => md.update(r.getString(0).getBytes("UTF-8")))
+      .foreach { r =>
+        md.update(r.getString(1).getBytes("UTF-8"))
+        if (r.getInt(0) == 0) md.update(r.getString(2).getBytes("UTF-8"))
+      }
     md.digest().map("%02x".format(_)).mkString
   }
 

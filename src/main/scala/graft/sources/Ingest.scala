@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Index
 import graft.model.EntryType
@@ -12,7 +18,8 @@ import graft.model.EntryType
   *
   * Scale design: `binaryFile` scans parallelize across executors; the
   * mtime-before-hash short-circuit (`dbops.cpp:441-472`) becomes a
-  * join predicate so unchanged files never read content; the upsert is
+  * join on the content-free listing, so unchanged files are never
+  * read ([[changedFiles]]); the upsert is
   * union + row_number dedup (newest wins), one shuffle on path.
   */
 object Ingest {
@@ -20,11 +27,18 @@ object Ingest {
   /** Recursive dir scan — ref `getPathList` (`dbops.cpp:200-275`):
     * walk tree, skip `.ddb`. Metadata-only listing (no content read). */
   def listFiles(s: SparkSession, root: String): DataFrame =
-    s.read
-      .format("binaryFile")
-      .option("pathGlobFilter", "*")
-      .option("recursiveFileLookup", "true")
-      .load(root)
+    fileRows(
+      s.read
+        .format("binaryFile")
+        .option("pathGlobFilter", "*")
+        .option("recursiveFileLookup", "true")
+        .load(root)
+    )
+
+  /** `binaryFile` rows in the listing shape; `content` is read only if
+    * a consumer keeps the column. */
+  private def fileRows(binary: DataFrame): DataFrame =
+    binary
       .filter(!col("path").contains("/.ddb/"))
       .select(
         regexp_replace(col("path"), "^file:", "").as("abs_path"),
@@ -123,15 +137,64 @@ object Ingest {
       .withColumn("depth", Index.depthOf(col("path")))
   }
 
-  /** Incremental add: which files actually need hashing/parsing —
-    * mtime join against the index short-circuits unchanged paths
-    * before any content is touched (ref `dbops.cpp:441-472`). */
-  def changedFiles(files: DataFrame, index: DataFrame): DataFrame =
-    files.join(
-      index.select(col("path"), col("mtime").as("idx_mtime")),
-      files("abs_path").endsWith(col("path")), // caller aligns roots; kept simple for fixtures
+  /** Incremental add: the files that need hashing and parsing, in the
+    * [[listFiles]] shape — ref `dbops.cpp:441-472`, where an unchanged
+    * mtime short-circuits before any content is read.
+    *
+    * `files` is a [[listFiles]] listing (absolute paths) and `index` an
+    * entries index (paths relative to the dataset root). A file matches
+    * an entry when its path is the entry path or ends with `/` + the
+    * entry path; the match is an equi-join on the file name with that
+    * suffix check as residual, and when several entries match (`b/c.jpg`
+    * and `a/b/c.jpg` both match `…/a/b/c.jpg`) the longest wins. A file
+    * is changed when it has no match or its mtime differs. The root is
+    * not known here, so a new file whose path still ends in some
+    * indexed path (a new `x/b/c.jpg` beside an indexed `b/c.jpg`, with
+    * no `x/b/c.jpg` entry) counts as that entry.
+    *
+    * The join runs on the listing without `content` and its result is
+    * collected: the changed files are then read with Spark's own
+    * `binaryFile` reader over exactly that file list (no glob
+    * expansion, so `[`, `*` or `?` in a name are literal). Unchanged
+    * files are never read, and the reads of changed ones show in the
+    * scan's task input metrics. The Spark driver holds the changed file list,
+    * as Spark's file index already holds the whole listing. */
+  def changedFiles(files: DataFrame, index: DataFrame): DataFrame = {
+    def fileName(c: Column) = substring_index(c, "/", -1)
+    val idx = index.select(col("path").as("idx_path"), col("mtime").as("idx_mtime"))
+    val listed = files.select("abs_path", "mtime", "size")
+    val matched = listed.join(
+      idx,
+      fileName(col("abs_path")) === fileName(col("idx_path")) &&
+        (col("abs_path") === col("idx_path") || col("abs_path").endsWith(concat(lit("/"), col("idx_path")))),
       "left_outer"
-    ).filter(col("idx_mtime").isNull || col("idx_mtime") =!= col("mtime"))
+    )
+    val changed = matched
+      .groupBy("abs_path", "mtime", "size")
+      .agg(max_by(col("idx_mtime"), length(col("idx_path"))).as("idx_mtime"))
+      .filter(col("idx_mtime").isNull || col("idx_mtime") =!= col("mtime"))
+      .select("abs_path", "size", "mtime")
+      .collect()
+    val statuses = changed.toSeq.map { r =>
+      val p = r.getString(0) // local paths lost their `file:` in listFiles
+      new FileStatus(r.getLong(1), false, 1, r.getLong(1), r.getLong(2) * 1000L,
+        if (p.startsWith("/")) new Path("file", null, p) else new Path(p))
+    }
+    val relation = HadoopFsRelation(new KnownFiles(statuses), new StructType(), BinaryFileFormat.schema, None,
+      new BinaryFileFormat, Map.empty)(files.sparkSession)
+    fileRows(files.sparkSession.baseRelationToDataFrame(relation))
+  }
+
+  /** A file index over a known file list: no listing, no globbing. */
+  private final class KnownFiles(files: Seq[FileStatus]) extends FileIndex {
+    def rootPaths: Seq[Path] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+  }
 
   /** Rescan — ref `dbops.cpp:1034-1140`: re-parse indexed entries
     * (optionally restricted to some types) from current file bytes and

@@ -121,6 +121,16 @@ class MetaSyncSpec extends SparkSuite {
     assert(Sync.stampChecksum(e2, Seq.empty[MetaRow].toDF()) !== c1)
   }
 
+  test("stamp folds (path, hash) in path order, then meta ids in id order, in one sort stream") {
+    val entries = Seq(("b.jpg", "h2"), ("a.jpg", "h1"), ("dir", "")).toDF("path", "hash")
+    val meta = Seq(MetaRow("m2", "a.jpg", "k", "1", 1L), MetaRow("m1", "b.jpg", "k", "2", 1L)).toDF()
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    Seq("a.jpg", "h1", "b.jpg", "h2", "dir", "", "m1", "m2").foreach(s => md.update(s.getBytes("UTF-8")))
+    val (got, probe) = JobProbe(spark)(Sync.stampChecksum(entries, meta))
+    assert(got === md.digest().map("%02x".format(_)).mkString)
+    assert(probe.jobs <= 4, probe)
+  }
+
   test("delta adds/removes semantics") {
     val dest = Seq(("a.jpg", "h1"), ("b.jpg", "h2"), ("dir", ""), ("dir/c.jpg", "h3")).toDF("path", "hash")
     val source = Seq(("a.jpg", "h1"), ("b.jpg", "MODIFIED"), ("dir", ""), ("new.jpg", "h9")).toDF("path", "hash")

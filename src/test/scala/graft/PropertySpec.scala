@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, like, lit}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Properties}
 
 import graft.core.Index
@@ -75,6 +78,60 @@ object PathProps extends Properties("paths") {
         } else { unescaped.append(s.charAt(i)); i += 1 }
       }
       unescaped.toString == p
+    }
+
+  /** `Index.likeEscaped` lowers patterns to string predicates; each
+    * side is evaluated on the Spark driver (a local relation) against the
+    * plain `like`, null rows included, for user patterns before and
+    * after folder expansion and for raw `_` / `%` / escape patterns. */
+  private val likeChar = Gen.oneOf('a', 'b', '/', '_', '%', '*', '.')
+  private val likePath = Gen.listOfN(6, likeChar).flatMap(cs => Gen.choose(0, 6).map(n => cs.take(n).mkString))
+  private val userPattern = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, likeChar)).map(_.mkString)
+  private val rawPattern = Gen
+    .choose(0, 6)
+    .flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", ".", "%", "_", "//", "/%", "/_")))
+    .map(_.mkString)
+
+  /** Each (lowered, reference) pair gives the same value on every path
+    * and on a null path. */
+  private def sameRows(paths: Seq[String], pairs: Seq[(Column, Column)]): Boolean = {
+    val rows = (paths :+ null).map(p => org.apache.spark.sql.Row(p))
+    val df = TestSpark.spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("path", StringType, nullable = true)))
+    )
+    pairs.forall { case (got, want) => df.select(got, want).collect().forall(r => r.get(0) == r.get(1)) }
+  }
+
+  private def likeRef(pat: String): Column = like(col("path"), lit(pat), lit("/"))
+
+  /** Paths built from a user pattern's own pieces, so many of them match. */
+  private def near(p: String): Gen[Seq[String]] =
+    Gen.listOfN(8, Gen.listOfN(p.count(_ == '*'), likePath).map { fills =>
+      val it = fills.iterator
+      p.map(c => if (c == '*') it.next() else c.toString).mkString
+    })
+
+  property("lowered like selects the rows like(path, sanitizeQueryParam(p), '/') selects") = {
+    val cases = for {
+      p <- userPattern
+      paths <- Gen.listOfN(8, likePath)
+      close <- near(p)
+      children <- near(p + "/*")
+    } yield (p, paths ++ close ++ children)
+    Prop.forAll(cases) { case (p, paths) =>
+      val pat = Index.sanitizeQueryParam(p)
+      sameRows(paths, Seq(
+        Index.likeEscaped(col("path"), pat) -> likeRef(pat),
+        Index.likeEscaped(col("path"), pat + "//%") -> likeRef(pat + "//%"),
+        Index.pathMatches(p) -> (likeRef(pat) || likeRef(pat + "//%"))
+      ))
+    }
+  }
+
+  property("raw patterns with _ and % wildcards keep like's answers") =
+    Prop.forAll(rawPattern, Gen.listOfN(12, likePath)) { (pat, paths) =>
+      sameRows(paths, Seq(Index.likeEscaped(col("path"), pat) -> likeRef(pat)))
     }
 
   property("glob regex: matched strings keep prefix before first *") = {

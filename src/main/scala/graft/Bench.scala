@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the query inventory on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Protocol mirrors
   * BASELINE.md §3: warmup, then THREE full end-to-end passes over the
@@ -15,60 +13,22 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The bench session's config. It leaves Spark's codegen cache at its
-    * default size, unlike [[Sessions.local]]: the cold-pass protocol
-    * measures each lane's compiles too. */
-  def sessionConf(cpus: String): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> cpus,
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false"
-  )
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(sessionConf(cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Full evaluation through the no-op sink: every output column is
-    // computed and discarded. Through r13 the action was .count(),
-    // which let the optimizer PRUNE final-projection columns — real
-    // relational work (joins/aggs/filters) was measured, but a query
-    // whose last projection is an expensive UDF (the container-cycle
-    // oracles: q_warc, q_vorbis, q_jp2_lossy, …) had that kernel
-    // optimized out of its number. The protocol tag below breaks the
-    // series so r14+ values are never compared raw against r13-.
-    def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    // Spark's default codegen cache, unlike serving: the cold-pass
+    // protocol measures each lane's compiles too.
+    val spark = Sessions.local(cpus.toInt, Sessions.SparkDefaultCodegenCache)
 
     // JVM/codegen warmup on one representative query
-    try evaluate(SparkEntry.queries("q1_agg")(spark, sfDir))
+    try Lanes.evaluate(SparkEntry.queries("q1_agg")(spark, sfDir))
     catch { case _: Throwable => () }
 
-    def time(fn: => Unit): Double = {
-      val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
-    }
-    def pass(): Seq[(String, Double)] = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val secs =
-        try time(evaluate(fn(spark, sfDir)))
-        catch { case _: Throwable => -1.0 }
-        // drop blocks persisted inside the query plan — cached
-        // intermediates must not accumulate across the 100+-query
-        // session. clearCache() only empties the SQL CacheManager;
-        // localCheckpoint blocks (Graph fixpoint rounds, staged curation
-        // tables) live in the block manager as persistent RDDs and must
-        // be dropped explicitly or they evict/GC-pressure later queries.
-        finally {
-          graft.operators.Staged.releaseAll() // staged tables + checkpointed results
-          spark.catalog.clearCache()
-          // backstop: anything persisted outside the Staged contract
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        }
-      name -> secs
+    // each lane is released after it runs (Lanes.released), so staged
+    // and cached intermediates never accumulate across the 100+-lane
+    // session; a failed lane reads -1
+    def pass(): Seq[(String, Double)] = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      name -> (try Lanes.time(spark, name, sfDir) catch { case _: Throwable => -1.0 })
     }
     // machine-state preamble: same-build totals have spread ±15%
     // session-to-session (NOTES_r11) — recording load/mem at start

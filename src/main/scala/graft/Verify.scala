@@ -1,32 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB-oracle compare
+  * (`tools/check.py`). An optional third argument `q1,q2,…` dumps only
+  * those lanes, and the compare then checks just them.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,...] */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir) = (args(0), args(1))
+    val names = args.lift(2).fold(SparkEntry.queries.keys.toSeq)(_.split(",").toSeq)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown lanes: ${unknown.mkString(",")}")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local(cpus, Sessions.SparkDefaultCodegenCache)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    names.foreach { name =>
+      try Lanes.released(spark) {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop blocks persisted inside the query plan — cached
-      // intermediates must not accumulate across the 100+-query session
-      finally {
-        graft.operators.Staged.releaseAll()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

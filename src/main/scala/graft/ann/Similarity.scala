@@ -536,31 +536,6 @@ object Similarity {
     d
   }
 
-  /** ADC scan: per-subspace query→code distances collapse into an
-    * m×ksub lookup table built once on the driver; a candidate's
-    * approximate distance is m array lookups + adds inside one compiled
-    * closure — the compressed corpus is scanned in a single narrow pass
-    * without touching a full-precision vector. */
-  def pqAdcDistances(
-      codes: DataFrame, // (vec_id, codes) from pqAssign
-      codebook: DataFrame,
-      queryVec: Seq[Double],
-      dsub: Int
-  ): DataFrame = {
-    val m = queryVec.length / dsub
-    val ksub = codebook.agg(max(col("code"))).head().getInt(0) + 1
-    val cb = collectCodebook(codebook, m, ksub, dsub)
-    val q = queryVec.toArray
-    val lut = Array.tabulate(m, ksub)((sb, c) => sq(q, sb * dsub, cb(sb)(c)))
-    val adc = udf { cs: Seq[Int] =>
-      var sb = 0
-      var d = 0.0
-      while (sb < m) { d += lut(sb)(cs(sb)); sb += 1 }
-      d
-    }
-    codes.select(col("vec_id"), adc(col("codes")).as("adc_dist"))
-  }
-
   /** ◆ PQ-ADC search under the oracle: deterministic seed codebook
     * (m=8 × ksub=16 over dim 64), nearest-code encoding, asymmetric-
     * distance top-k for the query vector (vec_id 0). DuckDB re-derives

@@ -194,17 +194,6 @@ object Mercator {
   def pixelsToTile(px: Double, py: Double): (Int, Int) =
     (math.max(0, math.ceil(px / TileSize).toInt - 1), math.max(0, math.ceil(py / TileSize).toInt - 1))
 
-  /** TMS tile bounds in meters — `tiler.cpp:180-190`. */
-  def tileBounds(tx: Int, ty: Int, z: Int): (Double, Double, Double, Double) = {
-    val res = resolution(z)
-    (
-      tx * TileSize * res - OriginShift,
-      ty * TileSize * res - OriginShift,
-      (tx + 1) * TileSize * res - OriginShift,
-      (ty + 1) * TileSize * res - OriginShift
-    )
-  }
-
   /** TMS↔XYZ y flip — `tiler.cpp:219-221`. */
   def tmsToXYZ(ty: Int, z: Int): Int = (1 << z) - 1 - ty
 

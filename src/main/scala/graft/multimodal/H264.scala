@@ -55,7 +55,6 @@ object H264 {
     def se(v: Int): Unit = ue(if (v <= 0) -2 * v else 2 * v - 1)
     def trailing(): Unit = { u(1, 1); if (n != 0) u(0, 8 - n) }
     def alignedZeroBits(): Unit = if (n != 0) u(0, 8 - n)
-    def byteAligned: Boolean = n == 0
     def raw(b: Byte): Unit = { require(n == 0, "h264: raw write unaligned"); out += b }
   }
 
@@ -81,7 +80,6 @@ object H264 {
     }
     def se(): Int = { val k = ue(); if ((k & 1) == 1) (k + 1) / 2 else -(k / 2) }
     def align(): Unit = if (bit != 0) { bit = 0; pos += 1 }
-    def byteAligned: Boolean = bit == 0
     def raw(): Byte = {
       require(bit == 0, "h264: raw read unaligned")
       require(pos < b.length, "h264: truncated rbsp")

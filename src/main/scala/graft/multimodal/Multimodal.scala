@@ -191,20 +191,6 @@ object Multimodal {
       }
   }
 
-  /** Real frame decode for MP4 video payloads (the H.264 I_PCM
-    * subset — `multimodal.H264`): demux the avc1 sample tables and
-    * decode every frame's luma plane to a grayscale Image. None for
-    * non-MP4 payloads or tracks outside the subset (inter-coded
-    * drone H.264 stays metadata-only, the documented boundary). */
-  def mp4Frames(payload: Array[Byte]): Option[Seq[graft.raster.Png.Image]] = {
-    if (payload == null || payload.length < 12 ||
-      !(payload(4) == 'f' && payload(5) == 't' && payload(6) == 'y' && payload(7) == 'p')) return None
-    try {
-      val frames = Mp4Mux.decodeFrames(payload)
-      Some(frames.map(f => graft.raster.Png.Image(f.width, f.height, 1, f.y)))
-    } catch { case _: Exception => None }
-  }
-
   /** 60-bit dHash (difference/gradient perceptual hash): luminance on
     * a 6×11 grid, one bit per horizontally adjacent cell pair
     * (6 rows × 10 comparisons = 60 bits — the engine-neutral signature

@@ -117,4 +117,7 @@ object Staged {
     * registry should serialize releaseAll behind their
     * materializations; concurrent callers should use [[scope]]. */
   def releaseAll(): Unit = drain(active.value)
+
+  /** Release handles waiting in the active registry. */
+  private[graft] def pending: Int = active.value.size
 }

@@ -6,13 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: injects the native vector
   * functions at session build, so a deployment gets them without any
-  * imperative registration call —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  *   .getOrCreate()
-  * }}}
+  * imperative registration call. Every [[graft.Sessions]] session sets
+  * `spark.sql.extensions` to this class; another deployment sets the
+  * same key.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -233,7 +233,4 @@ object Raster {
       Iterator.iterate(start)(_ + iv).takeWhile(_ <= mx).toSeq
     }
   }
-
-  def assignContourLevel(v: Column, interval: Double): Column =
-    (floor(v / interval) * interval).as("level")
 }

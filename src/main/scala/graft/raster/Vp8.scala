@@ -43,7 +43,6 @@ object Vp8 {
       u: Array[Byte],
       v: Array[Byte]) {
     def chromaW: Int = (width + 1) / 2
-    def chromaH: Int = (height + 1) / 2
   }
 
   // ------------------------------------------------------------------

@@ -311,42 +311,6 @@ object Ddb {
 
   import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-  /** Estate read: every .ddb under `pathGlob` as one entries DataFrame
-    * (one file = one binaryFile split = one parse task; the dataset
-    * name is the file's basename). Runs [[ensureSchemaConsistency]]
-    * first, so legacy v0 files read transparently. */
-  def indexTable(s: SparkSession, pathGlob: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val schema = org.apache.spark.sql.types.StructType(
-      Seq(
-        org.apache.spark.sql.types.StructField("dataset", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("hash", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("type", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("properties", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("mtime", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("size", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("depth", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("lon", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("lat", org.apache.spark.sql.types.DoubleType)
-      )
-    )
-    val rows = s.read
-      .format("binaryFile")
-      .load(pathGlob)
-      .select(col("path").as("file"), col("content"))
-      .rdd
-      .flatMap { r =>
-        val name = r.getAs[String]("file").split('/').last.stripSuffix(".ddb")
-        val bytes = ensureSchemaConsistency(r.getAs[Array[Byte]]("content"))
-        readEntries(bytes).map { e =>
-          Row(name, e.path, e.hash, e.typ, e.properties, e.mtime, e.size, e.depth,
-            e.pointGeom.map(_._1).orNull, e.pointGeom.map(_._2).orNull)
-        }
-      }
-    s.createDataFrame(rows, schema)
-  }
-
   /** Oracle row: per-dataset index build → REAL SQLite .ddb bytes →
     * migration-ladder pass → read back (table scan AND the path
     * auto-index walk) → integer aggregates of the decoded rows. The

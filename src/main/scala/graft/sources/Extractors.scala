@@ -79,11 +79,6 @@ object Extractors {
   def fingerprint(path: String, bytes: Array[Byte]): Int =
     extract(path, bytes).entryType
 
-  /** Properties JSON for image types — the `width`/`height` subset of
-    * `entry.cpp:95-281` plus the EXIF fields the pure-JVM walker
-    * recovers (captureTime, make, model, focalLength, orientation). */
-  def imageProperties(bytes: Array[Byte]): String = extract("", bytes).properties
-
   final case class Extracted(
       entryType: Int,
       properties: String,

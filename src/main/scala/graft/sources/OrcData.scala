@@ -353,7 +353,6 @@ object OrcData {
     def stream(col: Int, kind: Int): Array[Byte] =
       streamOpt(col, kind).getOrElse(fail(s"orc data: column $col missing stream kind $kind"))
 
-    def kindOf(col: Int): Int = types(col).kind
     def typeOf(col: Int): OmType = types(col)
   }
 

@@ -39,9 +39,7 @@ object OrcWrite {
       while ((x & ~0x7fL) != 0L) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
       out.write(x.toInt)
     }
-    def zig(v: Long): Unit = varint((v << 1) ^ (v >> 63))
     def field(num: Int, v: Long): Unit = { varint((num.toLong << 3) | 0); varint(v) }
-    def fieldZig(num: Int, v: Long): Unit = { varint((num.toLong << 3) | 0); zig(v) }
     def bytes(num: Int, b: Array[Byte]): Unit = {
       varint((num.toLong << 3) | 2); varint(b.length.toLong); out.write(b, 0, b.length)
     }

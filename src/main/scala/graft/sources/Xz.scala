@@ -138,7 +138,6 @@ object Xz {
       }
       sym
     }
-    def finishedOk: Boolean = code == 0
   }
 
   private val InitProb: Short = 1024
@@ -1102,7 +1101,6 @@ object Xz {
       else { val c = data0.clone(); Bcj(bcjId, c, 0, c.length, 0L, encode = true); c }
     val out = new java.io.ByteArrayOutputStream()
     def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    def wVarint(v0: Long): Unit = { var v = v0; while (v >= 0x80) { out.write(((v & 0x7f) | 0x80).toInt); v >>= 7 }; out.write(v.toInt) }
     // stream header (check = CRC32)
     out.write(Magic)
     val flags = Array[Byte](0, 1)

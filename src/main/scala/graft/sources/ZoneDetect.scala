@@ -57,10 +57,6 @@ object ZoneDetect {
     /** Number of memoized polygon decodes (test observability). */
     def cachedPolygons: Int = polyCache.size
 
-    /** The memoized instance for a cached offset, if present (test
-      * observability: identity proves no re-decode). */
-    def cachedPolygon(pidx: Int): Option[Array[Long]] = Option(polyCache.get(pidx))
-
     private def uvarint(at: Int): (Long, Int) = ZoneDetect.uvarint(bytes, at)
 
     /** Decoded vertex list of the polygon at data-section offset

@@ -276,13 +276,6 @@ object Dedup {
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame =
     hammingCandidates(docs.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig")), maxHamming)
 
-  /** Embedding-cosine near-dup — the fifth dedup modality: multi-table
-    * LSH over the embedding column with exact cosine verification
-    * (delegates to the ANN machinery; candidates never form outside
-    * shared buckets). */
-  def embeddingNearDup(s: SparkSession, dir: String, minCos: Double = 0.35): DataFrame =
-    graft.ann.Similarity.lshNeighbors(s, dir, minCos = minCos)
-
   /** ◆ EXACT embedding near-dup (L2 ≤ ε) with norm-bucket blocking:
     * ‖a−b‖ ≤ ε ⟹ |‖a‖−‖b‖| ≤ ε (reverse triangle inequality), so
     * joining each ε-wide norm bucket against its neighbours is a

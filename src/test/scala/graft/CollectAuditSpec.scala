@@ -68,7 +68,9 @@ class CollectAuditSpec extends SparkSuite {
     try {
       for ((tag, dir) <- Seq("a" -> sf0001, "b" -> sf001); (name, fn) <- SparkEntry.queries) {
         spark.sparkContext.setJobGroup(s"collectaudit:$tag:$name", s"collect audit $name")
-        try fn(spark, dir)
+        // construction alone stages blocks (eager persists, checkpoints):
+        // release them per lane so they never pile up in the shared JVM
+        try Lanes.released(spark)(fn(spark, dir))
         finally spark.sparkContext.clearJobGroup()
       }
       waitUntilListenerEmpty()
@@ -107,13 +109,8 @@ class CollectAuditSpec extends SparkSuite {
     try {
       for ((tag, dir) <- Seq("a" -> sf0001, "b" -> sf001); (name, fn) <- SparkEntry.queries) {
         spark.sparkContext.setJobGroup(s"evalaudit:$tag:$name", s"eval audit $name")
-        try fn(spark, dir).write.format("noop").mode("overwrite").save()
-        finally {
-          spark.sparkContext.clearJobGroup()
-          graft.operators.Staged.releaseAll()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        }
+        try Lanes.released(spark)(Lanes.evaluate(fn(spark, dir)))
+        finally spark.sparkContext.clearJobGroup()
       }
       waitUntilListenerEmpty()
       val bad = SparkEntry.queries.keys.toSeq.sorted.collect {

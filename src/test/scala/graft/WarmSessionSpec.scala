@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.StaticSQLConf
 
 import graft.core.{Index, Sync}
 import graft.model.{Entry, EntryType, MetaRow}
@@ -14,20 +15,25 @@ import graft.sources.Ingest
   * once: a request that differs from an earlier one only in its pattern
   * or site reuses the generated classes. The tests run on the session
   * config the benchmark's serving workload runs on, while `graft.Bench`
-  * keeps Spark's defaults for its cold-pass protocol. */
+  * keeps Spark's default codegen cache for its cold-pass protocol. */
 class WarmSessionSpec extends SparkSuite {
   import spark.implicits._
 
-  test("the shared test session sizes the codegen cache as Sessions.local does; Bench does not") {
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === Sessions.CodegenCacheEntries.toString)
-    assert(
-      Bench.sessionConf("4") === Map(
-        "spark.sql.shuffle.partitions" -> "4",
-        "spark.sql.adaptive.enabled" -> "true",
-        "spark.sql.session.timeZone" -> "UTC",
-        "spark.ui.enabled" -> "false"
-      )
-    )
+  test("the live test session carries every entry of Sessions.conf; the lane config differs only in the codegen cache") {
+    val conf = Sessions.conf(8)
+    conf.foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
+    assert(conf("spark.sql.extensions") === "graft.plans.GraftExtensions")
+    assert(conf("spark.sql.codegen.cache.maxEntries") === Sessions.CodegenCacheEntries.toString)
+    assert(conf("spark.sql.shuffle.partitions") === "8")
+    assert(Sessions.conf(2)("spark.sql.shuffle.partitions") === "4")
+    assert(conf("spark.sql.session.timeZone") === "UTC")
+    assert(conf("spark.sql.adaptive.enabled") === "true")
+    assert(conf("spark.ui.enabled") === "false")
+    // Bench, Verify and tools.TimeLanes: the same map with Spark's own cache size
+    assert(Sessions.SparkDefaultCodegenCache.toString ===
+      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.defaultValueString)
+    assert(Sessions.conf(8, Sessions.SparkDefaultCodegenCache) ===
+      conf.updated("spark.sql.codegen.cache.maxEntries", StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.defaultValueString))
   }
 
   private def entry(path: String, tpe: Int, hash: String = ""): Entry =

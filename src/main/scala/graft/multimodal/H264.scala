@@ -2,6 +2,8 @@ package graft.multimodal
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes
+
 /** H.264/AVC (ITU-T H.264 / ISO 14496-10) — the video half of the
   * media tier. The reference hands video to ffmpeg-style probing and
   * never decodes frames; here the container and bitstream plumbing
@@ -488,8 +490,7 @@ object H264Queries {
   * reads). */
 object Mp4Mux {
 
-  private def be32(v: Long): Array[Byte] =
-    Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
+  private def be32(v: Long): Array[Byte] = { val a = new Array[Byte](4); Bytes.setBe32(a, 0, v.toInt); a }
 
   private def box(tpe: String, parts: Array[Byte]*): Array[Byte] = {
     val body = parts.flatten.toArray
@@ -559,8 +560,6 @@ object Mp4Mux {
     catch { case _: IndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
   private def demux0(bytes: Array[Byte]): Option[Track] = {
-    def be32At(i: Int): Long =
-      ((bytes(i) & 0xffL) << 24) | ((bytes(i + 1) & 0xffL) << 16) | ((bytes(i + 2) & 0xffL) << 8) | (bytes(i + 3) & 0xffL)
     var sps: Array[Byte] = null
     var pps: Array[Byte] = null
     var width = 0; var height = 0
@@ -569,7 +568,7 @@ object Mp4Mux {
     def walk(from: Int, to: Int): Unit = {
       var i = from
       while (i + 8 <= to) {
-        val size = be32At(i)
+        val size = Bytes.be32u(bytes, i)
         if (size < 8 || i + size > to) return
         val tpe = new String(bytes, i + 4, 4, "ISO-8859-1")
         tpe match {
@@ -579,14 +578,14 @@ object Mp4Mux {
             val e = i + 16
             val etype = new String(bytes, e + 4, 4, "ISO-8859-1")
             if (etype == "avc1" || etype == "avc3") {
-              width = ((bytes(e + 32) & 0xff) << 8) | (bytes(e + 33) & 0xff)
-              height = ((bytes(e + 34) & 0xff) << 8) | (bytes(e + 35) & 0xff)
+              width = Bytes.be16(bytes, e + 32)
+              height = Bytes.be16(bytes, e + 34)
               // walk sub-boxes after the 86-byte visual sample entry
               var s = e + 86
-              val eEnd = e + be32At(e).toInt
+              val eEnd = e + Bytes.be32u(bytes, e).toInt
               var subOk = eEnd <= bytes.length
               while (subOk && s + 8 <= eEnd) {
-                val ssz = be32At(s)
+                val ssz = Bytes.be32u(bytes, s)
                 if (ssz < 8 || s + ssz > eEnd) subOk = false
                 else if (new String(bytes, s + 4, 4, "ISO-8859-1") == "avcC") {
                   var p = s + 8 + 5
@@ -594,14 +593,14 @@ object Mp4Mux {
                   require(nSps >= 1, "mp4: avcC without SPS")
                   var k = 0
                   while (k < nSps) { // keep the first, walk past the rest
-                    val spsLen = ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff); p += 2
+                    val spsLen = Bytes.be16(bytes, p); p += 2
                     if (k == 0) sps = java.util.Arrays.copyOfRange(bytes, p, p + spsLen)
                     p += spsLen
                     k += 1
                   }
                   val nPps = bytes(p) & 0xff; p += 1
                   if (nPps >= 1) {
-                    val ppsLen = ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff); p += 2
+                    val ppsLen = Bytes.be16(bytes, p); p += 2
                     pps = java.util.Arrays.copyOfRange(bytes, p, p + ppsLen)
                   }
                 }
@@ -609,16 +608,16 @@ object Mp4Mux {
               }
             }
           case "stsz" =>
-            val n = be32At(i + 16).toInt
-            val fixed = be32At(i + 12)
+            val n = Bytes.be32u(bytes, i + 16).toInt
+            val fixed = Bytes.be32u(bytes, i + 12)
             if (n < 0 || n > bytes.length / 4) return // size table cannot outsize the file
             sizes =
               if (fixed != 0) Array.fill(n)(fixed.toInt)
-              else Array.tabulate(n)(k => be32At(i + 20 + 4 * k).toInt)
+              else Array.tabulate(n)(k => Bytes.be32u(bytes, i + 20 + 4 * k).toInt)
           case "stco" =>
-            val n = be32At(i + 12).toInt
+            val n = Bytes.be32u(bytes, i + 12).toInt
             if (n < 0 || n > bytes.length / 4) return
-            chunkOffsets = Array.tabulate(n)(k => be32At(i + 16 + 4 * k))
+            chunkOffsets = Array.tabulate(n)(k => Bytes.be32u(bytes, i + 16 + 4 * k))
           case _ => ()
         }
         i += math.max(size, 8L).toInt

@@ -3,6 +3,7 @@ package graft.multimodal
 import scala.collection.mutable.ArrayBuffer
 
 import graft.core.MiniJson
+import graft.sources.Bytes.{le32u, leF32, putLe32, putLe64}
 
 /** RAD Gaussian-splat LOD preview container — reference
   * `rad.cpp` / `rad.h` (`readRadCoarseSplats`: "reading only the
@@ -53,11 +54,6 @@ object Rad {
 
   private def roundUp8(n: Int): Int = (n + 7) & ~7
 
-  private def u32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
-  private def putU32(out: ArrayBuffer[Byte], v: Long): Unit = (0 until 4).foreach(k => out += (v >> (8 * k)).toByte)
-  private def putU64(out: ArrayBuffer[Byte], v: Long): Unit = (0 until 8).foreach(k => out += (v >> (8 * k)).toByte)
   private def pad8(out: ArrayBuffer[Byte]): Unit = while (out.length % 8 != 0) out += 0
 
   /** IEEE-754 half → float (rad.cpp:36-73, `half`-crate semantics). */
@@ -138,7 +134,7 @@ object Rad {
           var d = 0
           while (d < dims) {
             val o = (d * count + i) * 4
-            out(i * dims + d) = java.lang.Float.intBitsToFloat(u32(raw, o).toInt)
+            out(i * dims + d) = leF32(raw, o)
             d += 1
           }
           i += 1
@@ -221,8 +217,8 @@ object Rad {
 
   private def readHeader(b: Array[Byte]): Seq[ChunkRef] = {
     require(b.length >= 8, "RAD: cannot read header")
-    require(u32(b, 0) == FileMagic, "RAD: bad magic (not a .rad payload)")
-    val metaLen = u32(b, 4).toInt
+    require(le32u(b, 0) == FileMagic, "RAD: bad magic (not a .rad payload)")
+    val metaLen = le32u(b, 4).toInt
     require(metaLen >= 0 && 8 + metaLen <= b.length, "RAD: truncated header")
     val meta = MiniJson.obj(MiniJson.parse(new String(b, 8, metaLen, "UTF-8")))
     val chunksStart = 8 + roundUp8(metaLen)
@@ -246,8 +242,8 @@ object Rad {
     require(ref.bytes >= 16, "RAD: chunk too small")
     require(ref.fileOffset + ref.bytes <= b.length, "RAD: chunk out of range")
     val at = ref.fileOffset
-    require(u32(b, at) == ChunkMagic, "RAD: bad chunk magic")
-    val cmetaLen = u32(b, at + 4).toInt
+    require(le32u(b, at) == ChunkMagic, "RAD: bad chunk magic")
+    val cmetaLen = le32u(b, at + 4).toInt
     require(cmetaLen >= 0 && 8 + cmetaLen <= ref.bytes, "RAD: chunk meta out of range")
     val cmeta = MiniJson.obj(MiniJson.parse(new String(b, at + 8, cmetaLen, "UTF-8")))
     val count = cmeta.get("count").map(MiniJson.num(_).toInt).getOrElse(0)
@@ -414,11 +410,11 @@ object Rad {
       }
       val cmeta = s"""{"count":${chunk.count},"properties":[${propMetas.mkString(",")}]}""".getBytes("UTF-8")
       val blob = new ArrayBuffer[Byte]()
-      putU32(blob, ChunkMagic)
-      putU32(blob, cmeta.length.toLong)
+      putLe32(blob, ChunkMagic)
+      putLe32(blob, cmeta.length.toLong)
       blob ++= cmeta
       while (blob.length < 8 + roundUp8(cmeta.length)) blob += 0
-      putU64(blob, payload.length.toLong)
+      putLe64(blob, payload.length.toLong)
       blob ++= payload
       blob.toArray
     }
@@ -432,8 +428,8 @@ object Rad {
     }
     val meta = s"""{"version":1,"chunks":[${chunkMetas.mkString(",")}]}""".getBytes("UTF-8")
     val out = new ArrayBuffer[Byte]()
-    putU32(out, FileMagic)
-    putU32(out, meta.length.toLong)
+    putLe32(out, FileMagic)
+    putLe32(out, meta.length.toLong)
     out ++= meta
     while (out.length < 8 + roundUp8(meta.length)) out += 0
     chunkBlobs.foreach(out ++= _)

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{le16, le32, putLe32}
 import graft.sources.Ply
 
 /** Gaussian-splat container codecs — the conversion tier behind the
@@ -123,8 +124,7 @@ object Splats {
     val shDeg = shDegreeOf(splats.headOption.map(_.sh.length).getOrElse(0))
     require(splats.forall(_.sh.length == shCoeffs(shDeg) * 3), "spz: ragged SH lengths")
     val raw = new ArrayBuffer[Byte](16 + splats.length * 20)
-    def u32(v: Int): Unit = { raw += v.toByte; raw += (v >> 8).toByte; raw += (v >> 16).toByte; raw += (v >> 24).toByte }
-    u32(SpzMagic); u32(SpzVersion); u32(splats.length)
+    putLe32(raw, SpzMagic); putLe32(raw, SpzVersion); putLe32(raw, splats.length)
     raw += shDeg.toByte; raw += fractionalBits.toByte; raw += 0; raw += 0
     val scale = (1 << fractionalBits).toFloat
     splats.foreach { s =>
@@ -165,11 +165,9 @@ object Splats {
   def readSpz(bytes: Array[Byte]): (SpzInfo, Seq[Splat]) = {
     val raw = gunzip(bytes)
     require(raw.length >= 16, "spz: truncated header")
-    def u32(i: Int): Int =
-      (raw(i) & 0xff) | ((raw(i + 1) & 0xff) << 8) | ((raw(i + 2) & 0xff) << 16) | ((raw(i + 3) & 0xff) << 24)
-    require(u32(0) == SpzMagic, "spz: bad magic (not an NGSP stream)")
-    require(u32(4) == SpzVersion, s"spz: unsupported version ${u32(4)}")
-    val n = u32(8)
+    require(le32(raw, 0) == SpzMagic, "spz: bad magic (not an NGSP stream)")
+    require(le32(raw, 4) == SpzVersion, s"spz: unsupported version ${le32(raw, 4)}")
+    val n = le32(raw, 8)
     val shDeg = raw(12) & 0xff
     val fracBits = raw(13) & 0xff
     val flags = raw(14) & 0xff
@@ -184,11 +182,8 @@ object Splats {
     val rotAt = scaleAt + 3 * n
     val shAt = rotAt + 3 * n
     val out = (0 until n).map { i =>
-      def p24(at: Int): Float = {
-        val v = (raw(at) & 0xff) | ((raw(at + 1) & 0xff) << 8) | ((raw(at + 2) & 0xff) << 16)
-        val s = if ((v & 0x800000) != 0) v - (1 << 24) else v
-        s / scale
-      }
+      // 24-bit signed: the top byte's sign extends through the shift
+      def p24(at: Int): Float = (le16(raw, at) | (raw(at + 2) << 16)) / scale
       val x = p24(posAt + 9 * i); val y = p24(posAt + 9 * i + 3); val z = p24(posAt + 9 * i + 6)
       val aRaw = (raw(alphaAt + i) & 0xff) / 255f
       val aC = math.max(1e-6f, math.min(1f - 1e-6f, aRaw))

@@ -2,6 +2,8 @@ package graft.multimodal
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{le16, le32u, putLe16, putLe32}
+
 /** Pure-JVM WAV/PCM audio codec — the audio half of the multimodal
   * decode tier (previously fully stubbed; images went real in r10 via
   * Png/Jpeg). RIFF/WAVE container, integer PCM 8/16/24-bit, mono or
@@ -37,10 +39,6 @@ object Wav {
     }
   }
 
-  private def leU16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Decode a RIFF/WAVE integer-PCM stream. None for anything else
     * (compressed formats, float PCM, malformed or truncated
     * containers — flag, don't abort the scan). */
@@ -62,15 +60,15 @@ object Wav {
     var audio: Option[Audio] = None
     while (pos + 8 <= bytes.length && audio.isEmpty) {
       val id = new String(bytes, pos, 4, "US-ASCII")
-      val len = leU32(bytes, pos + 4).toInt
+      val len = le32u(bytes, pos + 4).toInt
       if (len < 0) return None // a 2^31+ chunk length would stall the walk
       val body = pos + 8
       if (id == "fmt " && len >= 16) {
-        fmtTag = leU16(bytes, body)
-        channels = leU16(bytes, body + 2)
-        rate = leU32(bytes, body + 4).toInt
-        blockAlign = leU16(bytes, body + 12)
-        bits = leU16(bytes, body + 14)
+        fmtTag = le16(bytes, body)
+        channels = le16(bytes, body + 2)
+        rate = le32u(bytes, body + 4).toInt
+        blockAlign = le16(bytes, body + 12)
+        bits = le16(bytes, body + 14)
         // 1 = integer PCM; 0xFFFE = extensible (sub-format unchecked —
         // the JDK writes plain PCM this way for >2 channels);
         // 6/7 = G.711 A-law/µ-law (8-bit codes); 0x11 = IMA ADPCM.
@@ -105,7 +103,7 @@ object Wav {
               val at = body + i * bytesPer
               out(i) = bits match {
                 case 8 => bytes(at) & 0xff
-                case 16 => (leU16(bytes, at) << 16) >> 16
+                case 16 => (le16(bytes, at) << 16) >> 16
                 case _ => ((bytes(at) & 0xff) | ((bytes(at + 1) & 0xff) << 8) | (bytes(at + 2) << 16))
               }
               i += 1
@@ -124,14 +122,12 @@ object Wav {
     val dataLen = samples.length * 2
     val out = new ArrayBuffer[Byte](44 + dataLen)
     def str(s: String): Unit = out ++= s.getBytes("US-ASCII")
-    def u16(v: Int): Unit = { out += v.toByte; out += (v >> 8).toByte }
-    def u32(v: Long): Unit = (0 until 4).foreach(k => out += (v >> (8 * k)).toByte)
-    str("RIFF"); u32(36L + dataLen); str("WAVE")
-    str("fmt "); u32(16L)
-    u16(1); u16(channels); u32(sampleRate.toLong)
-    u32(sampleRate.toLong * channels * 2); u16(channels * 2); u16(16)
-    str("data"); u32(dataLen.toLong)
-    samples.foreach(u16)
+    str("RIFF"); putLe32(out, 36L + dataLen); str("WAVE")
+    str("fmt "); putLe32(out, 16L)
+    putLe16(out, 1); putLe16(out, channels); putLe32(out, sampleRate.toLong)
+    putLe32(out, sampleRate.toLong * channels * 2); putLe16(out, channels * 2); putLe16(out, 16)
+    str("data"); putLe32(out, dataLen.toLong)
+    samples.foreach(putLe16(out, _))
     out.toArray
   }
 
@@ -231,7 +227,7 @@ object Wav {
       val at = body + blk * blockAlign
       val state = Array.tabulate(channels) { c =>
         val h = at + 4 * c
-        Array((leU16(b, h) << 16) >> 16, b(h + 2) & 0xff)
+        Array((le16(b, h) << 16) >> 16, b(h + 2) & 0xff)
       }
       // header carries sample 0 per channel
       state.foreach(s => out += s(0))
@@ -315,15 +311,13 @@ object Wav {
     }
     val out = new ArrayBuffer[Byte](60 + data.length)
     def str(s: String): Unit = out ++= s.getBytes("US-ASCII")
-    def u16(v: Int): Unit = { out += v.toByte; out += (v >> 8).toByte }
-    def u32(v: Long): Unit = (0 until 4).foreach(k => out += (v >> (8 * k)).toByte)
-    str("RIFF"); u32(4 + 28 + 12 + 8L + data.length); str("WAVE")
-    str("fmt "); u32(20L)
-    u16(0x11); u16(channels); u32(sampleRate.toLong)
-    u32(sampleRate.toLong * blockAlign / samplesPerBlock); u16(blockAlign); u16(4)
-    u16(2); u16(samplesPerBlock) // cbSize, samplesPerBlock
-    str("fact"); u32(4L); u32(frames.toLong)
-    str("data"); u32(data.length.toLong)
+    str("RIFF"); putLe32(out, 4 + 28 + 12 + 8L + data.length); str("WAVE")
+    str("fmt "); putLe32(out, 20L)
+    putLe16(out, 0x11); putLe16(out, channels); putLe32(out, sampleRate.toLong)
+    putLe32(out, sampleRate.toLong * blockAlign / samplesPerBlock); putLe16(out, blockAlign); putLe16(out, 4)
+    putLe16(out, 2); putLe16(out, samplesPerBlock) // cbSize, samplesPerBlock
+    str("fact"); putLe32(out, 4L); putLe32(out, frames.toLong)
+    str("data"); putLe32(out, data.length.toLong)
     out ++= data
     out.toArray
   }
@@ -333,14 +327,12 @@ object Wav {
     require(sampleRate > 0 && channels > 0 && samples.length % channels == 0)
     val out = new ArrayBuffer[Byte](58 + samples.length)
     def str(s: String): Unit = out ++= s.getBytes("US-ASCII")
-    def u16(v: Int): Unit = { out += v.toByte; out += (v >> 8).toByte }
-    def u32(v: Long): Unit = (0 until 4).foreach(k => out += (v >> (8 * k)).toByte)
-    str("RIFF"); u32(4 + 26 + 12 + 8L + samples.length); str("WAVE")
-    str("fmt "); u32(18L)
-    u16(if (aLaw) 6 else 7); u16(channels); u32(sampleRate.toLong)
-    u32(sampleRate.toLong * channels); u16(channels); u16(8); u16(0)
-    str("fact"); u32(4L); u32((samples.length / channels).toLong)
-    str("data"); u32(samples.length.toLong)
+    str("RIFF"); putLe32(out, 4 + 26 + 12 + 8L + samples.length); str("WAVE")
+    str("fmt "); putLe32(out, 18L)
+    putLe16(out, if (aLaw) 6 else 7); putLe16(out, channels); putLe32(out, sampleRate.toLong)
+    putLe32(out, sampleRate.toLong * channels); putLe16(out, channels); putLe16(out, 8); putLe16(out, 0)
+    str("fact"); putLe32(out, 4L); putLe32(out, (samples.length / channels).toLong)
+    str("data"); putLe32(out, samples.length.toLong)
     samples.foreach(s => out += (if (aLaw) aLawEncode(s) else muLawEncode(s)))
     out.toArray
   }

@@ -2,6 +2,8 @@ package graft.raster
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{putLe16, putLe32}
+
 /** Cloud-Optimized GeoTIFF writer — pure JVM, no GDAL.
   *
   * Closes the last derivative-artifact codec alongside `Png` (raster
@@ -139,7 +141,7 @@ object Cog {
       val modelType = if (g.projected) 1 else 2
       val epsgKey = if (g.projected) 3072 else 2048
       val keys = Seq(1, 1, 0, 3, 1024, 0, 1, modelType, 1025, 0, 1, 1, epsgKey, 0, 1, g.epsg)
-      val keyBytes = { val b = new ArrayBuffer[Byte](keys.length * 2); keys.foreach(k => u16(k, b)); b.toArray }
+      val keyBytes = { val b = new ArrayBuffer[Byte](keys.length * 2); keys.foreach(k => putLe16(b, k)); b.toArray }
       Seq(
         Entry(33550, TDouble, 3, ext = scale),
         Entry(33922, TDouble, 6, ext = tiepoint),
@@ -194,18 +196,18 @@ object Cog {
 
     // ---- write pass ----------------------------------------------------
     val out = new ArrayBuffer[Byte]((tileDataStart + levelDataSize.sum).toInt)
-    u16(0x4949, out); u16(42, out); u32(ifdStarts(0), out) // II, magic, IFD0
+    putLe16(out, 0x4949); putLe16(out, 42); putLe32(out, ifdStarts(0)) // II, magic, IFD0
     levels.indices.foreach { li =>
       val offsets = storedTiles(li).scanLeft(levelDataStart(li))((p, t) => p + t.length).dropRight(1)
       val entries = entriesFor(li, offsets)
       var extPos = ifdStarts(li) + ifdSizes(li)
-      u16(entries.length, out)
+      putLe16(out, entries.length)
       entries.foreach { e =>
-        u16(e.tag, out); u16(e.typ, out); u32(e.count.toLong, out)
+        putLe16(out, e.tag); putLe16(out, e.typ); putLe32(out, e.count.toLong)
         if (e.ext == null) inlineValue(e, out)
-        else { u32(extPos, out); extPos += e.ext.length + (e.ext.length & 1) }
+        else { putLe32(out, extPos); extPos += e.ext.length + (e.ext.length & 1) }
       }
-      u32(if (li + 1 < levels.length) ifdStarts(li + 1) else 0L, out) // next IFD
+      putLe32(out, if (li + 1 < levels.length) ifdStarts(li + 1) else 0L) // next IFD
       entries.foreach { e =>
         if (e.ext != null) { out ++= e.ext; if ((e.ext.length & 1) == 1) out += 0 }
       }
@@ -215,18 +217,9 @@ object Cog {
   }
 
   private def inlineValue(e: Entry, out: ArrayBuffer[Byte]): Unit = e.typ match {
-    case TShort => u16(e.inline.toInt, out); u16(0, out)
-    case TLong  => u32(e.inline, out)
+    case TShort => putLe16(out, e.inline.toInt); putLe16(out, 0)
+    case TLong  => putLe32(out, e.inline)
     case t      => throw new IllegalArgumentException(s"inline type $t unsupported")
-  }
-
-  private def u16(v: Int, out: ArrayBuffer[Byte]): Unit = {
-    out += (v & 0xff).toByte; out += ((v >> 8) & 0xff).toByte
-  }
-
-  private def u32(v: Long, out: ArrayBuffer[Byte]): Unit = {
-    out += (v & 0xff).toByte; out += ((v >> 8) & 0xff).toByte
-    out += ((v >> 16) & 0xff).toByte; out += ((v >> 24) & 0xff).toByte
   }
 
   private def doubleBytes(ds: Seq[Double]): Array[Byte] = {
@@ -237,7 +230,7 @@ object Cog {
 
   private def longBytes(vs: Seq[Long]): Array[Byte] = {
     val b = new ArrayBuffer[Byte](vs.length * 4)
-    vs.foreach(u32(_, b))
+    vs.foreach(putLe32(b, _))
     b.toArray
   }
 
@@ -486,10 +479,16 @@ object Cog {
         parseBig(bb)
       case m => throw new IllegalArgumentException(s"not a TIFF (bad magic $m)")
     } catch {
-      case e: IndexOutOfBoundsException =>
-        throw new IllegalArgumentException(s"tiff: truncated or corrupt IFD chain (${e.getMessage})")
+      case e: IndexOutOfBoundsException => corruptChain(e.getMessage)
     }
   }
+
+  private def corruptChain(detail: String): Nothing =
+    throw new IllegalArgumentException(s"tiff: truncated or corrupt IFD chain ($detail)")
+
+  /** An IFD chain that revisits an offset would loop forever. */
+  private def visit(seen: scala.collection.mutable.Set[Long], pos: Long): Unit =
+    if (!seen.add(pos)) corruptChain(s"IFD at offset $pos revisited")
 
   private val TLong8 = 16 // BigTIFF 64-bit unsigned
 
@@ -506,8 +505,10 @@ object Cog {
 
   private def parseClassic(bb: java.nio.ByteBuffer): Seq[Map[Int, Seq[Long]]] = {
     val ifds = new ArrayBuffer[Map[Int, Seq[Long]]]()
+    val seen = scala.collection.mutable.HashSet.empty[Long]
     var pos = bb.getInt(4).toLong & 0xffffffffL
     while (pos != 0) {
+      visit(seen, pos)
       val n = bb.getShort(pos.toInt) & 0xffff
       val entries = (0 until n).map { i =>
         val e = pos.toInt + 2 + 12 * i
@@ -527,8 +528,10 @@ object Cog {
 
   private def parseBig(bb: java.nio.ByteBuffer): Seq[Map[Int, Seq[Long]]] = {
     val ifds = new ArrayBuffer[Map[Int, Seq[Long]]]()
+    val seen = scala.collection.mutable.HashSet.empty[Long]
     var pos = bb.getLong(8)
     while (pos != 0) {
+      visit(seen, pos)
       val n = bb.getLong(pos.toInt).toInt // entry count is u64; sane files are small
       val entries = (0 until n).map { i =>
         val e = pos.toInt + 8 + 20 * i

@@ -2,6 +2,8 @@ package graft.raster
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{be32u, putBe32, putLe16, putLe32, putLeF64}
+
 /** GeoJP2 — georeferenced JPEG 2000 (the GeoTIFF-in-JP2 convention
   * drone orthomosaics use; the reference reads these through GDAL's
   * GeoRaster path, `entry.cpp:282-452`). The geo-referencing rides in
@@ -40,16 +42,12 @@ object GeoJp2 {
     val geoAt = tieAt + 48
 
     val out = new ArrayBuffer[Byte](geoAt + 8 * (1 + nKeys))
-    def u16(v: Int): Unit = { out += v.toByte; out += (v >> 8).toByte }
-    def u32(v: Long): Unit = (0 until 4).foreach(k => out += (v >> (8 * k)).toByte)
-    def f64(v: Double): Unit = {
-      val bits = java.lang.Double.doubleToLongBits(v)
-      (0 until 8).foreach(k => out += (bits >> (8 * k)).toByte)
+    def tag(id: Int, tpe: Int, count: Long, value: Long): Unit = {
+      putLe16(out, id); putLe16(out, tpe); putLe32(out, count); putLe32(out, value)
     }
-    def tag(id: Int, tpe: Int, count: Long, value: Long): Unit = { u16(id); u16(tpe); u32(count); u32(value) }
 
-    out += 'I'; out += 'I'; u16(42); u32(ifdAt.toLong)
-    u16(nTags)
+    out += 'I'; out += 'I'; putLe16(out, 42); putLe32(out, ifdAt.toLong)
+    putLe16(out, nTags)
     tag(256, 4, 1, width.toLong)
     tag(257, 4, 1, height.toLong)
     tag(258, 3, 1, 8)
@@ -59,11 +57,11 @@ object GeoJp2 {
     tag(33550, 12, 3, scaleAt.toLong)
     tag(33922, 12, 6, tieAt.toLong)
     tag(34735, 3, 4L * (1 + nKeys), geoAt.toLong)
-    u32(0) // next IFD
-    f64(gt(1)); f64(-gt(5)); f64(0.0) // ModelPixelScale
-    f64(0.0); f64(0.0); f64(0.0); f64(gt(0)); f64(gt(3)); f64(0.0) // ModelTiepoint
-    u16(1); u16(1); u16(0); u16(nKeys)
-    keys.foreach { case (id, v) => u16(id); u16(0); u16(1); u16(v) }
+    putLe32(out, 0) // next IFD
+    Seq(gt(1), -gt(5), 0.0).foreach(putLeF64(out, _)) // ModelPixelScale
+    Seq(0.0, 0.0, 0.0, gt(0), gt(3), 0.0).foreach(putLeF64(out, _)) // ModelTiepoint
+    putLe16(out, 1); putLe16(out, 1); putLe16(out, 0); putLe16(out, nKeys)
+    keys.foreach { case (id, v) => Seq(id, 0, 1, v).foreach(putLe16(out, _)) }
     out.toArray
   }
 
@@ -75,8 +73,7 @@ object GeoJp2 {
     val payload = degenerateGeoTiff(width, height, gt, epsg)
     val uuidBox = new ArrayBuffer[Byte](24 + payload.length)
     val len = 8 + Uuid.length + payload.length
-    uuidBox += (len >> 24).toByte; uuidBox += (len >> 16).toByte
-    uuidBox += (len >> 8).toByte; uuidBox += len.toByte
+    putBe32(uuidBox, len)
     uuidBox ++= "uuid".getBytes("US-ASCII")
     uuidBox ++= Uuid
     uuidBox ++= payload
@@ -88,8 +85,7 @@ object GeoJp2 {
   private def boxOffset(bytes: Array[Byte], boxType: String): Option[Int] = {
     var pos = 0
     while (pos + 8 <= bytes.length) {
-      val len = ((bytes(pos) & 0xffL) << 24) | ((bytes(pos + 1) & 0xffL) << 16) |
-        ((bytes(pos + 2) & 0xffL) << 8) | (bytes(pos + 3) & 0xffL)
+      val len = be32u(bytes, pos)
       val typ = new String(bytes, pos + 4, 4, "ISO-8859-1")
       if (typ == boxType) return Some(pos)
       if (len < 8) return None
@@ -106,8 +102,7 @@ object GeoJp2 {
     try {
       var pos = 0
       while (pos + 8 <= bytes.length) {
-        val len = ((bytes(pos) & 0xffL) << 24) | ((bytes(pos + 1) & 0xffL) << 16) |
-          ((bytes(pos + 2) & 0xffL) << 8) | (bytes(pos + 3) & 0xffL)
+        val len = be32u(bytes, pos)
         val typ = new String(bytes, pos + 4, 4, "ISO-8859-1")
         if (typ == "uuid" && len >= 24 && pos + len <= bytes.length) {
           val isGeo = (0 until 16).forall(i => bytes(pos + 8 + i) == Uuid(i))

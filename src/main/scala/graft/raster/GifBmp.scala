@@ -1,5 +1,7 @@
 package graft.raster
 
+import graft.sources.Bytes.{be16, le16, le32, putLe16}
+
 /** GIF (87a/89a) and BMP decoders — the last two sniffable still
   * formats that previously only yielded header dimensions. GIF:
   * variable-width LZW per the published spec (clear/EOI codes,
@@ -27,7 +29,7 @@ object GifBmp {
   private def gifFrames0(b: Array[Byte], maxFrames: Int): Seq[Png.Image] = {
     if (b.length < 13 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F') return Seq.empty
     var pos = 6
-    def u16(): Int = { val v = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8); pos += 2; v }
+    def u16(): Int = { val v = le16(b, pos); pos += 2; v }
     val sw = u16(); val sh = u16()
     val packed = b(pos) & 0xff
     val bgIndex = b(pos + 1) & 0xff
@@ -136,7 +138,7 @@ object GifBmp {
 
   private def readPalette(b: Array[Byte], at: Int, n: Int): Array[Int] =
     Array.tabulate(n) { i =>
-      ((b(at + 3 * i) & 0xff) << 16) | ((b(at + 3 * i + 1) & 0xff) << 8) | (b(at + 3 * i + 2) & 0xff)
+      (be16(b, at + 3 * i) << 8) | (b(at + 3 * i + 2) & 0xff)
     }
 
   /** GIF variable-width LZW (little-endian bit packing). */
@@ -207,15 +209,14 @@ object GifBmp {
     if (bits < 1) bits = 1
     val palSize = 1 << bits
     val out = new scala.collection.mutable.ArrayBuffer[Byte](idx.length / 2 + 64)
-    def u16(v: Int): Unit = { out += v.toByte; out += (v >> 8).toByte }
     out ++= "GIF89a".getBytes("US-ASCII")
-    u16(w); u16(h)
+    putLe16(out, w); putLe16(out, h)
     out += (0x80 | ((bits - 1) & 7)).toByte; out += 0; out += 0
     (0 until palSize).foreach { i =>
       val c = if (i < palette.length) palette(i) else 0
       out += (c >> 16).toByte; out += (c >> 8).toByte; out += c.toByte
     }
-    out += 0x2C; u16(0); u16(0); u16(w); u16(h); out += 0
+    out += 0x2C; putLe16(out, 0); putLe16(out, 0); putLe16(out, w); putLe16(out, h); out += 0
     val minCode = math.max(2, bits)
     out += minCode.toByte
     out ++= lzwEncode(idx, minCode)
@@ -332,21 +333,19 @@ object GifBmp {
 
   private def decodeBmp0(b: Array[Byte]): Option[Png.Image] = {
     if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
-    def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u32(i: Int): Int = u16(i) | (u16(i + 2) << 16)
-    val dataAt = u32(10)
-    val hdrSize = u32(14)
+    val dataAt = le32(b, 10)
+    val hdrSize = le32(b, 14)
     if (hdrSize < 40) return None // BITMAPCOREHEADER out of scope
-    val w = u32(18)
-    val hRaw = u32(22)
+    val w = le32(b, 18)
+    val hRaw = le32(b, 22)
     val topDown = hRaw < 0
     val h = math.abs(hRaw)
     if (w <= 0 || h == 0 || w.toLong * h > (1L << 26)) return None
-    if (u16(26) != 1) return None // planes
-    val bpp = u16(28)
-    if (u32(30) != 0) return None // compressed BMP (RLE/bitfields) out of scope
+    if (le16(b, 26) != 1) return None // planes
+    val bpp = le16(b, 28)
+    if (le32(b, 30) != 0) return None // compressed BMP (RLE/bitfields) out of scope
     val palAt = 14 + hdrSize
-    val palCount = { val c = u32(46); if (c != 0) c else if (bpp == 8) 256 else 0 }
+    val palCount = { val c = le32(b, 46); if (c != 0) c else if (bpp == 8) 256 else 0 }
     val rowBytes = (w * bpp / 8 + 3) & ~3
     val px = new Array[Byte](w * h * 3)
     var y = 0

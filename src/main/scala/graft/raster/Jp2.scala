@@ -4,6 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import Jp2Codec._
 
+import graft.sources.Bytes.{be16, be32, be32u, be64, putBe16, putBe32}
+
 /** JPEG 2000 Part-1 codestream + JP2 container (ISO/IEC 15444-1 /
   * ITU-T T.800) — the lossless profile the reference's GeoRaster path
   * consumes via GDAL/OpenJPEG (entry.cpp routes .jp2 rasters through
@@ -76,25 +78,23 @@ object Jp2 {
                   levels: Int, tileW: Int, tileH: Int): Array[Byte] = {
     val out = new ArrayBuffer[Byte](64)
     def u8(v: Int): Unit = out += v.toByte
-    def u16(v: Int): Unit = { out += (v >> 8).toByte; out += v.toByte }
-    def u32(v: Long): Unit = { out += (v >> 24).toByte; out += (v >> 16).toByte; out += (v >> 8).toByte; out += v.toByte }
-    u16(0xFF4F)
-    u16(0xFF51); u16(38 + 3 * nc)
-    u16(0) // Rsiz
-    u32(width); u32(height); u32(0); u32(0) // image, origin
-    u32(tileW); u32(tileH); u32(0); u32(0) // tile grid at the origin
-    u16(nc)
+    putBe16(out, 0xFF4F)
+    putBe16(out, 0xFF51); putBe16(out, 38 + 3 * nc)
+    putBe16(out, 0) // Rsiz
+    putBe32(out, width); putBe32(out, height); putBe32(out, 0); putBe32(out, 0) // image, origin
+    putBe32(out, tileW); putBe32(out, tileH); putBe32(out, 0); putBe32(out, 0) // tile grid at the origin
+    putBe16(out, nc)
     (0 until nc).foreach { _ => u8(depth - 1); u8(1); u8(1) }
-    u16(0xFF52); u16(12)
+    putBe16(out, 0xFF52); putBe16(out, 12)
     u8(0) // Scod: default precincts, no SOP/EPH
     u8(0) // progression LRCP
-    u16(1) // layers
+    putBe16(out, 1) // layers
     u8(if (mct) 1 else 0)
     u8(levels)
     u8(CbExp - 2); u8(CbExp - 2)
     u8(0) // code-block style
     u8(1) // 5/3 reversible
-    u16(0xFF5C); u16(3 + 3 * levels + 1)
+    putBe16(out, 0xFF5C); putBe16(out, 3 + 3 * levels + 1)
     u8((GuardBits << 5) | 0)
     u8(depth << 3) // LL_N
     var r = 1
@@ -136,10 +136,8 @@ object Jp2 {
 
     val out = new ArrayBuffer[Byte](tw * th * nc / 2 + 64)
     def u8(v: Int): Unit = out += v.toByte
-    def u16(v: Int): Unit = { out += (v >> 8).toByte; out += v.toByte }
-    def u32(v: Long): Unit = { out += (v >> 24).toByte; out += (v >> 16).toByte; out += (v >> 8).toByte; out += v.toByte }
-    u16(0xFF90); u16(10); u16(tileIdx); u32(0); u8(0); u8(1) // SOT, Psot patched below
-    u16(0xFF93) // SOD
+    putBe16(out, 0xFF90); putBe16(out, 10); putBe16(out, tileIdx); putBe32(out, 0); u8(0); u8(1) // SOT, Psot patched below
+    putBe16(out, 0xFF93) // SOD
     var r = 0
     while (r <= levels) {
       var c = 0
@@ -236,25 +234,23 @@ object Jp2 {
     val quant = quantTable(depth, levels, step)
     val out = new ArrayBuffer[Byte](64)
     def u8(v: Int): Unit = out += v.toByte
-    def u16(v: Int): Unit = { out += (v >> 8).toByte; out += v.toByte }
-    def u32(v: Long): Unit = { out += (v >> 24).toByte; out += (v >> 16).toByte; out += (v >> 8).toByte; out += v.toByte }
-    u16(0xFF4F)
-    u16(0xFF51); u16(38 + 3 * nc)
-    u16(0)
-    u32(width); u32(height); u32(0); u32(0)
-    u32(tileW); u32(tileH); u32(0); u32(0)
-    u16(nc)
+    putBe16(out, 0xFF4F)
+    putBe16(out, 0xFF51); putBe16(out, 38 + 3 * nc)
+    putBe16(out, 0)
+    putBe32(out, width); putBe32(out, height); putBe32(out, 0); putBe32(out, 0)
+    putBe32(out, tileW); putBe32(out, tileH); putBe32(out, 0); putBe32(out, 0)
+    putBe16(out, nc)
     (0 until nc).foreach { _ => u8(depth - 1); u8(1); u8(1) }
-    u16(0xFF52); u16(12)
-    u8(0); u8(0); u16(1)
+    putBe16(out, 0xFF52); putBe16(out, 12)
+    u8(0); u8(0); putBe16(out, 1)
     u8(if (mct) 1 else 0)
     u8(levels)
     u8(CbExp - 2); u8(CbExp - 2)
     u8(0)
     u8(0) // 9/7 irreversible
-    u16(0xFF5C); u16(3 + 2 * (3 * levels + 1))
+    putBe16(out, 0xFF5C); putBe16(out, 3 + 2 * (3 * levels + 1))
     u8((GuardBits << 5) | 2) // scalar expounded
-    quant.foreach { case (eps, mu) => u16((eps << 11) | mu) }
+    quant.foreach { case (eps, mu) => putBe16(out, (eps << 11) | mu) }
     out.toArray
   }
 
@@ -315,10 +311,8 @@ object Jp2 {
     }
     val out = new ArrayBuffer[Byte](tw * th * nc / 4 + 64)
     def u8(v: Int): Unit = out += v.toByte
-    def u16(v: Int): Unit = { out += (v >> 8).toByte; out += v.toByte }
-    def u32(v: Long): Unit = { out += (v >> 24).toByte; out += (v >> 16).toByte; out += (v >> 8).toByte; out += v.toByte }
-    u16(0xFF90); u16(10); u16(tileIdx); u32(0); u8(0); u8(1)
-    u16(0xFF93)
+    putBe16(out, 0xFF90); putBe16(out, 10); putBe16(out, tileIdx); putBe32(out, 0); u8(0); u8(1)
+    putBe16(out, 0xFF93)
     var r = 0
     while (r <= levels) {
       var c = 0
@@ -494,8 +488,8 @@ object Jp2 {
 
   private def decodeJ2k0(bytes: Array[Byte], discard: Int): Image = {
     var pos = 0
-    def u16(): Int = { val v = ((bytes(pos) & 0xff) << 8) | (bytes(pos + 1) & 0xff); pos += 2; v }
-    def u32(): Int = { val v = ((bytes(pos) & 0xff) << 24) | ((bytes(pos + 1) & 0xff) << 16) | ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff); pos += 4; v }
+    def u16(): Int = { val v = be16(bytes, pos); pos += 2; v }
+    def u32(): Int = { val v = be32(bytes, pos); pos += 4; v }
     def u8(): Int = { val v = bytes(pos) & 0xff; pos += 1; v }
 
     require(bytes.length > 4 && u16() == 0xFF4F, "jp2: missing SOC")
@@ -597,7 +591,7 @@ object Jp2 {
       else {
         require(quantRaw != null && quantRaw.length >= 2 * (3 * levels + 1), "jp2: QCD too short")
         Array.tabulate(3 * levels + 1) { i =>
-          val v = ((quantRaw(2 * i) & 0xff) << 8) | (quantRaw(2 * i + 1) & 0xff)
+          val v = be16(quantRaw, 2 * i)
           ((v >> 11) & 0x1f, v & 0x7ff)
         }
       }
@@ -698,7 +692,7 @@ object Jp2 {
         c += 1
       }
       require(pos + 2 <= bytes.length, "jp2: truncated after tile")
-      val marker = ((bytes(pos) & 0xff) << 8) | (bytes(pos + 1) & 0xff)
+      val marker = be16(bytes, pos)
       pos += 2
       if (marker == 0xFFD9) done = true
       else if (marker == 0xFF90) {
@@ -829,23 +823,22 @@ object Jp2 {
   def encodeJp2(width: Int, height: Int, depth: Int, comps: Array[Array[Int]], levels: Int = 3): Array[Byte] = {
     val j2k = encodeJ2k(width, height, depth, comps, levels)
     val out = new ArrayBuffer[Byte](j2k.length + 96)
-    def u32(v: Long): Unit = { out += (v >> 24).toByte; out += (v >> 16).toByte; out += (v >> 8).toByte; out += v.toByte }
     def tag(s: String): Unit = out ++= s.getBytes("US-ASCII")
     out ++= Jp2Sig
-    u32(20); tag("ftyp"); tag("jp2 "); u32(0); tag("jp2 ")
+    putBe32(out, 20); tag("ftyp"); tag("jp2 "); putBe32(out, 0); tag("jp2 ")
     val ihdrLen = 22
     val colrLen = 15
-    u32(8 + ihdrLen + colrLen); tag("jp2h")
-    u32(ihdrLen); tag("ihdr")
-    u32(height); u32(width)
+    putBe32(out, 8 + ihdrLen + colrLen); tag("jp2h")
+    putBe32(out, ihdrLen); tag("ihdr")
+    putBe32(out, height); putBe32(out, width)
     out += (comps.length >> 8).toByte; out += comps.length.toByte
     out += (depth - 1).toByte
     out += 7 // compression type: jpeg2000
     out += 0; out += 0 // UnkC, IPR
-    u32(colrLen); tag("colr")
+    putBe32(out, colrLen); tag("colr")
     out += 1; out += 0; out += 0 // meth=enumerated, prec, approx
-    u32(if (comps.length >= 3) 16 else 17) // sRGB | greyscale
-    u32(8L + j2k.length); tag("jp2c")
+    putBe32(out, if (comps.length >= 3) 16 else 17) // sRGB | greyscale
+    putBe32(out, 8L + j2k.length); tag("jp2c")
     out ++= j2k
     out.toArray
   }
@@ -1030,33 +1023,31 @@ object Jp2 {
   def probe(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = { // (w, h, channels, depth)
     try {
       if (isJ2k(bytes)) {
-        val w = ((bytes(8) & 0xff) << 24) | ((bytes(9) & 0xff) << 16) | ((bytes(10) & 0xff) << 8) | (bytes(11) & 0xff)
-        val h = ((bytes(12) & 0xff) << 24) | ((bytes(13) & 0xff) << 16) | ((bytes(14) & 0xff) << 8) | (bytes(15) & 0xff)
-        val nc = ((bytes(40) & 0xff) << 8) | (bytes(41) & 0xff)
+        val w = be32(bytes, 8)
+        val h = be32(bytes, 12)
+        val nc = be16(bytes, 40)
         val d = (bytes(42) & 0x7f) + 1
         Some((w, h, nc, d))
       } else if (isJp2(bytes)) {
         var pos = 0
         while (pos + 8 <= bytes.length) {
-          val len = ((bytes(pos) & 0xffL) << 24) | ((bytes(pos + 1) & 0xffL) << 16) |
-            ((bytes(pos + 2) & 0xffL) << 8) | (bytes(pos + 3) & 0xffL)
+          val len = be32u(bytes, pos)
           val typ = new String(bytes, pos + 4, 4, "US-ASCII")
           if (typ == "jp2h") {
             // first sub-box must be ihdr
             val b = pos + 8
             val st = new String(bytes, b + 4, 4, "US-ASCII")
             if (st != "ihdr") return None
-            val h = ((bytes(b + 8) & 0xff) << 24) | ((bytes(b + 9) & 0xff) << 16) | ((bytes(b + 10) & 0xff) << 8) | (bytes(b + 11) & 0xff)
-            val w = ((bytes(b + 12) & 0xff) << 24) | ((bytes(b + 13) & 0xff) << 16) | ((bytes(b + 14) & 0xff) << 8) | (bytes(b + 15) & 0xff)
-            val nc = ((bytes(b + 16) & 0xff) << 8) | (bytes(b + 17) & 0xff)
+            val h = be32(bytes, b + 8)
+            val w = be32(bytes, b + 12)
+            val nc = be16(bytes, b + 16)
             val d = (bytes(b + 18) & 0x7f) + 1
             return Some((w, h, nc, d))
           }
           pos =
             if (len == 0) bytes.length
             else if (len == 1) { // XLBox: 64-bit length follows the type
-              var xl = 0L
-              (0 until 8).foreach(i => xl = (xl << 8) | (bytes(pos + 8 + i) & 0xffL))
+              val xl = be64(bytes, pos + 8)
               if (xl < 16) return None
               (pos + xl).toInt
             } else (pos + len).toInt

@@ -2,6 +2,8 @@ package graft.raster
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{be16, putBe16}
+
 /** Pure-JVM baseline JPEG codec (ITU-T T.81 sequential DCT) — the
   * image codec the reference reaches through GDAL for photos and
   * thumbnails (`thumbs.cpp`, `exifeditor.cpp` splice JPEG payloads;
@@ -260,7 +262,6 @@ object Jpeg {
 
   private def decodeProgressive0(bytes: Array[Byte]): Option[Png.Image] = {
     if (bytes.length < 4 || (bytes(0) & 0xFF) != 0xFF || (bytes(1) & 0xFF) != 0xD8) return None
-    def u16(i: Int): Int = ((bytes(i) & 0xFF) << 8) | (bytes(i + 1) & 0xFF)
 
     val qt = Array.ofDim[Int](4, 64)
     val dcTabs = new Array[HuffDec](4)
@@ -280,7 +281,7 @@ object Jpeg {
       val m = bytes(pos + 1) & 0xFF
       if (m == 0xD9) done = true
       else {
-        val len = u16(pos + 2)
+        val len = be16(bytes, pos + 2)
         val seg = pos + 4
         m match {
           case 0xDB =>
@@ -291,7 +292,7 @@ object Jpeg {
               p += 1
               var i = 0
               while (i < 64) {
-                qt(tq)(i) = if (pq == 0) bytes(p) & 0xFF else u16(p)
+                qt(tq)(i) = if (pq == 0) bytes(p) & 0xFF else be16(bytes, p)
                 p += (if (pq == 0) 1 else 2)
                 i += 1
               }
@@ -313,7 +314,7 @@ object Jpeg {
           case 0xC2 =>
             progressive = true
             if ((bytes(seg) & 0xFF) != 8) return None
-            h = u16(seg + 1); w = u16(seg + 3)
+            h = be16(bytes, seg + 1); w = be16(bytes, seg + 3)
             val nc = bytes(seg + 5) & 0xFF
             if (nc != 1 && nc != 3) return None
             comps = Array.tabulate(nc) { i =>
@@ -327,7 +328,7 @@ object Jpeg {
             coefs = comps.map(c => new Array[Int](mcusX * c.h * mcusY * c.v * 64))
           case 0xC0 | 0xC1 => return None // baseline frame: handled by the other path
           case 0xC3 | 0xC5 | 0xC6 | 0xC7 | 0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF => return None
-          case 0xDD => restartInterval = u16(seg)
+          case 0xDD => restartInterval = be16(bytes, seg)
           case 0xDA =>
             if (!progressive || comps == null) return None
             val ns = bytes(seg) & 0xFF
@@ -634,13 +635,11 @@ object Jpeg {
     var restartInterval = 0
     var pos = 2
 
-    def u16(i: Int): Int = ((bytes(i) & 0xFF) << 8) | (bytes(i + 1) & 0xFF)
-
     while (pos + 4 <= bytes.length) {
       if ((bytes(pos) & 0xFF) != 0xFF) return None
       val m = bytes(pos + 1) & 0xFF
       if (m == 0xD9) return None // EOI before SOS
-      val len = u16(pos + 2)
+      val len = be16(bytes, pos + 2)
       val seg = pos + 4
       m match {
         case 0xDB => // DQT
@@ -651,7 +650,7 @@ object Jpeg {
             p += 1
             var i = 0
             while (i < 64) {
-              qt(tq)(i) = if (pq == 0) bytes(p) & 0xFF else u16(p)
+              qt(tq)(i) = if (pq == 0) bytes(p) & 0xFF else be16(bytes, p)
               p += (if (pq == 0) 1 else 2)
               i += 1
             }
@@ -672,8 +671,8 @@ object Jpeg {
           }
         case 0xC0 | 0xC1 => // SOF0 / SOF1
           if ((bytes(seg) & 0xFF) != 8) return None // 8-bit only
-          h = u16(seg + 1)
-          w = u16(seg + 3)
+          h = be16(bytes, seg + 1)
+          w = be16(bytes, seg + 3)
           val nc = bytes(seg + 5) & 0xFF
           if (nc != 1 && nc != 3) return None
           comps = Array.tabulate(nc) { i =>
@@ -683,7 +682,7 @@ object Jpeg {
           if (comps.exists(c => c.h < 1 || c.h > 2 || c.v < 1 || c.v > 2)) return None
         case 0xC2 | 0xC3 | 0xC5 | 0xC6 | 0xC7 | 0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
           return None // progressive / arithmetic / lossless
-        case 0xDD => restartInterval = u16(seg)
+        case 0xDD => restartInterval = be16(bytes, seg)
         case 0xDA => // SOS — entropy data follows
           if (comps == null || w == 0 || h == 0) return None
           val ns = bytes(seg) & 0xFF
@@ -1054,20 +1053,19 @@ object Jpeg {
     val qC = scaledQ(QChroma, quality)
     val out = new ArrayBuffer[Byte](width * height / 2 + 1024)
     def u8(v: Int): Unit = out += v.toByte
-    def u16(v: Int): Unit = { out += (v >> 8).toByte; out += v.toByte }
     def marker(m: Int): Unit = { u8(0xFF); u8(m) }
 
     marker(0xD8) // SOI
     // APP0 JFIF
-    marker(0xE0); u16(16)
+    marker(0xE0); putBe16(out, 16)
     Seq('J', 'F', 'I', 'F', 0).foreach(c => u8(c.toInt))
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
+    u8(1); u8(1); u8(0); putBe16(out, 1); putBe16(out, 1); u8(0); u8(0)
     // DQT
-    marker(0xDB); u16(2 + 65 * (if (channels == 3) 2 else 1))
+    marker(0xDB); putBe16(out, 2 + 65 * (if (channels == 3) 2 else 1))
     u8(0x00); (0 until 64).foreach(i => u8(qL(Zigzag(i))))
     if (channels == 3) { u8(0x01); (0 until 64).foreach(i => u8(qC(Zigzag(i)))) }
     // SOF0
-    marker(0xC0); u16(8 + 3 * channels); u8(8); u16(height); u16(width); u8(channels)
+    marker(0xC0); putBe16(out, 8 + 3 * channels); u8(8); putBe16(out, height); putBe16(out, width); u8(channels)
     if (channels == 1) { u8(1); u8(0x11); u8(0) }
     else {
       u8(1); u8(0x11); u8(0)
@@ -1076,7 +1074,7 @@ object Jpeg {
     }
     // DHT
     def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xC4); u16(2 + 1 + 16 + vals.length); u8((tc << 4) | th)
+      marker(0xC4); putBe16(out, 2 + 1 + 16 + vals.length); u8((tc << 4) | th)
       bits.foreach(u8); vals.foreach(u8)
     }
     dht(0, 0, DcLumaBits, DcLumaVals)
@@ -1086,9 +1084,9 @@ object Jpeg {
       dht(1, 1, AcChromaBits, AcChromaVals)
     }
     // DRI
-    if (restartInterval > 0) { marker(0xDD); u16(4); u16(restartInterval) }
+    if (restartInterval > 0) { marker(0xDD); putBe16(out, 4); putBe16(out, restartInterval) }
     // SOS
-    marker(0xDA); u16(6 + 2 * channels); u8(channels)
+    marker(0xDA); putBe16(out, 6 + 2 * channels); u8(channels)
     if (channels == 1) { u8(1); u8(0x00) }
     else { u8(1); u8(0x00); u8(2); u8(0x11); u8(3); u8(0x11) }
     u8(0); u8(63); u8(0)

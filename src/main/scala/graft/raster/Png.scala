@@ -3,6 +3,8 @@ package graft.raster
 import java.io.ByteArrayOutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
 
+import graft.sources.Bytes.{be32, setBe32, writeBe32}
+
 /** Minimal deterministic PNG codec (public spec, RFC 2083) — the byte
   * encoder that completes the tiler path (`gdaltiler.cpp:200-400`
   * emits PNG tiles). Hand-rolled rather than ImageIO so the output
@@ -21,15 +23,13 @@ object Png {
   private val Signature = Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')
 
   private def chunk(out: ByteArrayOutputStream, tag: String, data: Array[Byte]): Unit = {
-    def be32(v: Long): Array[Byte] =
-      Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    out.write(be32(data.length.toLong))
+    writeBe32(out, data.length)
     val tb = tag.getBytes("US-ASCII")
     out.write(tb)
     out.write(data)
     val crc = new CRC32()
     crc.update(tb); crc.update(data)
-    out.write(be32(crc.getValue))
+    writeBe32(out, crc.getValue.toInt)
   }
 
   private def deflate(raw: Array[Byte]): Array[Byte] = {
@@ -50,11 +50,7 @@ object Png {
     val out = new ByteArrayOutputStream()
     out.write(Signature)
     val ihdr = new Array[Byte](13)
-    def put32(a: Array[Byte], i: Int, v: Int): Unit = {
-      a(i) = ((v >> 24) & 0xff).toByte; a(i + 1) = ((v >> 16) & 0xff).toByte
-      a(i + 2) = ((v >> 8) & 0xff).toByte; a(i + 3) = (v & 0xff).toByte
-    }
-    put32(ihdr, 0, width); put32(ihdr, 4, height)
+    setBe32(ihdr, 0, width); setBe32(ihdr, 4, height)
     ihdr(8) = 8 // bit depth
     ihdr(9) = if (channels == 1) 0 else 2 // colour type: grey | truecolour
     // compression 0, filter 0, interlace 0 already zeroed
@@ -95,16 +91,14 @@ object Png {
       var interlace = 0
       var palette: Array[Byte] = null
       val idat = new ByteArrayOutputStream()
-      def be32(at: Int): Int =
-        ((bytes(at) & 0xff) << 24) | ((bytes(at + 1) & 0xff) << 16) | ((bytes(at + 2) & 0xff) << 8) | (bytes(at + 3) & 0xff)
       var done = false
       while (!done && i + 8 <= bytes.length) {
-        val len = be32(i)
+        val len = be32(bytes, i)
         val tag = new String(bytes, i + 4, 4, "US-ASCII")
         val data = i + 8
         tag match {
           case "IHDR" =>
-            width = be32(data); height = be32(data + 4)
+            width = be32(bytes, data); height = be32(bytes, data + 4)
             val bitDepth = bytes(data + 8) & 0xff
             val colour = bytes(data + 9) & 0xff
             interlace = bytes(data + 12) & 0xff

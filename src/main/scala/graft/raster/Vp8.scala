@@ -1,5 +1,7 @@
 package graft.raster
 
+import graft.sources.Bytes
+
 /** Lossy WebP: a VP8 intra-frame (keyframe) decoder and a minimal
   * conforming encoder, per RFC 6386 (the published VP8 bitstream
   * spec). This closes the crawl-corpus gap the VP8L work could not:
@@ -593,8 +595,8 @@ object Vp8 {
     val part0Len = tag >> 5
     if ((data(off + 3) & 0xff) != 0x9d || (data(off + 4) & 0xff) != 0x01 || (data(off + 5) & 0xff) != 0x2a)
       fail("bad VP8 start code")
-    val width = ((data(off + 6) & 0xff) | ((data(off + 7) & 0xff) << 8)) & 0x3fff
-    val height = ((data(off + 8) & 0xff) | ((data(off + 9) & 0xff) << 8)) & 0x3fff
+    val width = Bytes.le16(data, off + 6) & 0x3fff
+    val height = Bytes.le16(data, off + 8) & 0x3fff
     if (width == 0 || height == 0) fail("zero dimension")
     val h = new Header
     h.width = width; h.height = height

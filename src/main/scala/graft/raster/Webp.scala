@@ -1,5 +1,7 @@
 package graft.raster
 
+import graft.sources.Bytes.{le16, le32, setLe32, writeLe32}
+
 /** WebP container + lossless (VP8L) codec — decode of the full
   * published bitstream (all four transforms, color cache, meta prefix
   * codes, LZ77 with the 2D distance map, simple + code-length-coded
@@ -553,9 +555,6 @@ object Webp {
   // RIFF container
   // ------------------------------------------------------------------
 
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-
   def isWebp(b: Array[Byte]): Boolean =
     b != null && b.length >= 16 &&
       b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
@@ -585,8 +584,8 @@ object Webp {
           ("vp8l", (bits & 0x3fff) + 1, ((bits >> 14) & 0x3fff) + 1)
         case ("VP8 ", off, size) if size >= 10 &&
           (b(off + 3) & 0xff) == 0x9d && (b(off + 4) & 0xff) == 0x01 && (b(off + 5) & 0xff) == 0x2a =>
-          val w = ((b(off + 6) & 0xff) | ((b(off + 7) & 0xff) << 8)) & 0x3fff
-          val h = ((b(off + 8) & 0xff) | ((b(off + 9) & 0xff) << 8)) & 0x3fff
+          val w = le16(b, off + 6) & 0x3fff
+          val h = le16(b, off + 8) & 0x3fff
           ("vp8", w, h)
         case ("VP8X", off, size) if size >= 10 =>
           val w = ((b(off + 4) & 0xff) | ((b(off + 5) & 0xff) << 8) | ((b(off + 6) & 0xff) << 16)) + 1
@@ -671,12 +670,11 @@ object Webp {
   def encodeLossy(y: Array[Byte], u: Array[Byte], v: Array[Byte], width: Int, height: Int, qIndex: Int = 8): Array[Byte] = {
     val frame = Vp8.encodeFrame(y, u, v, width, height, qIndex)
     val out = new java.io.ByteArrayOutputStream()
-    def w32(x: Int): Unit = { out.write(x & 0xff); out.write((x >> 8) & 0xff); out.write((x >> 16) & 0xff); out.write((x >> 24) & 0xff) }
     out.write('R'); out.write('I'); out.write('F'); out.write('F')
-    w32(4 + 8 + frame.length + (frame.length & 1))
+    writeLe32(out, 4 + 8 + frame.length + (frame.length & 1))
     out.write('W'); out.write('E'); out.write('B'); out.write('P')
     out.write('V'); out.write('P'); out.write('8'); out.write(' ')
-    w32(frame.length)
+    writeLe32(out, frame.length)
     out.write(frame, 0, frame.length)
     if ((frame.length & 1) == 1) out.write(0)
     out.toByteArray
@@ -1089,15 +1087,11 @@ object Webp {
   def wrapRiff(vp8l: Array[Byte]): Array[Byte] = {
     val padded = vp8l.length + (vp8l.length & 1)
     val out = new Array[Byte](12 + 8 + padded)
-    def putLe32(at: Int, v: Int): Unit = {
-      out(at) = (v & 0xff).toByte; out(at + 1) = ((v >> 8) & 0xff).toByte
-      out(at + 2) = ((v >> 16) & 0xff).toByte; out(at + 3) = ((v >> 24) & 0xff).toByte
-    }
     out(0) = 'R'; out(1) = 'I'; out(2) = 'F'; out(3) = 'F'
-    putLe32(4, 4 + 8 + padded)
+    setLe32(out, 4, 4 + 8 + padded)
     out(8) = 'W'; out(9) = 'E'; out(10) = 'B'; out(11) = 'P'
     out(12) = 'V'; out(13) = 'P'; out(14) = '8'; out(15) = 'L'
-    putLe32(16, vp8l.length)
+    setLe32(out, 16, vp8l.length)
     System.arraycopy(vp8l, 0, out, 20, vp8l.length)
     out
   }

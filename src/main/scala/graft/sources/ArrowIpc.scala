@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{le16, le32, le64, setLe16, setLe32, setLe64}
+
 /** Arrow IPC split scan + writer — the ML-ecosystem columnar
   * interchange format (HuggingFace `datasets` memory-maps exactly
   * this; `.arrow` / Feather-v2 files, `.arrows` streams), read the
@@ -69,12 +71,6 @@ object ArrowIpc {
   // ---------------------------------------------------------------- LE reads
 
   @inline private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  @inline private def u16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  @inline private def i16(b: Array[Byte], i: Int): Int = u16(b, i).toShort.toInt
-  @inline private def i32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  @inline private def i64(b: Array[Byte], i: Int): Long =
-    (i32(b, i) & 0xffffffffL) | (i32(b, i + 4).toLong << 32)
 
   // ------------------------------------------------- flatbuffers table walk
 
@@ -82,13 +78,13 @@ object ArrowIpc {
     * -1 when the slot is absent (reader must apply the default). */
   private def fbField(b: Array[Byte], tab: Int, id: Int): Int = {
     req(tab >= 0 && tab + 4 <= b.length, "flatbuffer table offset out of range")
-    val vt = tab - i32(b, tab)
+    val vt = tab - le32(b, tab)
     req(vt >= 0 && vt + 4 <= b.length, "flatbuffer vtable out of range")
-    val vtSize = u16(b, vt)
+    val vtSize = le16(b, vt)
     val slot = 4 + 2 * id
     if (slot + 2 > vtSize) -1
     else {
-      val off = u16(b, vt + slot)
+      val off = le16(b, vt + slot)
       if (off == 0) -1
       else {
         val p = tab + off
@@ -99,14 +95,14 @@ object ArrowIpc {
   }
 
   private def fbIndirect(b: Array[Byte], pos: Int): Int = {
-    val t = pos + i32(b, pos)
+    val t = pos + le32(b, pos)
     req(t >= 0 && t < b.length, "flatbuffer indirection out of range")
     t
   }
 
   private def fbString(b: Array[Byte], pos: Int): String = {
     val s = fbIndirect(b, pos)
-    val n = i32(b, s)
+    val n = le32(b, s)
     req(n >= 0 && s + 4 + n <= b.length, "flatbuffer string out of range")
     new String(b, s + 4, n, java.nio.charset.StandardCharsets.UTF_8)
   }
@@ -115,7 +111,7 @@ object ArrowIpc {
     * `elemSize` bytes (4 for uoffset elements). */
   private def fbVector(b: Array[Byte], pos: Int, elemSize: Int): (Int, Int) = {
     val v = fbIndirect(b, pos)
-    val n = i32(b, v)
+    val n = le32(b, v)
     req(n >= 0 && v + 4 + n.toLong * elemSize <= b.length, "flatbuffer vector out of range")
     (n, v + 4)
   }
@@ -124,13 +120,13 @@ object ArrowIpc {
     val p = fbField(b, tab, id); if (p < 0) dflt else u8(b, p)
   }
   @inline private def fbShort(b: Array[Byte], tab: Int, id: Int, dflt: Int): Int = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else i16(b, p)
+    val p = fbField(b, tab, id); if (p < 0) dflt else le16(b, p).toShort.toInt
   }
   @inline private def fbInt(b: Array[Byte], tab: Int, id: Int, dflt: Int): Int = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else i32(b, p)
+    val p = fbField(b, tab, id); if (p < 0) dflt else le32(b, p)
   }
   @inline private def fbLong(b: Array[Byte], tab: Int, id: Int, dflt: Long): Long = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else i64(b, p)
+    val p = fbField(b, tab, id); if (p < 0) dflt else le64(b, p)
   }
   @inline private def fbBool(b: Array[Byte], tab: Int, id: Int, dflt: Boolean): Boolean = {
     val p = fbField(b, tab, id); if (p < 0) dflt else b(p) != 0
@@ -281,7 +277,7 @@ object ArrowIpc {
           if (p < 0) children.indices // spec default: 0..n-1
           else {
             val (k, base) = fbVector(b, p, 4)
-            (0 until k).map(i => i32(b, base + 4 * i))
+            (0 until k).map(i => le32(b, base + 4 * i))
           }
         }
         req(tids.length == children.length,
@@ -355,7 +351,7 @@ object ArrowIpc {
       "arrow: bad file magic")
     val tail = ranged(len - 10, 10)
     req(tail.length == 10 && tail.slice(4, 10).sameElements(Magic), "arrow: bad trailing magic")
-    val fLen = i32(tail, 0)
+    val fLen = le32(tail, 0)
     req(fLen > 0 && fLen <= len - 8 - 10, s"arrow: footer length $fLen out of range")
     val fb = ranged(len - 10 - fLen, fLen)
     req(fb.length == fLen, "arrow: short footer read")
@@ -387,7 +383,7 @@ object ArrowIpc {
         val (n, base) = fbVector(fb, p, 24)
         (0 until n).map { i =>
           val e = base + 24 * i
-          Block(i64(fb, e), i32(fb, e + 8), i64(fb, e + 16))
+          Block(le64(fb, e), le32(fb, e + 8), le64(fb, e + 16))
         }
       }
     }
@@ -401,8 +397,8 @@ object ArrowIpc {
   private def parseMessage(b: Array[Byte], off: Int): (Int, Int, Array[Byte], Int) = {
     req(off + 8 <= b.length, "arrow: truncated message prefix")
     var p = off
-    var metaLen = i32(b, p)
-    if (metaLen == -1) { metaLen = i32(b, p + 4); p += 8 } // V5 continuation
+    var metaLen = le32(b, p)
+    if (metaLen == -1) { metaLen = le32(b, p + 4); p += 8 } // V5 continuation
     else p += 4 // legacy V4 framing
     req(metaLen > 0 && p + metaLen <= b.length, s"arrow: metadata length $metaLen out of range")
     val meta = java.util.Arrays.copyOfRange(b, p, p + metaLen)
@@ -440,7 +436,7 @@ object ArrowIpc {
       else if (codec < 0) java.util.Arrays.copyOfRange(body, start, start + len.toInt)
       else {
         req(len >= 8, "arrow: compressed buffer shorter than its length prefix")
-        val declared = i64(body, start)
+        val declared = le64(body, start)
         val payload = java.util.Arrays.copyOfRange(body, start + 8, start + len.toInt)
         if (declared == -1L) payload // spec: -1 marks an uncompressed buffer
         else {
@@ -523,14 +519,14 @@ object ArrowIpc {
           if (isValid(bm, i, nullCount)) out(i) = (bits, signed) match {
             case (8, true) => java.lang.Byte.valueOf(d(i))
             case (8, false) => java.lang.Short.valueOf((d(i) & 0xff).toShort)
-            case (16, true) => java.lang.Short.valueOf(i16(d, 2 * i).toShort)
-            case (16, false) => java.lang.Integer.valueOf(u16(d, 2 * i))
-            case (32, true) => java.lang.Integer.valueOf(i32(d, 4 * i))
-            case (32, false) => java.lang.Long.valueOf(i32(d, 4 * i) & 0xffffffffL)
-            case (64, true) => java.lang.Long.valueOf(i64(d, 8 * i))
+            case (16, true) => java.lang.Short.valueOf(le16(d, 2 * i).toShort)
+            case (16, false) => java.lang.Integer.valueOf(le16(d, 2 * i))
+            case (32, true) => java.lang.Integer.valueOf(le32(d, 4 * i))
+            case (32, false) => java.lang.Long.valueOf(le32(d, 4 * i) & 0xffffffffL)
+            case (64, true) => java.lang.Long.valueOf(le64(d, 8 * i))
             case (64, false) =>
               // lossless carrier: unsigned 64 -> BigDecimal(20,0)
-              val v = i64(d, 8 * i)
+              val v = le64(d, 8 * i)
               val big =
                 if (v >= 0) java.math.BigInteger.valueOf(v)
                 else java.math.BigInteger.valueOf(v).add(java.math.BigInteger.ONE.shiftLeft(64))
@@ -547,9 +543,9 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           if (isValid(bm, i, nullCount)) out(i) = prec match {
-            case 0 => java.lang.Float.valueOf(graft.multimodal.Rad.halfToFloat(u16(d, 2 * i)))
-            case 1 => java.lang.Float.valueOf(java.lang.Float.intBitsToFloat(i32(d, 4 * i)))
-            case 2 => java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(i64(d, 8 * i)))
+            case 0 => java.lang.Float.valueOf(graft.multimodal.Rad.halfToFloat(le16(d, 2 * i)))
+            case 1 => java.lang.Float.valueOf(java.lang.Float.intBitsToFloat(le32(d, 4 * i)))
+            case 2 => java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(le64(d, 8 * i)))
           }
           i += 1
         }
@@ -568,7 +564,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           if (isValid(validity, i, nullCount)) {
-            val a = i32(offs, 4 * i); val b2 = i32(offs, 4 * (i + 1))
+            val a = le32(offs, 4 * i); val b2 = le32(offs, 4 * (i + 1))
             req(a >= 0 && b2 >= a && b2 <= data.length, s"arrow: value extent [$a,$b2) for '${f.name}'")
             out(i) =
               if (effType == AUtf8) new String(data, a, b2 - a, java.nio.charset.StandardCharsets.UTF_8)
@@ -584,7 +580,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           if (isValid(validity, i, nullCount)) {
-            val a = i64(offs, 8 * i); val b2 = i64(offs, 8 * (i + 1))
+            val a = le64(offs, 8 * i); val b2 = le64(offs, 8 * (i + 1))
             req(a >= 0 && b2 >= a && b2 <= data.length, s"arrow: large value extent [$a,$b2) for '${f.name}'")
             out(i) =
               if (effType == ALargeUtf8)
@@ -620,19 +616,19 @@ object ArrowIpc {
         val (bm, d) = fixedData(4)
         val out = new Array[Any](n)
         var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Integer.valueOf(i32(d, 4 * i)); i += 1 }
+        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Integer.valueOf(le32(d, 4 * i)); i += 1 }
         out
       case ADate(_) | ATimestamp(_, _) | ADuration(_) | ATime(_, 64) =>
         val (bm, d) = fixedData(8)
         val out = new Array[Any](n)
         var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Long.valueOf(i64(d, 8 * i)); i += 1 }
+        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Long.valueOf(le64(d, 8 * i)); i += 1 }
         out
       case ATime(_, 32) =>
         val (bm, d) = fixedData(4)
         val out = new Array[Any](n)
         var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Integer.valueOf(i32(d, 4 * i)); i += 1 }
+        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Integer.valueOf(le32(d, 4 * i)); i += 1 }
         out
       case ATime(_, w) => fail(s"arrow: time$w")
       case AList | ALargeList =>
@@ -646,8 +642,8 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           if (isValid(validity, i, nullCount)) {
-            val a = if (wide) i64(offs, 8 * i) else i32(offs, 4 * i).toLong
-            val b2 = if (wide) i64(offs, 8 * (i + 1)) else i32(offs, 4 * (i + 1)).toLong
+            val a = if (wide) le64(offs, 8 * i) else le32(offs, 4 * i).toLong
+            val b2 = if (wide) le64(offs, 8 * (i + 1)) else le32(offs, 4 * (i + 1)).toLong
             req(a >= 0 && b2 >= a && b2 <= child.length, s"arrow: list extent [$a,$b2) for '${f.name}'")
             out(i) = child.slice(a.toInt, b2.toInt).toVector
           }
@@ -692,7 +688,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           if (isValid(validity, i, nullCount)) {
-            val a = i32(offs, 4 * i); val b2 = i32(offs, 4 * (i + 1))
+            val a = le32(offs, 4 * i); val b2 = le32(offs, 4 * (i + 1))
             req(a >= 0 && b2 >= a && b2 <= entries.length, s"arrow: map extent [$a,$b2) for '${f.name}'")
             var j = a
             while (j < b2) {
@@ -729,7 +725,7 @@ object ArrowIpc {
           val slot =
             if (!dense) i
             else {
-              val o = i32(offs, 4 * i)
+              val o = le32(offs, 4 * i)
               req(o >= 0 && o < kids(ci).length,
                 s"arrow: union '${f.name}' offset $o outside child of ${kids(ci).length}")
               o
@@ -751,13 +747,13 @@ object ArrowIpc {
         while (i < n) {
           if (isValid(validity, i, nullCount)) {
             val base = 16 * i
-            val len = i32(views, base)
+            val len = le32(views, base)
             req(len >= 0, s"arrow: view length $len for '${f.name}'")
             val bytes =
               if (len <= 12) java.util.Arrays.copyOfRange(views, base + 4, base + 4 + len)
               else {
-                val bufIdx = i32(views, base + 8)
-                val off = i32(views, base + 12)
+                val bufIdx = le32(views, base + 8)
+                val off = le32(views, base + 12)
                 req(bufIdx >= 0 && bufIdx < data.length, s"arrow: view buffer index $bufIdx for '${f.name}'")
                 val d = data(bufIdx)
                 req(off >= 0 && len <= d.length - off, s"arrow: view extent ($off,$len) for '${f.name}'")
@@ -789,8 +785,8 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           if (isValid(validity, i, nullCount)) {
-            val a = if (wide) i64(offs, 8 * i) else i32(offs, 4 * i).toLong
-            val sz = if (wide) i64(sizes, 8 * i) else i32(sizes, 4 * i).toLong
+            val a = if (wide) le64(offs, 8 * i) else le32(offs, 4 * i).toLong
+            val sz = if (wide) le64(sizes, 8 * i) else le32(sizes, 4 * i).toLong
             req(a >= 0 && sz >= 0 && a + sz <= child.length,
               s"arrow: list-view extent ($a,$sz) outside child of ${child.length} for '${f.name}'")
             out(i) = child.slice(a.toInt, (a + sz).toInt).toVector
@@ -894,7 +890,7 @@ object ArrowIpc {
       if (p < 0) Vector.empty
       else {
         val (n, base) = fbVector(meta, p, 16)
-        (0 until n).map(i => (i64(meta, base + 16 * i), i64(meta, base + 16 * i + 8)))
+        (0 until n).map(i => (le64(meta, base + 16 * i), le64(meta, base + 16 * i + 8)))
       }
     }
     val nodes = structVec(1)
@@ -914,7 +910,7 @@ object ArrowIpc {
       if (p < 0) Vector.empty
       else {
         val (n, base) = fbVector(meta, p, 8)
-        (0 until n).map(i => i64(meta, base + 8 * i))
+        (0 until n).map(i => le64(meta, base + 8 * i))
       }
     }
     (rows, nodes, buffers, codec, varCounts)
@@ -1022,9 +1018,9 @@ object ArrowIpc {
     var done = false
     while (!done && off < bytes.length) {
       req(off + 4 <= bytes.length, "arrow: truncated stream")
-      val w = i32(bytes, off)
+      val w = le32(bytes, off)
       if (w == 0) { done = true } // bare EOS (legacy)
-      else if (w == -1 && off + 8 <= bytes.length && i32(bytes, off + 4) == 0) { done = true }
+      else if (w == -1 && off + 8 <= bytes.length && le32(bytes, off + 4) == 0) { done = true }
       else {
         val (hType2, tab, meta, bodyStart) = parseMessage(bytes, off)
         val bodyLen = {
@@ -1256,12 +1252,8 @@ object ArrowIpc {
     }
 
     def putByte(v: Int): Unit = { space -= 1; buf(space) = v.toByte }
-    def putShort(v: Int): Unit = { space -= 2; buf(space) = v.toByte; buf(space + 1) = (v >> 8).toByte }
-    def putInt(v: Int): Unit = {
-      space -= 4
-      buf(space) = v.toByte; buf(space + 1) = (v >> 8).toByte
-      buf(space + 2) = (v >> 16).toByte; buf(space + 3) = (v >> 24).toByte
-    }
+    def putShort(v: Int): Unit = { space -= 2; setLe16(buf, space, v) }
+    def putInt(v: Int): Unit = { space -= 4; setLe32(buf, space, v) }
 
     def prependInt(v: Int): Unit = { prep(4, 0); putInt(v) }
     /** 4 LE bytes, no prep — for elements inside a startVector'd span. */
@@ -1458,10 +1450,6 @@ object ArrowIpc {
     val n = vals.length
     val (bm, nulls) = validityOf(vals)
     nodes += ((n.toLong, nulls))
-    def le32b(v: Int, a: Array[Byte], p: Int): Unit = {
-      a(p) = v.toByte; a(p + 1) = (v >> 8).toByte; a(p + 2) = (v >> 16).toByte; a(p + 3) = (v >> 24).toByte
-    }
-    def le64b(v: Long, a: Array[Byte], p: Int): Unit = { le32b(v.toInt, a, p); le32b((v >>> 32).toInt, a, p + 4) }
     f.tpe match {
       case AInt(bits, _) => // unsigned widths take raw low bits (u64 = the decimal carrier's two's complement)
         bufs += bm
@@ -1477,8 +1465,8 @@ object ArrowIpc {
           bits match {
             case 8 => d(i) = v.toByte
             case 16 => d(2 * i) = v.toByte; d(2 * i + 1) = (v >> 8).toByte
-            case 32 => le32b(v.toInt, d, 4 * i)
-            case _ => le64b(v, d, 8 * i)
+            case 32 => setLe32(d, 4 * i, v.toInt)
+            case _ => setLe64(d, 8 * i, v)
           }
           i += 1
         }
@@ -1489,7 +1477,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           val v = vals(i) match { case null => 0f; case x: java.lang.Number => x.floatValue }
-          le32b(java.lang.Float.floatToIntBits(v), d, 4 * i); i += 1
+          setLe32(d, 4 * i, java.lang.Float.floatToIntBits(v)); i += 1
         }
         bufs += d
       case AFloat(2) =>
@@ -1498,7 +1486,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           val v = vals(i) match { case null => 0d; case x: java.lang.Number => x.doubleValue }
-          le64b(java.lang.Double.doubleToLongBits(v), d, 8 * i); i += 1
+          setLe64(d, 8 * i, java.lang.Double.doubleToLongBits(v)); i += 1
         }
         bufs += d
       case ABool =>
@@ -1516,7 +1504,7 @@ object ArrowIpc {
         val data = new java.io.ByteArrayOutputStream()
         var i = 0
         while (i < n) {
-          le32b(data.size, offs, 4 * i)
+          setLe32(offs, 4 * i, data.size)
           vals(i) match {
             case null => ()
             case s: String => data.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1525,7 +1513,7 @@ object ArrowIpc {
           }
           i += 1
         }
-        le32b(data.size, offs, 4 * n)
+        setLe32(offs, 4 * n, data.size)
         bufs += offs
         bufs += data.toByteArray
       case ADate(0) | ATime(_, 32) =>
@@ -1534,7 +1522,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           val v = vals(i) match { case null => 0; case x: java.lang.Number => x.intValue }
-          le32b(v, d, 4 * i); i += 1
+          setLe32(d, 4 * i, v); i += 1
         }
         bufs += d
       case ATimestamp(_, _) | ADuration(_) | ATime(_, 64) | ADate(_) =>
@@ -1543,7 +1531,7 @@ object ArrowIpc {
         var i = 0
         while (i < n) {
           val v = vals(i) match { case null => 0L; case x: java.lang.Number => x.longValue }
-          le64b(v, d, 8 * i); i += 1
+          setLe64(d, 8 * i, v); i += 1
         }
         bufs += d
       case AList =>
@@ -1553,7 +1541,7 @@ object ArrowIpc {
         val flat = scala.collection.mutable.ArrayBuffer.empty[Any]
         var i = 0
         while (i < n) {
-          le32b(flat.length, offs, 4 * i)
+          setLe32(offs, 4 * i, flat.length)
           vals(i) match {
             case null => ()
             case s: Seq[_] => flat ++= s
@@ -1561,7 +1549,7 @@ object ArrowIpc {
           }
           i += 1
         }
-        le32b(flat.length, offs, 4 * n)
+        setLe32(offs, 4 * n, flat.length)
         bufs += offs
         encodeColumn(f.children.head, flat.toArray, nodes, bufs, varCounts)
       case AFixedSizeList(k) =>
@@ -1604,7 +1592,7 @@ object ArrowIpc {
         val flat = scala.collection.mutable.ArrayBuffer.empty[Any]
         var i = 0
         while (i < n) {
-          le32b(flat.length, offs, 4 * i)
+          setLe32(offs, 4 * i, flat.length)
           vals(i) match {
             case null => ()
             case s: Seq[_] =>
@@ -1617,7 +1605,7 @@ object ArrowIpc {
           }
           i += 1
         }
-        le32b(flat.length, offs, 4 * n)
+        setLe32(offs, 4 * n, flat.length)
         bufs += offs
         encodeColumn(f.children.head, flat.toArray, nodes, bufs, varCounts)
       case AUnion(dense, typeIds) =>
@@ -1639,7 +1627,7 @@ object ArrowIpc {
               val ci = tidToChild.getOrElse(tid, fail(s"arrow writer: undeclared union type id $tid"))
               types(i) = tid.toByte
               if (dense) {
-                le32b(perChild(ci).length, offs, 4 * i)
+                setLe32(offs, 4 * i, perChild(ci).length)
                 perChild(ci) += s(1)
               } else {
                 var j = 0
@@ -1670,12 +1658,12 @@ object ArrowIpc {
               v
             case x => fail(s"arrow writer: view value ${x.getClass.getSimpleName}")
           }
-          le32b(bytes.length, views, 16 * i)
+          setLe32(views, 16 * i, bytes.length)
           if (bytes.length <= 12) System.arraycopy(bytes, 0, views, 16 * i + 4, bytes.length)
           else {
             System.arraycopy(bytes, 0, views, 16 * i + 4, 4) // prefix
-            le32b(0, views, 16 * i + 8) // buffer index
-            le32b(data.size, views, 16 * i + 12)
+            setLe32(views, 16 * i + 8, 0) // buffer index
+            setLe32(views, 16 * i + 12, data.size)
             data.write(bytes)
           }
           i += 1
@@ -1701,8 +1689,8 @@ object ArrowIpc {
             case s: Seq[_] => s.foreach(flat += _)
             case x => fail(s"arrow writer: list-view value ${x.getClass.getSimpleName}")
           }
-          if (wide) { le64b(start.toLong, offs, 8 * i); le64b((flat.length - start).toLong, sizes, 8 * i) }
-          else { le32b(start, offs, 4 * i); le32b(flat.length - start, sizes, 4 * i) }
+          if (wide) { setLe64(offs, 8 * i, start.toLong); setLe64(sizes, 8 * i, (flat.length - start).toLong) }
+          else { setLe32(offs, 4 * i, start); setLe32(sizes, 4 * i, flat.length - start) }
           i += 1
         }
         bufs += offs
@@ -1818,7 +1806,7 @@ object ArrowIpc {
         val msg = encodeBatch(schema, cols, rows, codec)
         out.write(msg)
         // metaDataLength = framing prefix (8) + padded metadata
-        val metaLen = i32(msg, 4) + 8
+        val metaLen = le32(msg, 4) + 8
         Block(off, metaLen, msg.length.toLong - metaLen)
       }
       out.write(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)) // EOS

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{le16, le32, le64, leF64, putLe16, putLe32, putLe64, putLeF64}
+
 /** Pure-JVM COPC (Cloud-Optimized Point Cloud 1.0) STRUCTURE reader —
   * the metadata/octree half of the reference's point-cloud tiler
   * (`src/library/pctiler.cpp` serves EPT-style octree nodes;
@@ -50,13 +52,6 @@ object Copc {
       pointCount: Int // -1 in the raw stream marks a child page; resolved pages never surface here
   )
 
-  private def leU16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def leI32(b: Array[Byte], i: Int): Int = leU32(b, i).toInt
-  private def leU64(b: Array[Byte], i: Int): Long = (0 until 8).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-  private def leF64(b: Array[Byte], i: Int): Double = java.lang.Double.longBitsToDouble(leU64(b, i))
-
   /** The copc info VLR (user_id "copc", record_id 1) — REQUIRED to be
     * the first VLR, at offset 375 (COPC 1.0 §"copc info VLR"). Returns
     * None for anything that is not a COPC file. */
@@ -65,10 +60,10 @@ object Copc {
     if (!(b(0) == 'L' && b(1) == 'A' && b(2) == 'S' && b(3) == 'F')) return None
     if ((b(24) & 0xff) != 1 || (b(25) & 0xff) != 4) return None // COPC requires LAS 1.4
     val vlrUser = new String(b, 375 + 2, 16, "US-ASCII").takeWhile(c => c != 0.toChar && c != ' ')
-    val recordId = leU16(b, 375 + 18)
+    val recordId = le16(b, 375 + 18)
     if (vlrUser != "copc" || recordId != 1) return None
     val p = 375 + 54
-    val count = leU64(b, 247)
+    val count = le64(b, 247)
     Some(
       Info(
         centerX = leF64(b, p),
@@ -76,8 +71,8 @@ object Copc {
         centerZ = leF64(b, p + 16),
         halfSize = leF64(b, p + 24),
         spacing = leF64(b, p + 32),
-        rootHierOffset = leU64(b, p + 40),
-        rootHierSize = leU64(b, p + 48),
+        rootHierOffset = le64(b, p + 40),
+        rootHierSize = le64(b, p + 48),
         pointCount = count
       )
     )
@@ -96,8 +91,8 @@ object Copc {
       val n = (size / 32).toInt
       (0 until n).foreach { i =>
         val p = offset.toInt + i * 32
-        val node = Node(leI32(b, p), leI32(b, p + 4), leI32(b, p + 8), leI32(b, p + 12),
-          leU64(b, p + 16), leI32(b, p + 24), leI32(b, p + 28))
+        val node = Node(le32(b, p), le32(b, p + 4), le32(b, p + 8), le32(b, p + 12),
+          le64(b, p + 16), le32(b, p + 24), le32(b, p + 28))
         if (node.pointCount == -1) page(node.offset, node.byteSize.toLong)
         else if (node.pointCount >= 0) out += node
       }
@@ -202,74 +197,70 @@ object Copc {
 
     val out = new ArrayBuffer[Byte]((chunkTableOffset + tableBytes).toInt + 32 * (sorted.size + 2))
     def pad(n: Int): Unit = (0 until n).foreach(_ => out += 0)
-    def u16(v: Int): Unit = { out += v.toByte; out += (v >> 8).toByte }
-    def u32(v: Long): Unit = (0 until 4).foreach(k => out += (v >> (8 * k)).toByte)
-    def u64(v: Long): Unit = (0 until 8).foreach(k => out += (v >> (8 * k)).toByte)
-    def f64(v: Double): Unit = u64(java.lang.Double.doubleToLongBits(v))
     def str(s: String, len: Int): Unit = out ++= s.getBytes("US-ASCII").padTo(len, 0.toByte)
 
     // --- LAS 1.4 header (375)
     str("LASF", 4)
-    u16(0); u16(0) // source id, global encoding
+    putLe16(out, 0); putLe16(out, 0) // source id, global encoding
     pad(16) // GUID
     out += 1; out += 4 // 1.4
     str("graft", 32); str("graft copc writer", 32)
-    u16(1); u16(2026)
-    u16(headerSize)
-    u32(offsetToPoints.toLong)
-    u32(2L) // VLRs
+    putLe16(out, 1); putLe16(out, 2026)
+    putLe16(out, headerSize)
+    putLe32(out, offsetToPoints.toLong)
+    putLe32(out, 2L) // VLRs
     out += (pointFormat | 0x80).toByte // compressed-flag bit on the format id
-    u16(recordLen)
-    u32(0L) // legacy point count (1.4: use the u64 field)
-    (0 until 5).foreach(_ => u32(0L))
-    f64(scale); f64(scale); f64(scale)
-    f64(0.0); f64(0.0); f64(0.0)
-    f64(minX + cubeSize); f64(minX) // max/min X
-    f64(minY + cubeSize); f64(minY)
-    f64(minZ + cubeSize); f64(minZ)
-    u64(0L) // waveform
-    u64(0L); u32(0L) // first EVLR, n EVLRs
-    u64(totalPoints)
-    (0 until 15).foreach(_ => u64(0L))
+    putLe16(out, recordLen)
+    putLe32(out, 0L) // legacy point count (1.4: use the u64 field)
+    (0 until 5).foreach(_ => putLe32(out, 0L))
+    putLeF64(out, scale); putLeF64(out, scale); putLeF64(out, scale)
+    putLeF64(out, 0.0); putLeF64(out, 0.0); putLeF64(out, 0.0)
+    putLeF64(out, minX + cubeSize); putLeF64(out, minX) // max/min X
+    putLeF64(out, minY + cubeSize); putLeF64(out, minY)
+    putLeF64(out, minZ + cubeSize); putLeF64(out, minZ)
+    putLe64(out, 0L) // waveform
+    putLe64(out, 0L); putLe32(out, 0L) // first EVLR, n EVLRs
+    putLe64(out, totalPoints)
+    (0 until 15).foreach(_ => putLe64(out, 0L))
     require(out.length == headerSize)
 
     // --- copc info VLR (first VLR, REQUIRED at 375)
-    u16(0); str("copc", 16); u16(1); u16(160); str("copc info", 32)
+    putLe16(out, 0); str("copc", 16); putLe16(out, 1); putLe16(out, 160); str("copc info", 32)
     val half = cubeSize / 2
-    f64(minX + half); f64(minY + half); f64(minZ + half)
-    f64(half)
-    f64(spacing)
-    u64(rootOffset); u64(rootSize)
-    f64(0.0); f64(0.0) // gpstime min/max
-    (0 until 11).foreach(_ => u64(0L))
+    putLeF64(out, minX + half); putLeF64(out, minY + half); putLeF64(out, minZ + half)
+    putLeF64(out, half)
+    putLeF64(out, spacing)
+    putLe64(out, rootOffset); putLe64(out, rootSize)
+    putLeF64(out, 0.0); putLeF64(out, 0.0) // gpstime min/max
+    (0 until 11).foreach(_ => putLe64(out, 0L))
     require(out.length == headerSize + infoVlrSize)
 
     // --- laszip VLR (truthful item list for the stored codec family)
-    u16(0); str("laszip encoded", 16); u16(22204); u16((34 + 6 * numItems)); str("graft laz", 32)
-    u16(if (pointFormat == 6) 3 else 2); u16(0) // compressor: layered vs pointwise chunked
+    putLe16(out, 0); str("laszip encoded", 16); putLe16(out, 22204); putLe16(out, (34 + 6 * numItems)); str("graft laz", 32)
+    putLe16(out, if (pointFormat == 6) 3 else 2); putLe16(out, 0) // compressor: layered vs pointwise chunked
     if (pointFormat == 6) { out += 3; out += 4 } else { out += 2; out += 2 }
-    u16(0); u32(0L)
-    u32(0xFFFFFFFFL) // variable chunk size: one chunk per octree node
-    u64(0L); u64(0L)
-    u16(numItems)
-    if (pointFormat == 6) { u16(10); u16(30); u16(3) } // POINT14 v3
+    putLe16(out, 0); putLe32(out, 0L)
+    putLe32(out, 0xFFFFFFFFL) // variable chunk size: one chunk per octree node
+    putLe64(out, 0L); putLe64(out, 0L)
+    putLe16(out, numItems)
+    if (pointFormat == 6) { putLe16(out, 10); putLe16(out, 30); putLe16(out, 3) } // POINT14 v3
     else {
-      u16(6); u16(20); u16(2) // POINT10 v2
-      u16(7); u16(8); u16(2) // GPSTIME11 v2
+      putLe16(out, 6); putLe16(out, 20); putLe16(out, 2) // POINT10 v2
+      putLe16(out, 7); putLe16(out, 8); putLe16(out, 2) // GPSTIME11 v2
     }
     require(out.length == offsetToPoints)
 
     // --- point data: chunk table pointer, chunks, chunk table
-    u64(chunkTableOffset)
+    putLe64(out, chunkTableOffset)
     sorted.foreach(out ++= _.chunk)
-    u32(0L); u32(sorted.size.toLong)
+    putLe32(out, 0L); putLe32(out, sorted.size.toLong)
     out ++= tableStream
     require(out.length == rootOffset)
 
     // --- hierarchy pages
     def entry(level: Int, x: Int, y: Int, z: Int, off: Long, size: Int, count: Int): Unit = {
-      u32(level.toLong); u32(x.toLong); u32(y.toLong); u32(z.toLong)
-      u64(off); u32(size.toLong); u32(count.toLong)
+      putLe32(out, level.toLong); putLe32(out, x.toLong); putLe32(out, y.toLong); putLe32(out, z.toLong)
+      putLe64(out, off); putLe32(out, size.toLong); putLe32(out, count.toLong)
     }
     shallow.foreach { case (n, i) => entry(n.level, n.x, n.y, n.z, offsets(i), n.chunk.length, n.pointCount) }
     if (deep.nonEmpty) {

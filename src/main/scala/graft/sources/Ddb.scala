@@ -2,6 +2,8 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{le32, leF64, putLe32, putLeF64}
+
 /** The `.ddb` index database face — the reference's on-disk registry is
   * a SQLite file with an `entries` / `passwords` / `entries_meta`
   * schema plus a `user_version`-keyed migration ladder
@@ -112,33 +114,16 @@ object Ddb {
 
   // --- spatialite BLOB-Geometry (the format GeomFromText stores) ------
 
-  private def putLeDouble(out: ArrayBuffer[Byte], v: Double): Unit = {
-    val bits = java.lang.Double.doubleToLongBits(v)
-    var k = 0
-    while (k < 8) { out += (bits >>> (8 * k)).toByte; k += 1 }
-  }
-  private def putLeInt(out: ArrayBuffer[Byte], v: Int): Unit = {
-    out += v.toByte; out += (v >> 8).toByte; out += (v >> 16).toByte; out += (v >> 24).toByte
-  }
-  private def leInt(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  private def leDouble(b: Array[Byte], i: Int): Double = {
-    var bits = 0L
-    var k = 7
-    while (k >= 0) { bits = (bits << 8) | (b(i + k) & 0xffL); k -= 1 }
-    java.lang.Double.longBitsToDouble(bits)
-  }
-
   /** POINT Z (class 1001), SRID 4326, little-endian, MBR + 0x7C marker,
     * 0xFE terminator — the spatialite blob layout. */
   def pointZBlob(x: Double, y: Double, z: Double, srid: Int = 4326): Array[Byte] = {
     val out = new ArrayBuffer[Byte](60)
     out += 0x00; out += 0x01
-    putLeInt(out, srid)
-    putLeDouble(out, x); putLeDouble(out, y); putLeDouble(out, x); putLeDouble(out, y)
+    putLe32(out, srid)
+    putLeF64(out, x); putLeF64(out, y); putLeF64(out, x); putLeF64(out, y)
     out += 0x7c
-    putLeInt(out, 1001)
-    putLeDouble(out, x); putLeDouble(out, y); putLeDouble(out, z)
+    putLe32(out, 1001)
+    putLeF64(out, x); putLeF64(out, y); putLeF64(out, z)
     out += 0xfe.toByte
     out.toArray
   }
@@ -148,31 +133,31 @@ object Ddb {
     require(ring.nonEmpty, "polygonZBlob: empty ring")
     val out = new ArrayBuffer[Byte](64 + 24 * ring.length)
     out += 0x00; out += 0x01
-    putLeInt(out, srid)
-    putLeDouble(out, ring.map(_._1).min); putLeDouble(out, ring.map(_._2).min)
-    putLeDouble(out, ring.map(_._1).max); putLeDouble(out, ring.map(_._2).max)
+    putLe32(out, srid)
+    putLeF64(out, ring.map(_._1).min); putLeF64(out, ring.map(_._2).min)
+    putLeF64(out, ring.map(_._1).max); putLeF64(out, ring.map(_._2).max)
     out += 0x7c
-    putLeInt(out, 1003)
-    putLeInt(out, 1) // one ring
-    putLeInt(out, ring.length)
-    ring.foreach { case (x, y, z) => putLeDouble(out, x); putLeDouble(out, y); putLeDouble(out, z) }
+    putLe32(out, 1003)
+    putLe32(out, 1) // one ring
+    putLe32(out, ring.length)
+    ring.foreach { case (x, y, z) => putLeF64(out, x); putLeF64(out, y); putLeF64(out, z) }
     out += 0xfe.toByte
     out.toArray
   }
 
   def parsePointZ(blob: Array[Byte]): Option[(Double, Double, Double)] = {
     if (blob == null || blob.length < 68 || blob(0) != 0x00 || blob(38) != 0x7c) return None
-    if (leInt(blob, 39) != 1001) return None
-    Some((leDouble(blob, 43), leDouble(blob, 51), leDouble(blob, 59)))
+    if (le32(blob, 39) != 1001) return None
+    Some((leF64(blob, 43), leF64(blob, 51), leF64(blob, 59)))
   }
 
   def parsePolygonZ(blob: Array[Byte]): Option[Seq[(Double, Double, Double)]] = {
     if (blob == null || blob.length < 52 || blob(0) != 0x00 || blob(38) != 0x7c) return None
-    if (leInt(blob, 39) != 1003) return None
-    val nRings = leInt(blob, 43)
+    if (le32(blob, 39) != 1003) return None
+    val nRings = le32(blob, 43)
     if (nRings < 1) return Some(Seq.empty)
-    val n = leInt(blob, 47)
-    val pts = (0 until n).map { i => (leDouble(blob, 51 + 24 * i), leDouble(blob, 59 + 24 * i), leDouble(blob, 67 + 24 * i)) }
+    val n = le32(blob, 47)
+    val pts = (0 until n).map { i => (leF64(blob, 51 + 24 * i), leF64(blob, 59 + 24 * i), leF64(blob, 67 + 24 * i)) }
     Some(pts)
   }
 

@@ -5,6 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{crc32c, le16, le32, le64, putLe16, putLe64, setLe32, setLe64}
+
 /** ASTM E57 point-cloud container — the `.e57` extension the
   * reference types as PointCloud and converts through PDAL
   * (`pointcloud_test.cpp` e57Info / copcFromE57); here the format
@@ -34,34 +36,6 @@ import org.apache.spark.sql.types._
   */
 object E57 {
 
-  // ---- CRC-32C (Castagnoli, reflected 0x1EDC6F41) ---------------------
-
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var n = 0
-    while (n < 256) {
-      var c = n
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1) != 0) 0x82f63b78 ^ (c >>> 1) else c >>> 1
-        k += 1
-      }
-      t(n) = c
-      n += 1
-    }
-    t
-  }
-
-  def crc32c(b: Array[Byte], off: Int, len: Int): Int = {
-    var crc = 0xffffffff
-    var i = 0
-    while (i < len) {
-      crc = CrcTable((crc ^ b(off + i)) & 0xff) ^ (crc >>> 8)
-      i += 1
-    }
-    ~crc
-  }
-
   // ---- paged physical <-> logical layer -------------------------------
 
   private val PageSize = 1024
@@ -75,8 +49,7 @@ object E57 {
     var p = 0
     while (p < nPages) {
       val at = p * PageSize
-      val stored = ((physical(at + 1020) & 0xff)) | ((physical(at + 1021) & 0xff) << 8) |
-        ((physical(at + 1022) & 0xff) << 16) | ((physical(at + 1023) & 0xff) << 24)
+      val stored = le32(physical, at + 1020)
       val computed = crc32c(physical, at, PagePayload)
       require(stored == computed, s"e57: page $p checksum mismatch (corrupt page)")
       System.arraycopy(physical, at, out, p * PagePayload, PagePayload)
@@ -94,10 +67,7 @@ object E57 {
       val n = math.min(PagePayload, logical.length - p * PagePayload)
       System.arraycopy(logical, p * PagePayload, out, p * PageSize, n)
       val crc = crc32c(out, p * PageSize, PagePayload)
-      out(p * PageSize + 1020) = crc.toByte
-      out(p * PageSize + 1021) = (crc >> 8).toByte
-      out(p * PageSize + 1022) = (crc >> 16).toByte
-      out(p * PageSize + 1023) = (crc >> 24).toByte
+      setLe32(out, p * PageSize + 1020, crc)
       p += 1
     }
     out
@@ -121,12 +91,7 @@ object E57 {
 
   final case class Scan(fields: Seq[Field], records: Seq[Array[Double]], name: String = "scan")
 
-  // ---- little-endian + bit IO ----------------------------------------
-
-  private def leU16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU64(b: Array[Byte], i: Int): Long = (0 until 8).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-  private def putU16(o: ArrayBuffer[Byte], v: Int): Unit = { o += v.toByte; o += (v >> 8).toByte }
-  private def putU64(o: ArrayBuffer[Byte], v: Long): Unit = (0 until 8).foreach(k => o += (v >> (8 * k)).toByte)
+  // ---- bit IO ----------------------------------------------------------
 
   private final class BitWriter {
     private val buf = new ArrayBuffer[Byte]()
@@ -201,9 +166,9 @@ object E57 {
     out += 1
     (0 until 7).foreach(_ => out += 0)
     val lenAt = out.length
-    putU64(out, 0L) // sectionLogicalLength, fixed below
-    putU64(out, 0L) // dataPhysicalOffset (assembler)
-    putU64(out, 0L) // indexPhysicalOffset (unused)
+    putLe64(out, 0L) // sectionLogicalLength, fixed below
+    putLe64(out, 0L) // dataPhysicalOffset (assembler)
+    putLe64(out, 0L) // indexPhysicalOffset (unused)
     scan.records.grouped(maxRecordsPerPacket).foreach { group =>
       val streams = scan.fields.map { f =>
         val bw = new BitWriter
@@ -218,9 +183,9 @@ object E57 {
       require(logicalLen <= 0x10000, "e57: data packet exceeds 64 KiB")
       out += 1 // packet type: data
       out += 0 // flags
-      putU16(out, logicalLen - 1)
-      putU16(out, bsCount)
-      streams.foreach(st => putU16(out, st.length))
+      putLe16(out, logicalLen - 1)
+      putLe16(out, bsCount)
+      streams.foreach(st => putLe16(out, st.length))
       streams.foreach(out ++= _)
       (0 until pad).foreach(_ => out += 0)
     }
@@ -264,14 +229,12 @@ object E57 {
     val arr = logical.toArray
     // header: signature, version 1.0, lengths, XML PHYSICAL offset + logical length, page size
     System.arraycopy("ASTM-E57".getBytes("US-ASCII"), 0, arr, 0, 8)
-    def put32(at: Int, v: Long): Unit = (0 until 4).foreach(k => arr(at + k) = (v >> (8 * k)).toByte)
-    def put64(at: Int, v: Long): Unit = (0 until 8).foreach(k => arr(at + k) = (v >> (8 * k)).toByte)
-    put32(8, 1L); put32(12, 0L)
+    setLe32(arr, 8, 1); setLe32(arr, 12, 0)
     val nPages = (arr.length + PagePayload - 1) / PagePayload
-    put64(16, nPages.toLong * PageSize) // filePhysicalLength
-    put64(24, logicalToPhysical(xmlLogicalOffset)) // xmlPhysicalOffset
-    put64(32, xml.length.toLong) // xmlLogicalLength
-    put64(40, PageSize.toLong)
+    setLe64(arr, 16, nPages.toLong * PageSize) // filePhysicalLength
+    setLe64(arr, 24, logicalToPhysical(xmlLogicalOffset)) // xmlPhysicalOffset
+    setLe64(arr, 32, xml.length.toLong) // xmlLogicalLength
+    setLe64(arr, 40, PageSize.toLong)
     toPhysical(arr)
   }
 
@@ -320,9 +283,9 @@ object E57 {
   private def header(physical: Array[Byte]): (Long, Long) = {
     require(physical.length >= PageSize, "e57: truncated file")
     require(new String(physical, 0, 8, "US-ASCII") == "ASTM-E57", "e57: bad signature (not an ASTM-E57 payload)")
-    val xmlPhysOff = leU64(physical, 24)
-    val xmlLogicalLen = leU64(physical, 32)
-    require(leU64(physical, 40) == PageSize, s"e57: unsupported page size ${leU64(physical, 40)}")
+    val xmlPhysOff = le64(physical, 24)
+    val xmlLogicalLen = le64(physical, 32)
+    require(le64(physical, 40) == PageSize, s"e57: unsupported page size ${le64(physical, 40)}")
     (xmlPhysOff, xmlLogicalLen)
   }
 
@@ -347,10 +310,10 @@ object E57 {
       while (remaining > 0) {
         require(at + 6 <= logical.length, "e57: truncated data packet")
         require(logical(at) == 1, s"e57: unexpected packet type ${logical(at)}")
-        val logicalLen = leU16(logical, at + 2) + 1
-        val bsCount = leU16(logical, at + 4)
+        val logicalLen = le16(logical, at + 2) + 1
+        val bsCount = le16(logical, at + 4)
         require(bsCount == fields.length, s"e57: packet has $bsCount bytestreams for ${fields.length} fields")
-        val lens = (0 until bsCount).map(k => leU16(logical, at + 6 + 2 * k))
+        val lens = (0 until bsCount).map(k => le16(logical, at + 6 + 2 * k))
         var bufAt = at + 6 + 2 * bsCount
         val readers = fields.zipWithIndex.map { case (f, k) =>
           val r = new BitReader(java.util.Arrays.copyOfRange(logical, bufAt, bufAt + lens(k)))

@@ -47,40 +47,15 @@ object Exif {
     * (the at-scale thumbnail fast path). None when absent/corrupt. */
   def thumbnail(bytes: Array[Byte]): Option[Array[Byte]] = {
     try {
-      val app1 = locateApp1(bytes).getOrElse(return None)
-      val (off, end) = app1
-      val little = b2(bytes, off) == "II"
-      val big = b2(bytes, off) == "MM"
-      if (!little && !big) return None
-      def u16(i: Int): Int =
-        if (little) (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-        else ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff)
-      def u32(i: Int): Long =
-        if (little)
-          (bytes(i) & 0xffL) | ((bytes(i + 1) & 0xffL) << 8) | ((bytes(i + 2) & 0xffL) << 16) | ((bytes(i + 3) & 0xffL) << 24)
-        else
-          ((bytes(i) & 0xffL) << 24) | ((bytes(i + 1) & 0xffL) << 16) | ((bytes(i + 2) & 0xffL) << 8) | (bytes(i + 3) & 0xffL)
-      val ifd0 = off + u32(off + 4).toInt
-      if (ifd0 + 2 > end) return None
-      val n0 = u16(ifd0)
-      val nextAt = ifd0 + 2 + n0 * 12
-      if (nextAt + 4 > end) return None
-      val ifd1Off = u32(nextAt)
-      if (ifd1Off <= 0) return None
-      val ifd1 = off + ifd1Off.toInt
-      if (ifd1 + 2 > end) return None
-      val n1 = u16(ifd1)
+      val (off, end) = locateApp1(bytes).getOrElse(return None)
+      val t = Tiff.open(bytes, off, end).getOrElse(return None)
+      val ifd1 = t.next(t.ifd0)
+      if (ifd1 <= 0) return None
       var jif = -1L
       var jifLen = -1L
-      (0 until math.min(n1, 256)).foreach { k =>
-        val e = ifd1 + 2 + k * 12
-        if (e + 12 <= end) {
-          val id = u16(e)
-          val tpe = u16(e + 2)
-          val v = if (tpe == 3) u16(e + 8).toLong else u32(e + 8)
-          if (id == 0x0201) jif = v
-          if (id == 0x0202) jifLen = v
-        }
+      t.entries(ifd1, 256).foreach { e =>
+        if (e.id == 0x0201) jif = t.scalar(e)
+        if (e.id == 0x0202) jifLen = t.scalar(e)
       }
       if (jif <= 0 || jifLen <= 0) return None
       val at = off + jif.toInt
@@ -91,24 +66,18 @@ object Exif {
     } catch { case _: Exception => None }
   }
 
-  private def b2(b: Array[Byte], i: Int): String = new String(b, i, 2, "US-ASCII")
+  /** Index of the APP1 "Exif\0\0" segment's marker, or -1. */
+  private[sources] def app1At(bytes: Array[Byte]): Int =
+    Bytes.jpegSegment(bytes) { (marker, i) =>
+      marker == 0xe1 && i + 10 <= bytes.length &&
+      bytes(i + 4) == 'E' && bytes(i + 5) == 'x' && bytes(i + 6) == 'i' &&
+      bytes(i + 7) == 'f' && bytes(i + 8) == 0 && bytes(i + 9) == 0
+    }
 
   /** (tiffStart, tiffEnd) of the APP1 Exif block, if present. */
   private def locateApp1(bytes: Array[Byte]): Option[(Int, Int)] = {
-    if (bytes == null || bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8) return None
-    var i = 2
-    while (i + 4 < bytes.length) {
-      if ((bytes(i) & 0xff) != 0xff) return None
-      val marker = bytes(i + 1) & 0xff
-      if (marker == 0xd9 || marker == 0xda) return None
-      val len = ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-      if (marker == 0xe1 && i + 10 <= bytes.length &&
-        bytes(i + 4) == 'E' && bytes(i + 5) == 'x' && bytes(i + 6) == 'i' &&
-        bytes(i + 7) == 'f' && bytes(i + 8) == 0 && bytes(i + 9) == 0)
-        return Some((i + 10, math.min(bytes.length, i + 2 + len)))
-      i += 2 + len
-    }
-    None
+    val i = app1At(bytes)
+    if (i < 0) None else Some((i + 10, math.min(bytes.length, i + 2 + Bytes.be16(bytes, i + 2))))
   }
 
   /** Extract from JPEG bytes: find APP1 "Exif\0\0", parse the TIFF. */
@@ -118,54 +87,23 @@ object Exif {
   /** Parse a TIFF (EXIF) block in bytes[off, end). */
   def fromTiff(b: Array[Byte], off: Int, end: Int): ExifData = {
     try {
-      if (off + 8 > end) return empty
-      val little = b(off) == 'I' && b(off + 1) == 'I'
-      val big = b(off) == 'M' && b(off + 1) == 'M'
-      if (!little && !big) return empty
-
-      def u16(i: Int): Int =
-        if (i + 2 > end) 0
-        else if (little) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-        else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-      def u32(i: Int): Long =
-        if (i + 4 > end) 0L
-        else if (little)
-          (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-        else
-          ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-
-      final case class Tag(id: Int, tpe: Int, count: Long, valueOff: Int)
-
-      def readIfd(ifdOff: Long): Seq[Tag] = {
-        val base = off + ifdOff.toInt
-        if (base + 2 > end || ifdOff <= 0) return Seq.empty
-        val n = u16(base)
-        (0 until math.min(n, 256)).flatMap { k =>
-          val e = base + 2 + k * 12
-          if (e + 12 > end) None
-          else Some(Tag(u16(e), u16(e + 2), u32(e + 4), e + 8))
-        }
-      }
-
-      val typeSize = Map(1 -> 1, 2 -> 1, 3 -> 2, 4 -> 4, 5 -> 8, 7 -> 1, 10 -> 8)
-
-      def valueBase(t: Tag): Int = {
-        val sz = typeSize.getOrElse(t.tpe, 1).toLong * t.count
-        if (sz <= 4) t.valueOff else off + u32(t.valueOff).toInt
-      }
+      val tiff = Tiff.open(b, off, end).getOrElse(return empty)
+      import tiff.{u16, u32}
+      type Tag = Tiff.Entry
+      def readIfd(ifdOff: Long): Seq[Tag] = tiff.entries(ifdOff, 256)
 
       def ascii(t: Tag): Option[String] = {
-        val base = valueBase(t)
+        val base = tiff.valueAt(t)
         val n = t.count.toInt
         if (base + n > end || n <= 0) None
         else Some(new String(b, base, n, "US-ASCII").takeWhile(_ != 0.toChar).trim).filter(_.nonEmpty)
       }
 
       def shortVal(t: Tag): Option[Int] =
-        if (t.tpe == 3) Some(u16(t.valueOff)) else None
+        if (t.tpe == 3) Some(u16(t.at)) else None
 
       def rational(t: Tag, idx: Int = 0): Option[Double] = {
-        val base = valueBase(t) + idx * 8
+        val base = tiff.valueAt(t) + idx * 8
         if (base + 8 > end) None
         else {
           val num = u32(base); val den = u32(base + 4)
@@ -173,11 +111,11 @@ object Exif {
         }
       }
 
-      val ifd0 = readIfd(u32(off + 4))
+      val ifd0 = readIfd(tiff.ifd0)
       def find(tags: Seq[Tag], id: Int): Option[Tag] = tags.find(_.id == id)
 
-      val exifIfd = find(ifd0, 0x8769).map(t => readIfd(u32(t.valueOff))).getOrElse(Seq.empty)
-      val gpsIfd = find(ifd0, 0x8825).map(t => readIfd(u32(t.valueOff))).getOrElse(Seq.empty)
+      val exifIfd = find(ifd0, 0x8769).map(t => readIfd(u32(t.at))).getOrElse(Seq.empty)
+      val gpsIfd = find(ifd0, 0x8825).map(t => readIfd(u32(t.at))).getOrElse(Seq.empty)
 
       def dms(t: Tag): Option[Double] =
         for { d <- rational(t, 0); m <- rational(t, 1); s <- rational(t, 2) } yield d + m / 60 + s / 3600
@@ -187,7 +125,7 @@ object Exif {
       val lonRaw = find(gpsIfd, 0x0004).flatMap(dms)
       val lonRef = find(gpsIfd, 0x0003).flatMap(ascii)
       val alt = find(gpsIfd, 0x0006).flatMap(rational(_, 0)).map { a =>
-        if (find(gpsIfd, 0x0005).exists(t => u16(t.valueOff) == 1 || (b(t.valueOff) & 0xff) == 1)) -a else a
+        if (find(gpsIfd, 0x0005).exists(t => u16(t.at) == 1 || (b(t.at) & 0xff) == 1)) -a else a
       }
       val lat = latRaw.map(v => if (latRef.contains("S")) -v else v)
       val lon = lonRaw.map(v => if (lonRef.contains("W")) -v else v)

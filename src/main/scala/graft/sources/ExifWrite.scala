@@ -27,9 +27,6 @@ object ExifWrite {
 
   private final case class RawTag(id: Int, tpe: Int, count: Long, value: Array[Byte])
 
-  private val typeSize =
-    Map(1 -> 1, 2 -> 1, 3 -> 2, 4 -> 4, 5 -> 8, 6 -> 1, 7 -> 1, 8 -> 2, 9 -> 4, 10 -> 8, 11 -> 4, 12 -> 8)
-
   private val ExifPointer = 0x8769
   private val GpsPointer = 0x8825
   private val InteropPointer = 0xa005
@@ -55,7 +52,7 @@ object ExifWrite {
   private def gpsTags(lat: Double, lon: Double, alt: Double, little: Boolean): Seq[RawTag] = {
     def rat(rs: Seq[(Long, Long)]): Array[Byte] = {
       val out = new ArrayBuffer[Byte](rs.length * 8)
-      rs.foreach { case (n, d) => putU32(n, little, out); putU32(d, little, out) }
+      rs.foreach { case (n, d) => Bytes.put32(out, n, little); Bytes.put32(out, d, little) }
       out.toArray
     }
     Seq(
@@ -75,67 +72,27 @@ object ExifWrite {
     * and GPS tags stripped (they are rebuilt), values resolved to raw
     * bytes in source order. */
   private def parseTiffRaw(jpeg: Array[Byte]): Option[(Boolean, Seq[RawTag], Seq[RawTag])] = {
-    val app1 = findApp1(jpeg).getOrElse(return None)
-    val off = app1._1 + 10 // past "Exif\0\0"
-    val end = app1._2
-    val b = jpeg
-    if (off + 8 > end) return None
-    val little = b(off) == 'I' && b(off + 1) == 'I'
-    if (!little && !(b(off) == 'M' && b(off + 1) == 'M')) return None
-    def u16(i: Int): Int =
-      if (little) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    def u32(i: Int): Long =
-      if (little)
-        (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-      else ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
+    val (at, end) = findApp1(jpeg).getOrElse(return None)
+    val off = at + 10 // past "Exif\0\0"
+    val tiff = Tiff.open(jpeg, off, end).getOrElse(return None)
 
-    def readIfd(ifdOff: Long): Seq[RawTag] = {
-      val base = off + ifdOff.toInt
-      if (ifdOff <= 0 || base + 2 > end) return Seq.empty
-      val n = u16(base)
-      (0 until math.min(n, 256)).flatMap { k =>
-        val e = base + 2 + k * 12
-        if (e + 12 > end) None
-        else {
-          val id = u16(e); val tpe = u16(e + 2); val count = u32(e + 4)
-          val sz = typeSize.getOrElse(tpe, 1).toLong * count
-          val vb = if (sz <= 4) e + 8 else off + u32(e + 8).toInt
-          if (vb + sz > end || sz < 0) None
-          else Some(RawTag(id, tpe, count, java.util.Arrays.copyOfRange(b, vb, vb + sz.toInt)))
-        }
-      }
+    def readIfd(ifdOff: Long): Seq[RawTag] = tiff.entries(ifdOff, 256).flatMap { e =>
+      val sz = e.size
+      val vb = tiff.valueAt(e)
+      if (vb + sz > end || sz < 0) None
+      else Some(RawTag(e.id, e.tpe, e.count, java.util.Arrays.copyOfRange(jpeg, vb, vb + sz.toInt)))
     }
 
-    val ifd0 = readIfd(u32(off + 4))
-    val exifOff = ifd0.find(_.id == ExifPointer).map(t => valueU32(t, little))
+    val ifd0 = readIfd(tiff.ifd0)
+    val exifOff = ifd0.find(_.id == ExifPointer).map(t => Bytes.u32(t.value, 0, tiff.little))
     val exifTags = exifOff.map(readIfd).getOrElse(Seq.empty)
     val keep0 = ifd0.filterNot(t => t.id == ExifPointer || t.id == GpsPointer)
     // interop sub-IFD is not preserved → its pointer must not dangle
     val keepExif = exifTags.filterNot(_.id == InteropPointer)
-    Some((little, keep0, keepExif))
-  }
-
-  private def valueU32(t: RawTag, little: Boolean): Long = {
-    val b = t.value
-    if (little)
-      (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) | ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
-    else ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) | ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
+    Some((tiff.little, keep0, keepExif))
   }
 
   // ---- TIFF serialize ----------------------------------------------------
-
-  private def putU16(v: Int, little: Boolean, out: ArrayBuffer[Byte]): Unit =
-    if (little) { out += (v & 0xff).toByte; out += ((v >> 8) & 0xff).toByte }
-    else { out += ((v >> 8) & 0xff).toByte; out += (v & 0xff).toByte }
-
-  private def putU32(v: Long, little: Boolean, out: ArrayBuffer[Byte]): Unit =
-    if (little) {
-      out += (v & 0xff).toByte; out += ((v >> 8) & 0xff).toByte
-      out += ((v >> 16) & 0xff).toByte; out += ((v >> 24) & 0xff).toByte
-    } else {
-      out += ((v >> 24) & 0xff).toByte; out += ((v >> 16) & 0xff).toByte
-      out += ((v >> 8) & 0xff).toByte; out += (v & 0xff).toByte
-    }
 
   private def serializeTiff(
       little: Boolean,
@@ -158,18 +115,18 @@ object ExifWrite {
 
     def writeIfd(tags: Seq[RawTag], start: Int, out: ArrayBuffer[Byte]): Unit = {
       var extPos = start + ifdSize(tags)
-      putU16(tags.length, little, out)
+      Bytes.put16(out, tags.length, little)
       tags.sortBy(_.id).foreach { t =>
-        putU16(t.id, little, out); putU16(t.tpe, little, out); putU32(t.count, little, out)
+        Bytes.put16(out, t.id, little); Bytes.put16(out, t.tpe, little); Bytes.put32(out, t.count, little)
         val v =
-          if (t.id == ExifPointer) { putU32(exifStart.toLong, little, out); None }
-          else if (t.id == GpsPointer) { putU32(gpsStart.toLong, little, out); None }
+          if (t.id == ExifPointer) { Bytes.put32(out, exifStart.toLong, little); None }
+          else if (t.id == GpsPointer) { Bytes.put32(out, gpsStart.toLong, little); None }
           else if (t.value.length <= 4) {
             out ++= t.value; (t.value.length until 4).foreach(_ => out += 0); None
-          } else { putU32(extPos.toLong, little, out); extPos += extLen(t); Some(t.value) }
+          } else { Bytes.put32(out, extPos.toLong, little); extPos += extLen(t); Some(t.value) }
         v.foreach(_ => ())
       }
-      putU32(0L, little, out) // next IFD: none (thumbnail IFD1 dropped)
+      Bytes.put32(out, 0L, little) // next IFD: none (thumbnail IFD1 dropped)
       tags.sortBy(_.id).foreach { t =>
         if (t.value.length > 4 && t.id != ExifPointer && t.id != GpsPointer) {
           out ++= t.value
@@ -180,8 +137,8 @@ object ExifWrite {
 
     val out = new ArrayBuffer[Byte](gpsStart + ifdSize(gps) + extSize(gps))
     out += (if (little) 'I' else 'M').toByte; out += (if (little) 'I' else 'M').toByte
-    putU16(42, little, out)
-    putU32(8L, little, out)
+    Bytes.put16(out, 42, little)
+    Bytes.put32(out, 8L, little)
     writeIfd(ifd0, ifd0Start, out)
     if (exifTags.nonEmpty) writeIfd(exifTags.sortBy(_.id), exifStart, out)
     writeIfd(gps.sortBy(_.id), gpsStart, out)
@@ -190,22 +147,10 @@ object ExifWrite {
 
   // ---- JPEG segment splice ------------------------------------------------
 
-  /** (payload start incl. marker+len at -4 … we return (segStart, segEnd)) */
+  /** (segment start, segment end) of the APP1 Exif segment. */
   private def findApp1(jpeg: Array[Byte]): Option[(Int, Int)] = {
-    if (jpeg == null || jpeg.length < 4 || (jpeg(0) & 0xff) != 0xff || (jpeg(1) & 0xff) != 0xd8) return None
-    var i = 2
-    while (i + 4 < jpeg.length) {
-      if ((jpeg(i) & 0xff) != 0xff) return None
-      val marker = jpeg(i + 1) & 0xff
-      if (marker == 0xd9 || marker == 0xda) return None
-      val len = ((jpeg(i + 2) & 0xff) << 8) | (jpeg(i + 3) & 0xff)
-      if (marker == 0xe1 && i + 10 <= jpeg.length &&
-        jpeg(i + 4) == 'E' && jpeg(i + 5) == 'x' && jpeg(i + 6) == 'i' &&
-        jpeg(i + 7) == 'f' && jpeg(i + 8) == 0 && jpeg(i + 9) == 0)
-        return Some((i, i + 2 + len))
-      i += 2 + len
-    }
-    None
+    val i = Exif.app1At(jpeg)
+    if (i < 0) None else Some((i, i + 2 + Bytes.be16(jpeg, i + 2)))
   }
 
   private def spliceApp1(jpeg: Array[Byte], tiff: Array[Byte]): Array[Byte] = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.EntryType
+import graft.sources.Bytes.{be16, be32, le16, le32}
 
 /** Content-sniffing + per-type property extraction over raw bytes —
   * the pure-JVM core of the reference's `fingerprint` + `parseEntry`
@@ -47,30 +48,12 @@ object Extractors {
 
   /** Walk JPEG segments to the first SOF0-SOF15 frame header. */
   private def sniffJpeg(bytes: Array[Byte]): Option[ImageMeta] = {
-    var i = 2
-    while (i + 9 < bytes.length) {
-      if ((bytes(i) & 0xff) != 0xff) return None // lost sync
-      val marker = bytes(i + 1) & 0xff
-      if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7)) { i += 2 } // standalone
-      else {
-        val len = be16(bytes, i + 2)
-        if (len < 2) return None
-        val isSof = marker >= 0xc0 && marker <= 0xcf && marker != 0xc4 && marker != 0xc8 && marker != 0xcc
-        if (isSof) {
-          return Some(ImageMeta("jpeg", be16(bytes, i + 7), be16(bytes, i + 5)))
-        }
-        i += 2 + len
-      }
+    val sof = Bytes.jpegSegment(bytes) { (marker, _) =>
+      marker >= 0xc0 && marker <= 0xcf && marker != 0xc4 && marker != 0xc8 && marker != 0xcc
     }
-    None
+    if (sof < 0 || sof + 9 >= bytes.length) None
+    else Some(ImageMeta("jpeg", be16(bytes, sof + 7), be16(bytes, sof + 5)))
   }
-
-  private def be16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-  private def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   /** Content-first fingerprint: magic numbers override extension, like
     * the reference's sniffing order; panorama upgrade when aspect ratio

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{le16, le32, le32u, le64, leF64}
+
 /** Pure-JVM FlatGeobuf reader — the remaining named OGR long-tail
   * driver (`entry.cpp:1034` lists "fgb"; `vector_query.cpp` reads it
   * through OGR). FlatGeobuf 3.x (flatgeobuf.org spec) is: 8 magic
@@ -26,41 +28,34 @@ import org.apache.spark.sql.types._
   */
 object Fgb {
 
-  // ---- little-endian primitives -------------------------------------
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def u16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def i32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  private def u32(b: Array[Byte], i: Int): Long = i32(b, i) & 0xffffffffL
-  private def u64(b: Array[Byte], i: Int): Long = (0 until 8).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-  private def f64(b: Array[Byte], i: Int): Double = java.lang.Double.longBitsToDouble(u64(b, i))
 
   /** A FlatBuffers table: resolve field slots through the vtable. */
   private final case class Table(b: Array[Byte], pos: Int) {
-    private val vt = pos - i32(b, pos) // soffset (may be negative → vtable after table)
-    private val vtSize = u16(b, vt)
+    private val vt = pos - le32(b, pos) // soffset (may be negative → vtable after table)
+    private val vtSize = le16(b, vt)
     /** byte position of field `id`'s data, or -1 if absent. */
     def field(id: Int): Int = {
       val slot = 4 + 2 * id
       if (slot + 2 > vtSize) -1
       else {
-        val off = u16(b, vt + slot)
+        val off = le16(b, vt + slot)
         if (off == 0) -1 else pos + off
       }
     }
     def byteOr(id: Int, dflt: Int): Int = { val f = field(id); if (f < 0) dflt else u8(b, f) }
-    def u16Or(id: Int, dflt: Int): Int = { val f = field(id); if (f < 0) dflt else u16(b, f) }
-    def u64Or(id: Int, dflt: Long): Long = { val f = field(id); if (f < 0) dflt else u64(b, f) }
+    def u16Or(id: Int, dflt: Int): Int = { val f = field(id); if (f < 0) dflt else le16(b, f) }
+    def u64Or(id: Int, dflt: Long): Long = { val f = field(id); if (f < 0) dflt else le64(b, f) }
     /** follow a relative offset field to its target position. */
-    private def indirect(id: Int): Int = { val f = field(id); if (f < 0) -1 else f + i32(b, f) }
+    private def indirect(id: Int): Int = { val f = field(id); if (f < 0) -1 else f + le32(b, f) }
     def string(id: Int): Option[String] = {
       val t = indirect(id)
-      if (t < 0) None else Some(new String(b, t + 4, i32(b, t), "UTF-8"))
+      if (t < 0) None else Some(new String(b, t + 4, le32(b, t), "UTF-8"))
     }
     /** vector: (element-0 position, length); (-1, 0) if absent. */
     def vector(id: Int): (Int, Int) = {
       val t = indirect(id)
-      if (t < 0) (-1, 0) else (t + 4, i32(b, t))
+      if (t < 0) (-1, 0) else (t + 4, le32(b, t))
     }
     def table(id: Int): Option[Table] = {
       val t = indirect(id)
@@ -70,7 +65,7 @@ object Fgb {
     def tables(id: Int): Seq[Table] = {
       val (p, n) = vector(id)
       if (p < 0) Seq.empty
-      else (0 until n).map(k => Table(b, p + 4 * k + i32(b, p + 4 * k)))
+      else (0 until n).map(k => Table(b, p + 4 * k + le32(b, p + 4 * k)))
     }
   }
 
@@ -111,10 +106,10 @@ object Fgb {
   def header(b: Array[Byte]): Option[Header] = {
     if (!hasMagic(b)) return None
     try {
-      val hSize = u32(b, 8).toInt
-      val root = Table(b, 12 + i32(b, 12))
+      val hSize = le32u(b, 8).toInt
+      val root = Table(b, 12 + le32(b, 12))
       val (ep, en) = root.vector(1)
-      val env = if (en >= 4) Some((f64(b, ep), f64(b, ep + 8), f64(b, ep + 16), f64(b, ep + 24))) else None
+      val env = if (en >= 4) Some((leF64(b, ep), leF64(b, ep + 8), leF64(b, ep + 16), leF64(b, ep + 24))) else None
       val cols = root.tables(7).map(c => Column(c.string(0).getOrElse(""), c.byteOr(1, 0)))
       val _ = hSize
       Some(
@@ -156,26 +151,26 @@ object Fgb {
     var p = pos
     val end = pos + len
     while (p + 2 <= end) {
-      val ci = u16(b, p); p += 2
+      val ci = le16(b, p); p += 2
       if (ci >= cols.length) return out.toMap // unknown column: cannot size the value, stop
       val c = cols(ci)
       c.colType match {
         case TByte => out(c.name) = b(p).toString; p += 1
         case TUByte => out(c.name) = u8(b, p).toString; p += 1
         case TBool => out(c.name) = (u8(b, p) != 0).toString; p += 1
-        case TShort => out(c.name) = u16(b, p).toShort.toString; p += 2
-        case TUShort => out(c.name) = u16(b, p).toString; p += 2
-        case TInt => out(c.name) = i32(b, p).toString; p += 4
-        case TUInt => out(c.name) = u32(b, p).toString; p += 4
-        case TLong | TULong => out(c.name) = u64(b, p).toString; p += 8
+        case TShort => out(c.name) = le16(b, p).toShort.toString; p += 2
+        case TUShort => out(c.name) = le16(b, p).toString; p += 2
+        case TInt => out(c.name) = le32(b, p).toString; p += 4
+        case TUInt => out(c.name) = le32u(b, p).toString; p += 4
+        case TLong | TULong => out(c.name) = le64(b, p).toString; p += 8
         case TFloat =>
-          out(c.name) = java.lang.Float.intBitsToFloat(i32(b, p)).toString; p += 4
-        case TDouble => out(c.name) = f64(b, p).toString; p += 8
+          out(c.name) = java.lang.Float.intBitsToFloat(le32(b, p)).toString; p += 4
+        case TDouble => out(c.name) = leF64(b, p).toString; p += 8
         case TString | TJson | TDateTime =>
-          val n = u32(b, p).toInt; p += 4
+          val n = le32u(b, p).toInt; p += 4
           out(c.name) = new String(b, p, n, "UTF-8"); p += n
         case TBinary =>
-          val n = u32(b, p).toInt; p += 4
+          val n = le32u(b, p).toInt; p += 4
           out(c.name) = s"<$n bytes>"; p += n
         case _ => return out.toMap
       }
@@ -191,15 +186,15 @@ object Fgb {
     val h = header(b).getOrElse(return Seq.empty)
     val out = ArrayBuffer.empty[Feature]
     try {
-      var p = 12 + u32(b, 8).toInt + indexBytes(h.featuresCount, h.indexNodeSize).toInt
+      var p = 12 + le32u(b, 8).toInt + indexBytes(h.featuresCount, h.indexNodeSize).toInt
       while (p + 4 <= b.length && (h.featuresCount == 0 || out.length < h.featuresCount)) {
-        val fSize = u32(b, p).toInt
+        val fSize = le32u(b, p).toInt
         if (fSize <= 0 || p + 4 + fSize > b.length) return out.toSeq
-        val ft = Table(b, p + 4 + i32(b, p + 4))
+        val ft = Table(b, p + 4 + le32(b, p + 4))
         val geom = ft.table(0)
         def geomPts(g: Table): Seq[(Double, Double)] = {
           val (xp, xn) = g.vector(1) // xy: flat [x0 y0 x1 y1 ...]
-          val own = if (xp < 0) Seq.empty else (0 until xn / 2).map(k => (f64(b, xp + 16 * k), f64(b, xp + 16 * k + 8)))
+          val own = if (xp < 0) Seq.empty else (0 until xn / 2).map(k => (leF64(b, xp + 16 * k), leF64(b, xp + 16 * k + 8)))
           own ++ g.tables(8).flatMap(geomPts) // multi-part geometries nest in `parts`
         }
         val pts = geom.toSeq.flatMap(geomPts)

@@ -44,31 +44,10 @@ object GeoTiff {
 
   def sniff(b: Array[Byte]): Option[TiffMeta] = {
     if (b == null || b.length < 16) return None
-    val little = b(0) == 'I' && b(1) == 'I' && (b(2) & 0xff) == 42 && b(3) == 0
-    val big = b(0) == 'M' && b(1) == 'M' && b(2) == 0 && (b(3) & 0xff) == 42
-    if (!little && !big) return None
     try {
       val end = b.length
-      def u16(i: Int): Int =
-        if (i + 2 > end) 0
-        else if (little) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-        else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-      def u32(i: Int): Long =
-        if (i + 4 > end) 0L
-        else if (little)
-          (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-        else ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-      def f64(i: Int): Double = {
-        if (i + 8 > end) return 0.0
-        var bits = 0L
-        if (little) { var k = 7; while (k >= 0) { bits = (bits << 8) | (b(i + k) & 0xffL); k -= 1 } }
-        else { var k = 0; while (k < 8) { bits = (bits << 8) | (b(i + k) & 0xffL); k += 1 } }
-        java.lang.Double.longBitsToDouble(bits)
-      }
-
-      val ifdOff = u32(4).toInt
-      if (ifdOff <= 0 || ifdOff + 2 > end) return None
-      val n = u16(ifdOff)
+      val t = Tiff.open(b, 0, end).filter(_.u16(2) == 42).getOrElse(return None)
+      import t.{f64, u16}
       var width = 0; var height = 0; var bands = 1; var bps = 8
       var scale: Option[(Double, Double)] = None
       var tiepoint: Option[(Double, Double, Double, Double)] = None
@@ -76,34 +55,25 @@ object GeoTiff {
       var hasGeoKeys = false
       var geoKeysAt = -1; var geoKeyCount = 0L
 
-      (0 until math.min(n, 512)).foreach { k =>
-        val e = ifdOff + 2 + k * 12
-        if (e + 12 <= end) {
-          val id = u16(e); val tpe = u16(e + 2); val count = u32(e + 4)
-          def valueAt: Int = {
-            val sz = (tpe match {
-              case 1 | 2 | 6 | 7 => 1L; case 3 | 8 => 2L; case 4 | 9 | 11 => 4L; case 5 | 10 | 12 => 8L; case _ => 1L
-            }) * count
-            if (sz <= 4) e + 8 else u32(e + 8).toInt
-          }
-          def intVal: Int = if (tpe == 3) u16(e + 8) else u32(e + 8).toInt
-          id match {
-            case 256 => width = intVal
-            case 257 => height = intVal
-            case 258 => bps = if (tpe == 3) u16(valueAt) else intVal
-            case 277 => bands = intVal
-            case 33550 if count >= 2 =>
-              val v = valueAt; scale = Some((f64(v), f64(v + 8)))
-            case 33922 if count >= 6 =>
-              val v = valueAt
-              // tiepoint: (i, j, k, x, y, z) — pixel (i,j) maps to geo (x,y)
-              tiepoint = Some((f64(v), f64(v + 8), f64(v + 24), f64(v + 32)))
-            case 34264 if count >= 16 =>
-              val v = valueAt
-              transform = Some(Array(f64(v + 24), f64(v), f64(v + 8), f64(v + 56), f64(v + 32), f64(v + 40)))
-            case 34735 => hasGeoKeys = true; geoKeysAt = valueAt; geoKeyCount = count
-            case _ => ()
-          }
+      t.entries(t.ifd0.toInt, 512).foreach { e =>
+        def valueAt: Int = t.valueAt(e)
+        def intVal: Int = t.scalar(e).toInt
+        e.id match {
+          case 256 => width = intVal
+          case 257 => height = intVal
+          case 258 => bps = if (e.tpe == 3) u16(valueAt) else intVal
+          case 277 => bands = intVal
+          case 33550 if e.count >= 2 =>
+            val v = valueAt; scale = Some((f64(v), f64(v + 8)))
+          case 33922 if e.count >= 6 =>
+            val v = valueAt
+            // tiepoint: (i, j, k, x, y, z) — pixel (i,j) maps to geo (x,y)
+            tiepoint = Some((f64(v), f64(v + 8), f64(v + 24), f64(v + 32)))
+          case 34264 if e.count >= 16 =>
+            val v = valueAt
+            transform = Some(Array(f64(v + 24), f64(v), f64(v + 8), f64(v + 56), f64(v + 32), f64(v + 40)))
+          case 34735 => hasGeoKeys = true; geoKeysAt = valueAt; geoKeyCount = e.count
+          case _ => ()
         }
       }
 

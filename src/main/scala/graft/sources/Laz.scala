@@ -5,6 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{le16, le32, le32u, le64, leF64, putLe16, putLe32, putLe64, putLeF64}
+
 /** Pure-JVM LAZ (laszip) container: LAS 1.2 header + "laszip encoded"
   * VLR + chunked arithmetic-coded point data + compressed chunk table
   * — the point-cloud derivative codec the reference obtains through
@@ -74,18 +76,6 @@ object Laz {
   private def rgbAt(fmt: Int): Int = if (fmt == 2) 20 else 28
   private def wpAt(fmt: Int): Int = if (fmt == 4) 28 else 34
 
-  // ---- little-endian helpers ------------------------------------------------
-  private def putU16(b: ArrayBuffer[Byte], v: Int): Unit = { b += v.toByte; b += (v >> 8).toByte }
-  private def putU32(b: ArrayBuffer[Byte], v: Long): Unit = (0 until 4).foreach(k => b += (v >> (8 * k)).toByte)
-  private def putU64(b: ArrayBuffer[Byte], v: Long): Unit = (0 until 8).foreach(k => b += (v >> (8 * k)).toByte)
-  private def putF64(b: ArrayBuffer[Byte], v: Double): Unit = putU64(b, java.lang.Double.doubleToLongBits(v))
-  private def leU16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def leI32(b: Array[Byte], i: Int): Int = leU32(b, i).toInt
-  private def leU64(b: Array[Byte], i: Int): Long = (0 until 8).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-  private def leF64(b: Array[Byte], i: Int): Double = java.lang.Double.longBitsToDouble(leU64(b, i))
-
   private def toBuf(p: P, buf: PointBuf): Unit = {
     buf.x = p.x; buf.y = p.y; buf.z = p.z
     buf.intensity = p.intensity & 0xFFFF
@@ -131,50 +121,50 @@ object Laz {
 
   // ---- raw (first-of-chunk) point records -----------------------------------
   private def writeRaw(out: ArrayBuffer[Byte], p: PointBuf, fmt: Int): Unit = {
-    putU32(out, p.x.toLong & 0xFFFFFFFFL)
-    putU32(out, p.y.toLong & 0xFFFFFFFFL)
-    putU32(out, p.z.toLong & 0xFFFFFFFFL)
-    putU16(out, p.intensity)
+    putLe32(out, p.x.toLong & 0xFFFFFFFFL)
+    putLe32(out, p.y.toLong & 0xFFFFFFFFL)
+    putLe32(out, p.z.toLong & 0xFFFFFFFFL)
+    putLe16(out, p.intensity)
     out += p.returnByte.toByte
     out += p.classification.toByte
     out += p.scanAngle.toByte
     out += p.userData.toByte
-    putU16(out, p.pointSource)
-    if (hasGps(fmt)) putU64(out, p.gpsBits)
-    if (hasRgb(fmt)) { putU16(out, p.red); putU16(out, p.green); putU16(out, p.blue) }
+    putLe16(out, p.pointSource)
+    if (hasGps(fmt)) putLe64(out, p.gpsBits)
+    if (hasRgb(fmt)) { putLe16(out, p.red); putLe16(out, p.green); putLe16(out, p.blue) }
     if (hasWp(fmt)) {
       out += p.wpIndex.toByte
-      putU64(out, p.wpOffset)
-      putU32(out, p.wpSize.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpRetBits.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpXtBits.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpYtBits.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpZtBits.toLong & 0xFFFFFFFFL)
+      putLe64(out, p.wpOffset)
+      putLe32(out, p.wpSize.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpRetBits.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpXtBits.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpYtBits.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpZtBits.toLong & 0xFFFFFFFFL)
     }
   }
 
   private def readRaw(b: Array[Byte], off: Int, p: PointBuf, fmt: Int): Unit = {
-    p.x = leI32(b, off); p.y = leI32(b, off + 4); p.z = leI32(b, off + 8)
-    p.intensity = leU16(b, off + 12)
+    p.x = le32(b, off); p.y = le32(b, off + 4); p.z = le32(b, off + 8)
+    p.intensity = le16(b, off + 12)
     p.returnByte = b(off + 14) & 0xFF
     p.classification = b(off + 15) & 0xFF
     p.scanAngle = b(off + 16) & 0xFF
     p.userData = b(off + 17) & 0xFF
-    p.pointSource = leU16(b, off + 18)
-    p.gpsBits = if (hasGps(fmt)) leU64(b, off + 20) else 0L
+    p.pointSource = le16(b, off + 18)
+    p.gpsBits = if (hasGps(fmt)) le64(b, off + 20) else 0L
     if (hasRgb(fmt)) {
       val ro = off + rgbAt(fmt)
-      p.red = leU16(b, ro); p.green = leU16(b, ro + 2); p.blue = leU16(b, ro + 4)
+      p.red = le16(b, ro); p.green = le16(b, ro + 2); p.blue = le16(b, ro + 4)
     }
     if (hasWp(fmt)) {
       val wo = off + wpAt(fmt)
       p.wpIndex = b(wo) & 0xFF
-      p.wpOffset = leU64(b, wo + 1)
-      p.wpSize = leU32(b, wo + 9).toInt
-      p.wpRetBits = leU32(b, wo + 13).toInt
-      p.wpXtBits = leU32(b, wo + 17).toInt
-      p.wpYtBits = leU32(b, wo + 21).toInt
-      p.wpZtBits = leU32(b, wo + 25).toInt
+      p.wpOffset = le64(b, wo + 1)
+      p.wpSize = le32u(b, wo + 9).toInt
+      p.wpRetBits = le32u(b, wo + 13).toInt
+      p.wpXtBits = le32u(b, wo + 17).toInt
+      p.wpYtBits = le32u(b, wo + 21).toInt
+      p.wpZtBits = le32u(b, wo + 25).toInt
     }
   }
 
@@ -240,10 +230,10 @@ object Laz {
     val bg = if (encG != null) encG.result() else Array.empty[Byte]
     val br = if (encR != null) encR.result() else Array.empty[Byte]
     val bw = if (encW != null) encW.result() else Array.empty[Byte]
-    putU32(out, bp.length.toLong)
-    if (encG != null) putU32(out, bg.length.toLong)
-    if (encR != null) putU32(out, br.length.toLong)
-    if (encW != null) putU32(out, bw.length.toLong)
+    putLe32(out, bp.length.toLong)
+    if (encG != null) putLe32(out, bg.length.toLong)
+    if (encR != null) putLe32(out, br.length.toLong)
+    if (encW != null) putLe32(out, bw.length.toLong)
     out ++= bp
     out ++= bg
     out ++= br
@@ -280,9 +270,9 @@ object Laz {
     outPts(0) = fromBuf(buf)
     val nSizes = 1 + (if (g) 1 else 0) + (if (rg) 1 else 0) + (if (wpf) 1 else 0)
     val sizesAt = start + recLen
-    val lenP = leU32(b, sizesAt).toInt
-    val lenG = if (g) leU32(b, sizesAt + 4).toInt else 0
-    val lenR = if (rg) leU32(b, sizesAt + 4 * (1 + (if (g) 1 else 0))).toInt else 0
+    val lenP = le32u(b, sizesAt).toInt
+    val lenG = if (g) le32u(b, sizesAt + 4).toInt else 0
+    val lenR = if (rg) le32u(b, sizesAt + 4 * (1 + (if (g) 1 else 0))).toInt else 0
     val layersAt = sizesAt + 4 * nSizes
     val decP = new AcDecoder(b, layersAt, math.min(end, layersAt + lenP))
     val gpsAt = layersAt + lenP
@@ -346,58 +336,58 @@ object Laz {
     val out = new ArrayBuffer[Byte](points.length * 8 + 512)
     // --- LAS 1.2 public header (227 bytes)
     out ++= "LASF".getBytes("US-ASCII")
-    putU16(out, 0); putU16(out, 0) // file source id, global encoding
+    putLe16(out, 0); putLe16(out, 0) // file source id, global encoding
     (0 until 16).foreach(_ => out += 0) // GUID
     out += 1; out += 2 // version 1.2
     val sysId = "graft".getBytes("US-ASCII").padTo(32, 0.toByte); out ++= sysId
     val genSw = "graft laz writer".getBytes("US-ASCII").padTo(32, 0.toByte); out ++= genSw
-    putU16(out, 1); putU16(out, 2026) // day-of-year, year
-    putU16(out, HeaderSize)
-    putU32(out, offsetToPoints.toLong)
-    putU32(out, 1L) // one VLR
+    putLe16(out, 1); putLe16(out, 2026) // day-of-year, year
+    putLe16(out, HeaderSize)
+    putLe32(out, offsetToPoints.toLong)
+    putLe32(out, 1L) // one VLR
     out += (pointFormat | 0x80).toByte // compressed-flag bit on the format id
-    putU16(out, recLen)
-    putU32(out, points.length.toLong)
-    (0 until 5).foreach(_ => putU32(out, 0L)) // by-return counts
-    putF64(out, scale); putF64(out, scale); putF64(out, scale)
-    putF64(out, offset); putF64(out, offset); putF64(out, offset)
+    putLe16(out, recLen)
+    putLe32(out, points.length.toLong)
+    (0 until 5).foreach(_ => putLe32(out, 0L)) // by-return counts
+    putLeF64(out, scale); putLeF64(out, scale); putLeF64(out, scale)
+    putLeF64(out, offset); putLeF64(out, offset); putLeF64(out, offset)
     def sOf(f: P => Int): (Double, Double) =
       if (points.isEmpty) (0.0, 0.0)
       else (points.map(f).max * scale + offset, points.map(f).min * scale + offset)
     val (maxX, minX) = sOf(_.x); val (maxY, minY) = sOf(_.y); val (maxZ, minZ) = sOf(_.z)
-    putF64(out, maxX); putF64(out, minX)
-    putF64(out, maxY); putF64(out, minY)
-    putF64(out, maxZ); putF64(out, minZ)
+    putLeF64(out, maxX); putLeF64(out, minX)
+    putLeF64(out, maxY); putLeF64(out, minY)
+    putLeF64(out, maxZ); putLeF64(out, minZ)
     require(out.length == HeaderSize)
 
     // --- laszip VLR
-    putU16(out, 0) // reserved
+    putLe16(out, 0) // reserved
     out ++= "laszip encoded".getBytes("US-ASCII").padTo(16, 0.toByte)
-    putU16(out, 22204)
-    putU16(out, vlrPayload)
+    putLe16(out, 22204)
+    putLe16(out, vlrPayload)
     out ++= "graft laz".getBytes("US-ASCII").padTo(32, 0.toByte)
-    putU16(out, if (layered) 3 else 2) // compressor: pointwise vs layered chunked
-    putU16(out, 0) // coder: arithmetic
+    putLe16(out, if (layered) 3 else 2) // compressor: pointwise vs layered chunked
+    putLe16(out, 0) // coder: arithmetic
     out += 2; out += 2 // version 2.2
-    putU16(out, 0) // revision
-    putU32(out, 0L) // options
-    putU32(out, chunkSize.toLong)
-    putU64(out, 0L); putU64(out, 0L) // special EVLRs
-    putU16(out, numItems)
-    putU16(out, 6); putU16(out, 20); putU16(out, 2) // POINT10 v2
-    if (hasGps(pointFormat)) { putU16(out, 7); putU16(out, 8); putU16(out, 2) } // GPSTIME11 v2
-    if (hasRgb(pointFormat)) { putU16(out, 8); putU16(out, 6); putU16(out, 2) } // RGB12 v2
+    putLe16(out, 0) // revision
+    putLe32(out, 0L) // options
+    putLe32(out, chunkSize.toLong)
+    putLe64(out, 0L); putLe64(out, 0L) // special EVLRs
+    putLe16(out, numItems)
+    putLe16(out, 6); putLe16(out, 20); putLe16(out, 2) // POINT10 v2
+    if (hasGps(pointFormat)) { putLe16(out, 7); putLe16(out, 8); putLe16(out, 2) } // GPSTIME11 v2
+    if (hasRgb(pointFormat)) { putLe16(out, 8); putLe16(out, 6); putLe16(out, 2) } // RGB12 v2
     // LASzip defines only version 1 for the WAVEPACKET13 item (the
     // scheme here IS the v1 scheme); external readers reject v2.
-    if (hasWp(pointFormat)) { putU16(out, 9); putU16(out, 29); putU16(out, 1) } // WAVEPACKET13 v1
+    if (hasWp(pointFormat)) { putLe16(out, 9); putLe16(out, 29); putLe16(out, 1) } // WAVEPACKET13 v1
     require(out.length == offsetToPoints)
 
     // --- point data: 8-byte chunk table offset, chunks, chunk table
     val chunkTableOffset = offsetToPoints.toLong + 8 + chunkBytes.map(_.length.toLong).sum
-    putU64(out, chunkTableOffset)
+    putLe64(out, chunkTableOffset)
     chunkBytes.foreach(out ++= _)
-    putU32(out, 0L) // chunk table version
-    putU32(out, chunkBytes.length.toLong)
+    putLe32(out, 0L) // chunk table version
+    putLe32(out, chunkBytes.length.toLong)
     val tEnc = new AcEncoder
     val ic = new IntCompressor(2, 32, forEncode = true)
     var prev = 0
@@ -419,30 +409,30 @@ object Laz {
     val fmt = fmtRaw & 0x7F
     require(fmt < 6, s"unsupported point format $fmt (LAS 1.4 layered v3 family — read through Laz14)")
     require(RecordLen.contains(fmt), s"unsupported point format $fmt")
-    val offsetToPoints = leU32(b, 96).toInt
-    val numVlrs = leU32(b, 100).toInt
+    val offsetToPoints = le32u(b, 96).toInt
+    val numVlrs = le32u(b, 100).toInt
     // find the laszip VLR for the chunk size
     var chunkSize = 50000
     var compressor = 2
-    var vo = leU16(b, 94) // header size
+    var vo = le16(b, 94) // header size
     var i = 0
     while (i < numVlrs && vo + VlrHeaderSize <= b.length) {
       val userId = new String(b, vo + 2, 16, "US-ASCII").takeWhile(_ != 0)
-      val recordId = leU16(b, vo + 18)
-      val len = leU16(b, vo + 20)
+      val recordId = le16(b, vo + 18)
+      val len = le16(b, vo + 20)
       if (userId == "laszip encoded" && recordId == 22204) {
-        compressor = leU16(b, vo + VlrHeaderSize)
-        chunkSize = leU32(b, vo + VlrHeaderSize + 12).toInt
+        compressor = le16(b, vo + VlrHeaderSize)
+        chunkSize = le32u(b, vo + VlrHeaderSize + 12).toInt
       }
       vo += VlrHeaderSize + len
       i += 1
     }
     Header(
       pointFormat = fmt,
-      pointCount = leU32(b, 107),
+      pointCount = le32u(b, 107),
       chunkSize = chunkSize,
       offsetToPoints = offsetToPoints,
-      chunkTableOffset = leU64(b, offsetToPoints),
+      chunkTableOffset = le64(b, offsetToPoints),
       scaleX = leF64(b, 131),
       scaleY = leF64(b, 139),
       scaleZ = leF64(b, 147),
@@ -466,7 +456,7 @@ object Laz {
       h.chunkSize > 0,
       "laz: variable-chunk stream (COPC; chunk size 0xFFFFFFFF) — plan nodes via Copc.hierarchy, not the fixed chunk table"
     )
-    val numChunks = leU32(table, tStart + 4).toInt
+    val numChunks = le32u(table, tStart + 4).toInt
     // corrupt-input guards: a truncated or garbage chunk table must
     // fail with ONE named error, never a negative/huge allocation —
     // an estate-scale ingest flags the file and scans on

@@ -5,6 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{le16, le32, le32u, le64, leF64, putLe16, putLe32, putLe64, putLeF64}
+
 /** LAS 1.4 / LASzip v3 container: the layered-chunk .laz layout for
   * point formats 6 (POINT14), 7 (+RGB14) and 8 (+RGBNIR14) — the
   * format family conformant COPC requires (reference
@@ -69,18 +71,6 @@ object Laz14 {
     Point14V3.NumPointLayers + (if (hasRgb14(fmt)) 1 else 0) + (if (hasNir14(fmt)) 1 else 0) +
       (if (hasWp14(fmt)) 1 else 0) + extraBytes
 
-  // ---- little-endian helpers ------------------------------------------------
-  private def putU16(b: ArrayBuffer[Byte], v: Int): Unit = { b += v.toByte; b += (v >> 8).toByte }
-  private def putU32(b: ArrayBuffer[Byte], v: Long): Unit = (0 until 4).foreach(k => b += (v >> (8 * k)).toByte)
-  private def putU64(b: ArrayBuffer[Byte], v: Long): Unit = (0 until 8).foreach(k => b += (v >> (8 * k)).toByte)
-  private def putF64(b: ArrayBuffer[Byte], v: Double): Unit = putU64(b, java.lang.Double.doubleToLongBits(v))
-  private def leU16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def leI32(b: Array[Byte], i: Int): Int = leU32(b, i).toInt
-  private def leU64(b: Array[Byte], i: Int): Long = (0 until 8).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-  private def leF64(b: Array[Byte], i: Int): Double = java.lang.Double.longBitsToDouble(leU64(b, i))
-
   private def toBuf(p: P14, buf: Point14): Unit = {
     buf.x = p.x; buf.y = p.y; buf.z = p.z
     buf.intensity = p.intensity & 0xFFFF
@@ -140,34 +130,34 @@ object Laz14 {
 
   // ---- raw (seed) point records ---------------------------------------------
   private def writeRaw(out: ArrayBuffer[Byte], p: Point14, fmt: Int): Unit = {
-    putU32(out, p.x.toLong & 0xFFFFFFFFL)
-    putU32(out, p.y.toLong & 0xFFFFFFFFL)
-    putU32(out, p.z.toLong & 0xFFFFFFFFL)
-    putU16(out, p.intensity)
+    putLe32(out, p.x.toLong & 0xFFFFFFFFL)
+    putLe32(out, p.y.toLong & 0xFFFFFFFFL)
+    putLe32(out, p.z.toLong & 0xFFFFFFFFL)
+    putLe16(out, p.intensity)
     out += (p.returnNumber | (p.numberOfReturns << 4)).toByte
     out += (p.classificationFlags | (p.scannerChannel << 4) | (p.scanDirection << 6) | (p.edgeOfFlight << 7)).toByte
     out += p.classification.toByte
     out += p.userData.toByte
-    putU16(out, p.scanAngle)
-    putU16(out, p.pointSource)
-    putU64(out, p.gpsBits)
-    if (hasRgb14(fmt)) { putU16(out, p.red); putU16(out, p.green); putU16(out, p.blue) }
-    if (hasNir14(fmt)) putU16(out, p.nir)
+    putLe16(out, p.scanAngle)
+    putLe16(out, p.pointSource)
+    putLe64(out, p.gpsBits)
+    if (hasRgb14(fmt)) { putLe16(out, p.red); putLe16(out, p.green); putLe16(out, p.blue) }
+    if (hasNir14(fmt)) putLe16(out, p.nir)
     if (hasWp14(fmt)) {
       out += p.wpIndex.toByte
-      putU64(out, p.wpOffset)
-      putU32(out, p.wpSize.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpRetBits.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpXtBits.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpYtBits.toLong & 0xFFFFFFFFL)
-      putU32(out, p.wpZtBits.toLong & 0xFFFFFFFFL)
+      putLe64(out, p.wpOffset)
+      putLe32(out, p.wpSize.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpRetBits.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpXtBits.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpYtBits.toLong & 0xFFFFFFFFL)
+      putLe32(out, p.wpZtBits.toLong & 0xFFFFFFFFL)
     }
     if (p.extra != null) p.extra.foreach(v => out += v.toByte)
   }
 
   private def readRaw(b: Array[Byte], off: Int, p: Point14, fmt: Int, extraBytes: Int = 0): Unit = {
-    p.x = leI32(b, off); p.y = leI32(b, off + 4); p.z = leI32(b, off + 8)
-    p.intensity = leU16(b, off + 12)
+    p.x = le32(b, off); p.y = le32(b, off + 4); p.z = le32(b, off + 8)
+    p.intensity = le16(b, off + 12)
     val rb = b(off + 14) & 0xFF
     p.returnNumber = rb & 15
     p.numberOfReturns = (rb >>> 4) & 15
@@ -178,20 +168,20 @@ object Laz14 {
     p.edgeOfFlight = (fb >>> 7) & 1
     p.classification = b(off + 16) & 0xFF
     p.userData = b(off + 17) & 0xFF
-    p.scanAngle = leU16(b, off + 18)
-    p.pointSource = leU16(b, off + 20)
-    p.gpsBits = leU64(b, off + 22)
-    if (hasRgb14(fmt)) { p.red = leU16(b, off + 30); p.green = leU16(b, off + 32); p.blue = leU16(b, off + 34) }
-    if (hasNir14(fmt)) p.nir = leU16(b, off + 36)
+    p.scanAngle = le16(b, off + 18)
+    p.pointSource = le16(b, off + 20)
+    p.gpsBits = le64(b, off + 22)
+    if (hasRgb14(fmt)) { p.red = le16(b, off + 30); p.green = le16(b, off + 32); p.blue = le16(b, off + 34) }
+    if (hasNir14(fmt)) p.nir = le16(b, off + 36)
     if (hasWp14(fmt)) {
       val wo = off + (if (fmt == 9) 30 else 38)
       p.wpIndex = b(wo) & 0xFF
-      p.wpOffset = leU64(b, wo + 1)
-      p.wpSize = leU32(b, wo + 9).toInt
-      p.wpRetBits = leU32(b, wo + 13).toInt
-      p.wpXtBits = leU32(b, wo + 17).toInt
-      p.wpYtBits = leU32(b, wo + 21).toInt
-      p.wpZtBits = leU32(b, wo + 25).toInt
+      p.wpOffset = le64(b, wo + 1)
+      p.wpSize = le32u(b, wo + 9).toInt
+      p.wpRetBits = le32u(b, wo + 13).toInt
+      p.wpXtBits = le32u(b, wo + 17).toInt
+      p.wpYtBits = le32u(b, wo + 21).toInt
+      p.wpZtBits = le32u(b, wo + 25).toInt
     }
     p.extra =
       if (extraBytes == 0) null
@@ -237,7 +227,7 @@ object Laz14 {
     if (ext != null) (0 until extraBytes).foreach { i =>
       layers += (if (ext.changed(i)) { encExt(i).done(); encExt(i).result() } else Array.empty[Byte])
     }
-    layers.foreach(l => putU32(out, l.length.toLong))
+    layers.foreach(l => putLe32(out, l.length.toLong))
     layers.foreach(out ++= _)
     out.toArray
   }
@@ -282,7 +272,7 @@ object Laz14 {
     var at = sizesAt + 4 * nl
     var i = 0
     while (i < nl) {
-      val len = leU32(b, sizesAt + 4 * i).toInt
+      val len = le32u(b, sizesAt + 4 * i).toInt
       require(
         len >= 0 && at.toLong + len <= end,
         s"laz14: layer $i size $len exceeds the chunk byte range (corrupt layer table)"
@@ -386,60 +376,60 @@ object Laz14 {
     val out = new ArrayBuffer[Byte](points.length * 8 + 512)
     // --- LAS 1.4 public header (375 bytes)
     out ++= "LASF".getBytes("US-ASCII")
-    putU16(out, 0); putU16(out, 0)
+    putLe16(out, 0); putLe16(out, 0)
     (0 until 16).foreach(_ => out += 0)
     out += 1; out += 4 // version 1.4
     out ++= "graft".getBytes("US-ASCII").padTo(32, 0.toByte)
     out ++= "graft laz14 writer".getBytes("US-ASCII").padTo(32, 0.toByte)
-    putU16(out, 1); putU16(out, 2026)
-    putU16(out, HeaderSize)
-    putU32(out, offsetToPoints.toLong)
-    putU32(out, 1L)
+    putLe16(out, 1); putLe16(out, 2026)
+    putLe16(out, HeaderSize)
+    putLe32(out, offsetToPoints.toLong)
+    putLe32(out, 1L)
     out += (pointFormat | 0x80).toByte
-    putU16(out, recLen)
-    putU32(out, 0L) // legacy point count (1.4: u64 field below)
-    (0 until 5).foreach(_ => putU32(out, 0L))
-    putF64(out, scale); putF64(out, scale); putF64(out, scale)
-    putF64(out, offset); putF64(out, offset); putF64(out, offset)
+    putLe16(out, recLen)
+    putLe32(out, 0L) // legacy point count (1.4: u64 field below)
+    (0 until 5).foreach(_ => putLe32(out, 0L))
+    putLeF64(out, scale); putLeF64(out, scale); putLeF64(out, scale)
+    putLeF64(out, offset); putLeF64(out, offset); putLeF64(out, offset)
     def sOf(f: P14 => Int): (Double, Double) =
       if (points.isEmpty) (0.0, 0.0)
       else (points.map(f).max * scale + offset, points.map(f).min * scale + offset)
     val (maxX, minX) = sOf(_.x); val (maxY, minY) = sOf(_.y); val (maxZ, minZ) = sOf(_.z)
-    putF64(out, maxX); putF64(out, minX)
-    putF64(out, maxY); putF64(out, minY)
-    putF64(out, maxZ); putF64(out, minZ)
-    putU64(out, 0L) // waveform
-    putU64(out, 0L); putU32(out, 0L) // first EVLR, count
-    putU64(out, points.length.toLong)
-    (0 until 15).foreach(_ => putU64(out, 0L))
+    putLeF64(out, maxX); putLeF64(out, minX)
+    putLeF64(out, maxY); putLeF64(out, minY)
+    putLeF64(out, maxZ); putLeF64(out, minZ)
+    putLe64(out, 0L) // waveform
+    putLe64(out, 0L); putLe32(out, 0L) // first EVLR, count
+    putLe64(out, points.length.toLong)
+    (0 until 15).foreach(_ => putLe64(out, 0L))
     require(out.length == HeaderSize)
 
     // --- laszip VLR (compressor 3 = layered chunked, v3 items)
-    putU16(out, 0)
+    putLe16(out, 0)
     out ++= "laszip encoded".getBytes("US-ASCII").padTo(16, 0.toByte)
-    putU16(out, 22204)
-    putU16(out, vlrPayload)
+    putLe16(out, 22204)
+    putLe16(out, vlrPayload)
     out ++= "graft laz14".getBytes("US-ASCII").padTo(32, 0.toByte)
-    putU16(out, 3); putU16(out, 0)
+    putLe16(out, 3); putLe16(out, 0)
     out += 3; out += 4 // version 3.4
-    putU16(out, 0)
-    putU32(out, 0L)
-    putU32(out, chunkSize.toLong)
-    putU64(out, 0L); putU64(out, 0L)
-    putU16(out, numItems)
-    putU16(out, 10); putU16(out, 30); putU16(out, 3) // POINT14 v3
-    if (pointFormat == 7) { putU16(out, 11); putU16(out, 6); putU16(out, 3) } // RGB14 v3
-    if (hasNir14(pointFormat)) { putU16(out, 12); putU16(out, 8); putU16(out, 3) } // RGBNIR14 v3
-    if (hasWp14(pointFormat)) { putU16(out, 13); putU16(out, 29); putU16(out, 3) } // WAVEPACKET14 v3
-    if (extraBytes > 0) { putU16(out, 14); putU16(out, extraBytes); putU16(out, 3) } // BYTE14 v3
+    putLe16(out, 0)
+    putLe32(out, 0L)
+    putLe32(out, chunkSize.toLong)
+    putLe64(out, 0L); putLe64(out, 0L)
+    putLe16(out, numItems)
+    putLe16(out, 10); putLe16(out, 30); putLe16(out, 3) // POINT14 v3
+    if (pointFormat == 7) { putLe16(out, 11); putLe16(out, 6); putLe16(out, 3) } // RGB14 v3
+    if (hasNir14(pointFormat)) { putLe16(out, 12); putLe16(out, 8); putLe16(out, 3) } // RGBNIR14 v3
+    if (hasWp14(pointFormat)) { putLe16(out, 13); putLe16(out, 29); putLe16(out, 3) } // WAVEPACKET14 v3
+    if (extraBytes > 0) { putLe16(out, 14); putLe16(out, extraBytes); putLe16(out, 3) } // BYTE14 v3
     require(out.length == offsetToPoints)
 
     // --- point data: chunk table pointer, chunks, chunk table
     val chunkTableOffset = offsetToPoints.toLong + 8 + chunkBytes.map(_.length.toLong).sum
-    putU64(out, chunkTableOffset)
+    putLe64(out, chunkTableOffset)
     chunkBytes.foreach(out ++= _)
-    putU32(out, 0L)
-    putU32(out, chunkBytes.length.toLong)
+    putLe32(out, 0L)
+    putLe32(out, chunkBytes.length.toLong)
     val tEnc = new AcEncoder
     val ic = new IntCompressor(2, 32, forEncode = true)
     var prev = 0
@@ -461,26 +451,26 @@ object Laz14 {
     require((fmtRaw & 0x80) != 0, "not compressed (no laszip flag)")
     val fmt = fmtRaw & 0x7F
     require(RecordLen.contains(fmt), s"unsupported LAS 1.4 point format $fmt")
-    val offsetToPoints = leU32(b, 96).toInt
-    val numVlrs = leU32(b, 100).toInt
-    val legacy = leU32(b, 107)
-    val count = leU64(b, 247)
+    val offsetToPoints = le32u(b, 96).toInt
+    val numVlrs = le32u(b, 100).toInt
+    val legacy = le32u(b, 107)
+    val count = le64(b, 247)
     var chunkSize = 50000
     var compressor = 3
     var extraBytes = 0
-    var vo = leU16(b, 94)
+    var vo = le16(b, 94)
     var i = 0
     while (i < numVlrs && vo + VlrHeaderSize <= b.length) {
       val userId = new String(b, vo + 2, 16, "US-ASCII").takeWhile(_ != 0)
-      val recordId = leU16(b, vo + 18)
-      val len = leU16(b, vo + 20)
+      val recordId = le16(b, vo + 18)
+      val len = le16(b, vo + 20)
       if (userId == "laszip encoded" && recordId == 22204) {
-        compressor = leU16(b, vo + VlrHeaderSize)
-        chunkSize = leU32(b, vo + VlrHeaderSize + 12).toInt
-        val nItems = leU16(b, vo + VlrHeaderSize + 32)
+        compressor = le16(b, vo + VlrHeaderSize)
+        chunkSize = le32u(b, vo + VlrHeaderSize + 12).toInt
+        val nItems = le16(b, vo + VlrHeaderSize + 32)
         (0 until nItems).foreach { k =>
           val at = vo + VlrHeaderSize + 34 + 6 * k
-          if (leU16(b, at) == 14) extraBytes = leU16(b, at + 2) // BYTE14
+          if (le16(b, at) == 14) extraBytes = le16(b, at + 2) // BYTE14
         }
       }
       vo += VlrHeaderSize + len
@@ -491,7 +481,7 @@ object Laz14 {
       pointCount = if (count > 0) count else legacy,
       chunkSize = chunkSize,
       offsetToPoints = offsetToPoints,
-      chunkTableOffset = leU64(b, offsetToPoints),
+      chunkTableOffset = le64(b, offsetToPoints),
       scaleX = leF64(b, 131),
       scaleY = leF64(b, 139),
       scaleZ = leF64(b, 147),

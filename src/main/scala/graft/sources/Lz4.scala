@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{le32, le32u, writeLe32}
+
 /** LZ4 codec — pure JVM, both directions: the block format (token
   * stream of literal/match sequences), the frame format (magic
   * 0x184D2204, FLG/BD descriptor with header checksum, independent or
@@ -54,8 +56,6 @@ object Lz4 {
   private val P5 = 374761393
 
   def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    @inline def r32(p: Int): Int =
-      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
     var p = off
     val end = off + len
     var h =
@@ -63,17 +63,17 @@ object Lz4 {
         var a1 = seed + P1 + P2; var a2 = seed + P2; var a3 = seed; var a4 = seed - P1
         val lim = end - 16
         while (p <= lim) {
-          a1 = Integer.rotateLeft(a1 + r32(p) * P2, 13) * P1
-          a2 = Integer.rotateLeft(a2 + r32(p + 4) * P2, 13) * P1
-          a3 = Integer.rotateLeft(a3 + r32(p + 8) * P2, 13) * P1
-          a4 = Integer.rotateLeft(a4 + r32(p + 12) * P2, 13) * P1
+          a1 = Integer.rotateLeft(a1 + le32(b, p) * P2, 13) * P1
+          a2 = Integer.rotateLeft(a2 + le32(b, p + 4) * P2, 13) * P1
+          a3 = Integer.rotateLeft(a3 + le32(b, p + 8) * P2, 13) * P1
+          a4 = Integer.rotateLeft(a4 + le32(b, p + 12) * P2, 13) * P1
           p += 16
         }
         Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
           Integer.rotateLeft(a3, 12) + Integer.rotateLeft(a4, 18)
       } else seed + P5
     h += len
-    while (p + 4 <= end) { h = Integer.rotateLeft(h + r32(p) * P3, 17) * P4; p += 4 }
+    while (p + 4 <= end) { h = Integer.rotateLeft(h + le32(b, p) * P3, 17) * P4; p += 4 }
     while (p < end) { h = Integer.rotateLeft(h + (b(p) & 0xff) * P5, 11) * P1; p += 1 }
     h ^= h >>> 15; h *= P2; h ^= h >>> 13; h *= P3; h ^= h >>> 16
     h
@@ -195,13 +195,10 @@ object Lz4 {
         fail("lz4: malformed input (out-of-range field)")
     }
 
-  @inline private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-
   private def decodeFrameImpl(b: Array[Byte], off: Int, dict: Array[Byte]): (Array[Byte], Int) = {
     var p = off
     while (p + 8 <= b.length && (le32(b, p) & 0xfffffff0) == SkippableBase) {
-      val next = p + 8L + (le32(b, p + 4) & 0xffffffffL) // UNSIGNED size
+      val next = p + 8L + le32u(b, p + 4) // UNSIGNED size
       if (next > b.length) fail("lz4: skippable frame size out of range")
       p = next.toInt
     }
@@ -343,7 +340,7 @@ object Lz4 {
       var p = 0
       while (p < b.length) {
         if (p + 8 <= b.length && (le32(b, p) & 0xfffffff0) == SkippableBase) {
-          val next = p + 8L + (le32(b, p + 4) & 0xffffffffL)
+          val next = p + 8L + le32u(b, p + 4)
           if (next > b.length) fail("lz4: skippable frame size out of range")
           p = next.toInt
         } else {
@@ -375,9 +372,6 @@ object Lz4 {
 
   private def compressBlock(src: Array[Byte], soff: Int, slen: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(slen / 2 + 16)
-    @inline def r32(p: Int): Int =
-      (src(soff + p) & 0xff) | ((src(soff + p + 1) & 0xff) << 8) |
-        ((src(soff + p + 2) & 0xff) << 16) | ((src(soff + p + 3) & 0xff) << 24)
     @inline def hash(v: Int): Int = (v * P1) >>> 18 // 14-bit table
     def writeLen(v0: Int): Unit = { var v = v0; while (v >= 255) { out.write(255); v -= 255 }; out.write(v) }
     def emit(anchor: Int, i: Int, offset: Int, mLen: Int): Unit = {
@@ -397,10 +391,10 @@ object Lz4 {
       val matchLimit = slen - 5 // the last 5 bytes stay literals
       var i = 0
       while (i <= mfLimit) {
-        val h = hash(r32(i))
+        val h = hash(le32(src, soff + i))
         val cand = table(h)
         table(h) = i
-        if (cand >= 0 && i - cand <= 65535 && r32(cand) == r32(i)) {
+        if (cand >= 0 && i - cand <= 65535 && le32(src, soff + cand) == le32(src, soff + i)) {
           var mLen = 4
           while (i + mLen < matchLimit && src(soff + cand + mLen) == src(soff + i + mLen)) mLen += 1
           emit(anchor, i, i - cand, mLen)
@@ -419,18 +413,18 @@ object Lz4 {
   }
 
   /** [[compressBlock]] with an external-dictionary history: the
-    * matcher runs over the VIRTUAL array hist[0,histLen) ++ src — the
+    * matcher runs over the array hist[0,histLen) ++ src — the
     * hash table is pre-seeded with every dict position, matches may
     * source from the dict (the emitted offset is just the distance,
     * ≤ 64 KiB), and only src-region bytes are emitted as literals.
     * Decodes via the usingDict path any conforming decoder has. */
   private def compressBlockDict(src: Array[Byte], soff: Int, slen: Int,
       hist: Array[Byte], histLen: Int): Array[Byte] = {
-    @inline def vb(p: Int): Byte = if (p < histLen) hist(p) else src(soff + p - histLen)
-    @inline def r32(p: Int): Int =
-      (vb(p) & 0xff) | ((vb(p + 1) & 0xff) << 8) | ((vb(p + 2) & 0xff) << 16) | ((vb(p + 3) & 0xff) << 24)
-    @inline def hash(v: Int): Int = (v * P1) >>> 18
     val total = histLen + slen
+    val all = new Array[Byte](total)
+    System.arraycopy(hist, 0, all, 0, histLen)
+    System.arraycopy(src, soff, all, histLen, slen)
+    @inline def hash(v: Int): Int = (v * P1) >>> 18
     val out = new java.io.ByteArrayOutputStream(slen / 2 + 16)
     def writeLen(v0: Int): Unit = { var v = v0; while (v >= 255) { out.write(255); v -= 255 }; out.write(v) }
     def emit(anchor: Int, i: Int, offset: Int, mLen: Int): Unit = {
@@ -447,17 +441,17 @@ object Lz4 {
       val table = new Array[Int](1 << 14)
       java.util.Arrays.fill(table, -1)
       var d = 0
-      while (d + 4 <= histLen) { table(hash(r32(d))) = d; d += 1 }
+      while (d + 4 <= histLen) { table(hash(le32(all, d))) = d; d += 1 }
       val mfLimit = total - 12
       val matchLimit = total - 5
       var i = histLen
       while (i <= mfLimit) {
-        val h = hash(r32(i))
+        val h = hash(le32(all, i))
         val cand = table(h)
         table(h) = i
-        if (cand >= 0 && i - cand <= 65535 && r32(cand) == r32(i)) {
+        if (cand >= 0 && i - cand <= 65535 && le32(all, cand) == le32(all, i)) {
           var mLen = 4
-          while (i + mLen < matchLimit && vb(cand + mLen) == vb(i + mLen)) mLen += 1
+          while (i + mLen < matchLimit && all(cand + mLen) == all(i + mLen)) mLen += 1
           emit(anchor, i, i - cand, mLen)
           i += mLen
           anchor = i
@@ -483,8 +477,7 @@ object Lz4 {
     val hist = if (dict.length == histLen) dict else java.util.Arrays.copyOfRange(dict, dict.length - histLen, dict.length)
     val blockMax = 1 << (8 + 2 * bmax)
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    w32(FrameMagic)
+    writeLe32(out, FrameMagic)
     val flg = 0x40 | 0x20 | (if (blockChecksum) 0x10 else 0) | (if (contentSize) 0x08 else 0) | 0x04
     val desc = new java.io.ByteArrayOutputStream()
     desc.write(flg); desc.write(bmax << 4)
@@ -498,13 +491,13 @@ object Lz4 {
       val comp = compressBlockDict(data, off, n, hist, histLen)
       val stored = comp == null
       val payload = if (stored) java.util.Arrays.copyOfRange(data, off, off + n) else comp
-      w32(if (stored) payload.length | 0x80000000 else payload.length)
+      writeLe32(out, if (stored) payload.length | 0x80000000 else payload.length)
       out.write(payload)
-      if (blockChecksum) w32(xxh32(payload, 0, payload.length, 0))
+      if (blockChecksum) writeLe32(out, xxh32(payload, 0, payload.length, 0))
       off += n
     }
-    w32(0) // EndMark
-    w32(xxh32(data, 0, data.length, 0)) // content checksum
+    writeLe32(out, 0) // EndMark
+    writeLe32(out, xxh32(data, 0, data.length, 0)) // content checksum
     out.toByteArray
   }
 
@@ -519,8 +512,7 @@ object Lz4 {
     require(bmax >= 4 && bmax <= 7, "block max size code must be 4..7")
     val blockMax = 1 << (8 + 2 * bmax)
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    w32(FrameMagic)
+    writeLe32(out, FrameMagic)
     val flg = 0x40 | 0x20 | (if (blockChecksum) 0x10 else 0) | (if (contentSize) 0x08 else 0) | 0x04
     val desc = new java.io.ByteArrayOutputStream()
     desc.write(flg); desc.write(bmax << 4)
@@ -534,13 +526,13 @@ object Lz4 {
       val comp = compressBlock(data, off, n)
       val stored = comp == null
       val payload = if (stored) java.util.Arrays.copyOfRange(data, off, off + n) else comp
-      w32(if (stored) payload.length | 0x80000000 else payload.length)
+      writeLe32(out, if (stored) payload.length | 0x80000000 else payload.length)
       out.write(payload)
-      if (blockChecksum) w32(xxh32(payload, 0, payload.length, 0))
+      if (blockChecksum) writeLe32(out, xxh32(payload, 0, payload.length, 0))
       off += n
     }
-    w32(0) // EndMark
-    w32(xxh32(data, 0, data.length, 0)) // content checksum
+    writeLe32(out, 0) // EndMark
+    writeLe32(out, xxh32(data, 0, data.length, 0)) // content checksum
     out.toByteArray
   }
 
@@ -565,7 +557,7 @@ object Lz4 {
   private def framesOfRangedImpl(ranged: (Long, Int) => Array[Byte], len: Long): Seq[(Long, Long)] = {
     val out = List.newBuilder[(Long, Long)]
     var p = 0L
-    def u32(off: Long): Long = { val a = ranged(off, 4); le32(a, 0) & 0xffffffffL }
+    def u32(off: Long): Long = { val a = ranged(off, 4); le32u(a, 0) }
     var trailing = false
     while (p < len && !trailing) {
       val start = p

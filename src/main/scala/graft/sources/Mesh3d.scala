@@ -3,6 +3,7 @@ package graft.sources
 import scala.collection.mutable.ArrayBuffer
 
 import graft.core.MiniJson
+import graft.sources.Bytes.le32u
 
 /** 3D-model dependency extraction — reference `3d.cpp:93-598`: the
   * OBJ/MTL texture-dependency walk (`getObjDependencies`: every
@@ -91,18 +92,16 @@ object Mesh3d {
 
   /** GLB container → the JSON chunk text (`3d.cpp:146-196` errors). */
   def glbJson(bytes: Array[Byte]): String = {
-    def u32(i: Int): Long =
-      (bytes(i) & 0xffL) | ((bytes(i + 1) & 0xffL) << 8) | ((bytes(i + 2) & 0xffL) << 16) | ((bytes(i + 3) & 0xffL) << 24)
     if (bytes == null || bytes.length < 12)
       throw new IllegalArgumentException("Invalid GLB file: cannot read header")
-    if (u32(0) != 0x46546c67L)
+    if (le32u(bytes, 0) != 0x46546c67L)
       throw new IllegalArgumentException("Invalid GLB file: incorrect magic number")
-    if (u32(4) != 2L)
-      throw new IllegalArgumentException(s"Unsupported GLB version: ${u32(4)}")
+    if (le32u(bytes, 4) != 2L)
+      throw new IllegalArgumentException(s"Unsupported GLB version: ${le32u(bytes, 4)}")
     if (bytes.length < 20)
       throw new IllegalArgumentException("Invalid GLB file: cannot read chunk header")
-    val chunkLen = u32(12).toInt
-    if (u32(16) != 0x4e4f534aL)
+    val chunkLen = le32u(bytes, 12).toInt
+    if (le32u(bytes, 16) != 0x4e4f534aL)
       throw new IllegalArgumentException("Invalid GLB file: first chunk is not JSON")
     if (bytes.length < 20 + chunkLen)
       throw new IllegalArgumentException("Invalid GLB file: cannot read JSON chunk")
@@ -112,14 +111,12 @@ object Mesh3d {
   /** GLB container → the BIN chunk bytes (chunk 1, type 0x004E4942),
     * empty when absent. Same bounds discipline as [[glbJson]]. */
   def glbBin(bytes: Array[Byte]): Array[Byte] = {
-    def u32(i: Int): Long =
-      (bytes(i) & 0xffL) | ((bytes(i + 1) & 0xffL) << 8) | ((bytes(i + 2) & 0xffL) << 16) | ((bytes(i + 3) & 0xffL) << 24)
     glbJson(bytes) // header + JSON chunk validation
-    val jsonLen = u32(12).toInt
+    val jsonLen = le32u(bytes, 12).toInt
     var at = 20 + jsonLen
-    while (at + 8 <= bytes.length && at + 8 <= u32(8)) {
-      val len = u32(at).toInt
-      val tpe = u32(at + 4)
+    while (at + 8 <= bytes.length && at + 8 <= le32u(bytes, 8)) {
+      val len = le32u(bytes, at).toInt
+      val tpe = le32u(bytes, at + 4)
       if (tpe == 0x004e4942L) {
         require(at + 8 + len <= bytes.length, "Invalid GLB file: BIN chunk overruns")
         return java.util.Arrays.copyOfRange(bytes, at + 8, at + 8 + len)

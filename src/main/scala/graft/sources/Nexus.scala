@@ -277,7 +277,7 @@ object Nexus {
 
   def isNxs(b: Array[Byte]): Boolean =
     b != null && b.length >= 8 &&
-      (b(0) & 0xff | (b(1) & 0xff) << 8 | (b(2) & 0xff) << 16 | (b(3) & 0xff) << 24) == Magic
+      Bytes.le32(b, 0) == Magic
 
   /** Read an uncompressed `.nxs` written by [[write]] (or any
     * position-only uncompressed stream in this layout). */

@@ -78,19 +78,15 @@ object Npy {
 
     @inline private def base(i: Int): Int = dataOff + physical(i) * width
 
-    private def leBytes(p: Int, w: Int): Long = {
-      var v = 0L
-      var j = 0
-      while (j < w) { v |= (raw(p + j) & 0xffL) << (8 * j); j += 1 }
-      v
+    private def bits(i: Int, w: Int): Long = {
+      val p = base(i)
+      w match {
+        case 1 => raw(p) & 0xffL
+        case 2 => if (little) Bytes.le16(raw, p) else Bytes.be16(raw, p)
+        case 4 => if (little) Bytes.le32u(raw, p) else Bytes.be32u(raw, p)
+        case _ => if (little) Bytes.le64(raw, p) else Bytes.be64(raw, p)
+      }
     }
-    private def beBytes(p: Int, w: Int): Long = {
-      var v = 0L
-      var j = 0
-      while (j < w) { v = (v << 8) | (raw(p + j) & 0xffL); j += 1 }
-      v
-    }
-    private def bits(i: Int, w: Int): Long = if (little) leBytes(base(i), w) else beBytes(base(i), w)
 
     def longAt(i: Int): Long = kind match {
       case 'i' =>
@@ -130,7 +126,7 @@ object Npy {
         var done = false
         while (j < width / 4 && !done) {
           val p = base(i) + 4 * j
-          val cp = (if (little) leBytes(p, 4) else beBytes(p, 4)).toInt
+          val cp = if (little) Bytes.le32(raw, p) else Bytes.be32(raw, p)
           if (cp == 0) done = true
           else { req(Character.isValidCodePoint(cp), s"npy: invalid codepoint $cp"); sb.appendCodePoint(cp) }
           j += 1

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{be32, le32, le64, leF32, leF64}
 import graft.sources.ParquetMeta._
 
 /** Parquet DATA decode — completes [[ParquetMeta]]'s footer catalog
@@ -114,13 +115,11 @@ object ParquetData {
         var p = from
         while (p < until) {
           req(until - p >= 8, "parquet data: truncated hadoop-lz4 frame")
-          def be4(i: Int): Int =
-            ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-          val un = be4(p); var left = un; p += 4
+          val un = be32(b, p); var left = un; p += 4
           req(un >= 0 && un <= outLen, s"parquet data: hadoop-lz4 declares $un bytes")
           while (left > 0) {
             req(until - p >= 4, "parquet data: truncated hadoop-lz4 chunk")
-            val cn = be4(p); p += 4
+            val cn = be32(b, p); p += 4
             req(cn > 0 && cn <= until - p, s"parquet data: hadoop-lz4 chunk of $cn")
             val dec = Lz4.decodeRawBlock(b, p, p + cn, maxOut = left)
             out.write(dec, 0, dec.length)
@@ -407,41 +406,33 @@ object ParquetData {
           req(until - p >= 4 * count, "parquet data: int32 page short")
           var i = 0
           while (i < count) {
-            out(i) = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+            out(i) = le32(b, p)
             p += 4; i += 1
           }
         case 2 =>
           req(until - p >= 8 * count, "parquet data: int64 page short")
           var i = 0
           while (i < count) {
-            var v = 0L
-            var j = 7
-            while (j >= 0) { v = (v << 8) | (b(p + j) & 0xffL); j -= 1 }
-            out(i) = v; p += 8; i += 1
+            out(i) = le64(b, p); p += 8; i += 1
           }
         case 4 =>
           req(until - p >= 4 * count, "parquet data: float page short")
           var i = 0
           while (i < count) {
-            out(i) = java.lang.Float.intBitsToFloat(
-              (b(p + 4 * i) & 0xff) | ((b(p + 4 * i + 1) & 0xff) << 8) |
-                ((b(p + 4 * i + 2) & 0xff) << 16) | ((b(p + 4 * i + 3) & 0xff) << 24))
+            out(i) = leF32(b, p + 4 * i)
             i += 1
           }
         case 5 =>
           req(until - p >= 8 * count, "parquet data: double page short")
           var i = 0
           while (i < count) {
-            var v = 0L
-            var j = 7
-            while (j >= 0) { v = (v << 8) | (b(p + 8 * i + j) & 0xffL); j -= 1 }
-            out(i) = java.lang.Double.longBitsToDouble(v); i += 1
+            out(i) = leF64(b, p + 8 * i); i += 1
           }
         case 6 =>
           var i = 0
           while (i < count) {
             req(until - p >= 4, "parquet data: byte-array length short")
-            val len = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+            val len = le32(b, p)
             p += 4
             req(len >= 0 && len <= until - p, s"parquet data: byte-array of $len overruns")
             out(i) = java.util.Arrays.copyOfRange(b, p, p + len)
@@ -456,11 +447,8 @@ object ParquetData {
           req(until - p >= 12 * count, "parquet data: int96 page short")
           var i = 0
           while (i < count) {
-            var nod = 0L
-            var j = 7
-            while (j >= 0) { nod = (nod << 8) | (b(p + 12 * i + j) & 0xffL); j -= 1 }
-            val jd = (b(p + 12 * i + 8) & 0xff) | ((b(p + 12 * i + 9) & 0xff) << 8) |
-              ((b(p + 12 * i + 10) & 0xff) << 16) | ((b(p + 12 * i + 11) & 0xff) << 24)
+            val nod = le64(b, p + 12 * i)
+            val jd = le32(b, p + 12 * i + 8)
             out(i) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
               (jd.toLong - 2440588L) * 86400L + nod / 1000000000L, nod % 1000000000L))
             i += 1
@@ -495,7 +483,7 @@ object ParquetData {
             if (n.repLevel > 0) {
               req(h.repEncoding == 3, s"parquet data: rep-level encoding ${h.repEncoding}")
               req(body.length - q >= 4, "parquet data: rep level length short")
-              val len = (body(q) & 0xff) | ((body(q + 1) & 0xff) << 8) | ((body(q + 2) & 0xff) << 16) | ((body(q + 3) & 0xff) << 24)
+              val len = le32(body, q)
               q += 4
               req(len >= 0 && len <= body.length - q, "parquet data: rep levels overrun")
               val r = rleHybrid(body, q, q + len, bitWidthFor(n.repLevel), h.numValues)
@@ -505,7 +493,7 @@ object ParquetData {
             if (n.defLevel > 0) {
               req(h.defEncoding == 3, s"parquet data: def-level encoding ${h.defEncoding}")
               req(body.length - q >= 4, "parquet data: def level length short")
-              val len = (body(q) & 0xff) | ((body(q + 1) & 0xff) << 8) | ((body(q + 2) & 0xff) << 16) | ((body(q + 3) & 0xff) << 24)
+              val len = le32(body, q)
               q += 4
               req(len >= 0 && len <= body.length - q, "parquet data: def levels overrun")
               val r = rleHybrid(body, q, q + len, bitWidthFor(n.defLevel), h.numValues)

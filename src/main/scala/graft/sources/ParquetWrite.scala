@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{writeLe32, writeLe64}
+
 /** Parquet v1 WRITER — the mirror of [[ParquetData]], making the
   * primary lake format a source AND a sink like ORC/Arrow/Avro:
   * thrift-compact metadata emit (delta-encoded field ids), Dremel
@@ -269,8 +271,6 @@ object ParquetWrite {
 
   private def plainEncode(physType: Int, vals: Seq[Any]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(vals.length * 8 + 16)
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    def w64(v: Long): Unit = { w32(v.toInt); w32((v >>> 32).toInt) }
     physType match {
       case 0 =>
         var acc = 0; var bits = 0
@@ -280,13 +280,13 @@ object ParquetWrite {
           if (bits == 8) { out.write(acc); acc = 0; bits = 0 }
         }
         if (bits > 0) out.write(acc)
-      case 1 => vals.foreach(v => w32(v.asInstanceOf[Int]))
-      case 2 => vals.foreach(v => w64(v.asInstanceOf[Long]))
-      case 4 => vals.foreach(v => w32(java.lang.Float.floatToIntBits(v.asInstanceOf[Float])))
-      case 5 => vals.foreach(v => w64(java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])))
+      case 1 => vals.foreach(v => writeLe32(out, v.asInstanceOf[Int]))
+      case 2 => vals.foreach(v => writeLe64(out, v.asInstanceOf[Long]))
+      case 4 => vals.foreach(v => writeLe32(out, java.lang.Float.floatToIntBits(v.asInstanceOf[Float])))
+      case 5 => vals.foreach(v => writeLe64(out, java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])))
       case 6 => vals.foreach { v =>
         val b = v.asInstanceOf[Array[Byte]]
-        w32(b.length); out.write(b, 0, b.length)
+        writeLe32(out, b.length); out.write(b, 0, b.length)
       }
       case t => fail(s"parquet write: plain encode of physical type $t")
     }
@@ -381,14 +381,13 @@ object ParquetWrite {
 
     val slots = buf.defs.n
     val body = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = { body.write(v & 0xff); body.write((v >>> 8) & 0xff); body.write((v >>> 16) & 0xff); body.write((v >>> 24) & 0xff) }
     if (leaf.repLevel > 0) {
       val enc = rleHybridEncode(buf.reps.a, slots, bitWidthFor(leaf.repLevel))
-      w32(enc.length); body.write(enc, 0, enc.length)
+      writeLe32(body, enc.length); body.write(enc, 0, enc.length)
     }
     if (leaf.defLevel > 0) {
       val enc = rleHybridEncode(buf.defs.a, slots, bitWidthFor(leaf.defLevel))
-      w32(enc.length); body.write(enc, 0, enc.length)
+      writeLe32(body, enc.length); body.write(enc, 0, enc.length)
     }
 
     // dictionary decision: binary-backed values, bounded distinct set

@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.sources.Bytes.{le32u, le64, leF64}
+
 /** Pure-JVM point-cloud header readers — the PDAL-derived subset the
   * reference extracts (`src/library/pointcloud.cpp:371-434`):
   * pointCount, dimension names, bounds [minx,miny,minz,maxx,maxy,maxz].
@@ -21,14 +23,6 @@ object PointCloud {
       isSplat: Boolean = false
   )
 
-  private def leU16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def leU64(b: Array[Byte], i: Int): Long =
-    (0 until 8).map(k => (b(i + k) & 0xffL) << (8 * k)).sum
-  private def leF64(b: Array[Byte], i: Int): Double =
-    java.lang.Double.longBitsToDouble(leU64(b, i))
-
   /** LAS 1.0-1.4 public header. */
   def sniffLas(b: Array[Byte]): Option[CloudMeta] = {
     if (b == null || b.length < 227 || !(b(0) == 'L' && b(1) == 'A' && b(2) == 'S' && b(3) == 'F')) None
@@ -39,9 +33,9 @@ object PointCloud {
         // legacy point count u32 @107; LAS 1.4 u64 @247
         val count =
           if (verMajor == 1 && verMinor >= 4 && b.length >= 255) {
-            val c14 = leU64(b, 247)
-            if (c14 > 0) c14 else leU32(b, 107)
-          } else leU32(b, 107)
+            val c14 = le64(b, 247)
+            if (c14 > 0) c14 else le32u(b, 107)
+          } else le32u(b, 107)
         // bounds: maxX,minX,maxY,minY,maxZ,minZ doubles @179
         val bounds =
           if (b.length >= 179 + 48)

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{le16, le32u, le64, setLe16, setLe32, setLe64}
+
 /** safetensors — the ML ecosystem's checkpoint/tensor interchange
   * format (HuggingFace model shards ship as `model-*.safetensors`):
   * a u64-LE header length, a JSON header mapping tensor name ->
@@ -84,13 +86,6 @@ object Safetensors {
     else sign * (1f + mant / 4f) * math.pow(2, exp - 15).toFloat
   }
 
-  @inline private def le64(b: Array[Byte], i: Int): Long = {
-    var v = 0L
-    var j = 0
-    while (j < 8) { v |= (b(i + j) & 0xffL) << (8 * j); j += 1 }
-    v
-  }
-
   /** Parse the header from ranged reads — the only bytes the DRIVER
     * ever touches. Enforces the reference's coverage rule: extents
     * sorted by begin must tile [0, bufferLen) exactly. */
@@ -150,11 +145,10 @@ object Safetensors {
   final case class Tensor(info: TensorInfo, raw: Array[Byte], off: Int) {
     val n: Int = { req(info.elems <= Int.MaxValue, "safetensors: tensor too large to materialize"); info.elems.toInt }
     private val w = info.width
-    @inline private def bits(i: Int, width: Int): Long = {
-      var v = 0L
-      var j = 0
-      while (j < width) { v |= (raw(off + i * w + j) & 0xffL) << (8 * j); j += 1 }
-      v
+    @inline private def bits(i: Int, width: Int): Long = width match {
+      case 2 => le16(raw, off + i * w).toLong
+      case 4 => le32u(raw, off + i * w)
+      case _ => le64(raw, off + i * w)
     }
     def longAt(i: Int): Long = info.dtype match {
       case "I8" => raw(off + i).toLong
@@ -233,8 +227,7 @@ object Safetensors {
     val out = new Array[Byte](values.length * 8)
     var i = 0
     while (i < values.length) {
-      var j = 0
-      while (j < 8) { out(i * 8 + j) = ((values(i) >>> (8 * j)) & 0xff).toByte; j += 1 }
+      setLe64(out, i * 8, values(i))
       i += 1
     }
     out
@@ -244,9 +237,7 @@ object Safetensors {
     val out = new Array[Byte](values.length * 4)
     var i = 0
     while (i < values.length) {
-      val b = java.lang.Float.floatToIntBits(values(i))
-      var j = 0
-      while (j < 4) { out(i * 4 + j) = ((b >>> (8 * j)) & 0xff).toByte; j += 1 }
+      setLe32(out, i * 4, java.lang.Float.floatToIntBits(values(i)))
       i += 1
     }
     out
@@ -257,9 +248,7 @@ object Safetensors {
     val out = new Array[Byte](values.length * 2)
     var i = 0
     while (i < values.length) {
-      val h = floatToHalf(values(i))
-      out(i * 2) = (h & 0xff).toByte
-      out(i * 2 + 1) = ((h >> 8) & 0xff).toByte
+      setLe16(out, i * 2, floatToHalf(values(i)))
       i += 1
     }
     out

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.Bytes.{be32, writeBe32}
+
 /** Hadoop SequenceFile source + sink, hand-rolled from the published
   * on-disk format (SEQ version 6, record layout): header = magic +
   * key/value Writable class names (vint-length Text strings) +
@@ -84,9 +86,6 @@ object SeqFile {
       while (i >= 0) { out.write(((v >>> (8 * i)) & 0xff).toInt); i -= 1 }
     }
   }
-
-  @inline private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   private def readString(b: Array[Byte], pos: Int, end: Int): (String, Int) = {
     val (n, p) = readVInt(b, pos, end)
@@ -389,10 +388,6 @@ object SeqFile {
       java.util.Arrays.copyOf(md.digest(), 16)
     }
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = {
-      out.write((v >> 24) & 0xff); out.write((v >> 16) & 0xff)
-      out.write((v >> 8) & 0xff); out.write(v & 0xff)
-    }
     def wStr(s: String): Unit = {
       val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       writeVInt(out, b.length.toLong)
@@ -404,19 +399,19 @@ object SeqFile {
     out.write(if (codecClass.isDefined) 1 else 0) // compressed
     out.write(0) // not block-compressed
     codecClass.foreach(wStr)
-    w32(0) // empty metadata
+    writeBe32(out, 0) // empty metadata
     out.write(sync, 0, 16)
     var sinceSync = 0
     pairs.foreach { case (k, v) =>
       if (sinceSync >= syncEvery) {
-        w32(-1)
+        writeBe32(out, -1)
         out.write(sync, 0, 16)
         sinceSync = 0
       }
       val kb = encodeWritable(keyClass, k)
       val vb = compressValue(codecClass, encodeWritable(valClass, v))
-      w32(kb.length + vb.length)
-      w32(kb.length)
+      writeBe32(out, kb.length + vb.length)
+      writeBe32(out, kb.length)
       out.write(kb, 0, kb.length)
       out.write(vb, 0, vb.length)
       sinceSync += 8 + kb.length + vb.length

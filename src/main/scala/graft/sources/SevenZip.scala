@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{crc32, le32u, le64, setLe32, setLe64, writeLe32}
+
 /** 7z container read — ranged random access into archives whose INDEX
   * sits at the END of the file, exactly the Zip split-scan shape: the
   * 32-byte signature header names the next-header extent, the next
@@ -46,16 +48,6 @@ object SevenZip {
   // ------------------------------------------------------------------
 
   private val Magic = Array[Byte]('7', 'z', 0xbc.toByte, 0xaf.toByte, 0x27, 0x1c)
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue
-  }
-
-  @inline private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  @inline private def le64(b: Array[Byte], i: Int): Long = le32(b, i) | (le32(b, i + 4) << 32)
 
   /** Cursor over header bytes with the 7z variable-length number
     * encoding (first byte's high bits select 0..8 little-endian
@@ -266,7 +258,7 @@ object SevenZip {
         tu match {
           case KCrc =>
             val defined = c.boolsAllDefined(numFolders)
-            fs = fs.zip(defined).map { case (f, d) => if (d) f.copy(crc = Some(le32(c.bytes(4), 0))) else f }
+            fs = fs.zip(defined).map { case (f, d) => if (d) f.copy(crc = Some(le32u(c.bytes(4), 0))) else f }
           case other => fail(s"7z: unexpected property $other in UnpackInfo")
         }
         tu = c.num()
@@ -311,7 +303,7 @@ object SevenZip {
         val defined = c.boolsAllDefined(flatNeeding.length)
         val base = folders.indices.map(fi => counts.take(fi).sum)
         flatNeeding.zip(defined).foreach { case ((fi, si), d) =>
-          if (d) digests += (base(fi) + si) -> le32(c.bytes(4), 0)
+          if (d) digests += (base(fi) + si) -> le32u(c.bytes(4), 0)
         }
         haveDigests = true
         ts = c.num()
@@ -565,14 +557,14 @@ object SevenZip {
       val sig = ranged(0, 32)
       if (!java.util.Arrays.equals(java.util.Arrays.copyOfRange(sig, 0, 6), Magic))
         fail("7z: bad signature")
-      if (crc32(sig, 12, 20) != le32(sig, 8)) fail("7z: start header CRC mismatch")
+      if (crc32(sig, 12, 20) != le32u(sig, 8)) fail("7z: start header CRC mismatch")
       val nhOff = le64(sig, 12)
       val nhSize = le64(sig, 20)
       if (nhSize == 0) return Archive(0L, Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty)
       if (nhOff < 0 || nhSize < 0 || nhSize > (256L << 20) || 32 + nhOff + nhSize > len)
         fail("7z: next header extent out of range")
       val nh = ranged(32 + nhOff, nhSize.toInt)
-      if (crc32(nh, 0, nh.length) != le32(sig, 28)) fail("7z: next header CRC mismatch")
+      if (crc32(nh, 0, nh.length) != le32u(sig, 28)) fail("7z: next header CRC mismatch")
       val c0 = new Cur(nh, 0)
       val kind = c0.num()
       val plain: Array[Byte] =
@@ -682,7 +674,6 @@ object SevenZip {
         (0 until i).foreach(j => hdr.write(((v >> (8 * j)) & 0xff).toInt))
       }
     }
-    def w32(v: Long): Unit = (0 until 4).foreach(j => hdr.write(((v >> (8 * j)) & 0xff).toInt))
     hdr.write(KHeader)
     hdr.write(KMainStreamsInfo)
     hdr.write(KPackInfo); wNum(0L); wNum(1L)
@@ -709,7 +700,7 @@ object SevenZip {
         entries.init.foreach { case (_, b) => wNum(b.length.toLong) }
       }
       hdr.write(KCrc); hdr.write(1) // all defined
-      entries.foreach { case (_, b) => w32(crc32(b, 0, b.length)) }
+      entries.foreach { case (_, b) => writeLe32(hdr, crc32(b, 0, b.length)) }
       hdr.write(KEnd)
     }
     hdr.write(KEnd) // end MainStreamsInfo
@@ -730,13 +721,11 @@ object SevenZip {
     out.write(Magic)
     out.write(0); out.write(4) // version
     val tail = new Array[Byte](20)
-    def p64(v: Long, at: Int): Unit = (0 until 8).foreach(j => tail(at + j) = ((v >> (8 * j)) & 0xff).toByte)
-    p64(packed.length.toLong, 0) // next header offset (right after pack data)
-    p64(h.length.toLong, 8)
+    setLe64(tail, 0, packed.length.toLong) // next header offset (right after pack data)
+    setLe64(tail, 8, h.length.toLong)
     val hCrc = crc32(h, 0, h.length)
-    (0 until 4).foreach(j => tail(16 + j) = ((hCrc >> (8 * j)) & 0xff).toByte)
-    val startCrc = crc32(tail, 0, 20)
-    (0 until 4).foreach(j => out.write(((startCrc >> (8 * j)) & 0xff).toInt))
+    setLe32(tail, 16, hCrc.toInt)
+    writeLe32(out, crc32(tail, 0, 20))
     out.write(tail)
     out.write(packed)
     out.write(h)
@@ -772,7 +761,6 @@ object SevenZip {
         (0 until i).foreach(j => hdr.write(((v >> (8 * j)) & 0xff).toInt))
       }
     }
-    def w32(v: Long): Unit = (0 until 4).foreach(j => hdr.write(((v >> (8 * j)) & 0xff).toInt))
     def wCoder(id: Long, nin: Int, nout: Int): Unit = {
       val idBytes = {
         var n = 1
@@ -839,7 +827,7 @@ object SevenZip {
         entries.init.foreach { case (_, b) => wNum(b.length.toLong) }
       }
       hdr.write(KCrc); hdr.write(1) // all defined
-      entries.foreach { case (_, b) => w32(crc32(b, 0, b.length)) }
+      entries.foreach { case (_, b) => writeLe32(hdr, crc32(b, 0, b.length)) }
       hdr.write(KEnd)
     }
     hdr.write(KEnd) // end MainStreamsInfo
@@ -861,13 +849,11 @@ object SevenZip {
     out.write(0); out.write(4) // version
     val packedLen = packs.map(_.length.toLong).sum
     val tail = new Array[Byte](20)
-    def p64(v: Long, at: Int): Unit = (0 until 8).foreach(j => tail(at + j) = ((v >> (8 * j)) & 0xff).toByte)
-    p64(packedLen, 0) // next header offset (right after pack data)
-    p64(h.length.toLong, 8)
+    setLe64(tail, 0, packedLen) // next header offset (right after pack data)
+    setLe64(tail, 8, h.length.toLong)
     val hCrc = crc32(h, 0, h.length)
-    (0 until 4).foreach(j => tail(16 + j) = ((hCrc >> (8 * j)) & 0xff).toByte)
-    val startCrc = crc32(tail, 0, 20)
-    (0 until 4).foreach(j => out.write(((startCrc >> (8 * j)) & 0xff).toInt))
+    setLe32(tail, 16, hCrc.toInt)
+    writeLe32(out, crc32(tail, 0, 20))
     out.write(tail)
     packs.foreach(out.write)
     out.write(h)

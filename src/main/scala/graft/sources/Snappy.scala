@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{be32, le32, maskedCrc32c, writeBe32, writeLe32}
+
 /** Snappy codec — pure JVM, both directions: the raw block format
   * (varint preamble + literal/copy tags, published format spec), the
   * FRAMING format (`sNaPpY` magic, per-chunk masked CRC32C,
@@ -139,8 +141,6 @@ object Snappy {
         a += len
       }
     }
-    @inline def r32(p: Int): Int =
-      (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8) | ((src(p + 2) & 0xff) << 16) | ((src(p + 3) & 0xff) << 24)
     @inline def hash(x: Int): Int = (x * -1640531535) >>> 18
     var anchor = 0
     if (src.length >= 8) {
@@ -149,10 +149,10 @@ object Snappy {
       var i = 0
       val limit = src.length - 4
       while (i <= limit) {
-        val h = hash(r32(i))
+        val h = hash(le32(src, i))
         val cand = table(h)
         table(h) = i
-        if (cand >= 0 && i - cand <= 0xffff && r32(cand) == r32(i)) {
+        if (cand >= 0 && i - cand <= 0xffff && le32(src, cand) == le32(src, i)) {
           literal(anchor, i)
           var m = 4
           while (i + m < src.length && src(cand + m) == src(i + m)) m += 1
@@ -178,9 +178,6 @@ object Snappy {
   // ------------------------------------------------------------------
   // Hadoop block framing ([BE32 origLen][{BE32 clen}{raw chunk}]*)
   // ------------------------------------------------------------------
-
-  @inline private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   /** Decode a Hadoop-framed `.snappy` stream. */
   def hadoopDecode(b: Array[Byte]): Array[Byte] =
@@ -215,13 +212,12 @@ object Snappy {
     * compressed chunk per block — the codec's default shape). */
   def hadoopEncode(data: Array[Byte], blockSize: Int = 256 << 10): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def wbe(v: Int): Unit = { out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
     var off = 0 // empty input = empty stream (the codec writes nothing)
     while (off < data.length) {
       val n = math.min(blockSize, data.length - off)
       val chunk = rawEncode(java.util.Arrays.copyOfRange(data, off, off + n))
-      wbe(n)
-      wbe(chunk.length)
+      writeBe32(out, n)
+      writeBe32(out, chunk.length)
       out.write(chunk)
       off += n
     }
@@ -234,13 +230,6 @@ object Snappy {
 
   private val FramedMagic: Array[Byte] =
     Array(0xff.toByte, 0x06, 0x00, 0x00, 's', 'N', 'a', 'P', 'p', 'Y')
-
-  private def maskedCrc32c(b: Array[Byte], off: Int, len: Int): Int = {
-    val c = new java.util.zip.CRC32C
-    c.update(b, off, len)
-    val crc = c.getValue.toInt
-    ((crc >>> 15) | (crc << 17)) + 0xa282ead8
-  }
 
   /** True when the head bytes carry the framing-format magic. */
   def isFramed(b: Array[Byte]): Boolean =
@@ -298,15 +287,12 @@ object Snappy {
       val (t, payloadLen) = if (comp.length < n) (0x00, comp.length) else (0x01, n)
       val len = 4 + payloadLen
       out.write(t); out.write(len & 0xff); out.write((len >>> 8) & 0xff); out.write((len >>> 16) & 0xff)
-      out.write(crc & 0xff); out.write((crc >>> 8) & 0xff); out.write((crc >>> 16) & 0xff); out.write((crc >>> 24) & 0xff)
+      writeLe32(out, crc)
       if (t == 0x00) out.write(comp) else out.write(data, off, n)
       off += n
     }
     out.toByteArray
   }
-
-  @inline private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   /** Decode by shape: framing-format magic wins; otherwise the Hadoop
     * block framing (which has no magic — `.snappy` files). */

@@ -2,6 +2,8 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{be16, be32u, setBe16, setBe32}
+
 /** Pure-JVM SQLite file format — READ and WRITE — no SQLite library.
   *
   * The read half generalizes the b-tree walk that [[Gpkg]] introduced
@@ -40,14 +42,6 @@ object Sqlite {
   // =====================================================================
   // Shared primitives
   // =====================================================================
-
-  private def u16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def u32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  private def putU16(b: Array[Byte], i: Int, v: Int): Unit = { b(i) = (v >> 8).toByte; b(i + 1) = v.toByte }
-  private def putU32(b: Array[Byte], i: Int, v: Long): Unit = {
-    b(i) = (v >> 24).toByte; b(i + 1) = (v >> 16).toByte; b(i + 2) = (v >> 8).toByte; b(i + 3) = v.toByte
-  }
 
   /** SQLite varint: 1–9 bytes big-endian 7-bit groups, 9th byte carries
     * a full 8 bits. Returns (value, bytesConsumed). */
@@ -186,11 +180,11 @@ object Sqlite {
 
   final class Db(val bytes: Array[Byte]) {
     require(bytes.length > 100 && new String(bytes, 0, 15, "US-ASCII") == "SQLite format 3", "not a SQLite db")
-    val pageSize: Int = { val p = u16(bytes, 16); if (p == 1) 65536 else p }
+    val pageSize: Int = { val p = be16(bytes, 16); if (p == 1) 65536 else p }
     val reserved: Int = bytes(20) & 0xff
     val usable: Int = pageSize - reserved
-    def userVersion: Int = u32(bytes, 60).toInt
-    def applicationId: Int = u32(bytes, 68).toInt
+    def userVersion: Int = be32u(bytes, 60).toInt
+    def applicationId: Int = be32u(bytes, 68).toInt
     def pageStart(p: Int): Int = {
       require(p >= 1 && (p.toLong - 1) * pageSize < bytes.length, s"sqlite: page $p out of range (corrupt pointer)")
       (p - 1) * pageSize
@@ -211,7 +205,7 @@ object Sqlite {
       require(at >= 0 && at + local + 4 <= bytes.length, "sqlite: spilled cell out of range (corrupt cell)")
       val out = new ArrayBuffer[Byte](total.toInt)
       out ++= java.util.Arrays.copyOfRange(bytes, at, at + local)
-      var page = u32(bytes, at + local)
+      var page = be32u(bytes, at + local)
       var hops = 0
       while (page != 0 && out.length < total) {
         require(hops < bytes.length / (usable - 4) + 2, "sqlite: overflow chain cycle (corrupt database)")
@@ -219,7 +213,7 @@ object Sqlite {
         val take = math.min(usable - 4, total.toInt - out.length)
         require(ps + 4 + take <= bytes.length, "sqlite: overflow page out of range (corrupt database)")
         out ++= java.util.Arrays.copyOfRange(bytes, ps + 4, ps + 4 + take)
-        page = u32(bytes, ps)
+        page = be32u(bytes, ps)
         hops += 1
       }
       (out.toArray, local + 4)
@@ -233,12 +227,12 @@ object Sqlite {
       val ps = pageStart(page)
       val hdr = if (page == 1) ps + 100 else ps
       val ptype = bytes(hdr) & 0xff
-      val nCells = u16(bytes, hdr + 3)
+      val nCells = be16(bytes, hdr + 3)
       ptype match {
         case 0x0d => // leaf table
           var c = 0
           while (c < nCells) {
-            var at = ps + u16(bytes, hdr + 8 + 2 * c)
+            var at = ps + be16(bytes, hdr + 8 + 2 * c)
             val (plen, n1) = varint(bytes, at); at += n1
             val (rowid, n2) = varint(bytes, at); at += n2
             val (rec, _) = payload(at, plen, index = false)
@@ -248,12 +242,12 @@ object Sqlite {
         case 0x05 => // interior table
           var c = 0
           while (c < nCells) {
-            val at = ps + u16(bytes, hdr + 12 + 2 * c)
+            val at = ps + be16(bytes, hdr + 12 + 2 * c)
             require(at + 4 <= bytes.length, "sqlite: interior cell out of range (corrupt page)")
-            scan(u32(bytes, at).toInt, depth + 1)(f)
+            scan(be32u(bytes, at).toInt, depth + 1)(f)
             c += 1
           }
-          scan(u32(bytes, hdr + 8).toInt, depth + 1)(f)
+          scan(be32u(bytes, hdr + 8).toInt, depth + 1)(f)
         case t => throw new IllegalArgumentException(s"unexpected table b-tree page type 0x${t.toHexString}")
       }
     }
@@ -268,12 +262,12 @@ object Sqlite {
       val ps = pageStart(page)
       val hdr = if (page == 1) ps + 100 else ps
       val ptype = bytes(hdr) & 0xff
-      val nCells = u16(bytes, hdr + 3)
+      val nCells = be16(bytes, hdr + 3)
       ptype match {
         case 0x0a => // leaf index
           var c = 0
           while (c < nCells) {
-            var at = ps + u16(bytes, hdr + 8 + 2 * c)
+            var at = ps + be16(bytes, hdr + 8 + 2 * c)
             val (plen, n1) = varint(bytes, at); at += n1
             val (rec, _) = payload(at, plen, index = true)
             f(rec)
@@ -282,15 +276,15 @@ object Sqlite {
         case 0x02 => // interior index
           var c = 0
           while (c < nCells) {
-            var at = ps + u16(bytes, hdr + 12 + 2 * c)
-            val child = u32(bytes, at).toInt; at += 4
+            var at = ps + be16(bytes, hdr + 12 + 2 * c)
+            val child = be32u(bytes, at).toInt; at += 4
             scanIndex(child, depth + 1)(f)
             val (plen, n1) = varint(bytes, at); at += n1
             val (rec, _) = payload(at, plen, index = true)
             f(rec)
             c += 1
           }
-          scanIndex(u32(bytes, hdr + 8).toInt, depth + 1)(f)
+          scanIndex(be32u(bytes, hdr + 8).toInt, depth + 1)(f)
         case t => throw new IllegalArgumentException(s"unexpected index b-tree page type 0x${t.toHexString}")
       }
     }
@@ -517,8 +511,8 @@ object Sqlite {
       st.alloc(pg)
     }
     var i = 0
-    while (i < nums.length - 1) { putU32(st.pages(nums(i) - 1), 0, nums(i + 1).toLong); i += 1 }
-    java.util.Arrays.copyOf(payload, local) ++ { val b = new Array[Byte](4); putU32(b, 0, nums(0).toLong); b }
+    while (i < nums.length - 1) { setBe32(st.pages(nums(i) - 1), 0, nums(i + 1)); i += 1 }
+    java.util.Arrays.copyOf(payload, local) ++ { val b = new Array[Byte](4); setBe32(b, 0, nums(0)); b }
   }
 
   /** Assemble one b-tree page from finished cell blobs. `base` is 100
@@ -527,8 +521,8 @@ object Sqlite {
     val hdrLen = if (ptype == 0x0d || ptype == 0x0a) 8 else 12
     val pg = new Array[Byte](PageSize)
     pg(base) = ptype.toByte
-    putU16(pg, base + 3, cells.length)
-    if (hdrLen == 12) putU32(pg, base + 8, rightmost.toLong)
+    setBe16(pg, base + 3, cells.length)
+    if (hdrLen == 12) setBe32(pg, base + 8, rightmost)
     var off = Usable
     val ptrs = new Array[Int](cells.length)
     var i = cells.length - 1
@@ -538,9 +532,9 @@ object Sqlite {
       ptrs(i) = off
       i -= 1
     }
-    putU16(pg, base + 5, if (off == 65536) 0 else off)
+    setBe16(pg, base + 5, if (off == 65536) 0 else off)
     i = 0
-    while (i < cells.length) { putU16(pg, base + hdrLen + 2 * i, ptrs(i)); i += 1 }
+    while (i < cells.length) { setBe16(pg, base + hdrLen + 2 * i, ptrs(i)); i += 1 }
     require(base + hdrLen + 2 * cells.length <= off, s"page overfull: ${cells.length} cells")
     pg
   }
@@ -602,7 +596,7 @@ object Sqlite {
       val isTop = groups.length == 1
       level = groups.map { g =>
         val body = g.init.map { case (key, child) =>
-          val b = new Array[Byte](4); putU32(b, 0, child.toLong); b ++ varintBytes(key)
+          val b = new Array[Byte](4); setBe32(b, 0, child); b ++ varintBytes(key)
         }
         val rm = g.last
         if (isTop && rootOnPage1) { st.setPage1(makePage(0x05, body, rm._2, 100)); (rm._1, 1) }
@@ -705,7 +699,7 @@ object Sqlite {
       val lv = level
       level = groups.result().map { case (children, cellDivs, rightmost) =>
         val cells = children.zip(cellDivs).map { case (c, rec) =>
-          { val b = new Array[Byte](4); putU32(b, 0, lv(c).toLong); b } ++
+          { val b = new Array[Byte](4); setBe32(b, 0, lv(c)); b } ++
             varintBytes(rec.length.toLong) ++ spill(st, rec, index = true)
         }
         st.alloc(makePage(0x02, cells, lv(rightmost), 0))
@@ -800,19 +794,19 @@ object Sqlite {
     // 100-byte header over page 1's reserved gap
     System.arraycopy("SQLite format 3".getBytes("US-ASCII"), 0, out, 0, 15)
     out(15) = 0
-    putU16(out, 16, PageSize)
+    setBe16(out, 16, PageSize)
     out(18) = 1; out(19) = 1 // legacy journal read/write versions
     out(20) = 0 // reserved per page
     out(21) = 64; out(22) = 32; out(23) = 32
-    putU32(out, 24, 1L) // file change counter
-    putU32(out, 28, nPages.toLong)
-    putU32(out, 40, 1L) // schema cookie
-    putU32(out, 44, 4L) // schema format 4 (serial types 8/9 in use)
-    putU32(out, 56, 1L) // text encoding: UTF-8
-    putU32(out, 60, userVersion.toLong)
-    putU32(out, 68, applicationId.toLong)
-    putU32(out, 92, 1L) // version-valid-for = change counter
-    putU32(out, 96, 3040001L) // "written by" library version number
+    setBe32(out, 24, 1) // file change counter
+    setBe32(out, 28, nPages)
+    setBe32(out, 40, 1) // schema cookie
+    setBe32(out, 44, 4) // schema format 4 (serial types 8/9 in use)
+    setBe32(out, 56, 1) // text encoding: UTF-8
+    setBe32(out, 60, userVersion)
+    setBe32(out, 68, applicationId)
+    setBe32(out, 92, 1) // version-valid-for = change counter
+    setBe32(out, 96, 3040001) // "written by" library version number
     out
   }
 }

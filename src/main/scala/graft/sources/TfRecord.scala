@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{le32, le64, maskedCrc32c, setLe64, writeLe32}
+
 /** TFRecord shards + `tf.train.Example` payloads — the TensorFlow
   * ecosystem's training-data shard format (`.tfrecord`, commonly
   * gzipped). Published layout (TensorFlow docs): per record a u64-LE
@@ -54,18 +56,6 @@ object TfRecord {
 
   // ------------------------------------------------------------- framing
 
-  private[sources] def maskedCrc(b: Array[Byte], off: Int, len: Int): Int = {
-    val c = new java.util.zip.CRC32C
-    c.update(b, off, len)
-    val v = c.getValue.toInt
-    ((v >>> 15) | (v << 17)) + 0xa282ead8
-  }
-
-  @inline private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  @inline private def le64(b: Array[Byte], i: Int): Long =
-    (le32(b, i) & 0xffffffffL) | (le32(b, i + 4).toLong << 32)
-
   /** Iterate framed records; every length and payload CRC verified. */
   def records(b: Array[Byte]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
     private var p = 0
@@ -76,11 +66,11 @@ object TfRecord {
     def next(): Array[Byte] = guarded("record") {
       if (!hasNext) throw new NoSuchElementException
       val len = le64(b, p)
-      req(le32(b, p + 8) == maskedCrc(b, p, 8), s"tfrecord: length CRC mismatch at $p")
+      req(le32(b, p + 8) == maskedCrc32c(b, p, 8), s"tfrecord: length CRC mismatch at $p")
       req(len >= 0 && len <= b.length.toLong - p - 16, s"tfrecord: record length $len exceeds input")
       val start = p + 12
       val data = java.util.Arrays.copyOfRange(b, start, start + len.toInt)
-      req(le32(b, start + len.toInt) == maskedCrc(data, 0, data.length), s"tfrecord: data CRC mismatch at $p")
+      req(le32(b, start + len.toInt) == maskedCrc32c(data, 0, data.length), s"tfrecord: data CRC mismatch at $p")
       p = start + len.toInt + 4
       data
     }
@@ -89,16 +79,13 @@ object TfRecord {
   /** Frame records (the writer side of the published layout). */
   def frame(recs: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = { var i = 0; while (i < 4) { out.write((v >>> (8 * i)) & 0xff); i += 1 } }
     recs.foreach { r =>
       val lenB = new Array[Byte](8)
-      var v = r.length.toLong
-      var i = 0
-      while (i < 8) { lenB(i) = (v & 0xff).toByte; v >>= 8; i += 1 }
+      setLe64(lenB, 0, r.length.toLong)
       out.write(lenB)
-      w32(maskedCrc(lenB, 0, 8))
+      writeLe32(out, maskedCrc32c(lenB, 0, 8))
       out.write(r)
-      w32(maskedCrc(r, 0, r.length))
+      writeLe32(out, maskedCrc32c(r, 0, r.length))
     }
     out.toByteArray
   }

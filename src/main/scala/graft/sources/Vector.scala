@@ -4,6 +4,8 @@ import java.io.ByteArrayInputStream
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Bytes.{be32u, le32u, leF64}
+
 /** Vector-file extraction — the GeoJSON + ESRI Shapefile subset of the
   * reference's OGR layer scan (`entry.cpp:491-654`,
   * `vector_query.cpp:121-292`): layer name, geometry type, feature
@@ -53,16 +55,7 @@ object VectorFile {
   def sniffShapefile(bytes: Array[Byte]): Option[VectorMeta] = {
     if (bytes == null || bytes.length < 100) return None
     val b = bytes; val end = b.length
-    def be32(i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    def le32(i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    def leD(i: Int): Double = {
-      var bits = 0L; var k = 7
-      while (k >= 0) { bits = (bits << 8) | (b(i + k) & 0xffL); k -= 1 }
-      java.lang.Double.longBitsToDouble(bits)
-    }
-    if (be32(0) != 9994L || le32(28) != 1000L) return None
+    if (be32u(b, 0) != 9994L || le32u(b, 28) != 1000L) return None
     try {
       def typeName(t: Long): Option[String] = t match {
         case 1 | 11 | 21 => Some("Point")
@@ -77,30 +70,30 @@ object VectorFile {
       var any = false
       var i = 100
       while (i + 8 <= end) {
-        val contentWords = be32(i + 4)
+        val contentWords = be32u(b, i + 4)
         val c = i + 8
         if (contentWords < 2 || c + contentWords * 2 > end) { i = end }
         else {
-          val t = le32(c)
+          val t = le32u(b, c)
           typeName(t).foreach { name =>
             count += 1
             if (!types.contains(name)) types = types :+ name
             if ((t == 1 || t == 11 || t == 21) && c + 20 <= end) {
-              val x = leD(c + 4); val y = leD(c + 12)
+              val x = leF64(b, c + 4); val y = leF64(b, c + 12)
               w = math.min(w, x); s = math.min(s, y); e = math.max(e, x); n = math.max(n, y); any = true
             } else if (c + 36 <= end) {
-              w = math.min(w, leD(c + 4)); s = math.min(s, leD(c + 12))
-              e = math.max(e, leD(c + 20)); n = math.max(n, leD(c + 28)); any = true
+              w = math.min(w, leF64(b, c + 4)); s = math.min(s, leF64(b, c + 12))
+              e = math.max(e, leF64(b, c + 20)); n = math.max(n, leF64(b, c + 28)); any = true
             }
           }
           i = c + contentWords.toInt * 2
         }
       }
       val headerBox =
-        if (leD(36) <= leD(52) && (leD(36) != 0.0 || leD(52) != 0.0)) Some((leD(36), leD(44), leD(52), leD(60)))
+        if (leF64(b, 36) <= leF64(b, 52) && (leF64(b, 36) != 0.0 || leF64(b, 52) != 0.0)) Some((leF64(b, 36), leF64(b, 44), leF64(b, 52), leF64(b, 60)))
         else None
       val bbox = if (any) Some((w, s, e, n)) else headerBox
-      val tps = if (types.nonEmpty) types else typeName(le32(32)).toSeq
+      val tps = if (types.nonEmpty) types else typeName(le32u(b, 32)).toSeq
       Some(VectorMeta("ESRI Shapefile", count, tps, bbox))
     } catch { case _: Exception => None }
   }
@@ -214,9 +207,6 @@ object Mp4 {
     }
   }
 
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-
   def sniff(b: Array[Byte]): Option[VideoMeta] = {
     if (b == null || b.length < 16) return None
     // top-level boxes: size(4) type(4); an MP4 starts with ftyp
@@ -229,7 +219,7 @@ object Mp4 {
       def walk(from: Int, to: Int, depth: Int): Unit = {
         var i = from
         while (i + 8 <= to && depth < 8) {
-          val size = be32(b, i)
+          val size = be32u(b, i)
           val tpe = new String(b, i + 4, 4, "ISO-8859-1")
           if (size < 8 || i + size > to) return
           tpe match {
@@ -243,16 +233,16 @@ object Mp4 {
             case "mvhd" if i + 32 <= to =>
               val version = b(i + 8) & 0xff
               if (version == 0) {
-                val timescale = be32(b, i + 20)
-                val dur = be32(b, i + 24)
+                val timescale = be32u(b, i + 20)
+                val dur = be32u(b, i + 24)
                 if (timescale > 0) duration = dur * 1000 / timescale
               }
             case "tkhd" if i + 92 <= to =>
               val version = b(i + 8) & 0xff
               if (version == 0 && i + 8 + 84 <= to) {
                 // width/height are 16.16 fixed point at offset 76/80 from box payload
-                val w = (be32(b, i + 8 + 76) >> 16).toInt
-                val h = (be32(b, i + 8 + 80) >> 16).toInt
+                val w = (be32u(b, i + 8 + 76) >> 16).toInt
+                val h = (be32u(b, i + 8 + 80) >> 16).toInt
                 if (w > 0 && h > 0) { width = w; height = h }
               }
             case _ => ()

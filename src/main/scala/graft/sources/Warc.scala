@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.io.InputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{Deflater, Inflater}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.sources.Bytes.{crc32, le32u, writeLe32}
 
 /** WARC (ISO 28500) crawl-container ingestion — the reader real web
   * corpora ship in, feeding the curation chain (UrlCanon → HtmlExtract →
@@ -214,9 +216,7 @@ object Warc {
     val buf = new Array[Byte](8192)
     while (!d.finished()) out.write(buf, 0, d.deflate(buf))
     d.end()
-    val crc = new CRC32; crc.update(payload)
-    def le32(v: Long): Unit = (0 until 4).foreach(i => out.write(((v >>> (8 * i)) & 0xff).toInt))
-    le32(crc.getValue); le32(payload.length.toLong & 0xffffffffL)
+    writeLe32(out, crc32(payload, 0, payload.length)); writeLe32(out, payload.length)
     out.toByteArray
   }
 
@@ -287,10 +287,8 @@ object Warc {
       val consumedEnd = p - inf.getRemaining
       if (!w.ensure(consumedEnd + 8)) return None
       val payload = out.toByteArray
-      def le32(at: Int): Long =
-        (0 until 4).map(i => (w.buf(at + i) & 0xffL) << (8 * i)).sum
-      val crc = new CRC32; crc.update(payload)
-      if (le32(consumedEnd) != crc.getValue || le32(consumedEnd + 4) != (payload.length.toLong & 0xffffffffL))
+      if (le32u(w.buf, consumedEnd) != crc32(payload, 0, payload.length) ||
+        le32u(w.buf, consumedEnd + 4) != (payload.length.toLong & 0xffffffffL))
         None
       else Some(payload -> (consumedEnd + 8))
     } catch {

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{le32, le32u, writeLe32}
+
 /** `.warc.zst` — the IIPC/webrecorder convention newer crawls ship
   * (Common Crawl publishes it alongside `.warc.gz`): a sequence of
   * independent zstd FRAMES, each holding whole WARC records, with an
@@ -27,9 +29,6 @@ object WarcZst {
 
   private val DictSkippableMagic = 0x184D2A5D
   private val FrameMagic = 0xFD2FB528
-
-  @inline private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   /** The in-band dictionary, if the file starts with the dictionary
     * skippable frame: returns the dictionary BYTES (decompressed when
@@ -87,7 +86,7 @@ object WarcZst {
       if (pos + 8 <= b.length && (le32(b, pos.toInt) & 0xfffffff0) == 0x184D2A50) {
         // size field is UNSIGNED — a signed read of a crafted/corrupt
         // value walks pos backwards or loops forever on untrusted input
-        val sz = le32(b, pos.toInt + 4) & 0xffffffffL
+        val sz = le32u(b, pos.toInt + 4)
         val next = pos + 8L + sz
         if (next > b.length)
           throw new Zstd.ZstdError("warc.zst: skippable frame size out of range")
@@ -162,10 +161,9 @@ object WarcZst {
     * WITH that dictionary. */
   def write(recordGroups: Seq[Array[Byte]], dict: Array[Byte] = null): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
     if (dict != null) {
-      w32(DictSkippableMagic)
-      w32(dict.length)
+      writeLe32(out, DictSkippableMagic)
+      writeLe32(out, dict.length)
       out.write(dict, 0, dict.length)
     }
     recordGroups.foreach { g =>

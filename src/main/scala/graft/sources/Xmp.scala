@@ -33,28 +33,14 @@ object Xmp {
 
   /** Find the XMP packet in JPEG APP1 segments. */
   def packetFromJpeg(bytes: Array[Byte]): Option[String] = {
-    if (bytes == null || bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8) None
-    else {
-      var i = 2
-      while (i + 4 < bytes.length) {
-        if ((bytes(i) & 0xff) != 0xff) return None
-        val marker = bytes(i + 1) & 0xff
-        if (marker == 0xd9 || marker == 0xda) return None
-        val len = ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-        if (marker == 0xe1) {
-          val start = i + 4
-          val headEnd = start + Header.length
-          if (headEnd < bytes.length &&
-            java.util.Arrays.equals(bytes.slice(start, headEnd), Header)) {
-            val from = headEnd + 1 // NUL after the namespace URI
-            val to = math.min(bytes.length, i + 2 + len)
-            if (from < to) return Some(new String(bytes, from, to - from, "UTF-8"))
-          }
-        }
-        i += 2 + len
-      }
-      None
+    def from(i: Int): Int = i + 4 + Header.length + 1 // past the NUL after the namespace URI
+    def to(i: Int): Int = math.min(bytes.length, i + 2 + Bytes.be16(bytes, i + 2))
+    val at = Bytes.jpegSegment(bytes) { (marker, i) =>
+      val headEnd = i + 4 + Header.length
+      marker == 0xe1 && headEnd < bytes.length &&
+      java.util.Arrays.equals(bytes, i + 4, headEnd, Header, 0, Header.length) && from(i) < to(i)
     }
+    if (at < 0) None else Some(new String(bytes, from(at), to(at) - from(at), "UTF-8"))
   }
 
   private def grab(xml: String, field: String): Option[Double] = {

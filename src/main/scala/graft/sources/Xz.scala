@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{crc32, le32, le32u, le64, setLe32, writeLe32}
+
 /** XZ / LZMA decoder — pure JVM: the LZMA range coder and state
   * machine (public LZMA specification), LZMA2 chunking (dict/state/
   * props resets, uncompressed chunks), the `.xz` container (stream
@@ -61,12 +63,6 @@ object Xz {
       i += 1
     }
     ~crc
-  }
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Int = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue.toInt
   }
 
   // ------------------------------------------------------------------
@@ -375,14 +371,14 @@ object Xz {
     val flagsHi = b(p + 6) & 0xff
     val check = b(p + 7) & 0xff
     if (flagsHi != 0) fail("xz: reserved stream flags")
-    if (crc32(b, p + 6, 2) != le32(b, p + 8)) fail("xz: stream header CRC mismatch")
+    if (crc32(b, p + 6, 2).toInt != le32(b, p + 8)) fail("xz: stream header CRC mismatch")
     p += 12
     val out = new XOut(1 << 16)
     var lastBlockEnd = p
     // blocks until the index indicator (0x00)
     while ((b(p) & 0xff) != 0) {
       val headerSize = ((b(p) & 0xff) + 1) * 4
-      if (crc32(b, p, headerSize - 4) != le32(b, p + headerSize - 4)) fail("xz: block header CRC mismatch")
+      if (crc32(b, p, headerSize - 4).toInt != le32(b, p + headerSize - 4)) fail("xz: block header CRC mismatch")
       val flags = b(p + 1) & 0xff
       val numFilters = (flags & 3) + 1
       if ((flags & 0x3c) != 0) fail("xz: reserved block flags")
@@ -411,7 +407,7 @@ object Xz {
         else if (id >= 0x04 && id <= 0x0b && propsLen == 4) {
           // spec: a BCJ start offset must be a multiple of the filter's
           // instruction alignment (liblzma rejects misaligned offsets)
-          val start = le32(b, q3) & 0xffffffffL
+          val start = le32u(b, q3)
           if (start % bcjAlignment(id) != 0)
             fail(s"xz: BCJ start offset $start not aligned to filter $id's instruction size")
           pre += ((id, start))
@@ -448,7 +444,7 @@ object Xz {
       val checkLen = check match {
         case 0 => 0
         case 1 =>
-          if (crc32(out.buf, before.toInt, produced) != le32(b, pad)) fail("xz: block CRC32 mismatch")
+          if (crc32(out.buf, before.toInt, produced).toInt != le32(b, pad)) fail("xz: block CRC32 mismatch")
           4
         case 4 =>
           if (crc64(out.buf, before.toInt, produced) != le64(b, pad)) fail("xz: block CRC64 mismatch")
@@ -470,11 +466,11 @@ object Xz {
     var r = 0L
     while (r < nRec) { q = varint(b, varint(b, q)._2)._2; r += 1 }
     while (((q - p) & 3) != 0) { if (b(q) != 0) fail("xz: nonzero index padding"); q += 1 }
-    if (crc32(b, p, q - p) != le32(b, q)) fail("xz: index CRC mismatch")
+    if (crc32(b, p, q - p).toInt != le32(b, q)) fail("xz: index CRC mismatch")
     q += 4
     // footer
-    if (crc32(b, q + 4, 6) != le32(b, q)) fail("xz: footer CRC mismatch")
-    val backward = (le32(b, q + 4).toLong & 0xffffffffL)
+    if (crc32(b, q + 4, 6).toInt != le32(b, q)) fail("xz: footer CRC mismatch")
+    val backward = le32u(b, q + 4)
     if ((backward + 1) * 4 != (q - p)) fail("xz: footer backward size disagrees with index")
     if (b(q + 8) != 0 || b(q + 9) != check.toByte) fail("xz: footer flags disagree with header")
     if (b(q + 10) != FooterMagic(0) || b(q + 11) != FooterMagic(1)) fail("xz: bad footer magic")
@@ -489,11 +485,6 @@ object Xz {
       i += 1
     }
   }
-
-  @inline private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  @inline private def le64(b: Array[Byte], i: Int): Long =
-    (le32(b, i) & 0xffffffffL) | ((le32(b, i + 4) & 0xffffffffL) << 32)
 
   // ------------------------------------------------------------------
   // BCJ branch filters (the xz "simple" filters, ids 0x04..0x0B):
@@ -767,12 +758,6 @@ object Xz {
     * 1200 adversarial corpora in both directions — fixtures pinned by
     * tools/gen_bcj_fixtures.py, probe log in NOTES_r17. */
   private def bcjRiscV(b: Array[Byte], off: Int, len: Int, nowPos0: Int, enc: Boolean): Unit = {
-    @inline def wr32(i: Int, v: Int): Unit = {
-      b(off + i) = v.toByte
-      b(off + i + 1) = (v >>> 8).toByte
-      b(off + i + 2) = (v >>> 16).toByte
-      b(off + i + 3) = (v >>> 24).toByte
-    }
     var i = 0
     while (i + 8 <= len) {
       val b0 = b(off + i) & 0xff
@@ -787,11 +772,11 @@ object Xz {
             val imm = (((w >>> 31) & 1) << 20) | (((w >>> 21) & 0x3FF) << 1) |
               (((w >>> 20) & 1) << 11) | (((w >>> 12) & 0xFF) << 12)
             val a = ((imm + pc) & 0x1FFFFF) >>> 1 // 20-bit halved target
-            wr32(i, (w & 0x0FFF) | (((a >>> 16) & 0xF) << 12) | (((a >>> 8) & 0xFF) << 16) | ((a & 0xFF) << 24))
+            setLe32(b, off + i, (w & 0x0FFF) | (((a >>> 16) & 0xF) << 12) | (((a >>> 8) & 0xFF) << 16) | ((a & 0xFF) << 24))
           } else {
             val a = (((w >>> 12) & 0xF) << 16) | (((w >>> 16) & 0xFF) << 8) | ((w >>> 24) & 0xFF)
             val imm = ((a << 1) - pc) & 0x1FFFFF
-            wr32(i, (w & 0x0FFF) | (((imm >>> 20) & 1) << 31) | (((imm >>> 1) & 0x3FF) << 21) |
+            setLe32(b, off + i, (w & 0x0FFF) | (((imm >>> 20) & 1) << 31) | (((imm >>> 1) & 0x3FF) << 21) |
               (((imm >>> 11) & 1) << 20) | (((imm >>> 12) & 0xFF) << 12))
           }
           i += 4
@@ -809,24 +794,24 @@ object Xz {
           val imm12 = w2 >>> 20
           val s = if ((imm12 & 0x800) != 0) imm12 - 0x1000 else imm12
           val addr = (w1 & 0xFFFFF000) + s + pc
-          wr32(i, 0x117 | (w2 << 12))
-          wr32(i + 4, Integer.reverseBytes(addr))
+          setLe32(b, off + i, 0x117 | (w2 << 12))
+          setLe32(b, off + i + 4, Integer.reverseBytes(addr))
         }
         def unpack(): Unit = { // inverse pair conversion
           val lo20 = w1 >>> 12
           val addr = Integer.reverseBytes(w2) - pc
           val hi = ((addr + 0x800) >>> 12) & 0xFFFFF
-          wr32(i, (hi << 12) | (((lo20 >>> 15) & 0x1F) << 7) | 0x17)
-          wr32(i + 4, ((addr & 0xFFF) << 20) | lo20)
+          setLe32(b, off + i, (hi << 12) | (((lo20 >>> 15) & 0x1F) << 7) | 0x17)
+          setLe32(b, off + i + 4, ((addr & 0xFFF) << 20) | lo20)
         }
         def reshUnpack(): Unit = { // arithmetic-free escape of artifact-shaped raw bytes
           val lo20 = w1 >>> 12
-          wr32(i, (w2 & 0xFFFFF000) | (((lo20 >>> 15) & 0x1F) << 7) | 0x17)
-          wr32(i + 4, ((w2 & 0xFFF) << 20) | lo20)
+          setLe32(b, off + i, (w2 & 0xFFFFF000) | (((lo20 >>> 15) & 0x1F) << 7) | 0x17)
+          setLe32(b, off + i + 4, ((w2 & 0xFFF) << 20) | lo20)
         }
         def reshPack(): Unit = { // arithmetic-free inverse escape
-          wr32(i, ((w2 & 0xFFFFF) << 12) | 0x117)
-          wr32(i + 4, (w1 & 0xFFFFF000) | ((w2 >>> 20) & 0xFFF))
+          setLe32(b, off + i, ((w2 & 0xFFFFF) << 12) | 0x117)
+          setLe32(b, off + i + 4, (w1 & 0xFFFFF000) | ((w2 >>> 20) & 0xFFF))
         }
         if (enc) {
           if (pairOk) { pack(); i += 8 }
@@ -955,7 +940,7 @@ object Xz {
       while (end > 0 && b(end - 1) == 0) end -= 1
       if (end == 0) return out.result()
       if (end < 12 || b(end - 1) != 'Z' || b(end - 2) != 'Y') fail("xz: bad footer magic in walk")
-      val backward = (le32(b, end - 8).toLong & 0xffffffffL)
+      val backward = le32u(b, end - 8)
       val indexStart = end - 12 - (backward + 1) * 4
       if (indexStart < 0 || b(indexStart.toInt) != 0) fail("xz: index indicator missing")
       // sum block sizes from index records
@@ -1005,7 +990,7 @@ object Xz {
           if (e < 12) { if (w.toLong < end) { w = math.min(end, w.toLong * 4).toInt } else fail("xz: truncated footer") }
           else if (buf(e - 1) != 'Z' || buf(e - 2) != 'Y') fail("xz: bad footer magic in ranged walk")
           else {
-            val backward = (le32(buf, e - 8).toLong & 0xffffffffL)
+            val backward = le32u(buf, e - 8)
             val indexStart = fileEnd - 12 - (backward + 1) * 4
             if (indexStart < bufStart) {
               if (w.toLong >= end) fail("xz: index larger than file prefix")
@@ -1100,12 +1085,11 @@ object Xz {
       if (bcjId == 0L) data0
       else { val c = data0.clone(); Bcj(bcjId, c, 0, c.length, 0L, encode = true); c }
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
     // stream header (check = CRC32)
     out.write(Magic)
     val flags = Array[Byte](0, 1)
     out.write(flags)
-    w32(crc32(flags, 0, 2))
+    writeLe32(out, crc32(flags, 0, 2))
     // block header: size 12 (3 units) — 1-filter chain [LZMA2 id 0x21,
     // propsLen 1, props 0x16 (8 MiB dict)] or 2-filter chain [BCJ id,
     // propsLen 0, then LZMA2]; zero padding, CRC32 of the first 8
@@ -1115,9 +1099,7 @@ object Xz {
     val header =
       if (bcjId == 0L) Array[Byte](2, 0, 0x21, 1, 0x16, 0, 0, 0, 0, 0, 0, 0) // size=(2+1)*4=12
       else Array[Byte](2, 1, bcjId.toByte, 0, 0x21, 1, 0x16, 0, 0, 0, 0, 0)
-    val hcrc = crc32(header, 0, 8)
-    header(8) = (hcrc & 0xff).toByte; header(9) = ((hcrc >> 8) & 0xff).toByte
-    header(10) = ((hcrc >> 16) & 0xff).toByte; header(11) = ((hcrc >> 24) & 0xff).toByte
+    setLe32(header, 8, crc32(header, 0, 8).toInt)
     out.write(header)
     // LZMA2 uncompressed chunks (first resets the dict), then the
     // end-of-chunks marker
@@ -1138,7 +1120,7 @@ object Xz {
     // pad block to 4 (header 12 + body)
     var total = 12 + bodyBytes.length
     while ((total & 3) != 0) { out.write(0); total += 1 }
-    w32(crc32(data0, 0, data0.length)) // block check: the UNFILTERED bytes
+    writeLe32(out, crc32(data0, 0, data0.length)) // block check: the UNFILTERED bytes
     val unpadded = 12L + bodyBytes.length + 4 // header + data (unpadded) + check
     // index
     val idx = new java.io.ByteArrayOutputStream()
@@ -1150,14 +1132,14 @@ object Xz {
     while ((idx.size() & 3) != 0) idx.write(0)
     val idxBytes = idx.toByteArray
     out.write(idxBytes)
-    w32(crc32(idxBytes, 0, idxBytes.length))
+    writeLe32(out, crc32(idxBytes, 0, idxBytes.length))
     // footer
     val tail = new Array[Byte](6)
     val backward = (idxBytes.length + 4) / 4 - 1
     tail(0) = (backward & 0xff).toByte; tail(1) = ((backward >> 8) & 0xff).toByte
     tail(2) = ((backward >> 16) & 0xff).toByte; tail(3) = ((backward >> 24) & 0xff).toByte
     tail(4) = 0; tail(5) = 1
-    w32(crc32(tail, 0, 6))
+    writeLe32(out, crc32(tail, 0, 6))
     out.write(tail, 0, 6)
     out.write(FooterMagic)
     out.toByteArray

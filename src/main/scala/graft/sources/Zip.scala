@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Bytes.{le16, le32u, le64, writeLe16, writeLe32}
+
 /** ZIP split scan — ranged random access into HUGE archives (the
   * multimodal-shard shape: a 100 GB zip of images/captions), reading
   * the format the way its design intends: the END of the file holds
@@ -43,11 +45,6 @@ object Zip {
       crc32: Long,
       flags: Int)
 
-  @inline private def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  @inline private def le32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL)) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  @inline private def le64(b: Array[Byte], i: Int): Long = le32(b, i) | (le32(b, i + 4) << 32)
-
   private val EocdSig = 0x06054b50L
   private val Eocd64LocSig = 0x07064b50L
   private val Eocd64Sig = 0x06064b50L
@@ -64,12 +61,12 @@ object Zip {
     if (tailLen < 22) fail("zip: file shorter than an EOCD record")
     val tail = ranged(len - tailLen, tailLen)
     var e = tailLen - 22
-    while (e >= 0 && !(le32(tail, e) == EocdSig &&
+    while (e >= 0 && !(le32u(tail, e) == EocdSig &&
         22 + le16(tail, e + 20) == tailLen - e)) e -= 1
     if (e < 0) fail("zip: no end-of-central-directory record")
     var count = le16(tail, e + 10).toLong
-    var cdSize = le32(tail, e + 12)
-    var cdOff = le32(tail, e + 16)
+    var cdSize = le32u(tail, e + 12)
+    var cdOff = le32u(tail, e + 16)
     // ZIP64: any saturated field -> the EOCD64 locator sits directly
     // before the EOCD and names the EOCD64 record. A writer may also
     // store a LEGITIMATE 0xFFFF count with no zip64 at all (CPython
@@ -79,11 +76,11 @@ object Zip {
     if (count == 0xffffL || cdSize == 0xffffffffL || cdOff == 0xffffffffL) {
       val locPos = len - tailLen + e - 20
       val loc = if (locPos >= 0) ranged(locPos, 20) else Array.emptyByteArray
-      if (locPos >= 0 && le32(loc, 0) == Eocd64LocSig) {
+      if (locPos >= 0 && le32u(loc, 0) == Eocd64LocSig) {
         val e64Pos = le64(loc, 8)
         if (e64Pos < 0 || e64Pos + 56 > len) fail("zip: zip64 EOCD position out of range")
         val e64 = ranged(e64Pos, 56)
-        if (le32(e64, 0) != Eocd64Sig) fail("zip: zip64 EOCD signature missing")
+        if (le32u(e64, 0) != Eocd64Sig) fail("zip: zip64 EOCD signature missing")
         count = le64(e64, 32)
         cdSize = le64(e64, 40)
         cdOff = le64(e64, 48)
@@ -111,16 +108,16 @@ object Zip {
     var p = 0
     var n = 0L
     while (n < expected) {
-      if (p + 46 > cd.length || le32(cd, p) != CenSig) fail("zip: bad central-directory record")
+      if (p + 46 > cd.length || le32u(cd, p) != CenSig) fail("zip: bad central-directory record")
       val flags = le16(cd, p + 8)
       val method = le16(cd, p + 10)
-      val crc = le32(cd, p + 16)
-      var csize = le32(cd, p + 20)
-      var usize = le32(cd, p + 24)
+      val crc = le32u(cd, p + 16)
+      var csize = le32u(cd, p + 20)
+      var usize = le32u(cd, p + 24)
       val nameLen = le16(cd, p + 28)
       val extraLen = le16(cd, p + 30)
       val commentLen = le16(cd, p + 32)
-      var lho = le32(cd, p + 42)
+      var lho = le32u(cd, p + 42)
       if (p + 46 + nameLen + extraLen + commentLen > cd.length) fail("zip: central record overruns directory")
       val name = new String(cd, p + 46, nameLen, java.nio.charset.StandardCharsets.UTF_8)
       // ZIP64 extra field (0x0001): saturated fields, in spec order —
@@ -163,7 +160,7 @@ object Zip {
     * compressedSize] — [[fetchLen]] bounds it. */
   def decodeEntry(buf: Array[Byte], e: Entry): Array[Byte] =
     try {
-      if (buf.length < 30 || le32(buf, 0) != LocSig) fail(s"zip: bad local header: ${e.name}")
+      if (buf.length < 30 || le32u(buf, 0) != LocSig) fail(s"zip: bad local header: ${e.name}")
       val nameLen = le16(buf, 26)
       val extraLen = le16(buf, 28)
       val dataOff = 30 + nameLen + extraLen
@@ -322,8 +319,6 @@ object Zip {
   private[graft] def buildMethodArchive(entries: Seq[(String, Int, Array[Byte])]): Array[Byte] = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def w32(v: Long): Unit = { var i = 0; while (i < 4) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
     val centrals = entries.map { case (name, method, data) =>
       val comp = method match {
         case 0 => data
@@ -335,21 +330,21 @@ object Zip {
       c.update(data)
       val nb = name.getBytes(utf8)
       val lho = out.size().toLong
-      w32(LocSig); w16(63); w16(0); w16(method); w16(0); w16(0)
-      w32(c.getValue); w32(comp.length.toLong); w32(data.length.toLong); w16(nb.length); w16(0)
+      writeLe32(out, LocSig); writeLe16(out, 63); writeLe16(out, 0); writeLe16(out, method); writeLe16(out, 0); writeLe16(out, 0)
+      writeLe32(out, c.getValue); writeLe32(out, comp.length.toLong); writeLe32(out, data.length.toLong); writeLe16(out, nb.length); writeLe16(out, 0)
       out.write(nb); out.write(comp)
       (nb, method, c.getValue, comp.length.toLong, data.length.toLong, lho)
     }
     val cdOff = out.size().toLong
     centrals.foreach { case (nb, method, crc, csize, usize, lho) =>
-      w32(CenSig); w16(63); w16(63); w16(0); w16(method); w16(0); w16(0)
-      w32(crc); w32(csize); w32(usize); w16(nb.length); w16(0); w16(0); w16(0); w16(0)
-      w32(0L); w32(lho)
+      writeLe32(out, CenSig); writeLe16(out, 63); writeLe16(out, 63); writeLe16(out, 0); writeLe16(out, method); writeLe16(out, 0); writeLe16(out, 0)
+      writeLe32(out, crc); writeLe32(out, csize); writeLe32(out, usize); writeLe16(out, nb.length); writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, 0)
+      writeLe32(out, 0L); writeLe32(out, lho)
       out.write(nb)
     }
     val cdSize = out.size().toLong - cdOff
-    w32(EocdSig); w16(0); w16(0); w16(entries.size); w16(entries.size)
-    w32(cdSize); w32(cdOff); w16(0)
+    writeLe32(out, EocdSig); writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, entries.size); writeLe16(out, entries.size)
+    writeLe32(out, cdSize); writeLe32(out, cdOff); writeLe16(out, 0)
     out.toByteArray
   }
 

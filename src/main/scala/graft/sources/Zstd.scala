@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.sources.Bytes.{le16, le32, le32u, le64, writeLe32}
+
 /** Pure-JVM Zstandard (RFC 8878) — full decoder and a minimal
   * conforming encoder, plus the public SEEKABLE framing
   * (facebook/zstd `contrib/seekable_format`) that makes `.zst`
@@ -51,13 +53,6 @@ object Zstd {
   private val P5 = 0x27D4EB2F165667C5L
 
   def xxh64(b: Array[Byte], off: Int, len: Int, seed: Long = 0L): Long = {
-    def le64(i: Int): Long = {
-      var v = 0L; var j = 7
-      while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-      v
-    }
-    def le32(i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
     def rotl(x: Long, r: Int): Long = java.lang.Long.rotateLeft(x, r)
     def round(acc: Long, in: Long): Long = rotl(acc + in * P2, 31) * P1
     def merge(acc0: Long, v: Long): Long = (acc0 ^ round(0L, v)) * P1 + P4
@@ -68,8 +63,8 @@ object Zstd {
       if (len >= 32) {
         var v1 = seed + P1 + P2; var v2 = seed + P2; var v3 = seed; var v4 = seed - P1
         while (p + 32 <= end) {
-          v1 = round(v1, le64(p)); v2 = round(v2, le64(p + 8))
-          v3 = round(v3, le64(p + 16)); v4 = round(v4, le64(p + 24))
+          v1 = round(v1, le64(b, p)); v2 = round(v2, le64(b, p + 8))
+          v3 = round(v3, le64(b, p + 16)); v4 = round(v4, le64(b, p + 24))
           p += 32
         }
         var acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -77,8 +72,8 @@ object Zstd {
         acc
       } else seed + P5
     h += len.toLong
-    while (p + 8 <= end) { h = rotl(h ^ round(0L, le64(p)), 27) * P1 + P4; p += 8 }
-    if (p + 4 <= end) { h = rotl(h ^ (le32(p) * P1), 23) * P2 + P3; p += 4 }
+    while (p + 8 <= end) { h = rotl(h ^ round(0L, le64(b, p)), 27) * P1 + P4; p += 8 }
+    if (p + 4 <= end) { h = rotl(h ^ (le32u(b, p) * P1), 23) * P2 + P3; p += 4 }
     while (p < end) { h = rotl(h ^ ((b(p) & 0xffL) * P5), 11) * P1; p += 1 }
     h ^= h >>> 33; h *= P2; h ^= h >>> 29; h *= P3; h ^= h >>> 32
     h
@@ -355,9 +350,6 @@ object Zstd {
   val Magic = 0xFD2FB528
   private val SkippableMagicBase = 0x184D2A50
 
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-
   final case class Decoded(bytes: Array[Byte], consumed: Int)
 
   /** growable decode buffer with random access (match copies) */
@@ -405,7 +397,7 @@ object Zstd {
     * auto-detection convention). */
   def parseDict(d: Array[Byte]): Option[TrainedDict] = {
     if (d.length < 8 || le32(d, 0) != DictMagic) return None
-    val id = le32(d, 4) & 0xffffffffL
+    val id = le32u(d, 4)
     var p = 8
     val (weights, consumed) = readHuffWeights(d, p)
     p += consumed
@@ -453,7 +445,7 @@ object Zstd {
     while (p + 8 <= b.length && (le32(b, p) & 0xfffffff0) == SkippableMagicBase) {
       // size is UNSIGNED; a signed read of crafted input walks p
       // backwards (infinite loop) or misparses legal sizes >= 2^31
-      val next = p + 8L + (le32(b, p + 4) & 0xffffffffL)
+      val next = p + 8L + le32u(b, p + 4)
       if (next > b.length) fail("skippable frame size out of range")
       p = next.toInt
     }
@@ -540,7 +532,7 @@ object Zstd {
     var p = 0
     while (p < b.length) {
       if (p + 8 <= b.length && (le32(b, p) & 0xfffffff0) == SkippableMagicBase) {
-        val next = p + 8L + (le32(b, p + 4) & 0xffffffffL) // unsigned size
+        val next = p + 8L + le32u(b, p + 4) // unsigned size
         if (next > b.length) fail("skippable frame size out of range")
         p = next.toInt
       } else {
@@ -619,9 +611,9 @@ object Zstd {
           // malformed, not merely empty
           if (regen < 4) fail("4-stream literals need >= 4 regenerated bytes")
           if (hp + 6 > litEnd) fail("4-stream jump table past literals section")
-          val s1 = (b(hp) & 0xff) | ((b(hp + 1) & 0xff) << 8)
-          val s2 = (b(hp + 2) & 0xff) | ((b(hp + 3) & 0xff) << 8)
-          val s3 = (b(hp + 4) & 0xff) | ((b(hp + 5) & 0xff) << 8)
+          val s1 = le16(b, hp)
+          val s2 = le16(b, hp + 2)
+          val s3 = le16(b, hp + 4)
           hp += 6
           val part = (regen + 3) >>> 2
           val last = litEnd - hp - s1 - s2 - s3
@@ -644,7 +636,7 @@ object Zstd {
     var nSeq = 0
     if (nb0 < 128) nSeq = nb0
     else if (nb0 < 255) { nSeq = ((nb0 - 128) << 8) | (b(p) & 0xff); p += 1 }
-    else { nSeq = ((b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)) + 0x7f00; p += 2 }
+    else { nSeq = le16(b, p) + 0x7f00; p += 2 }
     if (nSeq == 0) {
       out.addAll(literals, 0, literals.length)
       return
@@ -819,7 +811,7 @@ object Zstd {
   }
 
   private def hash4(b: Array[Byte], i: Int): Int = {
-    val v = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
+    val v = le32(b, i)
     (v * -1640531535) >>> 17 // fibonacci hash to 15 bits
   }
 
@@ -1238,11 +1230,10 @@ object Zstd {
     * the same dict. */
   def encode(data: Array[Byte], opts: EncOpts = EncOpts(), dict: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-    def le32out(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    le32out(Magic)
+    writeLe32(out, Magic)
     // single-segment, 4-byte FCS, optional checksum
     out.write(0x80 | 0x20 | (if (opts.checksum) 0x04 else 0))
-    le32out(data.length)
+    writeLe32(out, data.length)
     var off = 0
     var emitted = false
     while (off < data.length || !emitted) {
@@ -1275,7 +1266,7 @@ object Zstd {
       }
       off += len
     }
-    if (opts.checksum) le32out((xxh64(data, 0, data.length) & 0xffffffffL).toInt)
+    if (opts.checksum) writeLe32(out, xxh64(data, 0, data.length))
     out.toByteArray
   }
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Bytes.{le32, writeLe32}
+
 /** The public zstd SEEKABLE framing (facebook/zstd
   * `contrib/seekable_format/zstd_seekable_compression_format.md`): the
   * payload is a series of INDEPENDENT standard zstd frames, and a
@@ -30,13 +32,6 @@ object ZstdSeek {
 
   final case class FrameEntry(offset: Long, compressedSize: Int, decompressedSize: Int, checksum: Option[Int])
 
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-
-  private def w32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-  }
-
   /** One seekable container: each chunk becomes an independent frame.
     * Frame checksums are always written into the seek table. */
   def writeSeekable(chunks: Seq[Array[Byte]], opts: Zstd.EncOpts = Zstd.EncOpts()): Array[Byte] = {
@@ -47,12 +42,12 @@ object ZstdSeek {
       entries += ((f.length, c.length, (Zstd.xxh64(c, 0, c.length) & 0xffffffffL).toInt))
       out.write(f, 0, f.length)
     }
-    w32(out, SeekTableMagic)
-    w32(out, entries.length * 12 + 9)
-    entries.foreach { case (cs, ds, ck) => w32(out, cs); w32(out, ds); w32(out, ck) }
-    w32(out, entries.length)
+    writeLe32(out, SeekTableMagic)
+    writeLe32(out, entries.length * 12 + 9)
+    entries.foreach { case (cs, ds, ck) => writeLe32(out, cs); writeLe32(out, ds); writeLe32(out, ck) }
+    writeLe32(out, entries.length)
     out.write(0x80) // checksum flag set
-    w32(out, SeekableMagic)
+    writeLe32(out, SeekableMagic)
     out.toByteArray
   }
 

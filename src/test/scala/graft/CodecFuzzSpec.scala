@@ -567,4 +567,35 @@ class CodecFuzzSpec extends SparkSuite {
     Seq(10, 40, mzip.length / 2, mzip.length - 3).foreach(c =>
       named(s"zipm-cut $c")(zipWhole(java.util.Arrays.copyOf(mzip, c))))
   }
+
+  test("cyclic IFD chains (self-loop, A->B->A) refuse in classic TIFF and BigTIFF") {
+    import scala.collection.mutable.ArrayBuffer
+    import graft.sources.Bytes.{putLe16, putLe32, putLe64}
+    // every IFD is empty; `next` gives each one's next-IFD offset
+    def classic(next: Seq[Long]): Array[Byte] = {
+      val b = ArrayBuffer[Byte]('I', 'I'); putLe16(b, 42); putLe32(b, 8)
+      next.foreach { n => putLe16(b, 0); putLe32(b, n) }
+      b.toArray
+    }
+    def big(next: Seq[Long]): Array[Byte] = {
+      val b = ArrayBuffer[Byte]('I', 'I'); putLe16(b, 43); putLe16(b, 8); putLe16(b, 0); putLe64(b, 16)
+      next.foreach { n => putLe64(b, 0); putLe64(b, n) }
+      b.toArray
+    }
+    val loops = Seq(
+      "classic self-loop" -> classic(Seq(8)),
+      "classic A->B->A" -> classic(Seq(14, 8)),
+      "bigtiff self-loop" -> big(Seq(16)),
+      "bigtiff A->B->A" -> big(Seq(32, 16)))
+    assert(loops.head._2.length == 14)
+    loops.foreach { case (what, tiff) =>
+      Seq[() => Any](() => Cog.parseIfds(tiff), () => Cog.decodeLevel(tiff, 0)).foreach { f =>
+        val e = intercept[IllegalArgumentException](f())
+        assert(e.getMessage.contains("tiff: truncated or corrupt IFD chain"), s"$what: ${e.getMessage}")
+      }
+    }
+    // the same chains, ended instead of looped, still parse
+    assert(Cog.parseIfds(classic(Seq(14, 0))).size == 2)
+    assert(Cog.parseIfds(big(Seq(32, 0))).size == 2)
+  }
 }

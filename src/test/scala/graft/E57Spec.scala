@@ -31,7 +31,7 @@ class E57Spec extends SparkSuite {
 
   test("CRC-32C matches the published check value; the paged layer round-trips and verifies") {
     // RFC 3720 test vector: crc32c("123456789") = 0xE3069283
-    assert(E57.crc32c("123456789".getBytes("US-ASCII"), 0, 9) == 0xe3069283)
+    assert(graft.sources.Bytes.crc32c("123456789".getBytes("US-ASCII"), 0, 9) == 0xe3069283)
     val logical = Array.tabulate[Byte](3000)(i => (i * 31).toByte)
     val phys = E57.toPhysical(logical)
     assert(phys.length == 3 * 1024)

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard: `Sessions` is the only SparkSession factory and
-  * `Lanes` the only place that releases every persistent RDD, so a
-  * second builder or release loop (with its own config or release
-  * sequence) cannot grow back anywhere in main code. */
+/** Source guard: `Sessions` is the only SparkSession factory,
+  * `Lanes` the only place that releases every persistent RDD, and
+  * `Bytes` the only home of byte-order helpers, so a second builder,
+  * release loop or endian helper cannot grow back anywhere in main
+  * code. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -31,5 +32,22 @@ class OneFactorySpec extends AnyFunSuite {
 
   test("the getPersistentRDDs unpersist loop appears only in Lanes") {
     assert(matching("""getPersistentRDDs[^\n]*\n?[^\n]*unpersist""") === Seq("graft/Lanes.scala"))
+  }
+
+  /** A short def (at most three continuation lines) whose body shifts a
+    * 0xff-masked array byte left by 8, 16 or 24, or masks a value
+    * shifted right by 8, 16 or 24 with 0xff: a hand-rolled multi-byte
+    * read or write. */
+  private val shortDef =
+    """(?m)^([ \t]*)(?:[\w\[\]@]+[ \t]+)*def[ \t]+\w+[^\n]*(?:\n(?:\1[ \t]+[^\n]*|[ \t]*(?=\n))){0,3}$(?!\n(?:[ \t]*\n)*\1[ \t]+\S)""".r
+  private val maskedByteShiftedUp = """\w+\([^()]*\)\s*&\s*0x[fF][fF]L?\s*\)\s*<<\s*(8|16|24)\b""".r
+  private val shiftedDownMasked = """\(\s*\w+\s*>>>?\s*(8|16|24)\s*\)\s*&\s*0x[fF][fF]L?\b""".r
+
+  test("byte-order helper defs appear only in Bytes") {
+    val withHelpers = sources.filter { p =>
+      shortDef.findAllIn(Files.readString(p)).exists(d =>
+        maskedByteShiftedUp.findFirstIn(d).isDefined || shiftedDownMasked.findFirstIn(d).isDefined)
+    }
+    assert(withHelpers.map(root.relativize(_).toString) === Seq("graft/sources/Bytes.scala"))
   }
 }

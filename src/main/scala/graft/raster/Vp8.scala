@@ -590,7 +590,7 @@ object Vp8 {
 
   private def decodeFrameImpl(data: Array[Byte], off: Int, len: Int): Frame = {
     if (len < 10) fail("VP8 payload too short")
-    val tag = (data(off) & 0xff) | ((data(off + 1) & 0xff) << 8) | ((data(off + 2) & 0xff) << 16)
+    val tag = Bytes.le24(data, off)
     if ((tag & 1) != 0) fail("not a keyframe (interframes need a reference buffer)")
     val part0Len = tag >> 5
     if ((data(off + 3) & 0xff) != 0x9d || (data(off + 4) & 0xff) != 0x01 || (data(off + 5) & 0xff) != 0x2a)
@@ -650,8 +650,7 @@ object Vp8 {
     while (pi < nParts) {
       val size =
         if (pi == nParts - 1) off + len - cursor
-        else (data(partTable + 3 * pi) & 0xff) | ((data(partTable + 3 * pi + 1) & 0xff) << 8) |
-          ((data(partTable + 3 * pi + 2) & 0xff) << 16)
+        else Bytes.le24(data, partTable + 3 * pi)
       if (size < 0 || cursor + size > off + len) fail("token partition out of range")
       parts(pi) = new Bool(data, cursor, cursor + size)
       cursor += size

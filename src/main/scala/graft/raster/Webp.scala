@@ -1,6 +1,6 @@
 package graft.raster
 
-import graft.sources.Bytes.{le16, le32, setLe32, writeLe32}
+import graft.sources.Bytes.{le16, le24, le32, setLe32, writeLe32}
 
 /** WebP container + lossless (VP8L) codec — decode of the full
   * published bitstream (all four transforms, color cache, meta prefix
@@ -588,8 +588,8 @@ object Webp {
           val h = le16(b, off + 8) & 0x3fff
           ("vp8", w, h)
         case ("VP8X", off, size) if size >= 10 =>
-          val w = ((b(off + 4) & 0xff) | ((b(off + 5) & 0xff) << 8) | ((b(off + 6) & 0xff) << 16)) + 1
-          val h = ((b(off + 7) & 0xff) | ((b(off + 8) & 0xff) << 8) | ((b(off + 9) & 0xff) << 16)) + 1
+          val w = le24(b, off + 4) + 1
+          val h = le24(b, off + 7) + 1
           ("vp8x", w, h)
       }
     } catch { case _: Exception => None }

@@ -18,7 +18,7 @@ import graft.sources.Bytes.{le16, le32, le64, setLe16, setLe32, setLe64}
   * batches' extents and decode columnar buffers directly. A 100 GB
   * shard file costs the driver two small ranged reads. Body-buffer
   * compression (LZ4_FRAME / ZSTD, per the IPC spec's BodyCompression)
-  * decodes through the in-tree [[Lz4]] / [[Zstd]] codecs.
+  * decodes through the [[Lz4]] / [[Zstd]] codecs.
   *
   * Flatbuffers are parsed/built by hand (vtable walk both ways) — no
   * generated code; layouts follow the published Schema.fbs /

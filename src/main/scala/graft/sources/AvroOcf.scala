@@ -30,7 +30,8 @@ import graft.core.MiniJson
   *
   * Codecs: null, deflate (raw, JDK Inflater/Deflater), snappy (raw
   * block + big-endian CRC32 of the UNCOMPRESSED bytes), bzip2, xz,
-  * zstandard — the last four through the in-tree codecs.
+  * zstandard — the last four through the [[Snappy]], [[Bzip2]], [[Xz]]
+  * and [[Zstd]] codec objects.
   *
   * Untrusted-bytes contract: malformed input of any shape raises
   * [[AvroOcf.AvroError]]; declared lengths/counts are bounded against

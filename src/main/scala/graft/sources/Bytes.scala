@@ -20,6 +20,7 @@ object Bytes {
   // ---------------------------------------------------------------- reads
 
   @inline def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+  @inline def le24(b: Array[Byte], i: Int): Int = le16(b, i) | ((b(i + 2) & 0xff) << 16)
   @inline def le32(b: Array[Byte], i: Int): Int =
     (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | (b(i + 3) << 24)
   @inline def le32u(b: Array[Byte], i: Int): Long = le32(b, i) & 0xffffffffL

@@ -76,15 +76,19 @@ object ExifWrite {
     val off = at + 10 // past "Exif\0\0"
     val tiff = Tiff.open(jpeg, off, end).getOrElse(return None)
 
-    def readIfd(ifdOff: Long): Seq[RawTag] = tiff.entries(ifdOff, 256).flatMap { e =>
-      val sz = e.size
-      val vb = tiff.valueAt(e)
-      if (vb + sz > end || sz < 0) None
-      else Some(RawTag(e.id, e.tpe, e.count, java.util.Arrays.copyOfRange(jpeg, vb, vb + sz.toInt)))
-    }
+    // an IFD or value offset past the segment (or wrapping negative as
+    // an Int) names no bytes of this TIFF: the tag, or the IFD, is dropped
+    def readIfd(ifdOff: Long): Seq[RawTag] =
+      if (ifdOff >= end - off) Seq.empty
+      else tiff.entries(ifdOff, 256).flatMap { e =>
+        val sz = e.size
+        val vb = tiff.valueAt(e)
+        if (vb < off || vb + sz > end || sz < 0) None
+        else Some(RawTag(e.id, e.tpe, e.count, java.util.Arrays.copyOfRange(jpeg, vb, vb + sz.toInt)))
+      }
 
     val ifd0 = readIfd(tiff.ifd0)
-    val exifOff = ifd0.find(_.id == ExifPointer).map(t => Bytes.u32(t.value, 0, tiff.little))
+    val exifOff = ifd0.find(t => t.id == ExifPointer && t.value.length >= 4).map(t => Bytes.u32(t.value, 0, tiff.little))
     val exifTags = exifOff.map(readIfd).getOrElse(Seq.empty)
     val keep0 = ifd0.filterNot(t => t.id == ExifPointer || t.id == GpsPointer)
     // interop sub-IFD is not preserved → its pointer must not dangle
@@ -147,10 +151,11 @@ object ExifWrite {
 
   // ---- JPEG segment splice ------------------------------------------------
 
-  /** (segment start, segment end) of the APP1 Exif segment. */
+  /** (segment start, segment end) of the APP1 Exif segment; a length
+    * running past the array ends the segment at the array's end. */
   private def findApp1(jpeg: Array[Byte]): Option[(Int, Int)] = {
     val i = Exif.app1At(jpeg)
-    if (i < 0) None else Some((i, i + 2 + Bytes.be16(jpeg, i + 2)))
+    if (i < 0) None else Some((i, math.min(jpeg.length, i + 2 + Bytes.be16(jpeg, i + 2))))
   }
 
   private def spliceApp1(jpeg: Array[Byte], tiff: Array[Byte]): Array[Byte] = {

@@ -46,38 +46,15 @@ object Lz4 {
   private val SkippableBase = 0x184d2a50
 
   // ------------------------------------------------------------------
-  // xxHash32 (published spec; the frame format's checksum)
+  // xxHash32 (the frame format's checksum), from lz4-java
   // ------------------------------------------------------------------
 
-  private val P1 = -1640531535 // 2654435761
-  private val P2 = -2048144777 // 2246822519
-  private val P3 = -1028477379 // 3266489917
-  private val P4 = 668265263
-  private val P5 = 374761393
+  private val Xxh32 = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash32()
 
-  def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    var p = off
-    val end = off + len
-    var h =
-      if (len >= 16) {
-        var a1 = seed + P1 + P2; var a2 = seed + P2; var a3 = seed; var a4 = seed - P1
-        val lim = end - 16
-        while (p <= lim) {
-          a1 = Integer.rotateLeft(a1 + le32(b, p) * P2, 13) * P1
-          a2 = Integer.rotateLeft(a2 + le32(b, p + 4) * P2, 13) * P1
-          a3 = Integer.rotateLeft(a3 + le32(b, p + 8) * P2, 13) * P1
-          a4 = Integer.rotateLeft(a4 + le32(b, p + 12) * P2, 13) * P1
-          p += 16
-        }
-        Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
-          Integer.rotateLeft(a3, 12) + Integer.rotateLeft(a4, 18)
-      } else seed + P5
-    h += len
-    while (p + 4 <= end) { h = Integer.rotateLeft(h + le32(b, p) * P3, 17) * P4; p += 4 }
-    while (p < end) { h = Integer.rotateLeft(h + (b(p) & 0xff) * P5, 11) * P1; p += 1 }
-    h ^= h >>> 15; h *= P2; h ^= h >>> 13; h *= P3; h ^= h >>> 16
-    h
-  }
+  /** Multiplier of the matchers' 4-byte hash (2654435761, xxHash's P1). */
+  private val P1 = -1640531535
+
+  def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int): Int = Xxh32.hash(b, off, len, seed)
 
   // ------------------------------------------------------------------
   // growable output with the frame-scoped match window

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * Protobuf parsing is a generic wire walk keyed on the published
   * orc_proto.proto field ids with unknown-field skip (forward
   * compatible). Codecs: NONE, ZLIB (raw deflate), SNAPPY, LZ4 (raw
-  * block), ZSTD — decompressed by the in-tree/JDK codecs.
+  * block), ZSTD — decompressed by the codec objects and the JDK.
   *
   * Validator: orc-core 2.2.2 ships on the Spark classpath —
   * OrcMetaSpec compares every surfaced field LIVE against
@@ -147,7 +147,7 @@ object OrcMeta {
         var p = from
         while (p < until) {
           req(until - p >= 3, "orc: truncated chunk header")
-          val h = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16)
+          val h = Bytes.le24(b, p)
           p += 3
           val original = (h & 1) == 1
           val clen = h >>> 1

@@ -18,7 +18,8 @@ import graft.sources.ParquetMeta._
   * isAdjustedToUTC split that Spark maps to LTZ vs NTZ, int8/16, and
   * the legacy INT96 julian-day+nanos timestamps Spark still writes by
   * default), and page compression over UNCOMPRESSED/SNAPPY/GZIP/ZSTD/
-  * LZ4_RAW plus the legacy Hadoop-framed LZ4 — all in-tree/JDK codecs.
+  * LZ4_RAW plus the legacy Hadoop-framed LZ4 — all through the codec
+  * objects and the JDK.
   *
   * Scale shape: the DRIVER reads footers only; each TASK owns ONE row
   * group and issues ranged reads for exactly the column chunks it was

@@ -20,8 +20,8 @@ import graft.sources.Bytes.{crc32, le32u, le64, setLe32, setLe64, writeLe32}
   * store/copy shape) parallelize per folder.
   *
   * Payload coders: Copy, LZMA1, LZMA2, bzip2, Deflate, Delta, the
-  * seven BCJ branch filters — ALL already in-tree ([[Xz]], [[Bzip2]],
-  * the JDK) — and the 4-stream BCJ2 x86 coder ([[Bcj2]], any bind
+  * seven BCJ branch filters — ALL already behind codec objects ([[Xz]],
+  * [[Bzip2]], the JDK) — and the 4-stream BCJ2 x86 coder ([[Bcj2]], any bind
   * topology), composed through the folder's bind-pair graph.
   * PPMd, AES and anything else refuse loudly by codec id. Header
   * layout per the published 7zFormat.txt that ships with 7-Zip.
@@ -426,7 +426,7 @@ object SevenZip {
   }
 
   // ------------------------------------------------------------------
-  // folder decode (coder DAG over in-tree codecs)
+  // folder decode (coder DAG over the codec objects)
   // ------------------------------------------------------------------
 
   private val IdCopy = 0x00L

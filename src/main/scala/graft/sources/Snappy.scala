@@ -2,15 +2,16 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Bytes.{be32, le32, maskedCrc32c, writeBe32, writeLe32}
+import graft.sources.Bytes.{be32, le24, le32, maskedCrc32c, writeBe32, writeLe32}
 
-/** Snappy codec — pure JVM, both directions: the raw block format
-  * (varint preamble + literal/copy tags, published format spec), the
-  * FRAMING format (`sNaPpY` magic, per-chunk masked CRC32C,
-  * compressed/uncompressed/padding/skippable chunks) and the HADOOP
-  * block framing (`[BE32 origLen][{BE32 clen}{raw chunk}]*` — what
-  * `.snappy` part files from Hadoop/Hive text outputs actually are;
-  * it has NO magic, extension-only routing).
+/** Snappy codec, both directions: the raw block format through
+  * snappy-java (the reference implementation Spark ships; this object
+  * is the one place main code reaches it), and in-tree the two
+  * framings around it: the FRAMING format (`sNaPpY` magic, per-chunk
+  * masked CRC32C, compressed/uncompressed/padding/skippable chunks)
+  * and the HADOOP block framing (`[BE32 origLen][{BE32 clen}{raw
+  * chunk}]*` — what `.snappy` part files from Hadoop/Hive text outputs
+  * actually are; it has NO magic, extension-only routing).
   *
   * Why it's front-door: legacy Hadoop pipelines emitted `.snappy`
   * text shards for years and public mirrors still carry them; the
@@ -23,10 +24,10 @@ import graft.sources.Bytes.{be32, le32, maskedCrc32c, writeBe32, writeLe32}
   * is the parallelism unit (TextShards front door). CRC32C comes from
   * the JDK.
   *
-  * Conformance is LIVE, not pinned: snappy-java ships on the Spark
-  * classpath (parquet uses it), so SnappySpec cross-checks every
-  * format in BOTH directions against the reference implementation on
-  * every test run (our decode of its output, its decode of ours).
+  * Conformance is LIVE, not pinned: SnappySpec cross-checks both
+  * framings in BOTH directions against snappy-java's own stream
+  * classes on every test run (our decode of its output, its decode of
+  * ours).
   *
   * Untrusted-bytes contract: malformed input of ANY shape raises
   * [[SnappyError]]. */
@@ -36,144 +37,41 @@ object Snappy {
   private def fail(msg: String): Nothing = throw new SnappyError(msg)
 
   // ------------------------------------------------------------------
-  // raw block format
+  // raw block format (snappy-java)
   // ------------------------------------------------------------------
 
   /** Decompress one raw-snappy block. `maxLen` bounds the DECLARED
     * uncompressed length before any allocation (framing callers pass
     * their format's chunk cap; default callers still get the
     * format-implied bound below). */
-  def rawDecode(b: Array[Byte], off: Int, end: Int, maxLen: Int = Int.MaxValue): Array[Byte] =
-    try rawDecodeImpl(b, off, end, maxLen)
-    catch {
-      case e: SnappyError => throw e
-      case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException |
-          _: IndexOutOfBoundsException =>
-        fail("snappy: malformed input (out-of-range field)")
-    }
-
-  private def rawDecodeImpl(b: Array[Byte], off: Int, end: Int, maxLen: Int): Array[Byte] = {
-    var p = off
-    // varint32 uncompressed length
-    var n = 0
-    var shift = 0
-    var more = true
-    while (more) {
-      if (p >= end || shift > 28) fail("snappy: bad length varint")
-      val x = b(p) & 0xff; p += 1
-      n |= (x & 0x7f) << shift
-      shift += 7
-      more = (x & 0x80) != 0
-    }
+  def rawDecode(b: Array[Byte], off: Int, end: Int, maxLen: Int = Int.MaxValue): Array[Byte] = {
+    if (off < 0 || end > b.length || off >= end) fail(s"snappy: no block in [$off, $end)")
+    val n = lib(org.xerial.snappy.Snappy.uncompressedLength(b, off, end - off))
     if (n < 0) fail("snappy: negative length")
     if (n > maxLen) fail(s"snappy: declared length $n exceeds caller bound $maxLen")
     // format-implied expansion bound BEFORE allocating: the densest
     // conforming emission is a 2-byte-offset copy (3 tag bytes -> 64
-    // output bytes), so a declared length past remaining*64/3 cannot
+    // output bytes), so a declared length past input*64/3 cannot
     // decode and a few crafted varint bytes must not force a multi-GiB
     // allocation (memory-pressure DoS on untrusted input)
-    if (n.toLong > (end - p).toLong * 64L / 3L + 1L)
-      fail(s"snappy: declared length $n impossible from ${end - p} input bytes")
+    if (n.toLong > (end - off).toLong * 64L / 3L + 1L)
+      fail(s"snappy: declared length $n impossible from ${end - off} input bytes")
     val out = new Array[Byte](n)
-    var q = 0
-    while (p < end) {
-      val tag = b(p) & 0xff; p += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var len = tag >>> 2
-          if (len >= 60) {
-            val extra = len - 59
-            if (p + extra > end) fail("snappy: truncated literal length")
-            len = 0
-            var i = 0
-            while (i < extra) { len |= (b(p + i) & 0xff) << (8 * i); i += 1 }
-            p += extra
-          }
-          len += 1
-          if (len < 0 || p + len > end || q + len > n) fail("snappy: literal overruns")
-          System.arraycopy(b, p, out, q, len)
-          p += len; q += len
-        case el =>
-          var len = 0
-          var o = 0
-          if (el == 1) {
-            if (p + 1 > end) fail("snappy: truncated copy")
-            len = ((tag >>> 2) & 7) + 4
-            o = ((tag >>> 5) << 8) | (b(p) & 0xff); p += 1
-          } else if (el == 2) {
-            if (p + 2 > end) fail("snappy: truncated copy")
-            len = (tag >>> 2) + 1
-            o = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8); p += 2
-          } else {
-            if (p + 4 > end) fail("snappy: truncated copy")
-            len = (tag >>> 2) + 1
-            o = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-            p += 4
-          }
-          if (o <= 0 || o > q) fail("snappy: copy offset out of window")
-          if (q + len > n) fail("snappy: copy overruns output")
-          var i = 0 // forward byte copy handles overlap
-          while (i < len) { out(q + i) = out(q - o + i); i += 1 }
-          q += len
-      }
-    }
-    if (q != n) fail(s"snappy: decoded $q of declared $n bytes")
+    val got = lib(org.xerial.snappy.Snappy.uncompress(b, off, end - off, out, 0))
+    if (got != n) fail(s"snappy: decoded $got of declared $n bytes")
     out
   }
 
-  /** Compress one raw-snappy block: the canonical greedy hash-table
-    * matcher (4-byte hashes, 2-byte-offset copies in ≤64-byte runs). */
-  def rawEncode(src: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(src.length / 2 + 16)
-    // varint preamble
-    var v = src.length
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
-    def literal(from: Int, until: Int): Unit = {
-      var a = from
-      while (a < until) {
-        val len = math.min(until - a, 1 << 16) // keep extension ≤ 2 bytes
-        val l = len - 1
-        if (l < 60) out.write(l << 2)
-        else if (l < 256) { out.write(60 << 2); out.write(l) }
-        else { out.write(61 << 2); out.write(l & 0xff); out.write((l >>> 8) & 0xff) }
-        out.write(src, a, len)
-        a += len
-      }
+  /** Compress one raw-snappy block. */
+  def rawEncode(src: Array[Byte]): Array[Byte] = lib(org.xerial.snappy.Snappy.compress(src))
+
+  /** Runs a snappy-java call, turning its failures into a [[SnappyError]]. */
+  private def lib[A](f: => A): A =
+    try f
+    catch {
+      case e: java.io.IOException => fail(s"snappy: ${e.getMessage}")
+      case e: org.xerial.snappy.SnappyError => fail(s"snappy: ${e.getMessage}")
     }
-    @inline def hash(x: Int): Int = (x * -1640531535) >>> 18
-    var anchor = 0
-    if (src.length >= 8) {
-      val table = new Array[Int](1 << 14)
-      java.util.Arrays.fill(table, -1)
-      var i = 0
-      val limit = src.length - 4
-      while (i <= limit) {
-        val h = hash(le32(src, i))
-        val cand = table(h)
-        table(h) = i
-        if (cand >= 0 && i - cand <= 0xffff && le32(src, cand) == le32(src, i)) {
-          literal(anchor, i)
-          var m = 4
-          while (i + m < src.length && src(cand + m) == src(i + m)) m += 1
-          val o = i - cand
-          var rest = m
-          while (rest > 0) { // 2-byte-offset copies carry ≤ 64 bytes each
-            // (the format allows copy lengths down to 1, so a short
-            // tail chunk is legal)
-            val c = math.min(rest, 64)
-            out.write(((c - 1) << 2) | 2)
-            out.write(o & 0xff); out.write((o >>> 8) & 0xff)
-            rest -= c
-          }
-          i += m
-          anchor = i
-        } else i += 1
-      }
-    }
-    literal(anchor, src.length)
-    out.toByteArray
-  }
 
   // ------------------------------------------------------------------
   // Hadoop block framing ([BE32 origLen][{BE32 clen}{raw chunk}]*)
@@ -244,7 +142,7 @@ object Snappy {
       while (p < b.length) {
         if (p + 4 > b.length) fail("snappy-framed: truncated chunk header")
         val t = b(p) & 0xff
-        val len = (b(p + 1) & 0xff) | ((b(p + 2) & 0xff) << 8) | ((b(p + 3) & 0xff) << 16)
+        val len = le24(b, p + 1)
         p += 4
         if (p + len > b.length) fail("snappy-framed: chunk overruns input")
         t match {

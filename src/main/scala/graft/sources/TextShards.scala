@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * text/training corpora actually arrive: thousands of `.jsonl.zst` /
   * `.jsonl.gz` / `.jsonl.xz` / `.txt.bz2` / `.jsonl.lz4` / `.jsonl.br` files of
   * ~100-500 MB each. [[lines]] globs the set, dispatches each file to
-  * the right pure-JVM decoder by extension (and magic sniff as the
+  * the right decoder by extension (and magic sniff as the
   * fallback), and emits (path, line) with FILE-level parallelism —
   * for a shard set the file count is orders of magnitude above the
   * core count, so per-file tasks are the right unit and no decoder

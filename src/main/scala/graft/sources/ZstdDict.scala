@@ -14,16 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * emits a RAW-CONTENT dictionary — RFC 8878 §5 explicitly allows
   * dictionaries that are raw content without the trained magic — with
   * the most valuable segment LAST, where backward match offsets from
-  * the data start are shortest. Raw-content dicts load into both our
-  * codec (`Zstd.encode`/`decode` dict params) and zstd-jni
-  * (`ZstdCompressCtx.loadDict`), which is the LIVE validator in
-  * ZstdDictSpec; zstd-jni's own ZstdDictTrainer output (trained
-  * magic + entropy tables) is cross-checked through our decoder.
+  * the data start are shortest. Raw-content dicts load into libzstd
+  * through the `Zstd.encode`/`decode` dict params; ZstdDictSpec checks
+  * that they help and that zstd-jni's own ZstdDictTrainer output
+  * (trained magic + entropy tables) decodes through the same path.
   *
   * Scale shape of [[dictQuery]]: one dictionary per (event_type,
   * id DIV 4096) bucket — training data never leaves the task, the
   * dict is O(dictSize) per bucket, and every doc round-trips through
-  * zstd-jni live inside the task. */
+  * libzstd inside the task. */
 object ZstdDict {
 
   private final val D = 8 // d-mer width (bytes hashed per position)
@@ -107,16 +106,11 @@ object ZstdDict {
 
   /** Per (event_type, id DIV 4096) bucket: expand ids to templated
     * JSON docs, train a bucket dictionary, and round-trip EVERY doc
-    * through the dict — compressed by zstd-jni with the bucket dict
-    * loaded once (the amortized-CDict shape a real shard pipeline
-    * uses), decompressed back byte-exactly by OUR decoder with the
-    * same dict. A 1-in-8 sample additionally goes through OUR
-    * dict-aware encoder (whose per-call cost is O(dict+doc) — it
-    * re-hashes the prefix, so sampling keeps the lane work-linear)
-    * with zstd-jni as the live reader, and the same sample carries
-    * the dict-must-help require (dict-compressed < dict-less on
-    * identical docs). Output closed forms: n_docs + total doc chars
-    * per event_type. */
+    * through [[Zstd]] with the bucket dict, byte-exactly. A 1-in-8
+    * sample is also compressed without the dict and carries the
+    * dict-must-help require (dict-compressed < dict-less on identical
+    * docs). Output closed forms: n_docs + total doc chars per
+    * event_type. */
   def dictQuery(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import s.implicits._
@@ -127,29 +121,19 @@ object ZstdDict {
       var chars = 0L
       var withDict = 0L
       var without = 0L
-      val cctx = new com.github.luben.zstd.ZstdCompressCtx()
-      val dctx = new com.github.luben.zstd.ZstdDecompressCtx()
-      try {
-        if (dict.nonEmpty) { cctx.loadDict(dict); dctx.loadDict(dict) }
-        var i = 0
-        while (i < docs.length) {
-          val doc = docs(i)
-          chars += doc.length
-          // every doc: jni compress with the bucket dict -> OUR decode
-          val jniFrame = cctx.compress(doc)
-          require(java.util.Arrays.equals(Zstd.decode(jniFrame, dict), doc),
-            "zstd dict lane: our decoder drifted on a jni dict frame")
-          if (i % 8 == 0) {
-            // sample: OUR dict-aware encoder -> jni decompress
-            val ours = Zstd.encode(doc, dict = dict)
-            withDict += ours.length
-            without += Zstd.encode(doc).length
-            require(java.util.Arrays.equals(dctx.decompress(ours, doc.length), doc),
-              "zstd dict lane: jni drifted on our dict frame")
-          }
-          i += 1
+      var i = 0
+      while (i < docs.length) {
+        val doc = docs(i)
+        chars += doc.length
+        val frame = Zstd.encode(doc, dict = dict)
+        require(java.util.Arrays.equals(Zstd.decode(frame, dict), doc),
+          "zstd dict lane: dict round-trip drifted")
+        if (i % 8 == 0) {
+          withDict += frame.length
+          without += Zstd.encode(doc).length
         }
-      } finally { cctx.close(); dctx.close() }
+        i += 1
+      }
       if (docs.length >= 256)
         require(withDict < without, s"zstd dict lane: dictionary did not help ($withDict vs $without)")
       Seq(docs.length.toLong, chars)

@@ -32,6 +32,12 @@ object ZstdSeek {
 
   final case class FrameEntry(offset: Long, compressedSize: Int, decompressedSize: Int, checksum: Option[Int])
 
+  private val Xxh64 = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash64()
+
+  /** A seek-table entry's checksum: the low 32 bits of the frame
+    * content's xxhash64 (seed 0). */
+  private def checksum(b: Array[Byte]): Int = Xxh64.hash(b, 0, b.length, 0L).toInt
+
   /** One seekable container: each chunk becomes an independent frame.
     * Frame checksums are always written into the seek table. */
   def writeSeekable(chunks: Seq[Array[Byte]], opts: Zstd.EncOpts = Zstd.EncOpts()): Array[Byte] = {
@@ -39,7 +45,7 @@ object ZstdSeek {
     val entries = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
     chunks.foreach { c =>
       val f = Zstd.encode(c, opts)
-      entries += ((f.length, c.length, (Zstd.xxh64(c, 0, c.length) & 0xffffffffL).toInt))
+      entries += ((f.length, c.length, checksum(c)))
       out.write(f, 0, f.length)
     }
     writeLe32(out, SeekTableMagic)
@@ -91,7 +97,7 @@ object ZstdSeek {
     val d = Zstd.decodeFrame(container, e.offset.toInt)
     if (d.bytes.length != e.decompressedSize) throw new Zstd.ZstdError("seek entry size mismatch")
     e.checksum.foreach { ck =>
-      if ((Zstd.xxh64(d.bytes, 0, d.bytes.length) & 0xffffffffL).toInt != ck)
+      if (checksum(d.bytes) != ck)
         throw new Zstd.ZstdError("seek entry checksum mismatch")
     }
     d.bytes
@@ -152,7 +158,7 @@ object ZstdSeek {
             // table lies about sizes must fail loudly, not pass silently
             if (dec.length != ds)
               throw new Zstd.ZstdError(s"frame at $off decoded ${dec.length} B, seek table says $ds")
-            if (hasCk && (Zstd.xxh64(dec, 0, dec.length) & 0xffffffffL).toInt != ck)
+            if (hasCk && checksum(dec) != ck)
               throw new Zstd.ZstdError("frame checksum mismatch")
             new String(dec, java.nio.charset.StandardCharsets.UTF_8)
               .split("\n", -1)
@@ -172,8 +178,8 @@ object ZstdSeek {
 
   /** Per (event_type, id%16 shard): the shard's events serialize to
     * jsonl, chunk into multi-line frames, and cycle through the REAL
-    * seekable container — encode (shard-dependent encoder options so
-    * 1-/4-stream literals and direct/FSE weights all run), seek-table
+    * seekable container — encode (frame checksums on for even shards,
+    * off for odd ones), seek-table
     * parse, split-ownership sweep at three split sizes (each must
     * reproduce the whole container exactly — the require), ranged
     * frame fetch, line parse. Counts and char sums have closed forms
@@ -187,12 +193,7 @@ object ZstdSeek {
       val payload = lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val chunks = lines.grouped(32).map(_.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq
       val shard = if (sorted.nonEmpty) (sorted.head % 16).toInt else 0
-      val opts = Zstd.EncOpts(
-        checksum = shard % 2 == 0,
-        fourStreams = shard % 3 == 0,
-        fseWeights = shard % 4 == 0
-      )
-      val container = writeSeekable(chunks, opts)
+      val container = writeSeekable(chunks, Zstd.EncOpts(checksum = shard % 2 == 0))
       val table = readSeekTable(container)
       require(table.length == chunks.length, "zst: frame count drift")
       // plain zstd decode must see through the container (skippable tail)

@@ -568,6 +568,86 @@ class CodecFuzzSpec extends SparkSuite {
       named(s"zipm-cut $c")(zipWhole(java.util.Arrays.copyOf(mzip, c))))
   }
 
+  test("library-backed codecs: zstd frames (with and without a dictionary) and raw LZMA1/LZMA2 streams refuse cleanly") {
+    import graft.sources.{Xz, Zstd}
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    def named(what: String)(f: => Unit): Unit =
+      try f
+      catch {
+        case _: Zstd.ZstdError => ()
+        case _: Xz.XzError => ()
+        case e: Throwable => fail(s"$what escaped with ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+    val payload = (0 until 600).map(i => s"""{"i":$i,"w":"w${i % 37}","é":"${"x" * (i % 13)}"}""").mkString("\n").getBytes(utf8)
+    val dict = (0 until 40).map(i => s"""{"i":$i,"w":"w$i"}""").mkString("\n").getBytes(utf8)
+    val zdir = new java.io.File("src/test/resources/graft/zstd")
+    val trained = java.nio.file.Files.readAllBytes(new java.io.File(zdir, "trained.dict").toPath)
+    val zst = Zstd.encode(payload)
+    val zstDict = Zstd.encode(payload, dict = dict)
+    val zstTrained = java.nio.file.Files.readAllBytes(new java.io.File(zdir, "traineddict_l3.zst").toPath)
+    // raw LZMA1 (with an end marker) and raw LZMA2 from XZ for Java
+    val opts = new org.tukaani.xz.LZMA2Options(3)
+    val props = (opts.getPb * 5 + opts.getLp) * 9 + opts.getLc
+    val lzma1 = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val o = new org.tukaani.xz.LZMAOutputStream(bos, opts, true)
+      o.write(payload); o.close(); bos.toByteArray
+    }
+    val lzma2 = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val o = opts.getOutputStream(new org.tukaani.xz.FinishableWrapperOutputStream(bos),
+        org.tukaani.xz.ArrayCache.getDummyCache())
+      o.write(payload); o.close(); bos.toByteArray
+    }
+    assert(java.util.Arrays.equals(Xz.decodeLzma1(props, lzma1, 0, lzma1.length, payload.length), payload))
+    assert(java.util.Arrays.equals(Xz.decodeLzma1(props, lzma1, 0, lzma1.length, -1L), payload))
+    assert(java.util.Arrays.equals(Xz.decodeLzma2Raw(lzma2, payload.length), payload))
+    assert(java.util.Arrays.equals(Zstd.decode(zstDict, dict), payload))
+    def zstdAll(what: String, b: Array[Byte]): Unit = {
+      named(s"$what decode")(Zstd.decode(b))
+      named(s"$what decode+dict")(Zstd.decode(b, dict))
+      named(s"$what decode+trained")(Zstd.decode(b, trained))
+      named(s"$what frame")(Zstd.decodeFrame(b, 0))
+      named(s"$what frame+dict")(Zstd.decodeFrame(b, 0, dict))
+    }
+    def lzmaAll(what: String, l1: Array[Byte], l2: Array[Byte]): Unit =
+      for (size <- Seq(-1L, 0L, payload.length.toLong, 1L << 20)) {
+        named(s"$what lzma1 size=$size")(Xz.decodeLzma1(props, l1, 0, l1.length, size))
+        named(s"$what lzma2 size=$size")(Xz.decodeLzma2Raw(l2, size))
+      }
+    (0 until 150).foreach { i =>
+      val blob = randomBytes(16 + rnd.nextInt(3000))
+      zstdAll(s"zstd-rand #$i", blob)
+      zstdAll(s"zstd-magic #$i", Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte) ++ blob)
+      named(s"lzma1-rand #$i")(Xz.decodeLzma1(rnd.nextInt(225), blob, 0, blob.length, rnd.nextInt(1 << 16).toLong))
+      named(s"lzma2-rand #$i")(Xz.decodeLzma2Raw(blob, if (i % 2 == 0) -1L else rnd.nextInt(1 << 16).toLong))
+    }
+    (0 until 100).foreach { i =>
+      zstdAll(s"zstd-mut #$i", mutate(zst, 1 + rnd.nextInt(6)))
+      zstdAll(s"zstd-dict-mut #$i", mutate(zstDict, 1 + rnd.nextInt(6)))
+      zstdAll(s"zstd-trained-mut #$i", mutate(zstTrained, 1 + rnd.nextInt(6)))
+      lzmaAll(s"mut #$i", mutate(lzma1, 1 + rnd.nextInt(6)), mutate(lzma2, 1 + rnd.nextInt(6)))
+    }
+    (1 until zst.length by math.max(1, zst.length / 40)).foreach(c => zstdAll(s"zstd-cut $c", zst.take(c)))
+    (1 until zstDict.length by math.max(1, zstDict.length / 40)).foreach(c => zstdAll(s"zstd-dict-cut $c", zstDict.take(c)))
+    (1 until lzma1.length by math.max(1, lzma1.length / 40)).foreach(c =>
+      lzmaAll(s"cut $c", lzma1.take(c), lzma2.take(math.min(c, lzma2.length))))
+
+    // a complete 20-byte frame whose header declares ~2 GiB of content:
+    // refused by name before the declared size is allocated
+    val bomb = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte,
+      0xa0.toByte, 0xf0.toByte, 0xff.toByte, 0xff.toByte, 0x7f, // single segment, 4-byte content size
+      0x20, 0x00, 0x00, 'a', 'b', 'c', 'd', // raw block of 4 bytes
+      0x83.toByte, 0x00, 0x00, 'x') // last block: RLE of 16 bytes
+    assert(bomb.length == 20)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    val e = intercept[Zstd.ZstdError](Zstd.decode(bomb))
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(e.getMessage.contains("impossible"), e.getMessage)
+    assert(allocated < (16L << 20), s"refusing the bomb allocated $allocated bytes")
+  }
+
   test("cyclic IFD chains (self-loop, A->B->A) refuse in classic TIFF and BigTIFF") {
     import scala.collection.mutable.ArrayBuffer
     import graft.sources.Bytes.{putLe16, putLe32, putLe64}

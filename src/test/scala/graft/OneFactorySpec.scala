@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard: `Sessions` is the only SparkSession factory,
-  * `Lanes` the only place that releases every persistent RDD, and
-  * `Bytes` the only home of byte-order helpers, so a second builder,
-  * release loop or endian helper cannot grow back anywhere in main
-  * code. */
+  * `Lanes` the only place that releases every persistent RDD, `Bytes`
+  * the only home of byte-order helpers, and `Zstd`, `Xz` and `Snappy`
+  * the only callers of the codec libraries behind them, so a second
+  * builder, release loop, endian helper or codec entry point cannot
+  * grow back anywhere in main code. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -28,6 +29,11 @@ class OneFactorySpec extends AnyFunSuite {
 
   test("SparkSession.builder appears only in Sessions") {
     assert(matching("""SparkSession\s*\.\s*builder""") === Seq("graft/Sessions.scala"))
+  }
+
+  test("zstd-jni, XZ for Java and snappy-java are referenced only from Zstd, Xz and Snappy") {
+    assert(matching("""com\.github\.luben|org\.tukaani|org\.xerial""") ===
+      Seq("graft/sources/Snappy.scala", "graft/sources/Xz.scala", "graft/sources/Zstd.scala"))
   }
 
   test("the getPersistentRDDs unpersist loop appears only in Lanes") {

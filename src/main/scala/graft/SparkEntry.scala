@@ -197,8 +197,8 @@ object SparkEntry {
     "q_zstd_dict" -> (graft.sources.ZstdDict.dictQuery _),
     "q_parquet_meta" -> (graft.sources.ParquetMeta.metaQuery _),
     "q_orc_meta" -> (graft.sources.OrcMeta.metaQuery _),
-    "q_orc_read" -> (graft.sources.OrcData.readQuery _),
-    "q_parquet_read" -> (graft.sources.ParquetData.readQuery _),
+    "q_orc_read" -> (graft.sources.OrcMeta.readQuery _),
+    "q_parquet_read" -> (graft.sources.ParquetMeta.readQuery _),
     "q_npz" -> (graft.sources.Npy.npzQuery _),
     "q_safetensors" -> (graft.sources.Safetensors.safetensorsQuery _),
     "q_tfrecord" -> (graft.sources.TfRecord.tfRecordQuery _),
@@ -3054,13 +3054,13 @@ object SparkEntry {
         |  CAST(sum(1 + length(CAST(event_id % 89 AS VARCHAR))) AS BIGINT) AS tag_chars,
         |  CAST(sum(event_id % 11) AS BIGINT) AS val_sum
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // Parquet footer introspection: OUR hand-rolled thrift-compact
-    // footer parser reads the events table's parquet tails only (no
-    // page data) and aggregates row-group rows + chunk-stat min/max of
-    // event_id; the oracle restates those relationally over the same
-    // table DuckDB reads. A distributed require gates num_values ==
-    // rg rows per chunk. Field-for-field conformance vs parquet-hadoop
-    // across codecs: ParquetMetaSpec.
+    // Parquet footer introspection: the ParquetMeta facade reads the
+    // events table's parquet footers through parquet-hadoop in tasks
+    // (tails only, no page data) and aggregates row-group rows +
+    // chunk-stat min/max of event_id; the oracle restates those
+    // relationally over the same table DuckDB reads. A distributed
+    // require gates num_values == rg rows per chunk. chunks() rows vs
+    // parquet-hadoop across codecs: ParquetMetaSpec.
     "q_parquet_meta" ->
       """SELECT count(*) AS total_rows,
         |  min(event_id) AS min_event_id,
@@ -3079,24 +3079,21 @@ object SparkEntry {
         |  CAST(sum(1 + length(CAST(event_id % 53 AS VARCHAR))) AS BIGINT) AS tag_chars
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     // ORC footer introspection, the ParquetMeta twin: the lane writes
-    // events as zstd ORC once per run, then OUR tail parser (chunked-
-    // framing decompress + generic protobuf wire walk) reads ONLY the
-    // postscripts/footers back; stripe rows must sum to the file count
-    // and event_id's footer LONG statistics aggregate to min/max —
-    // restated relationally by the oracle. Field-for-field conformance
-    // vs orc-core across codecs: OrcMetaSpec.
+    // events as zstd ORC, then the OrcMeta facade reads ONLY the
+    // postscripts/footers back through orc-core in tasks; stripe rows
+    // must sum to the file count and event_id's footer LONG statistics
+    // aggregate to min/max — restated relationally by the oracle.
+    // stripes() rows vs orc-core across codecs: OrcMetaSpec.
     "q_orc_meta" ->
       """SELECT count(*) AS total_rows,
         |  min(event_id) AS min_event_id,
         |  max(event_id) AS max_event_id
         |FROM events""".stripMargin,
-    // Full ORC data read: five event columns written as zstd ORC by
-    // Spark's own writer (= orc-core), decoded back by OUR stripe
-    // reader (driver reads tails, one task per stripe, per-stream
-    // ranged fetches — RLEv2 ints, dictionary strings, doubles,
-    // timestamp seconds+nanos, NTZ-over-LONG attribute), aggregated
-    // per type; DuckDB re-derives everything from the source parquet.
-    // Row-for-row conformance vs spark.read.orc: OrcDataSpec.
+    // Full ORC data cycle: five event columns written as snappy ORC by
+    // df.write.orc (orc-core) once per JVM, read back by spark.read.orc
+    // and aggregated per type; a ~1/7 slice is written and read back
+    // again and must aggregate row-equal in-lane. DuckDB re-derives
+    // everything from the source parquet.
     "q_orc_read" ->
       """SELECT event_type,
         |  count(*) AS n_rows,
@@ -3106,12 +3103,11 @@ object SparkEntry {
         |  max(ts) AS max_ts,
         |  round(sum(value), 3) AS sum_value
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Native parquet read: OUR page decoder (thrift page headers,
-    // RLE-hybrid levels, dictionary + PLAIN fallback, Dremel assembly)
-    // reads the SAME pyarrow-written events.parquet DuckDB scans, one
-    // task per row group; the aggregate must hash-match DuckDB's own
-    // scan. Row-for-row conformance vs spark.read.parquet on both
-    // producers: ParquetDataSpec.
+    // Parquet data cycle: spark.read.parquet (parquet-mr) reads the
+    // SAME pyarrow-written events.parquet DuckDB scans; the aggregate
+    // must hash-match DuckDB's own scan. A ~1/7 slice is written with
+    // df.write.parquet and read back, and must aggregate row-equal
+    // in-lane.
     "q_parquet_read" ->
       """SELECT event_type,
         |  count(*) AS n_rows,

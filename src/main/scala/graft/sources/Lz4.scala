@@ -136,18 +136,6 @@ object Lz4 {
     }
   }
 
-  /** Decode ONE raw LZ4 block (no frame) — the unit Hadoop/ORC-style
-    * chunked containers store. Matches are bounded to the block;
-    * output is capped at `maxOut` (the container's declared block
-    * size) so a hostile chunk cannot balloon. */
-  def decodeRawBlock(src: Array[Byte], soff: Int, send: Int, maxOut: Int = Int.MaxValue): Array[Byte] = {
-    if (soff < 0 || send > src.length || soff > send) fail(s"lz4: raw block extent ($soff,$send)")
-    val out = new LOut(math.min(maxOut.toLong, math.max(64L, (send - soff).toLong * 3)).toInt)
-    decodeBlock(src, soff, send, out, 0, Array.emptyByteArray, 0)
-    if (out.len > maxOut) fail(s"lz4: raw block inflated to ${out.len} over the $maxOut cap")
-    out.toArray
-  }
-
   // ------------------------------------------------------------------
   // frame decode
   // ------------------------------------------------------------------
@@ -342,11 +330,6 @@ object Lz4 {
     * 4-byte hash table, 64 KiB window, last-5-literals / no-match-in-
     * last-12 end rules). Returns null when incompressible (caller
     * stores the block raw, as the reference CLI does). */
-  /** Raw-block compress (no frame): null when incompressible — the
-    * ORC/Hadoop chunk shape. */
-  private[sources] def encodeRawBlock(src: Array[Byte], soff: Int, slen: Int): Array[Byte] =
-    compressBlock(src, soff, slen)
-
   private def compressBlock(src: Array[Byte], soff: Int, slen: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(slen / 2 + 16)
     @inline def hash(v: Int): Int = (v * P1) >>> 18 // 14-bit table

@@ -1,459 +1,66 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Parquet FOOTER introspection — the catalog/ops surface a 100 TB
-  * lake needs (compaction planning, small-file and codec audits,
-  * row-group size histograms, stats-based pruning previews) that the
-  * Spark reader executes internally but never exposes as data.
+import scala.jdk.CollectionConverters._
+
+/** Parquet, the lake format every table here is stored in, behind one
+  * facade over parquet-hadoop 1.16 (parquet-mr, Spark's own reader):
   *
-  * Hand-rolled from the published parquet-format spec: the footer is
-  * a Thrift COMPACT-protocol FileMetaData struct ("PAR1" magic + i32
-  * footer length at the tail). The walker reads the struct tree with
-  * unknown-field skip (forward compatible, the Thrift contract), so
-  * new optional fields never break the parse.
+  *  - the FOOTER catalog — [[chunks]], one row per column chunk
+  *    (codec, encodings, value counts, byte sizes, dictionary presence,
+  *    int32/int64 stats): the compaction-planning and codec-audit
+  *    surface the Spark reader executes internally but never exposes
+  *    as data. Each task reads only its files' tails through
+  *    `ParquetFileReader.open(...).getFooter`; no page data is touched.
+  *  - the two lanes: q_parquet_meta (footer stats restated relationally
+  *    by the oracle) and q_parquet_read (`spark.read.parquet` over the
+  *    same events table DuckDB scans, plus a `df.write.parquet` →
+  *    read-back require on a slice).
   *
-  * Scale shape: [[chunks]] parallelizes paths; each task reads ONLY
-  * its file's tail (footer length + footer bytes) — no page data is
-  * touched, the driver sees nothing but the path list.
-  *
-  * Validator: parquet-hadoop 1.16 ships on the Spark classpath —
-  * ParquetMetaSpec compares every surfaced field LIVE against
-  * ParquetFileReader's footer on Spark-written files across codecs,
-  * and the q lane's oracle restates chunk stats relationally
-  * (sum of row-group rows = count(*), chunk min/max = column
-  * min/max) over the same table DuckDB reads.
-  *
-  * Untrusted-bytes contract: malformed footers raise
-  * [[ParquetMeta.ParquetMetaError]]. */
+  * Untrusted-bytes contract: the facade checks the tail ("PAR1" magic,
+  * a declared footer length that fits in the file) before the library
+  * sees the bytes, so a hostile length cannot make it allocate; every
+  * `IOException`/`RuntimeException` the library throws surfaces as
+  * [[ParquetMeta.ParquetMetaError]] naming the file. */
 object ParquetMeta {
 
   final class ParquetMetaError(msg: String) extends RuntimeException(msg)
-  private[sources] def fail(msg: String): Nothing = throw new ParquetMetaError(msg)
-  @inline private[sources] def req(c: Boolean, msg: => String): Unit = if (!c) fail(msg)
+  private def fail(msg: String): Nothing = throw new ParquetMetaError(msg)
+  @inline private def req(c: Boolean, msg: => String): Unit = if (!c) fail(msg)
 
-  private def guarded[T](what: String)(f: => T): T =
-    try f
-    catch {
+  /** One Hadoop configuration per JVM; footer reads only get from it. */
+  private lazy val conf = new Configuration()
+
+  /** The footer of `path`, read by parquet-mr after the tail checks. */
+  def readFooter(path: String): ParquetMetadata =
+    try {
+      val file = HadoopInputFile.fromPath(new Path(path), conf)
+      val len = file.getLength
+      req(len >= 12, s"parquet: $path is a file of $len bytes")
+      val tail = new Array[Byte](8)
+      val in = file.newStream()
+      try { in.seek(len - 8); in.readFully(tail) }
+      finally in.close()
+      req(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' && tail(7) == '1', s"parquet: bad tail magic in $path")
+      val fLen = Bytes.le32(tail, 0)
+      req(fLen > 0 && fLen <= len - 12, s"parquet: footer length $fLen in the $len-byte file $path")
+      val r = ParquetFileReader.open(file)
+      try r.getFooter
+      finally r.close()
+    } catch {
       case e: ParquetMetaError => throw e
-      case e: Exception => fail(s"parquet: malformed $what (${e.getClass.getSimpleName}: ${e.getMessage})")
+      case e @ (_: java.io.IOException | _: RuntimeException) =>
+        fail(s"parquet: malformed footer in $path (${e.getClass.getSimpleName}: ${e.getMessage})")
     }
-
-  // ------------------------------------------- thrift compact protocol
-
-  private[sources] final class TIn(val b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = { req(pos < end, "parquet: truncated footer"); val x = b(pos) & 0xff; pos += 1; x }
-    def varU(): Long = {
-      var acc = 0L
-      var shift = 0
-      var i = 0
-      while (i < 10) {
-        val x = u8()
-        acc |= (x & 0x7fL) << shift
-        if ((x & 0x80) == 0) return acc
-        shift += 7
-        i += 1
-      }
-      fail("parquet: varint longer than 10 bytes")
-    }
-    def zig(): Long = { val v = varU(); (v >>> 1) ^ -(v & 1) }
-    def bytes(): Array[Byte] = {
-      val n = varU()
-      req(n >= 0 && n <= end - pos, s"parquet: declared length $n with ${end - pos} left")
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n.toInt)
-      pos += n.toInt
-      out
-    }
-  }
-
-  private[sources] final val TStop = 0
-  private[sources] final val TTrue = 1
-  private[sources] final val TFalse = 2
-  private[sources] final val TByte = 3
-  private[sources] final val TI16 = 4
-  private[sources] final val TI32 = 5
-  private[sources] final val TI64 = 6
-  private[sources] final val TDouble = 7
-  private[sources] final val TBinary = 8
-  private[sources] final val TList = 9
-  private[sources] final val TSet = 10
-  private[sources] final val TMap = 11
-  private[sources] final val TStruct = 12
-
-  private[sources] def skipType(t: Int, in: TIn, depth: Int): Unit = {
-    req(depth < 64, "parquet: thrift nesting deeper than 64")
-    t match {
-      case TTrue | TFalse => ()
-      case TByte => in.u8()
-      case TI16 | TI32 | TI64 => in.zig()
-      case TDouble => in.pos += 8; req(in.pos <= in.end, "parquet: truncated double")
-      case TBinary => in.bytes()
-      case TList | TSet =>
-        val (n, et) = listHeader(in)
-        var i = 0L
-        while (i < n) { skipType(et, in, depth + 1); i += 1 }
-      case TMap =>
-        val n = in.varU()
-        if (n > 0) {
-          val kv = in.u8()
-          val kt = (kv >> 4) & 0xf
-          val vt = kv & 0xf
-          var i = 0L
-          while (i < n) { skipType(kt, in, depth + 1); skipType(vt, in, depth + 1); i += 1 }
-        }
-      case TStruct => walkStruct(in, depth + 1)((_, _, _) => false)
-      case x => fail(s"parquet: thrift type $x")
-    }
-  }
-
-  private[sources] def listHeader(in: TIn): (Long, Int) = {
-    val h = in.u8()
-    val et = h & 0xf
-    val short = (h >> 4) & 0xf
-    val n = if (short == 15) in.varU() else short.toLong
-    req(n >= 0 && n <= in.end - in.pos, s"parquet: list of $n with ${in.end - in.pos} bytes left")
-    (n, et)
-  }
-
-  /** Walk a compact-protocol struct; `handle(fieldId, type, in)`
-    * returns true when it consumed the value, false to skip it
-    * (the unknown-field forward-compat path). */
-  private[sources] def walkStruct(in: TIn, depth: Int)(handle: (Int, Int, TIn) => Boolean): Unit = {
-    req(depth < 64, "parquet: thrift nesting deeper than 64")
-    var fieldId = 0
-    var continue = true
-    while (continue) {
-      val h = in.u8()
-      if (h == TStop) continue = false
-      else {
-        val t = h & 0xf
-        val delta = (h >> 4) & 0xf
-        fieldId = if (delta != 0) fieldId + delta else in.zig().toInt
-        if (!handle(fieldId, t, in)) skipType(t, in, depth + 1)
-      }
-    }
-  }
-
-  private[sources] def i32Of(t: Int, in: TIn): Int = { req(t == TI16 || t == TI32, s"parquet: wanted i32, got type $t"); in.zig().toInt }
-  private[sources] def i64Of(t: Int, in: TIn): Long = { req(t == TI64 || t == TI32 || t == TI16, s"parquet: wanted i64, got type $t"); in.zig() }
-  private[sources] def strOf(t: Int, in: TIn): String = { req(t == TBinary, s"parquet: wanted binary, got type $t"); new String(in.bytes(), java.nio.charset.StandardCharsets.UTF_8) }
-
-  // ------------------------------------------------------ metadata model
-
-  final case class PmStats(
-      min: Option[Array[Byte]], max: Option[Array[Byte]],
-      nullCount: Option[Long], distinctCount: Option[Long])
-
-  final case class PmColumnChunk(
-      pathInSchema: Seq[String],
-      physicalType: Int, // parquet Type enum ordinal
-      codec: Int, // CompressionCodec enum ordinal
-      encodings: Seq[Int],
-      numValues: Long,
-      totalUncompressedSize: Long,
-      totalCompressedSize: Long,
-      dataPageOffset: Long,
-      dictionaryPageOffset: Option[Long],
-      stats: Option[PmStats])
-
-  final case class PmRowGroup(numRows: Long, totalByteSize: Long, columns: Seq[PmColumnChunk])
-
-  final case class PmSchemaElement(name: String, tpe: Option[Int], typeLength: Option[Int],
-      repetition: Option[Int], numChildren: Option[Int], convertedType: Option[Int],
-      scale: Option[Int] = None, precision: Option[Int] = None,
-      logical: Option[PmLogical] = None)
-
-  /** The LogicalType union fields a reader needs beyond convertedType:
-    * which member was set, and the timestamp/int/decimal payloads. */
-  final case class PmLogical(member: Int, tsAdjustedToUtc: Boolean = false, tsUnit: Int = 0,
-      intBits: Int = 0, intSigned: Boolean = true, decScale: Int = 0, decPrecision: Int = 0)
-
-  final case class PmFooter(
-      version: Int,
-      schema: Seq[PmSchemaElement],
-      numRows: Long,
-      rowGroups: Seq[PmRowGroup],
-      createdBy: Option[String],
-      keyValue: Map[String, String])
-
-  val CodecNames: Map[Int, String] = Map(
-    0 -> "UNCOMPRESSED", 1 -> "SNAPPY", 2 -> "GZIP", 3 -> "LZO",
-    4 -> "BROTLI", 5 -> "LZ4", 6 -> "ZSTD", 7 -> "LZ4_RAW")
-  val TypeNames: Map[Int, String] = Map(
-    0 -> "BOOLEAN", 1 -> "INT32", 2 -> "INT64", 3 -> "INT96",
-    4 -> "FLOAT", 5 -> "DOUBLE", 6 -> "BYTE_ARRAY", 7 -> "FIXED_LEN_BYTE_ARRAY")
-  val EncodingNames: Map[Int, String] = Map(
-    0 -> "PLAIN", 2 -> "PLAIN_DICTIONARY", 3 -> "RLE", 4 -> "BIT_PACKED",
-    5 -> "DELTA_BINARY_PACKED", 6 -> "DELTA_LENGTH_BYTE_ARRAY",
-    7 -> "DELTA_BYTE_ARRAY", 8 -> "RLE_DICTIONARY", 9 -> "BYTE_STREAM_SPLIT")
-
-  // ------------------------------------------------------- struct parses
-
-  private def parseStats(in: TIn, depth: Int): PmStats = {
-    var min: Option[Array[Byte]] = None
-    var max: Option[Array[Byte]] = None
-    var minDep: Option[Array[Byte]] = None
-    var maxDep: Option[Array[Byte]] = None
-    var nulls: Option[Long] = None
-    var distinct: Option[Long] = None
-    walkStruct(in, depth) { (id, t, d) =>
-      id match {
-        case 1 => maxDep = Some({ req(t == TBinary, "stats.max"); d.bytes() }); true
-        case 2 => minDep = Some({ req(t == TBinary, "stats.min"); d.bytes() }); true
-        case 3 => nulls = Some(i64Of(t, d)); true
-        case 4 => distinct = Some(i64Of(t, d)); true
-        case 5 => max = Some({ req(t == TBinary, "stats.max_value"); d.bytes() }); true
-        case 6 => min = Some({ req(t == TBinary, "stats.min_value"); d.bytes() }); true
-        case _ => false
-      }
-    }
-    PmStats(min.orElse(minDep), max.orElse(maxDep), nulls, distinct)
-  }
-
-  private def parseColumnMeta(in: TIn, depth: Int): PmColumnChunk = {
-    var tpe = -1
-    var encodings = Vector.empty[Int]
-    var path = Vector.empty[String]
-    var codec = -1
-    var numValues = -1L
-    var unc = -1L
-    var comp = -1L
-    var dataOff = -1L
-    var dictOff: Option[Long] = None
-    var stats: Option[PmStats] = None
-    walkStruct(in, depth) { (id, t, d) =>
-      id match {
-        case 1 => tpe = i32Of(t, d); true
-        case 2 =>
-          req(t == TList, "column.encodings")
-          val (n, et) = listHeader(d)
-          encodings = Vector.tabulate(n.toInt)(_ => i32Of(et, d))
-          true
-        case 3 =>
-          req(t == TList, "column.path_in_schema")
-          val (n, et) = listHeader(d)
-          path = Vector.tabulate(n.toInt)(_ => strOf(et, d))
-          true
-        case 4 => codec = i32Of(t, d); true
-        case 5 => numValues = i64Of(t, d); true
-        case 6 => unc = i64Of(t, d); true
-        case 7 => comp = i64Of(t, d); true
-        case 9 => dataOff = i64Of(t, d); true
-        case 11 => dictOff = Some(i64Of(t, d)); true
-        case 12 => req(t == TStruct, "column.statistics"); stats = Some(parseStats(d, depth + 1)); true
-        case _ => false
-      }
-    }
-    req(tpe >= 0 && codec >= 0 && numValues >= 0, "parquet: column metadata missing required fields")
-    PmColumnChunk(path, tpe, codec, encodings, numValues, unc, comp, dataOff, dictOff, stats)
-  }
-
-  private def parseColumnChunk(in: TIn, depth: Int): PmColumnChunk = {
-    var meta: Option[PmColumnChunk] = None
-    walkStruct(in, depth) { (id, t, d) =>
-      id match {
-        case 3 => req(t == TStruct, "chunk.meta_data"); meta = Some(parseColumnMeta(d, depth + 1)); true
-        case _ => false
-      }
-    }
-    meta.getOrElse(fail("parquet: column chunk without meta_data"))
-  }
-
-  private def parseRowGroup(in: TIn, depth: Int): PmRowGroup = {
-    var cols = Vector.empty[PmColumnChunk]
-    var bytes = -1L
-    var rows = -1L
-    walkStruct(in, depth) { (id, t, d) =>
-      id match {
-        case 1 =>
-          req(t == TList, "rowgroup.columns")
-          val (n, et) = listHeader(d)
-          req(et == TStruct, "rowgroup.columns element")
-          cols = Vector.tabulate(n.toInt)(_ => parseColumnChunk(d, depth + 1))
-          true
-        case 2 => bytes = i64Of(t, d); true
-        case 3 => rows = i64Of(t, d); true
-        case _ => false
-      }
-    }
-    req(rows >= 0 && bytes >= 0, "parquet: row group missing rows/bytes")
-    PmRowGroup(rows, bytes, cols)
-  }
-
-  private def parseSchemaElement(in: TIn, depth: Int): PmSchemaElement = {
-    var name: String = null
-    var tpe: Option[Int] = None
-    var tlen: Option[Int] = None
-    var rep: Option[Int] = None
-    var kids: Option[Int] = None
-    var conv: Option[Int] = None
-    var scale: Option[Int] = None
-    var precision: Option[Int] = None
-    var logical: Option[PmLogical] = None
-    walkStruct(in, depth) { (id, t, d) =>
-      id match {
-        case 1 => tpe = Some(i32Of(t, d)); true
-        case 2 => tlen = Some(i32Of(t, d)); true
-        case 3 => rep = Some(i32Of(t, d)); true
-        case 4 => name = strOf(t, d); true
-        case 5 => kids = Some(i32Of(t, d)); true
-        case 6 => conv = Some(i32Of(t, d)); true
-        case 7 => scale = Some(i32Of(t, d)); true
-        case 8 => precision = Some(i32Of(t, d)); true
-        case 10 =>
-          req(t == TStruct, "parquet: logicalType wire type")
-          var lg: Option[PmLogical] = None
-          walkStruct(d, depth + 1) { (member, mt, dd) =>
-            member match {
-              case 5 => // DECIMAL
-                req(mt == TStruct, "parquet: decimal logical type")
-                var sc = 0; var pr = 0
-                walkStruct(dd, depth + 2) { (f, ft, ddd) =>
-                  f match {
-                    case 1 => sc = i32Of(ft, ddd); true
-                    case 2 => pr = i32Of(ft, ddd); true
-                    case _ => false
-                  }
-                }
-                lg = Some(PmLogical(5, decScale = sc, decPrecision = pr))
-                true
-              case 8 => // TIMESTAMP
-                req(mt == TStruct, "parquet: timestamp logical type")
-                var utc = false; var unit = 0
-                walkStruct(dd, depth + 2) { (f, ft, ddd) =>
-                  f match {
-                    case 1 => utc = ft == TTrue; true
-                    case 2 => // TimeUnit union: set member id IS the unit
-                      req(ft == TStruct, "parquet: time unit type")
-                      walkStruct(ddd, depth + 3) { (u, ut, d4) =>
-                        unit = u
-                        if (ut == TStruct) walkStruct(d4, depth + 4)((_, _, _) => false)
-                        else skipType(ut, d4, depth + 4)
-                        true
-                      }
-                      true
-                    case _ => false
-                  }
-                }
-                lg = Some(PmLogical(8, tsAdjustedToUtc = utc, tsUnit = unit))
-                true
-              case 10 => // INTEGER
-                req(mt == TStruct, "parquet: integer logical type")
-                var bits = 0; var signed = true
-                walkStruct(dd, depth + 2) { (f, ft, ddd) =>
-                  f match {
-                    case 1 => req(ft == TByte, "parquet: int bitWidth type"); bits = ddd.u8(); true
-                    case 2 => signed = ft == TTrue; true
-                    case _ => false
-                  }
-                }
-                lg = Some(PmLogical(10, intBits = bits, intSigned = signed))
-                true
-              case other =>
-                if (mt == TStruct) walkStruct(dd, depth + 2)((_, _, _) => false)
-                else skipType(mt, dd, depth + 2)
-                lg = Some(PmLogical(other))
-                true
-            }
-          }
-          logical = lg
-          true
-        case _ => false
-      }
-    }
-    req(name != null, "parquet: schema element without name")
-    PmSchemaElement(name, tpe, tlen, rep, kids, conv, scale, precision, logical)
-  }
-
-  def parseFooter(footer: Array[Byte]): PmFooter = guarded("footer") {
-    val in = new TIn(footer, 0, footer.length)
-    var version = -1
-    var schema = Vector.empty[PmSchemaElement]
-    var numRows = -1L
-    var groups = Vector.empty[PmRowGroup]
-    var createdBy: Option[String] = None
-    var kv = Map.empty[String, String]
-    walkStruct(in, 0) { (id, t, d) =>
-      id match {
-        case 1 => version = i32Of(t, d); true
-        case 2 =>
-          req(t == TList, "footer.schema")
-          val (n, et) = listHeader(d)
-          req(et == TStruct, "footer.schema element")
-          schema = Vector.tabulate(n.toInt)(_ => parseSchemaElement(d, 1))
-          true
-        case 3 => numRows = i64Of(t, d); true
-        case 4 =>
-          req(t == TList, "footer.row_groups")
-          val (n, et) = listHeader(d)
-          req(et == TStruct, "footer.row_groups element")
-          groups = Vector.tabulate(n.toInt)(_ => parseRowGroup(d, 1))
-          true
-        case 5 =>
-          req(t == TList, "footer.key_value_metadata")
-          val (n, et) = listHeader(d)
-          req(et == TStruct, "footer.key_value element")
-          kv = Vector.tabulate(n.toInt) { _ =>
-            var k: String = null
-            var v: String = null
-            walkStruct(d, 1) { (kid, kt, dd) =>
-              kid match {
-                case 1 => k = strOf(kt, dd); true
-                case 2 => v = strOf(kt, dd); true
-                case _ => false
-              }
-            }
-            req(k != null, "parquet: key_value without key")
-            k -> (if (v == null) "" else v)
-          }.toMap
-          true
-        case 6 => createdBy = Some(strOf(t, d)); true
-        case _ => false
-      }
-    }
-    req(version >= 0 && numRows >= 0, "parquet: footer missing version/num_rows")
-    PmFooter(version, schema, numRows, groups, createdBy, kv)
-  }
-
-  /** Read the footer via tail-only ranged reads: "PAR1" magic both
-    * ends, i32 footer length just before the tail magic. */
-  def readFooter(raf: java.io.RandomAccessFile): PmFooter = guarded("file") {
-    val len = raf.length()
-    req(len >= 12, s"parquet: file of $len bytes")
-    val tail = new Array[Byte](8)
-    raf.seek(len - 8)
-    raf.readFully(tail)
-    req(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' && tail(7) == '1', "parquet: bad tail magic")
-    val fLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) | ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-    req(fLen > 0 && fLen <= len - 12, s"parquet: footer length $fLen in a $len-byte file")
-    val footer = new Array[Byte](fLen)
-    raf.seek(len - 8 - fLen)
-    raf.readFully(footer)
-    parseFooter(footer)
-  }
-
-  def readFooter(path: String): PmFooter = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try readFooter(raf)
-    finally raf.close()
-  }
-
-  // ------------------------------------------------------- stat decoding
-
-  /** Decode a stats min/max payload for the physical type (plain
-    * encoding per the spec). Only the orderable fixed types surface
-    * as numbers; byte arrays pass through. */
-  def decodeStatLong(physicalType: Int, b: Array[Byte]): Option[Long] = physicalType match {
-    case 1 if b.length == 4 =>
-      Some(((b(0) & 0xffL) | ((b(1) & 0xffL) << 8) | ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)).toInt.toLong)
-    case 2 if b.length == 8 =>
-      var acc = 0L
-      var i = 7
-      while (i >= 0) { acc = (acc << 8) | (b(i) & 0xffL); i -= 1 }
-      Some(acc)
-    case _ => None
-  }
 
   // ---------------------------------------------------------- Spark face
 
@@ -474,33 +81,42 @@ object ParquetMeta {
     StructField("rg_rows", LongType, nullable = false)))
 
   /** One row per column chunk across `paths` — the catalog/ops view.
-    * Executors read tails only. */
+    * Executors read tails only. Physical types carry their
+    * parquet-format names (BYTE_ARRAY, not parquet-mr's BINARY);
+    * encodings are sorted by name. */
   def chunks(spark: SparkSession, paths: Seq[String]): DataFrame = {
     req(paths.nonEmpty, "parquet: no paths")
     val rdd = spark.sparkContext
       .parallelize(paths, math.max(1, math.min(paths.length, spark.sparkContext.defaultParallelism)))
       .flatMap { p =>
-        val fm = readFooter(p)
-        fm.rowGroups.zipWithIndex.flatMap { case (rg, gi) =>
-          rg.columns.map { c =>
+        readFooter(p).getBlocks.asScala.zipWithIndex.flatMap { case (rg, gi) =>
+          rg.getColumns.asScala.map { c =>
+            val st = c.getStatistics
+            val (mn, mx) = st match {
+              case l: LongStatistics if l.hasNonNullValue => (Long.box(l.getMin), Long.box(l.getMax))
+              case i: IntStatistics if i.hasNonNullValue => (Long.box(i.getMin.toLong), Long.box(i.getMax.toLong))
+              case _ => (null, null)
+            }
             Row(
-              p, gi, c.pathInSchema.mkString("."),
-              TypeNames.getOrElse(c.physicalType, c.physicalType.toString),
-              CodecNames.getOrElse(c.codec, c.codec.toString),
-              c.encodings.map(e => EncodingNames.getOrElse(e, e.toString)),
-              c.numValues, c.totalCompressedSize, c.totalUncompressedSize,
-              c.dictionaryPageOffset.isDefined,
-              c.stats.flatMap(_.nullCount).map(java.lang.Long.valueOf).orNull,
-              c.stats.flatMap(s => s.min.flatMap(decodeStatLong(c.physicalType, _))).map(java.lang.Long.valueOf).orNull,
-              c.stats.flatMap(s => s.max.flatMap(decodeStatLong(c.physicalType, _))).map(java.lang.Long.valueOf).orNull,
-              rg.numRows)
+              p, gi, c.getPath.toDotString,
+              c.getPrimitiveType.getPrimitiveTypeName match {
+                case PrimitiveTypeName.BINARY => "BYTE_ARRAY"
+                case t => t.name
+              },
+              c.getCodec.name,
+              c.getEncodings.asScala.toSeq.map(_.name).sorted,
+              c.getValueCount, c.getTotalSize, c.getTotalUncompressedSize,
+              c.hasDictionaryPage,
+              if (st != null && st.isNumNullsSet) Long.box(st.getNumNulls) else null,
+              mn, mx,
+              rg.getRowCount)
           }
         }
       }
     spark.createDataFrame(rdd, ChunkSchema)
   }
 
-  // ------------------------------------------------------------- q lane
+  // ------------------------------------------------------------ q lanes
 
   /** Footer-only stats over the events table's parquet files: per
     * file, sum of row-group rows and the chunk-stat min/max of
@@ -529,5 +145,33 @@ object ParquetMeta {
         sum(col("rg_rows")).cast("long").as("total_rows"),
         min(col("min_int64")).cast("long").as("min_event_id"),
         max(col("max_int64")).cast("long").as("max_event_id"))
+  }
+
+  /** Parquet read and write cycle under the oracle: `spark.read.parquet`
+    * reads the SAME pyarrow-written events.parquet DuckDB scans and
+    * aggregates it per event type; a deterministic ~1/7 slice is
+    * written with `df.write.parquet` (snappy) and read back, and both
+    * sides of the slice must aggregate row-equal in-lane. */
+  def readQuery(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    def agg(df: DataFrame): DataFrame = df
+      .groupBy(col("event_type"))
+      .agg(
+        count(lit(1)).as("n_rows"),
+        min(col("event_id")).as("min_id"),
+        max(col("event_id")).as("max_id"),
+        sum(col("user_id")).as("sum_uid"),
+        max(col("ts")).as("max_ts"),
+        round(sum(col("value")), 3).as("sum_value"))
+      .orderBy(col("event_type"))
+    val src = graft.Tables.eventsNtz(s, dir)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+    val slice = src.filter(col("event_id") % 7 === 0)
+    val out = s"/tmp/graft_pq_w/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    slice.write.mode("overwrite").option("compression", "snappy").parquet(out)
+    val a = agg(slice).collect().toSeq
+    val b = agg(s.read.parquet(out)).collect().toSeq
+    require(a == b, s"parquet cycle drift: read slice gave $a, write-read cycle gave $b")
+    agg(src)
   }
 }

@@ -320,88 +320,6 @@ class EncoderDifferentialFuzzSpec extends AnyFunSuite {
     }
   }
 
-  test("orc writer over hostile bytes/strings at every codec -> orc-core RecordReader") {
-    import graft.sources.OrcWrite
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import org.apache.hadoop.hive.ql.exec.vector.BytesColumnVector
-    val schema = StructType(Seq(
-      StructField("raw", BinaryType), StructField("txt", StringType)))
-    val nonAscii = new String(corpus.collectFirst { case ("non_ascii_utf8", d) => d }.get, Utf8)
-    def prefix(k: Int): String = {
-      val end = if (k < nonAscii.length && Character.isHighSurrogate(nonAscii.charAt(k - 1))) k - 1 else k
-      nonAscii.substring(0, end)
-    }
-    val rows = corpus.zipWithIndex.map { case ((_, data), i) =>
-      Row(data, if (i % 7 == 3) null else prefix(1 + i * 601 % nonAscii.length))
-    }
-    for (codec <- Seq("none", "zlib", "snappy", "lz4", "zstd")) {
-      val bytes = OrcWrite.encodeFile(rows, schema, codec, stripeRows = 5)
-      val tmp = java.io.File.createTempFile("orcfuzz", ".orc")
-      java.nio.file.Files.write(tmp.toPath, bytes)
-      val reader = org.apache.orc.OrcFile.createReader(
-        new org.apache.hadoop.fs.Path(tmp.getPath),
-        org.apache.orc.OrcFile.readerOptions(new org.apache.hadoop.conf.Configuration()))
-      try {
-        val rr = reader.rows()
-        val batch = reader.getSchema.createRowBatch()
-        var i = 0
-        while (rr.nextBatch(batch)) {
-          val rawCol = batch.cols(0).asInstanceOf[BytesColumnVector]
-          val txtCol = batch.cols(1).asInstanceOf[BytesColumnVector]
-          var r = 0
-          while (r < batch.size) {
-            val rr0 = if (rawCol.isRepeating) 0 else r
-            val raw = java.util.Arrays.copyOfRange(
-              rawCol.vector(rr0), rawCol.start(rr0), rawCol.start(rr0) + rawCol.length(rr0))
-            same(raw, corpus(i)._2, s"orc/codec=$codec raw[$i] (${corpus(i)._1})")
-            val tr = if (txtCol.isRepeating) 0 else r
-            val expTxt = rows(i).get(1)
-            if (txtCol.noNulls || !txtCol.isNull(tr)) {
-              val txt = new String(txtCol.vector(tr), txtCol.start(tr), txtCol.length(tr), Utf8)
-              assert(expTxt != null && txt == expTxt, s"orc/codec=$codec txt[$i]")
-            } else assert(expTxt == null, s"orc/codec=$codec txt[$i] null drift")
-            i += 1
-            r += 1
-          }
-        }
-        assert(i == corpus.length, s"orc/codec=$codec row count: $i")
-        rr.close()
-      } finally { reader.close(); tmp.delete() }
-    }
-  }
-
-  test("parquet writer over hostile bytes/strings at every codec -> parquet-mr (via Spark)") {
-    import graft.sources.ParquetWrite
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = TestSpark.spark
-    val schema = StructType(Seq(
-      StructField("i", IntegerType), StructField("raw", BinaryType), StructField("txt", StringType)))
-    val nonAscii = new String(corpus.collectFirst { case ("non_ascii_utf8", d) => d }.get, Utf8)
-    def prefix(k: Int): String = {
-      val end = if (k < nonAscii.length && Character.isHighSurrogate(nonAscii.charAt(k - 1))) k - 1 else k
-      nonAscii.substring(0, end)
-    }
-    val rows = corpus.zipWithIndex.map { case ((_, data), i) =>
-      Row(i, data, if (i % 7 == 3) null else prefix(1 + i * 601 % nonAscii.length))
-    }
-    for (codec <- Seq("none", "snappy", "gzip", "zstd")) {
-      val bytes = ParquetWrite.encodeFile(rows, schema, codec, rowGroupRows = 5)
-      val tmp = java.io.File.createTempFile("pqfuzz", ".parquet")
-      java.nio.file.Files.write(tmp.toPath, bytes)
-      try {
-        val back = spark.read.parquet(tmp.getPath).collect().sortBy(_.getInt(0))
-        assert(back.length == corpus.length, s"parquet/codec=$codec row count")
-        back.zipWithIndex.foreach { case (r, i) =>
-          same(r.getAs[Array[Byte]]("raw"), corpus(i)._2, s"parquet/codec=$codec raw[$i] (${corpus(i)._1})")
-          val expTxt = rows(i).get(2)
-          assert(r.getAs[String]("txt") == expTxt, s"parquet/codec=$codec txt[$i]")
-        }
-      } finally tmp.delete()
-    }
-  }
-
   // ----------------------------------------- self-round-trip-only lanes
 
   test("brotli + npy writers over the hostile corpus: self round-trip (no in-JVM reference decoder)") {

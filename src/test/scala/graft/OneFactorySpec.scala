@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard: `Sessions` is the only SparkSession factory,
   * `Lanes` the only place that releases every persistent RDD, `Bytes`
-  * the only home of byte-order helpers, and `Zstd`, `Xz` and `Snappy`
-  * the only callers of the codec libraries behind them, so a second
-  * builder, release loop, endian helper or codec entry point cannot
-  * grow back anywhere in main code. */
+  * the only home of byte-order helpers, `Zstd`, `Xz` and `Snappy`
+  * the only callers of the codec libraries behind them, and
+  * `ParquetMeta` and `OrcMeta` the only callers of parquet-mr and
+  * orc-core, so a second builder, release loop, endian helper, codec
+  * or lake-format entry point cannot grow back anywhere in main code. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -34,6 +35,11 @@ class OneFactorySpec extends AnyFunSuite {
   test("zstd-jni, XZ for Java and snappy-java are referenced only from Zstd, Xz and Snappy") {
     assert(matching("""com\.github\.luben|org\.tukaani|org\.xerial""") ===
       Seq("graft/sources/Snappy.scala", "graft/sources/Xz.scala", "graft/sources/Zstd.scala"))
+  }
+
+  test("parquet-mr and orc-core are referenced only from ParquetMeta and OrcMeta") {
+    assert(matching("""org\.apache\.parquet|org\.apache\.orc""") ===
+      Seq("graft/sources/OrcMeta.scala", "graft/sources/ParquetMeta.scala"))
   }
 
   test("the getPersistentRDDs unpersist loop appears only in Lanes") {

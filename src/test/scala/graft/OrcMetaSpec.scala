@@ -1,16 +1,17 @@
 package graft
 
 import graft.sources.OrcMeta
-import graft.sources.OrcMeta._
+import graft.sources.OrcMeta.OrcMetaError
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** ORC tail-parser conformance, LIVE against orc-core 2.2.2 (the
-  * reference implementation, on the Spark classpath): stripe layout,
-  * row counts, compression kind, type tree and integer column
-  * statistics must match OrcFile.createReader on Spark-written files
-  * across every codec this build can write. */
+/** The tail catalog facade, LIVE against orc-core 2.2.2 (the
+  * reference implementation, on the Spark classpath): every
+  * [[OrcMeta.stripes]] row — stripe layout, row counts, compression
+  * kind and file rows — must match OrcFile.createReader on
+  * Spark-written files across every codec this build can write,
+  * including a multi-stripe file. */
 class OrcMetaSpec extends AnyFunSuite {
 
   private def partFiles(path: String): Seq[String] = {
@@ -20,53 +21,30 @@ class OrcMetaSpec extends AnyFunSuite {
     else Seq(path)
   }
 
-  private def compareFile(p: String): Unit = {
-    val ours = OrcMeta.readTail(p)
+  /** Check every stripes() row of `p` against orc-core; returns the
+    * stripe count. */
+  private def compareFile(p: String): Int = {
+    val ours = OrcMeta.stripes(TestSpark.spark, Seq(p)).collect().toSeq.sortBy(_.getAs[Int]("stripe"))
     val conf = new org.apache.hadoop.conf.Configuration()
     val ref = org.apache.orc.OrcFile.createReader(
       new org.apache.hadoop.fs.Path(p), org.apache.orc.OrcFile.readerOptions(conf))
     try {
-      assert(CompressionNames(ours.postScript.compression) == ref.getCompressionKind.name(), s"$p codec")
-      assert(ours.footer.numberOfRows == ref.getNumberOfRows, s"$p rows")
-      assert(ours.footer.contentLength == ref.getContentLength, s"$p content length")
       val refStripes = ref.getStripes.asScala.toSeq
-      assert(ours.footer.stripes.length == refStripes.length, s"$p stripe count")
-      ours.footer.stripes.zip(refStripes).zipWithIndex.foreach { case ((o, r), i) =>
-        assert(o.offset == r.getOffset, s"$p stripe $i offset")
-        assert(o.indexLength == r.getIndexLength, s"$p stripe $i index")
-        assert(o.dataLength == r.getDataLength, s"$p stripe $i data")
-        assert(o.footerLength == r.getFooterLength, s"$p stripe $i footer")
-        assert(o.numberOfRows == r.getNumberOfRows, s"$p stripe $i rows")
+      assert(ours.length == refStripes.length, s"$p stripe count")
+      ours.zip(refStripes).zipWithIndex.foreach { case ((o, r), i) =>
+        assert(o.getAs[String]("path") == p && o.getAs[Int]("stripe") == i, s"$p stripe $i")
+        assert(o.getAs[String]("compression") == ref.getCompressionKind.name(), s"$p codec")
+        assert(o.getAs[Long]("file_rows") == ref.getNumberOfRows, s"$p rows")
+        assert(o.getAs[Long]("offset") == r.getOffset, s"$p stripe $i offset")
+        assert(o.getAs[Long]("index_bytes") == r.getIndexLength, s"$p stripe $i index")
+        assert(o.getAs[Long]("data_bytes") == r.getDataLength, s"$p stripe $i data")
+        assert(o.getAs[Long]("footer_bytes") == r.getFooterLength, s"$p stripe $i footer")
+        assert(o.getAs[Long]("rows") == r.getNumberOfRows, s"$p stripe $i rows")
       }
-      // type tree: flatten the reference TypeDescription pre-order and
-      // compare kinds + struct field names
-      def flat(t: org.apache.orc.TypeDescription): Seq[org.apache.orc.TypeDescription] =
-        t +: Option(t.getChildren).map(_.asScala.toSeq).getOrElse(Nil).flatMap(flat)
-      val refTypes = flat(ref.getSchema)
-      assert(ours.footer.types.length == refTypes.length, s"$p type count")
-      ours.footer.types.zip(refTypes).foreach { case (o, r) =>
-        assert(KindNames(o.kind) == r.getCategory.name()
-          .replace("TIMESTAMP_INSTANT", "TIMESTAMP_INSTANT"), s"$p type kind ${o.kind} vs ${r.getCategory}")
-      }
-      // integer column statistics
-      val refStats = ref.getStatistics
-      assert(ours.footer.statistics.length == refStats.length, s"$p stats count")
-      ours.footer.statistics.zip(refStats).zipWithIndex.foreach { case ((o, r), i) =>
-        assert(o.numberOfValues == r.getNumberOfValues, s"$p col $i numberOfValues")
-        assert(o.hasNull == r.hasNull, s"$p col $i hasNull")
-        r match {
-          case is: org.apache.orc.IntegerColumnStatistics if r.getNumberOfValues > 0 =>
-            val oi = o.intStats.getOrElse(fail2(s"$p col $i: ref has int stats, ours missing"))
-            assert(oi.min.contains(is.getMinimum), s"$p col $i min")
-            assert(oi.max.contains(is.getMaximum), s"$p col $i max")
-            if (is.isSumDefined) assert(oi.sum.contains(is.getSum), s"$p col $i sum")
-          case _ => ()
-        }
-      }
+      assert(ours.map(_.getAs[Long]("rows")).sum == ref.getNumberOfRows, s"$p stripe rows sum")
+      ours.length
     } finally ref.close()
   }
-
-  private def fail2(msg: String): Nothing = throw new AssertionError(msg)
 
   test("Spark-written ORC across all writable codecs matches orc-core field-for-field") {
     val spark = TestSpark.spark
@@ -90,8 +68,7 @@ class OrcMetaSpec extends AnyFunSuite {
         .option("orc.stripe.size", (256 * 1024).toString)
         .orc(big)
       val multi = partFiles(big)
-      multi.foreach(compareFile)
-      assert(OrcMeta.readTail(multi.head).footer.stripes.length > 1, "expected several stripes")
+      assert(multi.map(compareFile).forall(_ > 1), "expected several stripes")
     } finally {
       def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
       rm(dir)
@@ -131,30 +108,64 @@ class OrcMetaSpec extends AnyFunSuite {
         .coalesce(1).write.option("compression", "zlib").orc(out)
       val p = partFiles(out).head
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
-      def withBytes[T](b: Array[Byte])(f: java.io.RandomAccessFile => T): T = {
+      def withBytes[T](b: Array[Byte])(f: String => T): T = {
         val tmp = java.io.File.createTempFile("orc_hostile", ".orc")
         try {
           java.nio.file.Files.write(tmp.toPath, b)
-          val raf = new java.io.RandomAccessFile(tmp, "r")
-          try f(raf)
-          finally raf.close()
+          f(tmp.getPath)
         } finally tmp.delete()
       }
       // truncated to a stub
-      intercept[OrcMetaError] { withBytes(bytes.take(8))(OrcMeta.readTail) }
+      intercept[OrcMetaError] { withBytes(bytes.take(8))(OrcMeta.readTail(_)) }
       // absurd postscript length
       val badPs = bytes.clone(); badPs(badPs.length - 1) = 0xff.toByte
-      intercept[OrcMetaError] { withBytes(badPs)(OrcMeta.readTail) }
-      // byte-flip fuzz over the last 2 KiB (the region we parse)
+      intercept[OrcMetaError] { withBytes(badPs)(OrcMeta.readTail(_)) }
+      // byte-flip fuzz over the last 2 KiB (the tail region)
       val rnd = new scala.util.Random(186)
       val window = math.min(2048, bytes.length)
       for (_ <- 0 until 400) {
         val mutated = bytes.clone()
         val at = bytes.length - 1 - rnd.nextInt(window)
         mutated(at) = (mutated(at) ^ (1 + rnd.nextInt(255))).toByte
-        try { withBytes(mutated)(OrcMeta.readTail); () }
+        try { withBytes(mutated)(OrcMeta.readTail(_)); () }
         catch { case _: OrcMetaError => () }
       }
+    } finally {
+      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
+      rm(dir)
+    }
+  }
+
+  test("a postscript declaring tail lengths or a block size orc-core cannot hold is refused before it allocates") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("orcmeta_alloc").toFile
+    try {
+      val out = new java.io.File(dir, "t").getPath
+      (0 until 5000).map(i => (i.toLong, s"x$i")).toDF("id", "s")
+        .coalesce(1).write.option("compression", "zlib").orc(out)
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(partFiles(out).head))
+      val psLen = bytes.last & 0xff
+      val body = bytes.dropRight(1 + psLen)
+      val ps = org.apache.orc.OrcProto.PostScript.parseFrom(bytes.slice(bytes.length - 1 - psLen, bytes.length - 1))
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+      def refused(what: String, edit: org.apache.orc.OrcProto.PostScript.Builder => Unit): Unit = {
+        val b = ps.toBuilder; edit(b)
+        val psBytes = b.build().toByteArray
+        val file = new java.io.File(dir, s"$what.orc")
+        java.nio.file.Files.write(file.toPath, body ++ psBytes :+ psBytes.length.toByte)
+        val before = mx.getCurrentThreadAllocatedBytes
+        val e = intercept[OrcMetaError](OrcMeta.readTail(file.getPath))
+        val allocated = mx.getCurrentThreadAllocatedBytes - before
+        assert(e.getMessage.contains(file.getPath), s"$what: ${e.getMessage}")
+        assert(allocated < (16L << 20), s"$what: refusing allocated $allocated bytes")
+      }
+      refused("metadata", _.setMetadataLength(1L << 30))
+      refused("footer", _.setFooterLength(bytes.length.toLong))
+      refused("stripe_stats", _.setStripeStatisticsLength(1L << 40))
+      refused("block_size", _.setCompressionBlockSize(1L << 30))
+      // the unedited postscript still reads
+      assert(OrcMeta.readTail(partFiles(out).head).getFooter.getNumberOfRows == 5000)
     } finally {
       def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
       rm(dir)

@@ -6,7 +6,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 For each query dir under verifyOutDir: read the Spark parquet result,
 run the matching oracle SQL from oracle_sql.json in DuckDB against the
 sfDir tables, sort columns by name + rows by all values, and compare.
-Queries without oracle SQL get a rows-only (>=0) check.
+Queries without oracle SQL get a rows-only (>=0) check. An oracle key
+with no result directory (the lane threw in Verify) counts as a failure.
 """
 import json
 import math
@@ -48,6 +49,9 @@ def main():
     import os
 
     ok = fail = rows_only = 0
+    for name in sorted(set(oracle) - set(os.listdir(out_dir))):
+        fail += 1
+        print(f"  [FAIL-missing] {name}: no result directory")
     for name in sorted(os.listdir(out_dir)):
         if name == "oracle_sql.json":
             continue

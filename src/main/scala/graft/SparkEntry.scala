@@ -3029,12 +3029,13 @@ object SparkEntry {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     // Arrow IPC cycle: each (event_type, shard) bucket's events become
     // a REAL multi-batch Arrow file written by Arrow Java (the
-    // reference producer on the Spark classpath), decoded end to end
-    // by OUR reader (footer walk, flatbuffers parse, validity/offset
-    // buffer decode; requires verify id/tag/val/flag per row), plus a
-    // require-only ZSTD-compressed lane (our writer -> our reader).
-    // Closed forms: tag = "t"+(id%101), val = id%7. Live two-direction
-    // conformance incl. lz4/zstd bodies + dictionaries: ArrowIpcSpec.
+    // reference producer on the Spark classpath), read end to end by
+    // the ArrowIpc facade (footer and block bounds, Arrow Java's
+    // message parse and vector load, the Spark face; requires verify
+    // id/tag/val/flag per row), plus require-only ZSTD id, map and
+    // run-end-encoded lanes, also written by Arrow Java. Closed forms:
+    // tag = "t"+(id%101), val = id%7. lz4/zstd bodies, dictionaries
+    // and hostile bytes: ArrowIpcSpec.
     "q_arrow" ->
       """SELECT event_type,
         |  count(*) AS n_rows,

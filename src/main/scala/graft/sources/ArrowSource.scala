@@ -1,37 +1,36 @@
 package graft.sources
 
+import java.nio.channels.FileChannel
+import java.nio.file.Paths
+import java.nio.file.StandardOpenOption.{CREATE, TRUNCATE_EXISTING, WRITE}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 face for Arrow IPC files:
+/** DataSource V2 face for Arrow IPC files (`.arrow`, Feather v2):
   * `spark.read.format("arrowipc").load(path...)` and
   * `df.write.format("arrowipc").save(dir)`.
   *
-  * Spark-first shape: schema comes from the file FOOTER (tail-only
-  * driver reads), one InputPartition per record-batch block (the
-  * format's own parallelism unit — a 10k-batch shard fans out to 10k
-  * independently fetchable tasks), and COLUMN PRUNING is pushed into
-  * the decoder ([[ArrowIpc.decodeBatchMessage]]'s `wanted` overload):
-  * a pruned column's buffers are never materialized — on compressed
-  * files its LZ4/ZSTD work is skipped entirely, which
-  * ArrowSourceSpec proves by poisoning a pruned column's compressed
-  * buffer and reading successfully around it.
+  * Reads take the schema from the file footer (tail-only driver
+  * reads) and plan one InputPartition per record batch. Pruned
+  * columns' buffers are dropped before Arrow Java loads a batch
+  * ([[ArrowIpc]]'s `readBatch`), so their LZ4/ZSTD work never runs;
+  * ArrowSourceSpec poisons a pruned column's buffer to prove it.
   *
-  * Writes are shard-per-partition (`part-NNNNN.arrow`, the
-  * HuggingFace-datasets shard shape), task-committed via tmp-rename
-  * so failed attempts never surface; `option("codec", "zstd"|"lz4")`
-  * compresses bodies through the in-tree codecs; SaveMode.Overwrite
-  * maps to SupportsTruncate.
-  *
-  * Scope: the FILE format (`.arrow`, Feather v2). Streams
-  * (`.arrows`) have no index and stay on [[ArrowIpc.readStreamBytes]].
-  */
+  * Writes are one `part-NNNNN.arrow` shard per partition through
+  * ArrowFileWriter, committed by tmp-rename so failed attempts never
+  * surface; `option("codec", "zstd"|"lz4")` compresses bodies and
+  * SaveMode.Overwrite maps to SupportsTruncate. Streams (`.arrows`)
+  * have no index and stay on [[ArrowIpc.readStreamBytes]]. */
 final class ArrowSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "arrowipc"
 
@@ -54,11 +53,8 @@ final class ArrowSource extends TableProvider with DataSourceRegister {
     expanded
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val ps = paths(options)
-    val f = ArrowSource.footerOf(ps.head)
-    ArrowIpc.sparkSchema(f.schema)
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    ArrowIpc.sparkSchema(ArrowIpc.footer(paths(options).head).getSchema)
 
   override def getTable(
       schema: StructType,
@@ -70,38 +66,20 @@ final class ArrowSource extends TableProvider with DataSourceRegister {
     val rawPath = Option(opts.get("path"))
     val expanded = try paths(opts)
     catch { case _: IllegalArgumentException if rawPath.isDefined => Seq.empty }
-    new ArrowTable(expanded, rawPath, schema,
-      Option(opts.get("codec")).map(ArrowTable.codecOf).getOrElse(-1))
+    val codec = Option(opts.get("codec")).getOrElse("none")
+    ArrowWrite.codecType(codec) // refuse an unknown codec at plan time
+    new ArrowTable(expanded, rawPath, schema, codec)
   }
 
   override def supportsExternalMetadata(): Boolean = true
-}
-
-private[sources] object ArrowSource {
-  def footerOf(path: String): ArrowIpc.Footer = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try ArrowIpc.footer(ArrowIpc.rangedOf(raf), raf.length())
-    finally raf.close()
-  }
-}
-
-private object ArrowTable {
-  def codecOf(name: String): Int = name.toLowerCase match {
-    case "none" | "" => -1
-    case "lz4" => 0
-    case "zstd" => 1
-    case other => throw new IllegalArgumentException(s"arrowipc: unknown codec '$other' (none|lz4|zstd)")
-  }
 }
 
 private final class ArrowTable(
     paths: Seq[String],
     rawPath: Option[String],
     tableSchema: StructType,
-    writeCodec: Int)
-    extends Table
-    with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    writeCodec: String)
+    extends Table with SupportsRead with SupportsWrite {
   override def name(): String = {
     val p = paths.headOption.orElse(rawPath).getOrElse("?")
     s"arrowipc($p${if (paths.length > 1) s" +${paths.length - 1}" else ""})"
@@ -113,17 +91,14 @@ private final class ArrowTable(
     require(paths.nonEmpty, "arrowipc: no input files to read")
     new ArrowScanBuilder(paths, tableSchema)
   }
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder = {
-    val dir = rawPath.getOrElse(
-      throw new IllegalArgumentException("arrowipc: write needs a single directory path"))
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val dir = rawPath.getOrElse(throw new IllegalArgumentException("arrowipc: write needs a single directory path"))
     new ArrowWriteBuilder(dir, info.schema(), writeCodec)
   }
 }
 
 private final class ArrowScanBuilder(paths: Seq[String], full: StructType)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = full
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
   override def build(): Scan = new ArrowScan(paths, required)
@@ -140,7 +115,7 @@ private final class ArrowScan(paths: Seq[String], required: StructType) extends 
   override def planInputPartitions(): Array[InputPartition] =
     paths.flatMap { p =>
       // driver cost: one footer (tail) read per file — never batch data
-      ArrowSource.footerOf(p).batches.indices.map(i => ArrowBatchPartition(p, i))
+      ArrowIpc.footer(p).getRecordBatches.asScala.indices.map(i => ArrowBatchPartition(p, i))
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -158,45 +133,13 @@ private final class ArrowPartitionReader(path: String, batchIdx: Int, required: 
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      val ranged = ArrowIpc.rangedOf(raf)
-      val f = ArrowIpc.footer(ranged, raf.length())
-      val wantedNames = required.fieldNames.toSet
-      val fieldIdx = f.schema.fields.zipWithIndex.filter { case (fld, _) => wantedNames.contains(fld.name) }
-      require(fieldIdx.length == required.length, s"arrowipc: schema drift in $path")
-      val wanted = fieldIdx.map(_._2).toSet
-      // dictionaries referenced anywhere in a WANTED field's subtree
-      // must decode; others are skipped by id BEFORE any body (or
-      // codec) work — pruning applies to dictionaries too
-      val neededDictIds =
-        fieldIdx.map(_._1).flatMap(ArrowIpc.flatten).filter(_.dictId >= 0).map(_.dictId).toSet
-      val dicts = f.dictionaries.flatMap { blk =>
-        val head = ranged(blk.offset, blk.metaLen)
-        val id = ArrowIpc.dictionaryIdOf(head, 0)
-        if (!neededDictIds.contains(id)) None
-        else {
-          // body only — the metadata bytes were already read
-          val body = ranged(blk.offset + blk.metaLen, blk.bodyLen.toInt)
-          Some(ArrowIpc.decodeDictionaryMessage(head ++ body, 0, f.schema))
-        }
-      }.toMap
-      val blk = f.batches(batchIdx)
-      val msg = ranged(blk.offset, (blk.metaLen.toLong + blk.bodyLen).toInt)
-      val batch = ArrowIpc.decodeBatchMessage(msg, 0, f.schema, dicts, wanted.contains)
-      // required-order column views
-      val byName = f.schema.fields.map(_.name).zipWithIndex.toMap
-      val cols = required.fieldNames.map(n => byName(n))
-      val aFields = cols.map(c => f.schema.fields(c))
-      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(required)
-      (0 until batch.rows).iterator.map { r =>
-        val vals = cols.indices.map { k =>
-          ArrowIpc.toRowValue(aFields(k), batch.columns(cols(k))(r))
-        }
-        toCatalyst(Row.fromSeq(vals)).asInstanceOf[InternalRow]
-      }.toVector.iterator
-    } finally raf.close()
+    val (schema, batch) = ArrowIpc.readBatch(path, batchIdx, required.fieldNames.toSet)
+    // rows hold the kept columns in file order; face them in `required` order
+    val fileOrder = schema.getFields.asScala.map(_.getName).filter(required.fieldNames.toSet)
+    require(fileOrder.length == required.length, s"arrowipc: schema drift in $path")
+    val at = required.fieldNames.map(fileOrder.indexOf(_))
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(required)
+    batch.iterator.map(r => toCatalyst(Row.fromSeq(at.map(r.get))).asInstanceOf[InternalRow])
   }
 
   private var current: InternalRow = _
@@ -207,95 +150,157 @@ private final class ArrowPartitionReader(path: String, batchIdx: Int, required: 
 
 // --------------------------------------------------------------- write side
 
-private object ArrowWriteSupport {
-  /** Spark type -> Arrow field (the writer matrix; unsupported types
-    * refuse loudly at plan time, not per task). */
-  def toAField(f: org.apache.spark.sql.types.StructField): ArrowIpc.AField = {
-    import org.apache.spark.sql.types._
-    val tpe: (ArrowIpc.AType, Seq[ArrowIpc.AField]) = f.dataType match {
-      case ByteType => (ArrowIpc.AInt(8, signed = true), Nil)
-      case ShortType => (ArrowIpc.AInt(16, signed = true), Nil)
-      case IntegerType => (ArrowIpc.AInt(32, signed = true), Nil)
-      case LongType => (ArrowIpc.AInt(64, signed = true), Nil)
-      case FloatType => (ArrowIpc.AFloat(1), Nil)
-      case DoubleType => (ArrowIpc.AFloat(2), Nil)
-      case StringType => (ArrowIpc.AUtf8, Nil)
-      case BinaryType => (ArrowIpc.ABinary, Nil)
-      case BooleanType => (ArrowIpc.ABool, Nil)
-      case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-        (ArrowIpc.AInt(64, signed = false), Nil) // the u64 carrier round-trips
-      case DateType => (ArrowIpc.ADate(0), Nil)
-      case TimestampType => (ArrowIpc.ATimestamp(2, "UTC"), Nil)
-      case ArrayType(et, nullable) =>
-        (ArrowIpc.AList, Seq(toAField(StructField("item", et, nullable))))
-      case st: StructType => (ArrowIpc.AStruct, st.fields.toSeq.map(toAField))
+/** The write side through ArrowFileWriter: Spark's write matrix as
+  * Arrow fields and Spark rows into vectors. */
+private[sources] object ArrowWrite {
+  import org.apache.arrow.memory.RootAllocator
+  import org.apache.arrow.vector._
+  import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
+  import org.apache.arrow.vector.compression.CompressionUtil.CodecType
+  import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit}
+  import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
+  import org.apache.spark.sql.types._
+
+  /** Spark type -> Arrow field, the write matrix: unsupported types
+    * refuse at plan time. decimal(20,0) writes back as u64 and
+    * timestamps as UTC microseconds. */
+  def arrowField(name: String, dt: DataType, nullable: Boolean): Field = {
+    def leaf(t: ArrowType) = new Field(name, new FieldType(nullable, t, null), null)
+    def nested(t: ArrowType, kids: Field*) = new Field(name, new FieldType(nullable, t, null), kids.asJava)
+    dt match {
+      case ByteType => leaf(new ArrowType.Int(8, true))
+      case ShortType => leaf(new ArrowType.Int(16, true))
+      case IntegerType => leaf(new ArrowType.Int(32, true))
+      case LongType => leaf(new ArrowType.Int(64, true))
+      case FloatType => leaf(new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
+      case DoubleType => leaf(new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))
+      case StringType => leaf(ArrowType.Utf8.INSTANCE)
+      case BinaryType => leaf(ArrowType.Binary.INSTANCE)
+      case BooleanType => leaf(ArrowType.Bool.INSTANCE)
+      case d: DecimalType if d.precision == 20 && d.scale == 0 => leaf(new ArrowType.Int(64, false))
+      case DateType => leaf(new ArrowType.Date(org.apache.arrow.vector.types.DateUnit.DAY))
+      case TimestampType => leaf(new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+      case ArrayType(et, cn) => nested(ArrowType.List.INSTANCE, arrowField("item", et, cn))
+      case st: StructType => nested(ArrowType.Struct.INSTANCE, st.fields.map(c => arrowField(c.name, c.dataType, c.nullable)): _*)
       case MapType(kt, vt, vcn) =>
-        (ArrowIpc.AMap(keysSorted = false), Seq(ArrowIpc.AField("entries", nullable = false, ArrowIpc.AStruct,
-          Seq(toAField(StructField("key", kt, nullable = false)), toAField(StructField("value", vt, vcn))))))
-      case dt => throw new IllegalArgumentException(s"arrowipc write: unsupported type $dt for '${f.name}'")
+        nested(new ArrowType.Map(false), new Field("entries", new FieldType(false, ArrowType.Struct.INSTANCE, null),
+          java.util.List.of(arrowField("key", kt, nullable = false), arrowField("value", vt, vcn))))
+      case other => throw new IllegalArgumentException(s"arrowipc write: unsupported type $other for '$name'")
     }
-    ArrowIpc.AField(f.name, f.nullable, tpe._1, tpe._2)
   }
 
-  /** Spark external value -> ArrowIpc raw writer value. */
-  def toRaw(dt: org.apache.spark.sql.types.DataType, v: Any): Any = {
-    import org.apache.spark.sql.types._
-    if (v == null) null
-    else dt match {
-      case DateType =>
-        v match {
-          case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-          case d: java.time.LocalDate => d.toEpochDay.toInt
-        }
-      case TimestampType =>
-        v match {
-          case t: java.sql.Timestamp =>
-            // Spark's fromJavaTimestamp formula — getTime already
-            // carries the sub-second millis (and floors correctly for
-            // pre-epoch instants); only the sub-milli remainder of
-            // getNanos may be added on top
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-        }
-      case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-        val big = v.asInstanceOf[java.math.BigDecimal].toBigIntegerExact
+  def codecType(name: String): CodecType = name.toLowerCase match {
+    case "none" | "" => CodecType.NO_COMPRESSION
+    case "lz4" => CodecType.LZ4_FRAME
+    case "zstd" => CodecType.ZSTD
+    case other => throw new IllegalArgumentException(s"arrowipc: unknown codec '$other' (none|lz4|zstd)")
+  }
+
+  private val BatchRows = 4096
+
+  /** Writes Spark rows of `schema` as an Arrow IPC file through
+    * ArrowFileWriter, in record batches of `BatchRows`; `codec` is
+    * none, lz4 or zstd. `finish` ends the file, `close` frees it. */
+  final class FileWriter(out: java.nio.channels.WritableByteChannel, schema: StructType, codec: String)
+      extends AutoCloseable {
+    private val alloc = new RootAllocator()
+    private val root = VectorSchemaRoot.create(
+      new Schema(schema.fields.map(f => arrowField(f.name, f.dataType, f.nullable)).toSeq.asJava), alloc)
+    private val setters = schema.fields.indices.map(c => setter(root.getVector(c), schema.fields(c).dataType))
+    private val w = ArrowIpc.fileWriter(root, out, codecType(codec))
+    private var n = 0
+    w.start()
+    root.allocateNew()
+
+    def write(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+      var c = 0
+      while (c < setters.length) { setters(c)(r, c, n); c += 1 }
+      n += 1
+      if (n == BatchRows) flush()
+    }
+
+    private def flush(): Unit = { root.setRowCount(n); w.writeBatch(); root.allocateNew(); n = 0 }
+
+    def finish(): Unit = { if (n > 0) flush(); w.end() }
+
+    private var closed = false
+    def close(): Unit = if (!closed) { closed = true; try w.close() finally try root.close() finally alloc.close() }
+  }
+
+  private type Getters = org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+
+  /** Writes field `ord` of a Spark row or array into slot `i` of `v`. */
+  private def setter(v: FieldVector, dt: DataType): (Getters, Int, Int) => Unit = {
+    val set: (Getters, Int, Int) => Unit = (v, dt) match {
+      case (x: TinyIntVector, _) => (g, o, i) => x.setSafe(i, g.getByte(o))
+      case (x: SmallIntVector, _) => (g, o, i) => x.setSafe(i, g.getShort(o))
+      case (x: IntVector, _) => (g, o, i) => x.setSafe(i, g.getInt(o))
+      case (x: BigIntVector, _) => (g, o, i) => x.setSafe(i, g.getLong(o))
+      case (x: Float4Vector, _) => (g, o, i) => x.setSafe(i, g.getFloat(o))
+      case (x: Float8Vector, _) => (g, o, i) => x.setSafe(i, g.getDouble(o))
+      case (x: VarCharVector, _) => (g, o, i) => x.setSafe(i, g.getUTF8String(o).getBytes)
+      case (x: VarBinaryVector, _) => (g, o, i) => x.setSafe(i, g.getBinary(o))
+      case (x: BitVector, _) => (g, o, i) => x.setSafe(i, if (g.getBoolean(o)) 1 else 0)
+      case (x: UInt8Vector, _) => (g, o, i) =>
+        val big = g.getDecimal(o, 20, 0).toJavaBigDecimal.toBigIntegerExact
         require(big.signum >= 0 && big.bitLength <= 64, s"arrowipc write: $big outside uint64")
-        java.lang.Long.valueOf(big.longValue) // raw two's-complement low 64 bits
-      case ArrayType(et, _) => v.asInstanceOf[scala.collection.Seq[Any]].toVector.map(e => toRaw(et, e))
-      case st: StructType =>
-        val r = v.asInstanceOf[Row]
-        st.fields.toIndexedSeq.zipWithIndex.map { case (f, i) => toRaw(f.dataType, r.get(i)) }
-      case MapType(kt, vt, _) =>
-        v.asInstanceOf[scala.collection.Map[Any, Any]].toVector
-          .map { case (k, mv) => Vector(toRaw(kt, k), toRaw(vt, mv)) }
-      case _ => v
+        x.setSafe(i, big.longValue) // raw two's-complement low 64 bits
+      case (x: DateDayVector, _) => (g, o, i) => x.setSafe(i, g.getInt(o))
+      // Spark's internal microseconds already floor before the epoch
+      case (x: TimeStampMicroTZVector, _) => (g, o, i) => x.setSafe(i, g.getLong(o))
+      case (x: MapVector, MapType(kt, vt, _)) =>
+        val entries = x.getDataVector.asInstanceOf[StructVector]
+        val key = setter(entries.getChildrenFromFields.get(0), kt)
+        val value = setter(entries.getChildrenFromFields.get(1), vt)
+        (g, o, i) => {
+          val m = g.getMap(o)
+          val start = x.startNewValue(i)
+          (0 until m.numElements).foreach { j =>
+            entries.setIndexDefined(start + j)
+            key(m.keyArray, j, start + j)
+            value(m.valueArray, j, start + j)
+          }
+          x.endValue(i, m.numElements)
+        }
+      case (x: ListVector, ArrayType(et, _)) =>
+        val item = setter(x.getDataVector, et)
+        (g, o, i) => {
+          val a = g.getArray(o)
+          val start = x.startNewValue(i)
+          (0 until a.numElements).foreach(j => item(a, j, start + j))
+          x.endValue(i, a.numElements)
+        }
+      case (x: StructVector, st: StructType) =>
+        val kids = st.fields.indices.map(j => setter(x.getChildrenFromFields.get(j), st.fields(j).dataType))
+        (g, o, i) => {
+          val r = g.getStruct(o, st.length)
+          x.setIndexDefined(i)
+          kids.indices.foreach(j => kids(j)(r, j, i))
+        }
+      case (x, t) => throw new IllegalArgumentException(s"arrowipc write: no writer for $t into ${x.getClass.getSimpleName}")
     }
+    (g, o, i) => if (g.isNullAt(o)) v.setNull(i) else set(g, o, i)
   }
 }
 
-private final class ArrowWriteBuilder(dir: String, schema: StructType, codec: Int)
-    extends org.apache.spark.sql.connector.write.WriteBuilder
-    with org.apache.spark.sql.connector.write.SupportsTruncate {
+private final class ArrowWriteBuilder(dir: String, schema: StructType, codec: String)
+    extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
-  override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = { doTruncate = true; this }
-  override def build(): org.apache.spark.sql.connector.write.Write = {
+  override def truncate(): WriteBuilder = { doTruncate = true; this }
+  override def build(): Write = {
     val t = doTruncate
-    new org.apache.spark.sql.connector.write.Write {
+    new Write {
       // validate the schema at plan time
-      schema.fields.foreach(ArrowWriteSupport.toAField)
-      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-        new ArrowBatchWrite(dir, schema, codec, t)
+      schema.fields.foreach(f => ArrowWrite.arrowField(f.name, f.dataType, f.nullable))
+      override def toBatch: BatchWrite = new ArrowBatchWrite(dir, schema, codec, t)
     }
   }
 }
 
-private final case class ArrowCommitMessage(tmp: String, dst: String)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
+private final case class ArrowCommitMessage(tmp: String, dst: String) extends WriterCommitMessage
 
-private final class ArrowBatchWrite(dir: String, schema: StructType, codec: Int, truncate: Boolean)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo): org.apache.spark.sql.connector.write.DataWriterFactory = {
+private final class ArrowBatchWrite(dir: String, schema: StructType, codec: String, truncate: Boolean) extends BatchWrite {
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val d = new java.io.File(dir)
     if (!d.exists()) require(d.mkdirs(), s"arrowipc: cannot create $dir")
     if (truncate)
@@ -304,61 +309,44 @@ private final class ArrowBatchWrite(dir: String, schema: StructType, codec: Int,
         .foreach(_.delete())
     new ArrowWriterFactory(dir, schema, codec)
   }
-  override def commit(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach { m =>
       val c = m.asInstanceOf[ArrowCommitMessage]
       val ok = new java.io.File(c.tmp).renameTo(new java.io.File(c.dst))
       require(ok, s"arrowipc: commit rename ${c.tmp} -> ${c.dst} failed")
     }
-  override def abort(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case ArrowCommitMessage(tmp, _) => new java.io.File(tmp).delete()
       case _ => ()
     }
 }
 
-private final class ArrowWriterFactory(dir: String, schema: StructType, codec: Int)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new ArrowDataWriter(dir, schema, codec, partitionId, taskId)
+private final class ArrowWriterFactory(dir: String, schema: StructType, codec: String) extends DataWriterFactory {
+  override def createWriter(p: Int, task: Long): DataWriter[InternalRow] = new ArrowDataWriter(dir, schema, codec, p, task)
 }
 
-/** Buffers the partition's rows column-wise, encodes 4096-row record
-  * batches, writes `part-NNNNN.arrow.tmp`, and hands the rename to
-  * the driver-side commit (task-attempt isolation: the tmp name
-  * carries the task id, so a zombie attempt never clobbers the
-  * committed file). */
-private final class ArrowDataWriter(dir: String, schema: StructType, codec: Int, partitionId: Int, taskId: Long)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+/** Writes the partition's rows as 4096-row record batches to
+  * `part-NNNNN.arrow.<taskId>.tmp` and hands the rename to the
+  * driver-side commit (task-attempt isolation: the tmp name carries
+  * the task id, so a zombie attempt never clobbers the committed
+  * file). */
+private final class ArrowDataWriter(dir: String, schema: StructType, codec: String, partitionId: Int, taskId: Long)
+    extends DataWriter[InternalRow] {
 
-  private val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
-    .createToScalaConverter(schema)
-  private val aFields = schema.fields.toIndexedSeq.map(ArrowWriteSupport.toAField)
-  private val aSchema = ArrowIpc.ASchema(aFields)
-  private val cols = Array.fill(schema.length)(scala.collection.mutable.ArrayBuffer.empty[Any])
+  private val dst = f"$dir/part-$partitionId%05d.arrow"
+  private val tmp = s"$dst.$taskId.tmp"
+  private val out = new ArrowWrite.FileWriter(FileChannel.open(Paths.get(tmp), CREATE, WRITE, TRUNCATE_EXISTING),
+    schema, codec)
 
-  override def write(record: InternalRow): Unit = {
-    val row = toScala(record).asInstanceOf[Row]
-    var i = 0
-    while (i < schema.length) {
-      cols(i) += ArrowWriteSupport.toRaw(schema.fields(i).dataType, row.get(i))
-      i += 1
-    }
-  }
+  override def write(record: InternalRow): Unit = out.write(record)
 
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    val n = cols.headOption.map(_.length).getOrElse(0)
-    val batches = (0 until n by 4096).map { start =>
-      val m = math.min(4096, n - start)
-      (Array.tabulate(schema.length)(c => cols(c).slice(start, start + m).toArray), m)
-    }
-    val bytes = ArrowIpc.encodeFile(aSchema, if (n == 0) Nil else batches, codec)
-    val dst = f"$dir/part-$partitionId%05d.arrow"
-    val tmp = s"$dst.$taskId.tmp"
-    java.nio.file.Files.write(java.nio.file.Paths.get(tmp), bytes)
+  override def commit(): WriterCommitMessage = {
+    out.finish()
     ArrowCommitMessage(tmp, dst)
   }
 
-  override def abort(): Unit = ()
-  override def close(): Unit = ()
+  // rows stream into the tmp file as they arrive, so a failed attempt removes it
+  override def abort(): Unit = try out.close() finally java.nio.file.Files.deleteIfExists(Paths.get(tmp))
+  override def close(): Unit = out.close()
 }

@@ -14,7 +14,8 @@ import graft.core.MiniJson
   * Scale shape: an OCF is a header (schema JSON + codec + a 16-byte
   * sync marker) followed by independent blocks, each terminated by
   * the sync marker — the format is DESIGNED for byte-range splits.
-  * `scan` gives each task a byte range; the task scans forward to the
+  * The DSv2 face ([[AvroSource]], `spark.read.format("avroocf")`)
+  * gives each task a byte range; the task scans forward to the
   * first sync in its range and decodes blocks while `blockStart <
   * rangeEnd + 16` (the DataFileReader.pastSync rule, which assigns
   * boundary-straddling syncs to exactly one split). The driver reads
@@ -739,54 +740,6 @@ object AvroOcf {
     case (_, x) => x
   }
 
-  /** Ranged split scan: the driver reads each header only; every task
-    * owns a byte range, syncs into it, and decodes its blocks. */
-  def scan(spark: SparkSession, paths: Seq[String], splitBytes: Long = 32L << 20): DataFrame = {
-    req(paths.nonEmpty, "avro: no paths")
-    req(splitBytes >= (1 << 10), s"avro: split size $splitBytes")
-    val headers = paths.map { p =>
-      val raf = new java.io.RandomAccessFile(p, "r")
-      try {
-        val len = raf.length()
-        val h = readHeader(n => { raf.seek(0); val b = new Array[Byte](n); raf.readFully(b); b }, len)
-        (p, h, len)
-      } finally raf.close()
-    }
-    val canon0 = canonicalJson(headers.head._2.schema)
-    headers.foreach { case (p, h, _) =>
-      req(canonicalJson(h.schema) == canon0, s"avro: schema drift in $p")
-    }
-    val schema0 = headers.head._2.schema
-    val st = sparkType(schema0) match {
-      case s: StructType => s
-      case other => StructType(Seq(StructField("value", other, nullable = true)))
-    }
-    val topLevelRecord = schema0.isInstanceOf[VRecord]
-    val tasks = headers.flatMap { case (p, _, len) =>
-      val n = math.max(1L, (len + splitBytes - 1) / splitBytes)
-      (0L until n).map(i => (p, i * splitBytes, math.min(len, (i + 1) * splitBytes)))
-    }
-    val rdd = spark.sparkContext
-      .parallelize(tasks, math.max(1, math.min(tasks.length, spark.sparkContext.defaultParallelism)))
-      .mapPartitions { it =>
-        it.flatMap { case (p, s, e) =>
-          val raf = new java.io.RandomAccessFile(p, "r")
-          try {
-            val h = readHeader(n => { raf.seek(0); val b = new Array[Byte](n); raf.readFully(b); b }, raf.length())
-            blocksInRange(raf, h, s, e).flatMap { case (count, data) =>
-              val d = new Dec(data, 0, data.length)
-              (0L until count).map { _ =>
-                val v = decodeValue(h.schema, d, 0)
-                if (topLevelRecord) toRowValue(h.schema, v).asInstanceOf[Row]
-                else Row(toRowValue(h.schema, v))
-              }
-            }.toVector
-          } finally raf.close()
-        }
-      }
-    spark.createDataFrame(rdd, st)
-  }
-
   // ------------------------------------------------------------ q_avro
 
   private val QSchemaJson =
@@ -862,8 +815,8 @@ object AvroOcf {
     * the TOP-LEVEL RECORD's Spark schema must be declared up front;
     * shards whose header schema faces differently fail loudly with
     * the path named. Each micro-batch decodes whole files (the
-    * binaryFile source's unit); the ranged-split scan stays the batch
-    * path. */
+    * binaryFile source's unit); the DSv2 face's ranged splits stay the
+    * batch path. */
   def rowsStream(
       spark: SparkSession,
       dir: String,

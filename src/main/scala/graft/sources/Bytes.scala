@@ -55,7 +55,6 @@ object Bytes {
 
   def writeLe16(out: OutputStream, v: Int): Unit = { out.write(v); out.write(v >> 8) }
   def writeLe32(out: OutputStream, v: Long): Unit = { writeLe16(out, v.toInt); writeLe16(out, (v >> 16).toInt) }
-  def writeLe64(out: OutputStream, v: Long): Unit = { writeLe32(out, v); writeLe32(out, v >> 32) }
   def writeBe32(out: OutputStream, v: Int): Unit = { out.write(v >> 24); out.write(v >> 16); out.write(v >> 8); out.write(v) }
 
   // ------------------------------------------------------ in-place stores

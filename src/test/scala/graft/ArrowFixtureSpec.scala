@@ -1,14 +1,21 @@
 package graft
 
+import java.time.{Instant, LocalDate}
+
+import scala.jdk.CollectionConverters._
+
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit}
+import org.apache.arrow.vector.types.pojo.{ArrowType, Schema}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-ecosystem Arrow IPC conformance: committed pyarrow 16.1
   * fixtures (tools/gen_arrow_fixtures.py — the library HuggingFace
   * datasets writes through; every fixture re-read by pyarrow at
   * capture). Values are deterministic formulas of the row index,
-  * recomputed here. */
+  * recomputed here and read in the Spark face: dates as LocalDate,
+  * timestamps as Instant, structs as Row. */
 class ArrowFixtureSpec extends AnyFunSuite {
 
   private def fixture(name: String): Array[Byte] = {
@@ -18,25 +25,24 @@ class ArrowFixtureSpec extends AnyFunSuite {
     finally in.close()
   }
 
-  private def cols(batches: Seq[Batch]): Array[Vector[Any]] = {
-    val n = batches.map(_.columns.length).max
-    Array.tabulate(n)(c => batches.flatMap(_.columns(c)).toVector)
-  }
+  private def cols(batches: Seq[IndexedSeq[Row]]): Array[Vector[Any]] = ArrowJava.columns(batches)
+  private def names(schema: Schema): Seq[String] = schema.getFields.asScala.map(_.getName).toSeq
 
   /** Mirror of gen_arrow_fixtures.null_every: null when i % k == 3 % k. */
   private def nul(i: Int, k: Int): Boolean = i % k == 3 % k
 
-  private def checkTypesTable(schema: ASchema, batches: Seq[Batch], n: Int): Unit = {
+  private def checkTypesTable(schema: Schema, batches: Seq[IndexedSeq[Row]], n: Int): Unit = {
     val names = Seq("i8", "i16", "i32", "i64", "u8", "u16", "u32", "f2", "f4", "f8", "b", "s", "ls",
       "bin", "lbin", "fsb", "dec", "d32", "d64", "ts_s", "ts_ms", "ts_us", "ts_ns", "t32", "t64",
       "dur", "lst", "llst", "emb", "pos")
-    assert(schema.fields.map(_.name) == names)
-    assert(schema.fields(7).tpe == AFloat(0)) // half
-    assert(schema.fields(16).tpe == ADecimal(12, 3, 128))
-    assert(schema.fields(21).tpe == ATimestamp(2, "UTC"))
-    assert(schema.fields(19).tpe == ATimestamp(0, ""))
-    assert(schema.fields(23).tpe == ATime(1, 32))
-    assert(schema.fields(28).tpe == AFixedSizeList(3))
+    assert(this.names(schema) == names)
+    def tpe(i: Int): ArrowType = schema.getFields.get(i).getType
+    assert(tpe(7) == new ArrowType.FloatingPoint(FloatingPointPrecision.HALF))
+    assert(tpe(16) == new ArrowType.Decimal(12, 3, 128))
+    assert(tpe(21) == new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+    assert(tpe(19) == new ArrowType.Timestamp(TimeUnit.SECOND, null))
+    assert(tpe(23) == new ArrowType.Time(TimeUnit.MILLISECOND, 32))
+    assert(tpe(28) == new ArrowType.FixedSizeList(3))
     val c = cols(batches)
     assert(c(0).length == n)
     val byName = names.zipWithIndex.toMap
@@ -69,36 +75,36 @@ class ArrowFixtureSpec extends AnyFunSuite {
       if (!nul(i, 5)) assert(java.util.Arrays.equals(
         at("fsb", i).asInstanceOf[Array[Byte]], Array.fill(5)((i % 256).toByte)), s"fsb[$i]")
       chk("dec", 6, i, new java.math.BigDecimal(java.math.BigInteger.valueOf((i - 4) * 1234567L), 3))
-      chk("d32", 7, i, 19000 + i)
-      chk("d64", 8, i, (19000L + i) * 86400000L)
-      chk("ts_s", 9, i, 1700000000L + i)
-      chk("ts_ms", 10, i, 1700000000000L + i)
-      chk("ts_us", 4, i, 1700000000000000L + i)
-      chk("ts_ns", 5, i, 1700000000000000000L + i)
+      chk("d32", 7, i, LocalDate.ofEpochDay(19000L + i))
+      chk("d64", 8, i, LocalDate.ofEpochDay(19000L + i))
+      chk("ts_s", 9, i, Instant.ofEpochSecond(1700000000L + i))
+      chk("ts_ms", 10, i, Instant.ofEpochMilli(1700000000000L + i))
+      chk("ts_us", 4, i, Instant.ofEpochSecond(1700000000L, i * 1000L))
+      chk("ts_ns", 5, i, Instant.ofEpochSecond(1700000000L, i.toLong))
       chk("t32", 6, i, (i * 99991) % 86400000)
       chk("t64", 7, i, i * 1000001L)
       chk("dur", 8, i, i * 777L)
       chk("lst", 9, i, Vector.tabulate(i % 4)(j => (i * 10 + j).toLong))
       chk("llst", 10, i, Vector.tabulate(i % 3)(j => i + j * 0.25))
       chk("emb", 4, i, Vector(i * 1.0f, i * 2.0f, i * 3.0f))
-      chk("pos", 5, i, Vector(i, s"y$i"))
+      chk("pos", 5, i, Row(i, s"y$i"))
     }
   }
 
   test("types.arrow: full type matrix, 3 batches, nulls everywhere") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("types.arrow"))
-    assert(batches.map(_.rows) == Seq(9, 9, 5))
+    assert(batches.map(_.length) == Seq(9, 9, 5))
     checkTypesTable(schema, batches, 23)
   }
 
   test("types.arrows: stream format, 4 batches") {
     val (schema, batches) = ArrowIpc.readStreamBytes(fixture("types.arrows"))
-    assert(batches.map(_.rows) == Seq(7, 7, 7, 2))
+    assert(batches.map(_.length) == Seq(7, 7, 7, 2))
     checkTypesTable(schema, batches, 23)
   }
 
-  private def checkBig(schema: ASchema, batches: Seq[Batch]): Unit = {
-    assert(schema.fields.map(_.name) == Seq("x", "w", "v"))
+  private def checkBig(schema: Schema, batches: Seq[IndexedSeq[Row]]): Unit = {
+    assert(names(schema) == Seq("x", "w", "v"))
     val c = cols(batches)
     assert(c(0).length == 4000)
     for (i <- 0 until 4000) {
@@ -120,13 +126,14 @@ class ArrowFixtureSpec extends AnyFunSuite {
 
   test("comp_zstd.arrows: compressed stream format") {
     val (schema, batches) = ArrowIpc.readStreamBytes(fixture("comp_zstd.arrows"))
-    assert(batches.map(_.rows).sum == 4000)
+    assert(batches.map(_.length).sum == 4000)
     checkBig(schema, batches)
   }
 
   test("dict.arrow: pyarrow dictionary-encoded utf8 resolves") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("dict.arrow"))
-    assert(schema.fields.head.dictId >= 0 && schema.fields.head.dictIndexBits == 16)
+    val enc = schema.getFields.get(0).getDictionary
+    assert(enc != null && enc.getIndexType.getBitWidth == 16)
     val words = Seq("alpha", "beta", "gamma", "δelta", "epsilon")
     val c = cols(batches)
     for (i <- 0 until 50) {
@@ -137,7 +144,7 @@ class ArrowFixtureSpec extends AnyFunSuite {
 
   test("empty.arrow: zero-row table keeps its full schema") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("empty.arrow"))
-    assert(schema.fields.length == 30)
-    assert(batches.map(_.rows).sum == 0)
+    assert(schema.getFields.size == 30)
+    assert(batches.map(_.length).sum == 0)
   }
 }

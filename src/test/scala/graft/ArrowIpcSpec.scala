@@ -1,17 +1,21 @@
 package graft
 
+import java.time.{Instant, LocalDate}
+
+import scala.jdk.CollectionConverters._
+
+import graft.ArrowJava._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.types.TimeUnit
+import org.apache.arrow.vector.types.pojo.ArrowType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Arrow IPC conformance — LIVE against the reference implementation:
-  * Arrow Java ships on the Spark classpath, so every run cross-checks
-  * BOTH directions (our reader over ArrowFileWriter/ArrowStreamWriter
+/** Arrow IPC through the facade, with Arrow Java (on the Spark
+  * classpath) as the producer: ArrowFileWriter/ArrowStreamWriter
   * output — scalar matrix, nulls, multi-batch, dictionary, lz4/zstd
-  * body compression; Arrow Java's readers over our writer's output,
-  * incl. nested types and both codecs via arrow-compression).
-  * Cross-ecosystem pyarrow fixtures are pinned in
-  * ArrowFixtureSpec. */
+  * body compression — read back in the Spark face, plus the facade's
+  * bounds on hostile bytes. Cross-ecosystem pyarrow fixtures are
+  * pinned in ArrowFixtureSpec. */
 class ArrowIpcSpec extends AnyFunSuite {
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -88,17 +92,18 @@ class ArrowIpcSpec extends AnyFunSuite {
         val bytes = bos.toByteArray
 
         val (as, batches) = ArrowIpc.readFileBytes(bytes)
-        assert(as.fields.map(_.name) == Seq("i8", "i16", "i32", "i64", "u8", "u16", "u32", "f4", "f8",
+        val names = as.getFields.asScala.map(_.getName).toSeq
+        assert(names == Seq("i8", "i16", "i32", "i64", "u8", "u16", "u32", "f4", "f8",
           "b", "s", "bin", "fsb", "dec", "d32", "d64", "ts", "t64", "dur"))
-        assert(as.fields(4).tpe == AInt(8, signed = false))
-        assert(as.fields(16).tpe == ATimestamp(2, "UTC"))
-        assert(batches.map(_.rows) == Seq(6, 0, 5))
-        val col = as.fields.map(_.name).zipWithIndex.toMap
+        assert(as.getFields.get(4).getType == new ArrowType.Int(8, false))
+        assert(as.getFields.get(16).getType == new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+        assert(batches.map(_.length) == Seq(6, 0, 5))
+        val col = names.zipWithIndex.toMap
         var i = 0
         batches.foreach { bt =>
-          for (r <- 0 until bt.rows) {
-            def g(n: String): Any = bt.columns(col(n))(r)
-            if (i % 4 == 3) assert(as.fields.indices.forall(c => bt.columns(c)(r) == null), s"row $i should be all-null")
+          for (r <- bt.indices) {
+            def g(n: String): Any = bt(r).get(col(n))
+            if (i % 4 == 3) assert(bt(r).toSeq.forall(_ == null), s"row $i should be all-null")
             else {
               assert(g("i8") == (i * 13 - 40).toByte)
               assert(g("i16") == (i * 1001 - 4000).toShort)
@@ -114,9 +119,9 @@ class ArrowIpcSpec extends AnyFunSuite {
               assert(java.util.Arrays.equals(g("bin").asInstanceOf[Array[Byte]], Array.tabulate(i % 4)(j => (i * 7 + j).toByte)))
               assert(java.util.Arrays.equals(g("fsb").asInstanceOf[Array[Byte]], Array.fill(5)(i.toByte)))
               assert(g("dec") == new java.math.BigDecimal(java.math.BigInteger.valueOf((i - 4) * 1234567L), 3))
-              assert(g("d32") == 19000 + i)
-              assert(g("d64") == (19000L + i) * 86400000L + i)
-              assert(g("ts") == 1700000000000000L + i)
+              assert(g("d32") == LocalDate.ofEpochDay(19000L + i))
+              assert(g("d64") == LocalDate.ofEpochDay(19000L + i)) // + i ms floors to the day
+              assert(g("ts") == Instant.ofEpochSecond(1700000000L, i * 1000L))
               assert(g("t64") == i * 1000001L)
               assert(g("dur") == i * 777L)
             }
@@ -124,6 +129,22 @@ class ArrowIpcSpec extends AnyFunSuite {
           }
         }
         assert(i == 11)
+        // the Spark face floors date64 to the day; the sub-day
+        // milliseconds stay checked on the vector Arrow Java loads
+        val rd = new org.apache.arrow.vector.ipc.ArrowFileReader(
+          new org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel(bytes), a)
+        try {
+          var j = 0
+          while (rd.loadNextBatch()) {
+            val d64 = rd.getVectorSchemaRoot.getVector("d64").asInstanceOf[DateMilliVector]
+            for (r <- 0 until d64.getValueCount) {
+              if (j % 4 == 3) assert(d64.isNull(r))
+              else assert(d64.get(r) == (19000L + j) * 86400000L + j)
+              j += 1
+            }
+          }
+          assert(j == 11)
+        } finally rd.close()
       } finally root.close()
     } finally a.close()
   }
@@ -147,8 +168,8 @@ class ArrowIpcSpec extends AnyFunSuite {
         val w = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, null, java.nio.channels.Channels.newChannel(bos))
         w.start(); w.writeBatch(); w.end(); w.close()
         val (as, batches) = ArrowIpc.readFileBytes(bos.toByteArray)
-        assert(ArrowIpc.sparkType(as.fields.head) == org.apache.spark.sql.types.DecimalType(20, 0))
-        val c = batches.head.columns(0)
+        assert(ArrowIpc.sparkType(as.getFields.get(0)) == org.apache.spark.sql.types.DecimalType(20, 0))
+        val c = batches.head.map(_.get(0))
         assert(c(0) == java.math.BigDecimal.valueOf(7L))
         assert(c(1) == new java.math.BigDecimal(Long.MaxValue))
         assert(c(2) == new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(64).subtract(java.math.BigInteger.ONE)))
@@ -184,11 +205,12 @@ class ArrowIpcSpec extends AnyFunSuite {
       val w = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, provider, java.nio.channels.Channels.newChannel(bos))
       w.start(); w.writeBatch(); w.end(); w.close()
       val (as, batches) = ArrowIpc.readFileBytes(bos.toByteArray)
-      assert(as.fields.head.dictId == 42L && as.fields.head.dictIndexBits == 16)
-      assert(as.fields.head.tpe == AUtf8)
-      assert(batches.head.rows == n)
+      val read = as.getFields.get(0).getDictionary
+      assert(read.getId == 42L && read.getIndexType.getBitWidth == 16)
+      assert(as.getFields.get(0).getType == ArrowType.Utf8.INSTANCE)
+      assert(batches.head.length == n)
       for (i <- 0 until n) {
-        val v = batches.head.columns(0)(i)
+        val v = batches.head(i).get(0)
         if (i % 5 == 4) assert(v == null) else assert(v == words(i % words.length))
       }
       raw.close(); encoded.close(); dictV.close(); root.close()
@@ -221,10 +243,10 @@ class ArrowIpcSpec extends AnyFunSuite {
             CommonsCompressionFactory.INSTANCE, codec)
           w.start(); w.writeBatch(); w.end(); w.close()
           val (_, batches) = ArrowIpc.readFileBytes(bos.toByteArray)
-          assert(batches.head.rows == n)
+          assert(batches.head.length == n)
           for (i <- 0 until n) {
-            assert(batches.head.columns(0)(i) == i % 97L)
-            assert(batches.head.columns(1)(i) == s"w${i % 83}")
+            assert(batches.head(i).get(0) == i % 97L)
+            assert(batches.head(i).get(1) == s"w${i % 83}")
           }
         } finally root.close()
       } finally a.close()
@@ -251,26 +273,21 @@ class ArrowIpcSpec extends AnyFunSuite {
         }
         w.end(); w.close()
         val (as, batches) = ArrowIpc.readStreamBytes(bos.toByteArray)
-        assert(as.fields.map(_.name) == Seq("x"))
-        assert(batches.map(_.rows) == Seq(4, 4, 4))
-        assert(batches(2).columns(0)(3) == 203)
+        assert(as.getFields.asScala.map(_.getName) == Seq("x"))
+        assert(batches.map(_.length) == Seq(4, 4, 4))
+        assert(batches(2)(3).get(0) == 203)
       } finally root.close()
     } finally a.close()
   }
 
-  // ------------------------------------------------------- direction 2: our writer -> Arrow Java reader
+  // ------------------------------------------------- the lane table, by Arrow Java
 
-  private def laneSchema = ASchema(Seq(
-    AField("id", nullable = true, AInt(64, signed = true)),
-    AField("name", nullable = true, AUtf8),
-    AField("score", nullable = true, AFloat(2)),
-    AField("ok", nullable = true, ABool),
-    AField("raw", nullable = true, ABinary),
-    AField("emb", nullable = true, AFixedSizeList(3), Seq(AField("item", nullable = false, AFloat(1)))),
-    AField("hist", nullable = true, AList, Seq(AField("item", nullable = true, AInt(64, signed = true)))),
-    AField("pos", nullable = true, AStruct, Seq(
-      AField("x", nullable = true, AInt(32, signed = true)),
-      AField("y", nullable = true, AUtf8)))))
+  private def laneSchema = schema(
+    int64("id"), utf8("name"), float64("score"),
+    field("ok", ArrowType.Bool.INSTANCE), field("raw", ArrowType.Binary.INSTANCE),
+    field("emb", new ArrowType.FixedSizeList(3), kids = Seq(float32("item", nullable = false))),
+    field("hist", ArrowType.List.INSTANCE, kids = Seq(int64("item"))),
+    field("pos", ArrowType.Struct.INSTANCE, kids = Seq(int32("x"), utf8("y"))))
 
   private def laneColumns(n: Int): Array[Array[Any]] = {
     def id(i: Int): Any = if (i % 7 == 6) null else java.lang.Long.valueOf(i * 37L - 100L)
@@ -286,95 +303,19 @@ class ArrowIpcSpec extends AnyFunSuite {
       Array.tabulate[Any](n)(i => if (i % 11 == 10) null else Vector[Any](java.lang.Integer.valueOf(i), s"y$i")))
   }
 
-  test("our file writer (none/lz4/zstd) -> Arrow Java file reader, values equal") {
-    import org.apache.arrow.vector.ipc.ArrowFileReader
-    import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    import org.apache.arrow.compression.CommonsCompressionFactory
-    val n = 300
-    for (codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec)
-      // our own reader first (round-trip)
-      val (_, back) = ArrowIpc.readFileBytes(bytes)
-      assert(back.head.rows == n)
-      val a = alloc()
-      try {
-        val r = new ArrowFileReader(
-          new ByteArrayReadableSeekableByteChannel(bytes), a, CommonsCompressionFactory.INSTANCE)
-        try {
-          assert(r.loadNextBatch(), s"codec=$codec: Arrow Java rejects our file")
-          val root = r.getVectorSchemaRoot
-          assert(root.getRowCount == n)
-          val cols = laneColumns(n)
-          for (i <- 0 until n) {
-            def jv(name: String): AnyRef = root.getVector(name).getObject(i)
-            if (cols(0)(i) == null) assert(jv("id") == null) else assert(jv("id") == cols(0)(i))
-            if (cols(1)(i) == null) assert(jv("name") == null) else assert(jv("name").toString == cols(1)(i))
-            if (cols(2)(i) == null) assert(jv("score") == null) else assert(jv("score") == cols(2)(i))
-            if (cols(3)(i) == null) assert(jv("ok") == null) else assert(jv("ok") == cols(3)(i))
-            if (cols(4)(i) == null) assert(jv("raw") == null)
-            else assert(java.util.Arrays.equals(jv("raw").asInstanceOf[Array[Byte]], cols(4)(i).asInstanceOf[Array[Byte]]))
-            if (cols(5)(i) == null) assert(jv("emb") == null)
-            else {
-              val l = jv("emb").asInstanceOf[java.util.List[_]]
-              assert(l.size == 3 && (0 until 3).forall(j => l.get(j) == cols(5)(i).asInstanceOf[Vector[Any]](j)))
-            }
-            if (cols(6)(i) == null) assert(jv("hist") == null)
-            else {
-              val exp = cols(6)(i).asInstanceOf[Vector[Any]]
-              val l = jv("hist").asInstanceOf[java.util.List[_]]
-              assert(l.size == exp.length && exp.indices.forall(j => l.get(j) == exp(j)))
-            }
-            if (cols(7)(i) == null) assert(jv("pos") == null)
-            else {
-              val m = jv("pos").asInstanceOf[java.util.Map[String, AnyRef]]
-              assert(m.get("x") == cols(7)(i).asInstanceOf[Vector[Any]](0))
-              assert(m.get("y").toString == cols(7)(i).asInstanceOf[Vector[Any]](1))
-            }
-          }
-        } finally r.close()
-      } finally a.close()
-    }
-  }
-
-  test("our stream writer -> Arrow Java stream reader; our reader round-trips the same bytes") {
-    import org.apache.arrow.vector.ipc.ArrowStreamReader
-    val n = 64
-    val schema = ASchema(Seq(AField("x", nullable = true, AInt(64, signed = true))))
-    def col(b: Int): Array[Array[Any]] =
-      Array(Array.tabulate[Any](n)(i => java.lang.Long.valueOf(b * 1000L + i)))
-    val bytes = ArrowIpc.encodeStream(schema, Seq((col(0), n), (col(1), n)), codec = -1)
-    val a = alloc()
-    try {
-      val r = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), a)
-      try {
-        var b = 0
-        while (r.loadNextBatch()) {
-          val root = r.getVectorSchemaRoot
-          assert(root.getRowCount == n)
-          assert(root.getVector("x").getObject(2) == b * 1000L + 2)
-          b += 1
-        }
-        assert(b == 2)
-      } finally r.close()
-    } finally a.close()
-    val (_, back) = ArrowIpc.readStreamBytes(bytes)
-    assert(back.map(_.rows) == Seq(n, n))
-    assert(back(1).columns(0)(63) == 1063L)
-  }
-
   // ------------------------------------------------------------ scale shape
 
   test("ranged-read audit: footer parse touches only the head magic and the file tail") {
     val n = 2000
-    val bytes = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec = -1)
+    val bytes = file(laneSchema, Seq((laneColumns(n), n)))
     val len = bytes.length.toLong
     val reads = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
     val ranged: (Long, Int) => Array[Byte] = (off, sz) => {
       reads += ((off, sz))
       java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + sz)
     }
-    val f = ArrowIpc.footer(ranged, len)
-    assert(f.batches.nonEmpty)
+    val f = ArrowIpc.footer(ranged, len, "audit")
+    assert(!f.getRecordBatches.isEmpty)
     val footerLen = {
       val tail = java.util.Arrays.copyOfRange(bytes, bytes.length - 10, bytes.length - 6)
       (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) | ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
@@ -398,8 +339,9 @@ class ArrowIpcSpec extends AnyFunSuite {
       val p1 = dir.resolve("a.arrow"); val p2 = dir.resolve("b.arrow")
       java.nio.file.Files.write(p1, bytes)
       java.nio.file.Files.write(p2, bytes)
-      val df = ArrowIpc.scan(TestSpark.spark, Seq(p1.toString, p2.toString))
+      val df = TestSpark.spark.read.format("arrowipc").load(p1.toString, p2.toString)
       assert(df.schema.fieldNames.toSeq == Seq("id", "tag", "val", "flag"))
+      assert(df.rdd.getNumPartitions == 2 * 3) // one task per 512-row batch
       assert(df.count() == 3000)
       val got = df.selectExpr("sum(id)", "sum(length(tag))", "sum(val)").collect().head
       assert(got.getLong(0) == 2L * ids.sum)
@@ -414,7 +356,7 @@ class ArrowIpcSpec extends AnyFunSuite {
 
   test("malformed input raises ArrowError, never raw index errors") {
     val n = 40
-    val good = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec = 1)
+    val good = file(laneSchema, Seq((laneColumns(n), n)), Zstd)
     def mustFail(b: Array[Byte], what: String): Unit = {
       val r = try { ArrowIpc.readFileBytes(b); None }
       catch {
@@ -434,7 +376,7 @@ class ArrowIpcSpec extends AnyFunSuite {
     hugeFooter(good.length - 7) = 0x7f.toByte
     mustFail(hugeFooter, "oversized footer length")
     // stream: garbage after valid schema message
-    val stream = ArrowIpc.encodeStream(laneSchema, Seq((laneColumns(4), 4)), codec = -1)
+    val stream = ArrowJava.stream(laneSchema, Seq((laneColumns(4), 4)))
     val cut = stream.dropRight(9)
     val r = try { ArrowIpc.readStreamBytes(cut); true }
     catch { case _: ArrowIpc.ArrowError => true; case e: Throwable => fail(s"stream cut escaped: $e") }
@@ -443,7 +385,7 @@ class ArrowIpcSpec extends AnyFunSuite {
 
   test("mutation fuzz: decode equal bytes-or-ArrowError only (no CRC in the format, so values may drift)") {
     val n = 96
-    val base = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec = 0)
+    val base = file(laneSchema, Seq((laneColumns(n), n)), Lz4)
     val rnd = new scala.util.Random(20260816L)
     var mutated = 0
     for (_ <- 0 until 600) {
@@ -476,9 +418,8 @@ class ArrowIpcSpec extends AnyFunSuite {
     // buffer must be. Craft by patching a valid 4-row file's
     // RecordBatch length field (node lengths live in the metadata
     // flatbuffer as i64 pairs; scan-and-patch both occurrences).
-    val schema = ASchema(Seq(AField("x", nullable = true, AInt(64, signed = true))))
     val cols: Array[Array[Any]] = Array(Array[Any](1L, 2L, null, 4L))
-    val good = ArrowIpc.encodeFile(schema, Seq((cols, 4)), codec = -1)
+    val good = file(schema(int64("x")), Seq((cols, 4)))
     // patch every little-endian i64 equal to 4 in the batch message
     // region to 100,000,000 (rows + node length + null-count stays)
     val bomb = good.clone()
@@ -492,6 +433,11 @@ class ArrowIpcSpec extends AnyFunSuite {
       }
     }
     assert(patched >= 2, s"expected to patch rows+node length, got $patched")
+    // the direct-memory measure is live: a good read registers its vectors
+    ArrowIpc.peakDirect.set(0)
+    ArrowIpc.readFileBytes(good)
+    assert(ArrowIpc.peakDirect.get > 0)
+    ArrowIpc.peakDirect.set(0)
     val before = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
     try { ArrowIpc.readFileBytes(bomb); fail("bomb decoded silently") }
     catch {
@@ -501,24 +447,15 @@ class ArrowIpcSpec extends AnyFunSuite {
     }
     val after = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
     assert(after - before < (512L << 20), s"bomb allocated ${(after - before) >> 20} MB before failing")
-  }
-
-  test("writer refusals: dictionary fields and unsupported types refuse loudly") {
-    val dictField = ASchema(Seq(AField("w", nullable = true, AUtf8, dictId = 3L)))
-    intercept[ArrowIpc.ArrowError] {
-      ArrowIpc.encodeFile(dictField, Seq((Array(Array[Any]("a")), 1)))
-    }
-    val dec = ASchema(Seq(AField("d", nullable = true, ADecimal(10, 2, 128))))
-    intercept[ArrowIpc.ArrowError] {
-      ArrowIpc.encodeFile(dec, Seq((Array(Array[Any](java.math.BigDecimal.ONE)), 1)))
-    }
+    // Arrow Java's vectors live in direct memory, which the heap delta misses
+    assert(ArrowIpc.peakDirect.get < (512L << 20), s"bomb held ${ArrowIpc.peakDirect.get >> 20} MB direct")
   }
 
   test("empty file (zero batches) round-trips both ways") {
-    val schema = ASchema(Seq(AField("x", nullable = true, AInt(64, signed = true))))
-    val bytes = ArrowIpc.encodeFile(schema, Nil)
+    val x = schema(int64("x"))
+    val bytes = file(x, Nil)
     val (as, batches) = ArrowIpc.readFileBytes(bytes)
-    assert(as == schema.copy(fields = schema.fields) && batches.isEmpty)
+    assert(as == x && batches.isEmpty)
     import org.apache.arrow.vector.ipc.ArrowFileReader
     import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
     val a = alloc()
@@ -529,5 +466,85 @@ class ArrowIpcSpec extends AnyFunSuite {
         assert(!r.loadNextBatch())
       } finally r.close()
     } finally a.close()
+  }
+
+  // ------------------------------------------------ declared sizes vs bytes
+
+  private def heapUsed(): Long = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
+
+  /** `read` must refuse, holding under 512 MB of heap and of direct
+    * memory (where Arrow Java allocates) on the way. */
+  private def refusesSmall(what: String)(read: => Any): ArrowIpc.ArrowError = {
+    ArrowIpc.peakDirect.set(0)
+    val before = heapUsed()
+    val e = refuses(what)(read)
+    assert(heapUsed() - before < (512L << 20), s"$what allocated ${(heapUsed() - before) >> 20} MB before failing")
+    assert(ArrowIpc.peakDirect.get < (512L << 20), s"$what held ${ArrowIpc.peakDirect.get >> 20} MB direct")
+    e
+  }
+
+  /** The body buffers of `bytes`' first record batch, as absolute
+    * (offset, length) pairs, read from the batch metadata. */
+  private def batchBuffers(bytes: Array[Byte]): IndexedSeq[(Int, Int)] = {
+    import org.apache.arrow.flatbuf.{Message, RecordBatch}
+    val ranged: (Long, Int) => Array[Byte] = (off, n) => java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + n)
+    val blk = ArrowIpc.footer(ranged, bytes.length.toLong, "good").getRecordBatches.get(0)
+    val metaLen = java.nio.ByteBuffer.wrap(bytes, blk.getOffset.toInt + 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    val msg = Message.getRootAsMessage(java.nio.ByteBuffer.wrap(bytes, blk.getOffset.toInt + 8, metaLen).slice())
+    val rb = msg.header(new RecordBatch).asInstanceOf[RecordBatch]
+    val body = blk.getOffset + blk.getMetadataLength
+    (0 until rb.buffersLength).map(rb.buffers).map(b => ((body + b.offset).toInt, b.length.toInt))
+  }
+
+  private def refuses(what: String)(read: => Any): ArrowIpc.ArrowError =
+    try { read; fail(s"$what decoded silently") }
+    catch {
+      case e: ArrowIpc.ArrowError => e
+      case e: org.scalatest.exceptions.TestFailedException => throw e
+      case e: Throwable => fail(s"$what escaped as ${e.getClass.getName}: ${e.getMessage}")
+    }
+
+  test("hostility: a stream message declaring ~2^31 bytes after a valid schema refuses before allocating") {
+    val good = ArrowJava.stream(laneSchema, Seq((laneColumns(8), 8)))
+    // continuation token + length + metadata: the schema message
+    def le32(at: Int): Int = java.nio.ByteBuffer.wrap(good, at, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    assert(le32(0) == -1)
+    val next = 8 + le32(4)
+    assert(le32(next) == -1, "expected a framed message after the schema")
+    val bomb = good.clone()
+    java.nio.ByteBuffer.wrap(bomb, next + 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(Int.MaxValue - 7)
+    val e = refusesSmall("2^31 message length")(ArrowIpc.readStreamBytes(bomb, "bomb.arrows"))
+    assert(e.getMessage.contains("bomb.arrows") && e.getMessage.contains("message length"), e.getMessage)
+  }
+
+  test("hostility: a utf8 end offset near 2^31 refuses before the value is copied") {
+    val n = 16
+    val good = file(schema(utf8("s", nullable = false)), Seq((Array(Array.tabulate[Any](n)(i => s"v$i")), n)))
+    // buffers: validity, offsets, data; patch the last row's end offset
+    val (offs, len) = batchBuffers(good)(1)
+    assert(len >= 4 * (n + 1))
+    val bomb = good.clone()
+    java.nio.ByteBuffer.wrap(bomb, offs + 4 * n, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(Int.MaxValue - 8)
+    val e = refusesSmall("2^31 utf8 offset")(ArrowIpc.readFileBytes(bomb, "offset.arrow"))
+    assert(e.getMessage.contains("offset.arrow") && e.getMessage.contains("value 15 of 's' declares"), e.getMessage)
+  }
+
+  test("hostility: a zstd buffer declaring 2^40 uncompressed bytes refuses before decompression") {
+    val good = file(laneSchema, Seq((laneColumns(64), 64)), Zstd)
+    val (at, _) = batchBuffers(good).find(_._2 > 8).get
+    val bomb = good.clone()
+    java.nio.ByteBuffer.wrap(bomb, at, 8).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(1L << 40)
+    val e = refuses("2^40 declared buffer")(ArrowIpc.readFileBytes(bomb, "bomb.arrow"))
+    assert(e.getMessage.contains("bomb.arrow") && e.getMessage.contains(s"declares ${1L << 40}"), e.getMessage)
+  }
+
+  test("hostility: a valid tail behind a broken head magic refuses") {
+    val good = file(laneSchema, Seq((laneColumns(16), 16)))
+    val bad = good.clone()
+    bad(0) = 'X'.toByte
+    val e = refuses("broken head magic")(ArrowIpc.readFileBytes(bad, "head.arrow"))
+    assert(e.getMessage.contains("bad file magic"), e.getMessage)
+    val ranged: (Long, Int) => Array[Byte] = (off, n) => java.util.Arrays.copyOfRange(bad, off.toInt, off.toInt + n)
+    refuses("broken head magic, footer only")(ArrowIpc.footer(ranged, bad.length.toLong, "head.arrow"))
   }
 }

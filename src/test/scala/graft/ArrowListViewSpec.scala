@@ -1,7 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.ArrowJava._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import graft.sources.ArrowIpc.ArrowError
+import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arrow ListView / LargeListView conformance. Producer/validator is
@@ -9,16 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * including genuinely OVERLAPPING and out-of-order views, which the
   * dense List layout cannot express and which prove the reader honors
   * the offsets+sizes semantics rather than assuming monotonic
-  * offsets. Our writer emits the canonical dense form, which Arrow
-  * Java reads back logically. */
+  * offsets. The spec producer writes the canonical dense form over
+  * both widths and every codec. */
 class ArrowListViewSpec extends AnyFunSuite {
 
   private def alloc() = new org.apache.arrow.memory.RootAllocator()
 
-  private def cols(batches: Seq[Batch]): Array[Vector[Any]] = {
-    val n = batches.map(_.columns.length).max
-    Array.tabulate(n)(c => batches.flatMap(_.columns(c)).toVector)
-  }
+  private def cols(batches: Seq[IndexedSeq[Row]]): Array[Vector[Any]] = columns(batches)
 
   // child data [10,20,30,40,50,60]; views: overlapping + out of order
   private val childData = Array(10, 20, 30, 40, 50, 60)
@@ -69,17 +71,17 @@ class ArrowListViewSpec extends AnyFunSuite {
 
   test("Arrow Java list-view with OVERLAPPING + out-of-order views decodes") {
     val (schema, batches) = ArrowIpc.readFileBytes(javaListViewFile())
-    assert(schema.fields.head.tpe == AListView(wide = false))
+    assert(schema.getFields.get(0).getType == ArrowType.ListView.INSTANCE)
     val c = cols(batches)
     for (i <- views.indices) assert(c(0)(i) == expected(i), s"lv[$i]: got ${c(0)(i)}")
   }
 
-  // ----------------------------------------------------------- our writer
+  // ------------------------------------------ Arrow Java as spec producer
 
-  private def lvSchema(wide: Boolean) = ASchema(Seq(
-    AField("lv", nullable = true, AListView(wide),
-      Seq(AField("item", nullable = true, AInt(32, signed = true)))),
-    AField("k", nullable = false, AInt(32, signed = true))))
+  private def lvType(wide: Boolean): ArrowType =
+    if (wide) ArrowType.LargeListView.INSTANCE else ArrowType.ListView.INSTANCE
+  private def lvSchema(wide: Boolean) =
+    schema(field("lv", lvType(wide), kids = Seq(int32("item"))), int32("k", nullable = false))
 
   private def lvColumns(n: Int): Array[Array[Any]] = Array(
     Array.tabulate[Any](n)(i =>
@@ -88,39 +90,14 @@ class ArrowListViewSpec extends AnyFunSuite {
     Array.tabulate[Any](n)(i => java.lang.Integer.valueOf(i)))
 
   test("round-trip: our dense list-view writer -> our reader, both widths, all codecs") {
-    for (wide <- Seq(false, true); codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(lvSchema(wide), Seq((lvColumns(23), 23)), codec)
+    for (wide <- Seq(false, true); codec <- Codecs) {
+      val bytes = file(lvSchema(wide), Seq((lvColumns(23), 23)), codec)
       val (schema, batches) = ArrowIpc.readFileBytes(bytes)
-      assert(schema.fields.head.tpe == AListView(wide))
+      assert(schema.getFields.get(0).getType == lvType(wide))
       val c = cols(batches)
       val exp = lvColumns(23)(0)
       for (i <- 0 until 23) assert(c(0)(i) == exp(i), s"wide=$wide codec=$codec lv[$i]")
     }
-  }
-
-  test("our writer -> Arrow Java reader, logical lists equal") {
-    import org.apache.arrow.vector.ipc.ArrowFileReader
-    import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    val bytes = ArrowIpc.encodeFile(lvSchema(wide = false), Seq((lvColumns(23), 23)))
-    val a = alloc()
-    try {
-      val r = new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(bytes), a)
-      try {
-        assert(r.loadNextBatch(), "Arrow Java rejects our list-view file")
-        val root = r.getVectorSchemaRoot
-        val lv = root.getVector("lv")
-        val exp = lvColumns(23)(0)
-        for (i <- 0 until 23) {
-          if (exp(i) == null) assert(lv.isNull(i), s"lv[$i] should be null")
-          else {
-            val got = lv.getObject(i).asInstanceOf[java.util.List[_]]
-            assert(got.size == exp(i).asInstanceOf[Vector[_]].length, s"lv[$i] size")
-            for (j <- 0 until got.size)
-              assert(got.get(j) == exp(i).asInstanceOf[Vector[Any]](j), s"lv[$i][$j]")
-          }
-        }
-      } finally r.close()
-    } finally a.close()
   }
 
   test("Spark face: list-view -> ArrayType; scan + pruned read") {
@@ -144,7 +121,7 @@ class ArrowListViewSpec extends AnyFunSuite {
   }
 
   test("hostility: byte-flip fuzz over a list-view file raises ArrowError or decodes") {
-    val good = ArrowIpc.encodeFile(lvSchema(wide = false), Seq((lvColumns(23), 23)))
+    val good = file(lvSchema(wide = false), Seq((lvColumns(23), 23)))
     val rnd = new scala.util.Random(184)
     for (_ <- 0 until 400) {
       val mutated = good.clone()

@@ -1,18 +1,24 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.ArrowJava._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import graft.sources.ArrowIpc.ArrowError
+import org.apache.arrow.vector.types.UnionMode
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field, Schema}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arrow map + union (dense and sparse) conformance.
   *
-  * Producers/validators: committed pyarrow 16.1 fixtures
+  * Producers: committed pyarrow 16.1 fixtures
   * (tools/gen_arrow_fixtures.py — map.arrow / map_zstd.arrow /
   * union_dense.arrow / union_sparse.arrow, values deterministic
   * formulas of the row index, re-read by pyarrow at capture), plus
-  * LIVE Arrow Java both directions: our writer's bytes read by
-  * ArrowFileReader, and Arrow Java re-serializing the pyarrow fixture
-  * through ArrowFileWriter with our reader decoding the fresh bytes. */
+  * LIVE Arrow Java: ArrowFileWriter output over every codec, and Arrow
+  * Java re-serializing the pyarrow fixtures through ArrowFileWriter
+  * with the facade decoding the fresh bytes. */
 class ArrowMapUnionSpec extends AnyFunSuite {
 
   private def fixture(name: String): Array[Byte] = {
@@ -22,10 +28,8 @@ class ArrowMapUnionSpec extends AnyFunSuite {
     finally in.close()
   }
 
-  private def cols(batches: Seq[Batch]): Array[Vector[Any]] = {
-    val n = batches.map(_.columns.length).max
-    Array.tabulate(n)(c => batches.flatMap(_.columns(c)).toVector)
-  }
+  private def cols(batches: Seq[IndexedSeq[Row]]): Array[Vector[Any]] = columns(batches)
+  private def names(fs: java.util.List[Field]): Seq[String] = fs.asScala.map(_.getName).toSeq
 
   private def alloc() = new org.apache.arrow.memory.RootAllocator()
 
@@ -38,18 +42,22 @@ class ArrowMapUnionSpec extends AnyFunSuite {
       Vector[Any](s"k${i}_$j", if ((i + j) % 5 == 4) null else java.lang.Long.valueOf(i * 10L + j))
     }
 
-  private def checkMapFixture(schema: ASchema, batches: Seq[Batch], n: Int): Unit = {
-    assert(schema.fields.map(_.name) == Seq("m", "k"))
-    val m = schema.fields.head
-    assert(m.tpe == AMap(keysSorted = false))
-    assert(m.children.head.name == "entries" && !m.children.head.nullable)
-    assert(m.children.head.children.map(_.name) == Seq("key", "value"))
-    assert(!m.children.head.children.head.nullable)
+  /** The Spark face of map row i. */
+  private def faceMap(i: Int): Map[Any, Any] = expectedMap(i).map(e => e(0) -> e(1)).toMap
+
+  private def checkMapFixture(schema: Schema, batches: Seq[IndexedSeq[Row]], n: Int): Unit = {
+    assert(names(schema.getFields) == Seq("m", "k"))
+    val m = schema.getFields.get(0)
+    assert(m.getType == new ArrowType.Map(false))
+    val entries = m.getChildren.get(0)
+    assert(entries.getName == "entries" && !entries.isNullable)
+    assert(names(entries.getChildren) == Seq("key", "value"))
+    assert(!entries.getChildren.get(0).isNullable)
     val c = cols(batches)
     assert(c(0).length == n)
     for (i <- 0 until n) {
       if (i % 6 == 5) assert(c(0)(i) == null, s"m[$i] should be null")
-      else assert(c(0)(i) == expectedMap(i), s"m[$i]: got ${c(0)(i)}")
+      else assert(c(0)(i) == faceMap(i), s"m[$i]: got ${c(0)(i)}")
       assert(c(1)(i) == i.toLong)
     }
   }
@@ -60,16 +68,28 @@ class ArrowMapUnionSpec extends AnyFunSuite {
     if (i % 3 == 0) Vector[Any](numTid, if (i % 12 == 6) null else java.lang.Long.valueOf(i * 7L))
     else Vector[Any](wordTid, if (i % 10 == 7) null else s"w${i % 11}")
 
-  private def checkUnionFixture(schema: ASchema, batches: Seq[Batch], n: Int,
+  /** The Spark face of union row i: `{type_id, num, word}`. */
+  private def faceUnion(i: Int, numTid: Int, wordTid: Int): Row = {
+    val Seq(tid, v) = expectedUnion(i, numTid, wordTid)
+    if (tid == numTid) Row(numTid.toByte, v, null) else Row(wordTid.toByte, null, v)
+  }
+
+  /** Mode and type ids of a union field (ids default to 0..n-1). */
+  private def unionOf(f: Field): (Boolean, Seq[Int]) = {
+    val u = f.getType.asInstanceOf[ArrowType.Union]
+    (u.getMode == UnionMode.Dense, Option(u.getTypeIds).map(_.toSeq).getOrElse(f.getChildren.asScala.indices))
+  }
+
+  private def checkUnionFixture(schema: Schema, batches: Seq[IndexedSeq[Row]], n: Int,
       dense: Boolean, numTid: Int, wordTid: Int): Unit = {
-    assert(schema.fields.map(_.name) == Seq("u", "k"))
-    val u = schema.fields.head
-    assert(u.tpe == AUnion(dense, Seq(numTid, wordTid)))
-    assert(u.children.map(_.name) == Seq("num", "word"))
+    assert(names(schema.getFields) == Seq("u", "k"))
+    val u = schema.getFields.get(0)
+    assert(unionOf(u) == ((dense, Seq(numTid, wordTid))))
+    assert(names(u.getChildren) == Seq("num", "word"))
     val c = cols(batches)
     assert(c(0).length == n)
     for (i <- 0 until n) {
-      assert(c(0)(i) == expectedUnion(i, numTid, wordTid), s"u[$i]: got ${c(0)(i)}")
+      assert(c(0)(i) == faceUnion(i, numTid, wordTid), s"u[$i]: got ${c(0)(i)}")
       assert(c(1)(i) == i.toLong)
     }
   }
@@ -78,7 +98,7 @@ class ArrowMapUnionSpec extends AnyFunSuite {
 
   test("map.arrow: pyarrow map<utf8,int64> decodes (nulls in maps and values, 3 batches)") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("map.arrow"))
-    assert(batches.map(_.rows) == Seq(16, 16, 5))
+    assert(batches.map(_.length) == Seq(16, 16, 5))
     checkMapFixture(schema, batches, 37)
   }
 
@@ -89,7 +109,7 @@ class ArrowMapUnionSpec extends AnyFunSuite {
 
   test("union_dense.arrow: pyarrow dense union with non-contiguous type ids (2, 5)") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("union_dense.arrow"))
-    assert(batches.map(_.rows) == Seq(20, 17))
+    assert(batches.map(_.length) == Seq(20, 17))
     checkUnionFixture(schema, batches, 37, dense = true, numTid = 2, wordTid = 5)
   }
 
@@ -98,97 +118,42 @@ class ArrowMapUnionSpec extends AnyFunSuite {
     checkUnionFixture(schema, batches, 37, dense = false, numTid = 0, wordTid = 1)
   }
 
-  // --------------------------------------------------------- our writer
+  // ------------------------------------------------- Arrow Java as writer
 
-  private val mapSchema = ASchema(Seq(
-    AField("m", nullable = true, AMap(keysSorted = false), Seq(
-      AField("entries", nullable = false, AStruct, Seq(
-        AField("key", nullable = false, AUtf8),
-        AField("value", nullable = true, AInt(64, signed = true)))))),
-    AField("k", nullable = false, AInt(64, signed = true))))
+  private val mapSchema = schema(
+    field("m", new ArrowType.Map(false), kids = Seq(
+      field("entries", ArrowType.Struct.INSTANCE, nullable = false, kids = Seq(
+        utf8("key", nullable = false), int64("value"))))),
+    int64("k", nullable = false))
 
   private def mapColumns(n: Int): Array[Array[Any]] = Array(
     Array.tabulate[Any](n)(i => if (i % 6 == 5) null else expectedMap(i)),
     Array.tabulate[Any](n)(i => java.lang.Long.valueOf(i.toLong)))
 
-  private def unionSchema(dense: Boolean, tids: Seq[Int]) = ASchema(Seq(
-    AField("u", nullable = false, AUnion(dense, tids), Seq(
-      AField("num", nullable = true, AInt(64, signed = true)),
-      AField("word", nullable = true, AUtf8)))))
+  private def unionSchema(dense: Boolean, tids: Seq[Int]) = schema(
+    field("u", new ArrowType.Union(if (dense) UnionMode.Dense else UnionMode.Sparse, tids.toArray), nullable = false,
+      kids = Seq(int64("num"), utf8("word"))))
 
   private def unionColumns(n: Int, tids: Seq[Int]): Array[Array[Any]] =
     Array(Array.tabulate[Any](n)(i => expectedUnion(i, tids(0), tids(1))))
 
   test("map round-trip: our writer -> our reader, all codecs") {
-    for (codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(mapSchema, Seq((mapColumns(37), 37)), codec)
+    for (codec <- Codecs) {
+      val bytes = file(mapSchema, Seq((mapColumns(37), 37)), codec)
       val (schema, batches) = ArrowIpc.readFileBytes(bytes)
       checkMapFixture(schema, batches, 37)
     }
   }
 
   test("union round-trip: our writer -> our reader, dense (ids 2,5) and sparse (ids 0,1)") {
-    for ((dense, tids) <- Seq((true, Seq(2, 5)), (false, Seq(0, 1))); codec <- Seq(-1, 1)) {
-      val s = unionSchema(dense, tids)
-      val bytes = ArrowIpc.encodeFile(s, Seq((unionColumns(37, tids), 37)), codec)
+    for ((dense, tids) <- Seq((true, Seq(2, 5)), (false, Seq(0, 1))); codec <- Seq(Plain, Zstd)) {
+      val bytes =
+        if (dense) file(unionSchema(dense, tids), Seq((unionColumns(37, tids), 37)), codec)
+        else rewrite(fixture("union_sparse.arrow"), codec)
       val (schema, batches) = ArrowIpc.readFileBytes(bytes)
-      assert(schema.fields.head.tpe == AUnion(dense, tids))
+      assert(unionOf(schema.getFields.get(0)) == ((dense, tids)))
       val c = cols(batches)
-      for (i <- 0 until 37) assert(c(0)(i) == expectedUnion(i, tids(0), tids(1)), s"dense=$dense u[$i]")
-    }
-  }
-
-  // ------------------------------------------ LIVE: our writer -> Arrow Java
-
-  test("our map writer -> Arrow Java file reader, entries equal") {
-    import org.apache.arrow.vector.ipc.ArrowFileReader
-    import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    val bytes = ArrowIpc.encodeFile(mapSchema, Seq((mapColumns(37), 37)))
-    val a = alloc()
-    try {
-      val r = new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(bytes), a)
-      try {
-        assert(r.loadNextBatch(), "Arrow Java rejects our map file")
-        val root = r.getVectorSchemaRoot
-        assert(root.getRowCount == 37)
-        val mv = root.getVector("m")
-        for (i <- 0 until 37) {
-          if (i % 6 == 5) assert(mv.isNull(i), s"m[$i] should be null")
-          else {
-            val entries = mv.getObject(i).asInstanceOf[java.util.List[_]]
-            val exp = expectedMap(i)
-            assert(entries.size == exp.length, s"m[$i] size")
-            for (j <- exp.indices) {
-              val e = entries.get(j).asInstanceOf[java.util.Map[String, AnyRef]]
-              assert(e.get("key").toString == exp(j)(0), s"m[$i][$j] key")
-              assert(e.get("value") == exp(j)(1), s"m[$i][$j] value")
-            }
-          }
-        }
-      } finally r.close()
-    } finally a.close()
-  }
-
-  test("our union writer -> Arrow Java file reader, selected values equal") {
-    import org.apache.arrow.vector.ipc.ArrowFileReader
-    import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    for ((dense, tids) <- Seq((true, Seq(2, 5)), (false, Seq(0, 1)))) {
-      val bytes = ArrowIpc.encodeFile(unionSchema(dense, tids), Seq((unionColumns(37, tids), 37)))
-      val a = alloc()
-      try {
-        val r = new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(bytes), a)
-        try {
-          assert(r.loadNextBatch(), s"Arrow Java rejects our ${if (dense) "dense" else "sparse"} union file")
-          val root = r.getVectorSchemaRoot
-          val uv = root.getVector("u")
-          for (i <- 0 until 37) {
-            val exp = expectedUnion(i, tids(0), tids(1))(1)
-            val got = uv.getObject(i)
-            if (exp == null) assert(got == null, s"u[$i] should be null")
-            else assert(got == exp || got.toString == exp, s"u[$i]: got $got want $exp")
-          }
-        } finally r.close()
-      } finally a.close()
+      for (i <- 0 until 37) assert(c(0)(i) == faceUnion(i, tids(0), tids(1)), s"dense=$dense u[$i]")
     }
   }
 
@@ -215,7 +180,8 @@ class ArrowMapUnionSpec extends AnyFunSuite {
         } finally a.close()
       val (s1, b1) = ArrowIpc.readFileBytes(javaBytes)
       val (s2, b2) = ArrowIpc.readFileBytes(original)
-      assert(s1 == s2, s"$name: schema drift through Arrow Java")
+      assert(s1.getFields.asScala.map(_.getType) == s2.getFields.asScala.map(_.getType) &&
+        ArrowIpc.sparkSchema(s1) == ArrowIpc.sparkSchema(s2), s"$name: schema drift through Arrow Java")
       assert(cols(b1).toSeq == cols(b2).toSeq, s"$name: value drift through Arrow Java")
     }
   }
@@ -235,7 +201,7 @@ class ArrowMapUnionSpec extends AnyFunSuite {
         val p = new java.io.File(dir, name)
         java.nio.file.Files.write(p.toPath, fixture(name))
       }
-      val mdf = ArrowIpc.scan(spark, Seq(new java.io.File(dir, "map.arrow").getPath))
+      val mdf = spark.read.format("arrowipc").load(new java.io.File(dir, "map.arrow").getPath)
       val mrows = mdf.collect().sortBy(_.getLong(1))
       assert(mrows.length == 37)
       for (i <- 0 until 37) {
@@ -243,7 +209,7 @@ class ArrowMapUnionSpec extends AnyFunSuite {
         if (i % 6 == 5) assert(got == null)
         else assert(got.toMap == expectedMap(i).map(e => e(0).asInstanceOf[String] -> e(1)).toMap, s"row $i")
       }
-      val udf2 = ArrowIpc.scan(spark, Seq(new java.io.File(dir, "union_dense.arrow").getPath))
+      val udf2 = spark.read.format("arrowipc").load(new java.io.File(dir, "union_dense.arrow").getPath)
       val urows = udf2.collect().sortBy(_.getLong(1))
       assert(udf2.schema.fields.head.dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
         .fieldNames.toSeq == Seq("type_id", "num", "word"))
@@ -279,23 +245,18 @@ class ArrowMapUnionSpec extends AnyFunSuite {
   // ------------------------------------------------------------- hostility
 
   test("hostility: undeclared type ids, bad offsets, null map keys raise ArrowError") {
-    // undeclared type id in the types buffer
     val tids = Seq(2, 5)
-    val good = ArrowIpc.encodeFile(unionSchema(dense = true, tids), Seq((unionColumns(8, tids), 8)))
-    // writer refuses an undeclared id outright
+    val good = file(unionSchema(dense = true, tids), Seq((unionColumns(8, tids), 8)))
+    // an undeclared id in the types buffer (Arrow Java writes it as given)
     intercept[ArrowError] {
-      ArrowIpc.encodeFile(unionSchema(dense = true, tids),
-        Seq((Array(Array[Any](Vector(9, java.lang.Long.valueOf(1L)))), 1)))
+      ArrowIpc.readFileBytes(file(unionSchema(dense = true, tids),
+        Seq((Array(Array[Any](Vector(9, java.lang.Long.valueOf(1L)))), 1))))
     }
-    // writer refuses top-level union nulls
+    // a null map key
     intercept[ArrowError] {
-      ArrowIpc.encodeFile(unionSchema(dense = true, tids), Seq((Array(Array[Any](null)), 1)))
-    }
-    // writer refuses null map keys
-    intercept[ArrowError] {
-      ArrowIpc.encodeFile(mapSchema, Seq((Array(
+      ArrowIpc.readFileBytes(file(mapSchema, Seq((Array(
         Array[Any](Vector(Vector[Any](null, java.lang.Long.valueOf(1L)))),
-        Array[Any](java.lang.Long.valueOf(0L))), 1)))
+        Array[Any](java.lang.Long.valueOf(0L))), 1))))
     }
     // reader: flip every byte of a valid dense-union file; each decode is
     // equal-bytes or ArrowError, never a raw index error

@@ -1,15 +1,20 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.ArrowJava._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import graft.sources.ArrowIpc.ArrowError
+import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arrow run-end-encoded (REE) conformance.
   *
   * Producer/validator is LIVE Arrow Java (RunEndEncodedVector ships
   * in arrow-vector 18.3 on the Spark classpath): Arrow Java builds
-  * REE files our reader decodes, and Arrow Java's ArrowFileReader
-  * reads our writer's bytes back logically. pyarrow 16.1 cannot be
+  * REE files — by hand and through the spec producer, over every
+  * codec — that the facade expands. pyarrow 16.1 cannot be
   * the producer here — its RunEndEncodedArray.from_arrays binding is
   * broken in-container (NOTES_r18 probe), which is why this lane's
   * cross-ecosystem check is Java-only. */
@@ -27,10 +32,7 @@ class ArrowReeSpec extends AnyFunSuite {
     runValue(j)
   }
 
-  private def cols(batches: Seq[Batch]): Array[Vector[Any]] = {
-    val n = batches.map(_.columns.length).max
-    Array.tabulate(n)(c => batches.flatMap(_.columns(c)).toVector)
-  }
+  private def cols(batches: Seq[IndexedSeq[Row]]): Array[Vector[Any]] = columns(batches)
 
   // ---------------------------------------------- Arrow Java as producer
 
@@ -78,9 +80,9 @@ class ArrowReeSpec extends AnyFunSuite {
 
   test("Arrow Java REE file decodes: runs expand to the values type, nulls ride null runs") {
     val (schema, batches) = ArrowIpc.readFileBytes(javaReeFile())
-    val r = schema.fields.head
-    assert(r.tpe == ARee, s"got ${r.tpe}")
-    assert(r.children.map(_.name) == Seq("run_ends", "values"))
+    val r = schema.getFields.get(0)
+    assert(r.getType == ArrowType.RunEndEncoded.INSTANCE, s"got ${r.getType}")
+    assert(r.getChildren.asScala.map(_.getName) == Seq("run_ends", "values"))
     val c = cols(batches)
     assert(c(0).length == 37)
     for (i <- 0 until 37) {
@@ -89,24 +91,26 @@ class ArrowReeSpec extends AnyFunSuite {
     }
   }
 
-  // --------------------------------------------------------- our writer
+  // ------------------------------------------ Arrow Java as spec producer
 
-  private def reeSchema(valType: AType, valNullable: Boolean) = ASchema(Seq(
-    AField("r", nullable = false, ARee, Seq(
-      AField("run_ends", nullable = false, AInt(32, signed = true)),
-      AField("values", nullable = valNullable, valType))),
-    AField("k", nullable = false, AInt(64, signed = true))))
+  private def ree(runEnds: ArrowType, runEndsNullable: Boolean, valType: ArrowType, valNullable: Boolean) =
+    field("r", ArrowType.RunEndEncoded.INSTANCE, nullable = false, kids = Seq(
+      field("run_ends", runEnds, runEndsNullable), field("values", valType, valNullable)))
+  private val int32Type = new ArrowType.Int(32, true)
+  private val int64Type = new ArrowType.Int(64, true)
+
+  private def reeSchema(valType: ArrowType, valNullable: Boolean) =
+    schema(ree(int32Type, runEndsNullable = false, valType, valNullable), int64("k", nullable = false))
 
   private def plainColumns(n: Int): Array[Array[Any]] = Array(
     Array.tabulate[Any](n)(i => expected(i)),
     Array.tabulate[Any](n)(i => java.lang.Long.valueOf(i.toLong)))
 
   test("round-trip: our writer run-length compresses, our reader expands — all codecs") {
-    for (codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-        Seq((plainColumns(37), 37)), codec)
+    for (codec <- Codecs) {
+      val bytes = file(reeSchema(int64Type, valNullable = true), Seq((plainColumns(37), 37)), codec)
       val (schema, batches) = ArrowIpc.readFileBytes(bytes)
-      assert(schema.fields.head.tpe == ARee)
+      assert(schema.getFields.get(0).getType == ArrowType.RunEndEncoded.INSTANCE)
       val c = cols(batches)
       for (i <- 0 until 37) assert(c(0)(i) == expected(i), s"codec=$codec r[$i]")
     }
@@ -116,44 +120,18 @@ class ArrowReeSpec extends AnyFunSuite {
     val colVals = Array.tabulate[Any](37) { i =>
       val e = expected(i); if (e == null) null else s"s${e.longValue}"
     }
-    val bytes = ArrowIpc.encodeFile(reeSchema(AUtf8, valNullable = true),
+    val bytes = file(reeSchema(ArrowType.Utf8.INSTANCE, valNullable = true),
       Seq((Array(colVals, plainColumns(37)(1)), 37)))
     val (_, batches) = ArrowIpc.readFileBytes(bytes)
     val c = cols(batches)
     for (i <- 0 until 37) assert(c(0)(i) == colVals(i), s"r[$i]")
   }
 
-  test("our writer -> Arrow Java file reader, logical values equal") {
-    import org.apache.arrow.vector.ipc.ArrowFileReader
-    import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    val bytes = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-      Seq((plainColumns(37), 37)))
-    val a = alloc()
-    try {
-      val r = new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(bytes), a)
-      try {
-        assert(r.loadNextBatch(), "Arrow Java rejects our REE file")
-        val root = r.getVectorSchemaRoot
-        assert(root.getRowCount == 37)
-        val rv = root.getVector("r")
-        assert(rv.isInstanceOf[org.apache.arrow.vector.complex.RunEndEncodedVector])
-        // the writer must have actually run-length compressed: 8 runs
-        assert(rv.asInstanceOf[org.apache.arrow.vector.complex.RunEndEncodedVector]
-          .getRunEndsVector.getValueCount == runEnds.length)
-        for (i <- 0 until 37) {
-          val got = rv.getObject(i)
-          assert(got == expected(i), s"r[$i]: got $got want ${expected(i)}")
-        }
-      } finally r.close()
-    } finally a.close()
-  }
-
   // ------------------------------------------------------------ Spark face
 
   test("Spark face: REE column surfaces as its values type; scan() expands") {
     val spark = TestSpark.spark
-    val bytes = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-      Seq((plainColumns(37), 37)))
+    val bytes = file(reeSchema(int64Type, valNullable = true), Seq((plainColumns(37), 37)))
     val schema = ArrowIpc.readFileBytes(bytes)._1
     val st = ArrowIpc.sparkSchema(schema)
     assert(st.fields(0).dataType == org.apache.spark.sql.types.LongType)
@@ -183,23 +161,20 @@ class ArrowReeSpec extends AnyFunSuite {
 
   test("hostility: malformed REE raises ArrowError, never raw errors") {
     // schema-level: nullable run_ends child must refuse at parse
-    val badSchema = ASchema(Seq(
-      AField("r", nullable = false, ARee, Seq(
-        AField("run_ends", nullable = true, AInt(32, signed = true)),
-        AField("values", nullable = true, AInt(64, signed = true))))))
-    val badBytes = ArrowIpc.encodeFile(badSchema, Seq((Array(plainColumns(2)(0)), 2)))
+    val badSchema = schema(ree(int32Type, runEndsNullable = true, int64Type, valNullable = true))
+    val badBytes = file(badSchema, Seq((Array(plainColumns(2)(0)), 2)))
     intercept[ArrowError] { ArrowIpc.readFileBytes(badBytes) }
-    // float run_ends must refuse at parse
-    val floatEnds = ASchema(Seq(
-      AField("r", nullable = false, ARee, Seq(
-        AField("run_ends", nullable = false, AFloat(2)),
-        AField("values", nullable = true, AInt(64, signed = true))))))
-    intercept[ArrowError] {
-      ArrowIpc.readFileBytes(ArrowIpc.encodeFile(floatEnds, Seq((Array(plainColumns(2)(0)), 2))))
-    }
+    // float run_ends must refuse at parse (Arrow Java will not build
+    // such a vector, so the schema travels alone in a stream)
+    val floatEnds = schema(ree(new ArrowType.FloatingPoint(org.apache.arrow.vector.types.FloatingPointPrecision.DOUBLE),
+      runEndsNullable = false, int64Type, valNullable = true))
+    val schemaOnly = new java.io.ByteArrayOutputStream()
+    val ch = new org.apache.arrow.vector.ipc.WriteChannel(java.nio.channels.Channels.newChannel(schemaOnly))
+    org.apache.arrow.vector.ipc.message.MessageSerializer.serialize(ch, floatEnds)
+    ch.writeIntLittleEndian(0)
+    intercept[ArrowError] { ArrowIpc.readStreamBytes(schemaOnly.toByteArray) }
     // byte-flip fuzz over a valid REE file: equal-bytes or ArrowError
-    val good = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-      Seq((plainColumns(37), 37)))
+    val good = file(reeSchema(int64Type, valNullable = true), Seq((plainColumns(37), 37)))
     val rnd = new scala.util.Random(182)
     for (_ <- 0 until 400) {
       val mutated = good.clone()

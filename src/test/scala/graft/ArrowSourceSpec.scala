@@ -1,7 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.ArrowJava._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.compression.CompressionUtil.CodecType
+import org.apache.arrow.vector.types.pojo.ArrowType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSv2 face: `spark.read.format("arrowipc")`. Pruning is proven to
@@ -13,23 +17,23 @@ class ArrowSourceSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
 
   /** `poison` is LAST so its data buffer is the final body buffer —
-    * the poisoning test aims there. */
-  private def laneFile(n: Int, codec: Int): Array[Byte] = {
-    val schema = ASchema(Seq(
-      AField("keep", nullable = false, AInt(64, signed = true)),
-      AField("emb", nullable = true, AFixedSizeList(2), Seq(AField("item", nullable = false, AFloat(2)))),
-      AField("poison", nullable = true, AUtf8)))
+    * the poisoning test aims there. Written by Arrow Java. */
+  private def laneFile(n: Int, codec: CodecType): Array[Byte] = {
+    val lane = schema(
+      int64("keep", nullable = false),
+      field("emb", new ArrowType.FixedSizeList(2), kids = Seq(float64("item", nullable = false))),
+      utf8("poison"))
     val cols: Array[Array[Any]] = Array(
       Array.tabulate[Any](n)(i => java.lang.Long.valueOf(i * 3L)),
       Array.tabulate[Any](n)(i => Vector[Any](java.lang.Double.valueOf(i * 0.5), java.lang.Double.valueOf(i * 0.25))),
       Array.tabulate[Any](n)(i => s"verbose-string-payload-$i-" + ("pad" * 40)))
-    ArrowIpc.encodeFile(schema, Seq((cols, n)), codec)
+    file(lane, Seq((cols, n)), codec)
   }
 
   test("load + full schema read over two files; values and count match") {
     val dir = java.nio.file.Files.createTempDirectory("arrowsrc")
     try {
-      val bytes = laneFile(500, codec = -1)
+      val bytes = laneFile(500, Plain)
       java.nio.file.Files.write(dir.resolve("a.arrow"), bytes)
       java.nio.file.Files.write(dir.resolve("b.arrow"), bytes)
       val df = spark.read.format("arrowipc").load(dir.toString) // dir expansion
@@ -47,7 +51,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   test("column pruning reaches the scan (readSchema) and the plan") {
     val dir = java.nio.file.Files.createTempDirectory("arrowprune")
     try {
-      java.nio.file.Files.write(dir.resolve("a.arrow"), laneFile(200, codec = -1))
+      java.nio.file.Files.write(dir.resolve("a.arrow"), laneFile(200, Plain))
       val df = spark.read.format("arrowipc").load(dir.resolve("a.arrow").toString).select("keep")
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("columns [keep]"), s"scan description not pruned:\n$plan")
@@ -59,17 +63,21 @@ class ArrowSourceSpec extends AnyFunSuite {
   }
 
   test("PROOF pruning skips decompression: poisoned pruned column reads fine, full read fails") {
-    val bytes = laneFile(800, codec = 1) // zstd, checksummed frames
-    // locate the footer; the last body buffer (poison's data, by far
-    // the largest) ends just before the EOS marker that precedes it
-    val fLen = {
-      val t = bytes.length - 10
-      (bytes(t) & 0xff) | ((bytes(t + 1) & 0xff) << 8) | ((bytes(t + 2) & 0xff) << 16) | ((bytes(t + 3) & 0xff) << 24)
-    }
-    val footerStart = bytes.length - 10 - fLen
-    val eosStart = footerStart - 8
+    val bytes = laneFile(800, Zstd)
+    // the batch metadata names the last body buffer (poison's data, by
+    // far the largest); flip 64 bytes of its zstd payload, past the
+    // 8-byte length prefix the facade bounds for every column
+    val ranged: (Long, Int) => Array[Byte] = (off, n) => java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + n)
+    val blk = ArrowIpc.footer(ranged, bytes.length.toLong, "lane").getRecordBatches.get(0)
+    val metaLen = java.nio.ByteBuffer.wrap(bytes, blk.getOffset.toInt + 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    val rb = org.apache.arrow.flatbuf.Message
+      .getRootAsMessage(java.nio.ByteBuffer.wrap(bytes, blk.getOffset.toInt + 8, metaLen).slice())
+      .header(new org.apache.arrow.flatbuf.RecordBatch).asInstanceOf[org.apache.arrow.flatbuf.RecordBatch]
+    val last = rb.buffers(rb.buffersLength - 1)
+    val start = (blk.getOffset + blk.getMetadataLength + last.offset).toInt
+    assert(last.length > 8 + 80, s"poison buffer of ${last.length} bytes")
     val poisoned = bytes.clone()
-    for (p <- eosStart - 76 until eosStart - 12) poisoned(p) = (poisoned(p) ^ 0x5a).toByte
+    for (p <- start + 16 until start + 80) poisoned(p) = (poisoned(p) ^ 0x5a).toByte
     // sanity: whole-file decode must fail on the poisoned column
     intercept[ArrowIpc.ArrowError] { ArrowIpc.readFileBytes(poisoned) }
     val dir = java.nio.file.Files.createTempDirectory("arrowpoison")
@@ -155,6 +163,67 @@ class ArrowSourceSpec extends AnyFunSuite {
     assert(spark.read.format("arrowipc").load(dir).count() == 10)
   }
 
+  test("write side: map, struct and array<struct> columns with nulls read back by our face AND Arrow Java") {
+    import org.apache.arrow.vector.BigIntVector
+    import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
+    val dir = java.nio.file.Files.createTempDirectory("arrownested").resolve("out").toString
+    val df = spark.range(0, 300).selectExpr(
+      "id",
+      "case when id % 5 = 0 then null else map('a', id, 'b', case when id % 3 = 0 then null else id * 2 end) end as m",
+      "case when id % 4 = 0 then null else named_struct('x', id, 's', cast(id as string)) end as st",
+      "case when id % 6 = 0 then null else array(named_struct('k', id, 'v', case when id % 2 = 0 then null " +
+        "else concat('v', id) end), cast(null as struct<k:bigint,v:string>)) end as arr")
+      .repartition(2)
+    df.write.format("arrowipc").mode("append").save(dir)
+    val back = spark.read.format("arrowipc").load(dir)
+    assert(back.schema == df.schema, back.schema.treeString)
+    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+    // LIVE conformance: Arrow Java reads every written shard
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".arrow"))
+    val a = new org.apache.arrow.memory.RootAllocator()
+    try {
+      var rows = 0
+      files.foreach { f =>
+        val rd = new org.apache.arrow.vector.ipc.ArrowFileReader(
+          new org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel(java.nio.file.Files.readAllBytes(f.toPath)), a)
+        try {
+          while (rd.loadNextBatch()) {
+            val root = rd.getVectorSchemaRoot
+            val ids = root.getVector("id").asInstanceOf[BigIntVector]
+            val m = root.getVector("m").asInstanceOf[MapVector]
+            val st = root.getVector("st").asInstanceOf[StructVector]
+            val arr = root.getVector("arr").asInstanceOf[ListVector]
+            for (r <- 0 until root.getRowCount) {
+              val id = ids.get(r)
+              assert(m.isNull(r) == (id % 5 == 0), s"m at $id")
+              if (!m.isNull(r)) {
+                val es = m.getObject(r).asScala.map(_.asInstanceOf[java.util.Map[String, AnyRef]])
+                assert(es.map(_.get("key").toString) == Seq("a", "b"))
+                assert(es(0).get("value") == id)
+                assert(es(1).get("value") == (if (id % 3 == 0) null else id * 2))
+              }
+              assert(st.isNull(r) == (id % 4 == 0), s"st at $id")
+              if (!st.isNull(r)) {
+                val o = st.getObject(r)
+                assert(o.get("x") == id && o.get("s").toString == id.toString)
+              }
+              assert(arr.isNull(r) == (id % 6 == 0), s"arr at $id")
+              if (!arr.isNull(r)) {
+                val xs = arr.getObject(r).asScala
+                assert(xs.length == 2 && xs(1) == null)
+                val e = xs(0).asInstanceOf[java.util.Map[String, AnyRef]]
+                assert(e.get("k") == id)
+                assert(Option(e.get("v")).map(_.toString) == (if (id % 2 == 0) None else Some(s"v$id")))
+              }
+              rows += 1
+            }
+          }
+        } finally rd.close()
+      }
+      assert(rows == 300)
+    } finally a.close()
+  }
+
   test("write side: zstd codec option compresses and still reads everywhere") {
     val dir = java.nio.file.Files.createTempDirectory("arrowwz").resolve("out").toString
     val dirNone = java.nio.file.Files.createTempDirectory("arrowwn").resolve("out").toString
@@ -164,6 +233,16 @@ class ArrowSourceSpec extends AnyFunSuite {
     def size(d: String) = new java.io.File(d).listFiles().filter(_.getName.endsWith(".arrow")).map(_.length).sum
     assert(size(dir) < size(dirNone) / 2, s"zstd ${size(dir)} vs none ${size(dirNone)}")
     assert(spark.read.format("arrowipc").load(dir).count() == 5000)
+  }
+
+  test("write side: a failed task leaves no partial shard behind") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("arrowabort").resolve("out").toString
+    val boom = udf { (i: Long) => if (i == 4000L) throw new IllegalStateException("boom") else i }
+    val df = spark.range(0, 5000).repartition(1).select(boom(col("id")).as("id"))
+    intercept[Exception] { df.write.format("arrowipc").mode("append").save(dir) }
+    val left = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File]).map(_.getName)
+    assert(left.forall(n => !n.endsWith(".tmp") && !n.endsWith(".arrow")), left.mkString(","))
   }
 
   test("write side: unsupported column type refuses at plan time") {
@@ -215,7 +294,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   }
 
   test("hostile footer: block extents outside the file refuse as ArrowError at plan time") {
-    val good = laneFile(50, codec = -1)
+    val good = laneFile(50, Plain)
     // patch the first batch Block's bodyLength (footer struct field at
     // offset+16) to a huge value: find the footer region and flip the
     // recordBatches vector's first entry — simpler: binary-search for
@@ -234,7 +313,7 @@ class ArrowSourceSpec extends AnyFunSuite {
     val raf: (Array[Byte]) => Unit = { b =>
       val ranged: (Long, Int) => Array[Byte] =
         (off, n) => java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + n)
-      ArrowIpc.footer(ranged, b.length.toLong); ()
+      ArrowIpc.footer(ranged, b.length.toLong, "hostile"); ()
     }
     for (p <- footerStart until good.length - 18) {
       val b = good.clone()
@@ -249,7 +328,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   }
 
   test("hostile footer: Long-overflow block extents refuse at footer parse (not in fetch tasks)") {
-    val good = laneFile(20, codec = -1)
+    val good = laneFile(20, Plain)
     // locate the first record-batch Block struct in the footer by its
     // known offset value (the batch message starts right after the
     // schema message: 8 + 8 + paddedSchemaFbLen)
@@ -274,7 +353,7 @@ class ArrowSourceSpec extends AnyFunSuite {
     for (j <- 0 until 8) bomb(pos + j) = ((huge >> (8 * j)) & 0xff).toByte
     val ranged: (Long, Int) => Array[Byte] =
       (off, n) => java.util.Arrays.copyOfRange(bomb, off.toInt, off.toInt + n)
-    intercept[ArrowIpc.ArrowError] { ArrowIpc.footer(ranged, bomb.length.toLong) }
+    intercept[ArrowIpc.ArrowError] { ArrowIpc.footer(ranged, bomb.length.toLong, "bomb") }
   }
 
   test("uint64 round-trip: decimal(20,0) carrier writes back as real arrow u64") {
@@ -291,7 +370,7 @@ class ArrowSourceSpec extends AnyFunSuite {
     val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".arrow")).head
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     val (as, _) = ArrowIpc.readFileBytes(bytes)
-    assert(as.fields.head.tpe == AInt(64, signed = false))
+    assert(as.getFields.get(0).getType == new ArrowType.Int(64, false))
     val back = spark.read.format("arrowipc").load(dir)
     val got = back.collect().map(r => Option(r.getDecimal(0)).map(_.toBigInteger.toString).orNull).sorted(
       Ordering[String].on((s: String) => if (s == null) "" else s))
@@ -303,12 +382,11 @@ class ArrowSourceSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("arrowparts")
     try {
       val p = dir.resolve("m.arrow")
-      // our writer: 5 batches of 100
-      val schema = ASchema(Seq(AField("x", nullable = false, AInt(64, signed = true))))
+      // Arrow Java: 5 batches of 100
       val batches = (0 until 5).map { b =>
         (Array(Array.tabulate[Any](100)(i => java.lang.Long.valueOf(b * 100L + i))), 100)
       }
-      java.nio.file.Files.write(p, ArrowIpc.encodeFile(schema, batches))
+      java.nio.file.Files.write(p, file(schema(int64("x", nullable = false)), batches))
       val df = spark.read.format("arrowipc").load(p.toString)
       assert(df.rdd.getNumPartitions == 5)
       assert(df.count() == 500)

@@ -227,12 +227,12 @@ class AvroOcfSpec extends AnyFunSuite {
     try {
       val p = new java.io.File(dir, "r.avro")
       java.nio.file.Files.write(p.toPath, bytes)
-      val whole = AvroOcf.scan(spark, Seq(p.getPath), splitBytes = 1L << 30)
-        .collect().map(_.getInt(0)).sorted.toVector
+      def read(split: Long): Vector[Int] = spark.read.format("avroocf").option("splitBytes", split.toString)
+        .load(p.getPath).collect().map(_.getInt(0)).sorted.toVector
+      val whole = read(1L << 30)
       assert(whole == (0 until N).toVector)
       for (split <- Seq(1024L, 1500L, 4096L)) {
-        val got = AvroOcf.scan(spark, Seq(p.getPath), splitBytes = split)
-          .collect().map(_.getInt(0)).sorted.toVector
+        val got = read(split)
         assert(got == (0 until N).toVector, s"split=$split lost or duplicated rows")
       }
     } finally {
@@ -247,7 +247,7 @@ class AvroOcfSpec extends AnyFunSuite {
     try {
       val p = new java.io.File(dir, "r.avro")
       java.nio.file.Files.write(p.toPath, bytes)
-      val df = AvroOcf.scan(spark, Seq(p.getPath))
+      val df = spark.read.format("avroocf").load(p.getPath)
       val st = df.schema
       assert(st("ns").dataType == org.apache.spark.sql.types.StringType && st("ns").nullable)
       assert(st("gu").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]

@@ -38,8 +38,19 @@ class AvroSourceSpec extends AnyFunSuite {
         assert(rows(i).getString(1) == s"v$i")
         assert(rows(i).getSeq[Long](2) == Seq.tabulate(i % 4)(j => i * 10L + j))
       }
-      val viaScan = AvroOcf.scan(spark, Seq(f.getPath)).collect().sortBy(_.getInt(0))
-      assert(rows.map(_.toString).toSeq == viaScan.map(_.toString).toSeq)
+      // the reference reader: avro-java's GenericDatumReader over the same file
+      val ref = new org.apache.avro.file.DataFileReader(
+        new org.apache.avro.file.SeekableByteArrayInput(java.nio.file.Files.readAllBytes(f.toPath)),
+        new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
+      val expected =
+        try {
+          import scala.jdk.CollectionConverters._
+          ref.iterator.asScala.map { r =>
+            (r.get("k").asInstanceOf[Int], r.get("s").toString,
+              r.get("a").asInstanceOf[java.util.List[java.lang.Long]].asScala.map(_.longValue).toSeq)
+          }.toSeq.sortBy(_._1)
+        } finally ref.close()
+      assert(rows.map(r => (r.getInt(0), r.getString(1), r.getSeq[Long](2))).toSeq == expected)
     } finally {
       dir.listFiles().foreach(_.delete()); dir.delete()
     }

@@ -16,8 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * snappy-java (org.xerial raw + framed), XZ for Java (org.tukaani —
   * LZMA2 + ALL 8 BCJ filters incl. RISC-V, 1.10), commons-compress
   * (bzip2 streams; ZipFile reads our method-12/93 archives through
-  * the same live codecs), Arrow Java (IPC reader over our writer's
-  * compressed bodies). Brotli has no in-JVM reference decoder in this
+  * the same live codecs). Brotli has no in-JVM reference decoder in this
   * container (commons-compress needs the absent org.brotli:dec) — its
   * lane is a self round-trip here, with real-producer conformance
   * carried by BrotliSpec's pinned fixtures.
@@ -234,52 +233,6 @@ class EncoderDifferentialFuzzSpec extends AnyFunSuite {
         same(back, data, s"zip method $method entry $name")
       }
     } finally zf.close()
-  }
-
-  // ------------------------------------------------------------ arrow writer
-
-  test("arrow writer over hostile strings/binary at every codec -> Arrow Java reader") {
-    import graft.sources.ArrowIpc
-    import graft.sources.ArrowIpc._
-    import org.apache.arrow.vector.ipc.ArrowFileReader
-    import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    import org.apache.arrow.compression.CommonsCompressionFactory
-    // one row per corpus entry: the raw bytes as binary, plus a utf8
-    // column of non-ASCII text sliced to varying lengths — exactly the
-    // shape that exposed the r17 Huffman-weight overflow
-    val schema = ASchema(Seq(
-      AField("raw", nullable = true, ABinary),
-      AField("txt", nullable = true, AUtf8)))
-    val nonAscii = new String(corpus.collectFirst { case ("non_ascii_utf8", d) => d }.get, Utf8)
-    // surrogate-safe prefix: a slice that splits an emoji's surrogate
-    // pair is malformed UTF-16 and cannot round-trip through UTF-8
-    def prefix(k: Int): String = {
-      val end = if (k < nonAscii.length && Character.isHighSurrogate(nonAscii.charAt(k - 1))) k - 1 else k
-      nonAscii.substring(0, end)
-    }
-    val rows = corpus.length
-    val cols: Array[Array[Any]] = Array(
-      corpus.map(_._2: Any).toArray,
-      corpus.zipWithIndex.map { case (_, i) => prefix(1 + i * 601 % nonAscii.length): Any }.toArray)
-    for (codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(schema, Seq((cols, rows)), codec)
-      val a = new org.apache.arrow.memory.RootAllocator()
-      try {
-        val r = new ArrowFileReader(
-          new ByteArrayReadableSeekableByteChannel(bytes), a, CommonsCompressionFactory.INSTANCE)
-        try {
-          assert(r.loadNextBatch(), s"codec=$codec: Arrow Java rejects our hostile-corpus file")
-          val root = r.getVectorSchemaRoot
-          assert(root.getRowCount == rows)
-          for (i <- 0 until rows) {
-            val raw = root.getVector("raw").getObject(i).asInstanceOf[Array[Byte]]
-            same(raw, corpus(i)._2, s"arrow/codec=$codec raw[$i]")
-            assert(root.getVector("txt").getObject(i).toString ==
-              prefix(1 + i * 601 % nonAscii.length), s"arrow/codec=$codec txt[$i]")
-          }
-        } finally r.close()
-      } finally a.close()
-    }
   }
 
   test("avro writer over hostile bytes/strings at every codec -> avro-java DataFileReader") {

@@ -9,10 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guard: `Sessions` is the only SparkSession factory,
   * `Lanes` the only place that releases every persistent RDD, `Bytes`
   * the only home of byte-order helpers, `Zstd`, `Xz` and `Snappy`
-  * the only callers of the codec libraries behind them, and
+  * the only callers of the codec libraries behind them,
   * `ParquetMeta` and `OrcMeta` the only callers of parquet-mr and
-  * orc-core, so a second builder, release loop, endian helper, codec
-  * or lake-format entry point cannot grow back anywhere in main code. */
+  * orc-core, `ArrowIpc` and `ArrowSource` the only callers of
+  * arrow-vector and `AvroOcf` the only caller of avro-java, so a
+  * second builder, release loop, endian helper, codec or format entry
+  * point cannot grow back anywhere in main code. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -40,6 +42,12 @@ class OneFactorySpec extends AnyFunSuite {
   test("parquet-mr and orc-core are referenced only from ParquetMeta and OrcMeta") {
     assert(matching("""org\.apache\.parquet|org\.apache\.orc""") ===
       Seq("graft/sources/OrcMeta.scala", "graft/sources/ParquetMeta.scala"))
+  }
+
+  test("arrow-vector is referenced only from ArrowIpc and ArrowSource, avro-java only from AvroOcf") {
+    assert(matching("""org\.apache\.arrow""") ===
+      Seq("graft/sources/ArrowIpc.scala", "graft/sources/ArrowSource.scala"))
+    assert(matching("""org\.apache\.avro""") === Seq("graft/sources/AvroOcf.scala"))
   }
 
   test("the getPersistentRDDs unpersist loop appears only in Lanes") {

@@ -1,7 +1,7 @@
 package graft
 
+import graft.ArrowJava._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming twin for Arrow shards: files dropped in a directory are
@@ -12,17 +12,15 @@ class StreamArrowSpec extends SparkSuite {
   test("arrow shard landing zone: streamed rows equal the batch decode, both framings") {
     val dir = java.nio.file.Files.createTempDirectory("arrowstream")
     try {
-      val schema = ASchema(Seq(
-        AField("id", nullable = false, AInt(64, signed = true)),
-        AField("tag", nullable = true, AUtf8)))
+      val shards = schema(int64("id", nullable = false), utf8("tag"))
       def cols(from: Int, n: Int): Array[Array[Any]] = Array(
         Array.tabulate[Any](n)(i => java.lang.Long.valueOf(from + i.toLong)),
         Array.tabulate[Any](n)(i => s"t${(from + i) % 7}"))
-      // one FILE-format shard (our writer), one STREAM-format shard,
-      // one Arrow-Java-written file shard
-      java.nio.file.Files.write(dir.resolve("a.arrow"), ArrowIpc.encodeFile(schema, Seq((cols(0, 40), 40)), codec = 1))
-      java.nio.file.Files.write(dir.resolve("b.arrows"), ArrowIpc.encodeStream(schema, Seq((cols(40, 25), 25))))
-      val sparkSchemaExp = ArrowIpc.sparkSchema(schema)
+      // one FILE-format shard (zstd) and one STREAM-format shard, both
+      // written by Arrow Java
+      java.nio.file.Files.write(dir.resolve("a.arrow"), file(shards, Seq((cols(0, 40), 40)), Zstd))
+      java.nio.file.Files.write(dir.resolve("b.arrows"), stream(shards, Seq((cols(40, 25), 25))))
+      val sparkSchemaExp = ArrowIpc.sparkSchema(shards)
       val q = ArrowIpc.rowsStream(spark, dir.toString, sparkSchemaExp)
         .writeStream.format("memory").queryName("arrow_stream_test")
         .trigger(Trigger.AvailableNow()).start()

@@ -3206,10 +3206,9 @@ object SparkEntry {
         |  count(*) AS n_lines,
         |  CAST(sum(15 + length(CAST(event_id AS VARCHAR)) + length(CAST(event_id % 97 AS VARCHAR))) AS BIGINT) AS line_chars
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // bzip2 full-codec cycle: jsonl -> REAL encode (RLE1+BWT+MTF+RLE2+
-    // huffman) -> decode byte-equal + bit-aligned block split sweep
-    // (all requires); closed-form counts. Cross-decoder conformance
-    // (libbz2 both directions): Bzip2Spec.
+    // bzip2 cycle: jsonl -> encode -> whole decode byte-equal (a
+    // require); closed-form counts. Conformance against real libbz2
+    // fixtures: Bzip2Spec.
     "q_bz2" ->
       """SELECT event_type,
         |  count(*) AS n_lines,

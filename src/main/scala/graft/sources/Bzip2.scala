@@ -1,679 +1,60 @@
 package graft.sources
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+
+import org.apache.commons.compress.compressors.bzip2.{BZip2CompressorInputStream, BZip2CompressorOutputStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** bzip2 decoder — pure JVM, from the public format (Burrows-Wheeler
-  * + MTF + RLE2 + per-group Huffman; the format every independent
-  * reimplementation documents): stream header, block magic, symbol
-  * map, selector MTF, delta-coded code lengths, bijective-base-2 run
-  * lengths, inverse MTF, inverse BWT, RLE1, per-block and combined
-  * CRCs (bzip2's MSB-first CRC-32), and multistream concatenation.
+/** bzip2 through commons-compress, the implementation Spark ships:
+  * this object is the one place main code reaches it. Whole streams
+  * both ways, multistream concatenation included (the shape of the big
+  * public `.bz2` dumps), plus the untrusted-bytes contract:
   *
-  * Why it's front-door: the big public XML dumps (Wikipedia et al.)
-  * ship as multistream `.bz2`, chosen precisely because bzip2 is
-  * SPLITTABLE: each compressed block is self-contained and starts
-  * with a 48-bit magic at an arbitrary BIT offset, so a scan can
-  * find block boundaries anywhere in the byte stream — the classic
-  * Hadoop trick. [[blocksInRange]] gives tasks exactly that: scan
-  * the owned byte range for bit-aligned block magics, decode each
-  * block independently (ownership by block-start bit position,
-  * exactly-once across any split partition). A 48-bit pattern can in
-  * principle collide inside compressed data; a candidate that fails
-  * to decode as a block is dropped (the industry-standard behavior),
-  * and Bzip2Spec sweeps multi-block files to prove the union is
-  * exact.
+  *  - Every failure, library or ours, is a [[Bzip2Error]].
+  *  - A caller that knows the decoded size (a Zip entry, a 7z folder)
+  *    passes it as `limit`; a stream that decodes past it is refused
+  *    at `limit + 1` bytes, so a few hundred bytes of bzip2 over a run
+  *    of zeros cannot demand gigabytes.
   *
-  * Bzip2Spec pins the decoder byte-exactly against REAL libbz2
-  * output (python's stdlib bz2 binding) across levels, content
-  * classes and multistream concatenation; the deprecated
-  * "randomized" mode is a named refusal.
-  */
+  * Splitting one huge `.bz2` within the file is Spark's job: its text
+  * source splits `.bz2` by block through Hadoop's `BZip2Codec`, and
+  * [[TextShards.lines]] routes `.bz2` there.
+  *
+  * Conformance: Bzip2Spec decodes real libbz2 output (levels 1..9,
+  * multi-block, multistream) byte-exactly through this facade. */
 object Bzip2 {
 
-  class Bzip2Error(msg: String) extends RuntimeException(msg)
-  /** Bitstream ran off the END of the supplied buffer — distinct from
-    * corruption so range scans can grow their tail read and retry (a
-    * pathological block can compress LARGER than its level*100k
-    * payload: 23-bit symbols give ~2.6 MB worst case). */
-  final class TruncatedError(msg: String) extends Bzip2Error(msg)
+  final class Bzip2Error(msg: String) extends RuntimeException(msg)
   private def fail(msg: String): Nothing = throw new Bzip2Error(msg)
 
-  private val BlockMagic = 0x314159265359L // 48-bit "pi"
-  private val EosMagic = 0x177245385090L // 48-bit "sqrt pi"
+  /** Block size in units of 100 kB that [[encode]] writes. */
+  private val Level = 1
 
-  // ------------------------------------------------------------------
-  // MSB-first bit reader (bzip2's bit order), addressable by BIT
-  // ------------------------------------------------------------------
+  /** Decode a whole (possibly multistream) `.bz2`; empty input is empty
+    * output. `limit >= 0` caps the decoded size. */
+  def decode(b: Array[Byte], limit: Long = -1L): Array[Byte] =
+    if (b.isEmpty) Array.emptyByteArray
+    else
+      try {
+        val in = new BZip2CompressorInputStream(new ByteArrayInputStream(b), true)
+        val out =
+          try if (limit < 0 || limit >= Int.MaxValue - 8) in.readAllBytes() else in.readNBytes(limit.toInt + 1)
+          finally in.close()
+        if (limit >= 0 && out.length > limit) fail(s"bzip2: stream decodes past the declared $limit bytes")
+        out
+      } catch {
+        case e: Bzip2Error => throw e
+        case e: IOException => fail(s"bzip2: ${e.getMessage}")
+        case e: RuntimeException => fail(s"bzip2: malformed input (${e.getClass.getSimpleName})")
+      }
 
-  private final class Bits(b: Array[Byte], startBit: Long, endBit: Long) {
-    var pos: Long = startBit
-    def bit(): Int = {
-      if (pos >= endBit) throw new TruncatedError("bzip2: bitstream truncated")
-      val v = (b((pos >> 3).toInt) >> (7 - (pos & 7)).toInt) & 1
-      pos += 1
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def bits48(): Long = ((bits(24).toLong & 0xffffff) << 24) | (bits(24).toLong & 0xffffff)
-  }
-
-  // ------------------------------------------------------------------
-  // bzip2 CRC-32 (MSB-first, poly 0x04c11db7)
-  // ------------------------------------------------------------------
-
-  private val CrcTable: Array[Int] = Array.tabulate(256) { i =>
-    var c = i << 24
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1
-      k += 1
-    }
-    c
-  }
-
-  private final class Crc {
-    var v: Int = -1
-    def update(byte: Int): Unit = v = (v << 8) ^ CrcTable(((v >>> 24) ^ byte) & 0xff)
-    def value: Int = ~v
-  }
-
-  // ------------------------------------------------------------------
-  // canonical Huffman, MSB-first bit-serial (lengths up to 23)
-  // ------------------------------------------------------------------
-
-  private final class Huff(lengths: Array[Int], n: Int) {
-    private val MaxLen = 23
-    private val limit = new Array[Int](MaxLen + 2)
-    private val base = new Array[Int](MaxLen + 2)
-    private val perm = new Array[Int](n)
-    private var minLen = MaxLen
-    private var maxLen = 0
-    locally {
-      var i = 0
-      while (i < n) {
-        if (lengths(i) < 1 || lengths(i) > MaxLen) fail("bzip2: code length out of range")
-        if (lengths(i) < minLen) minLen = lengths(i)
-        if (lengths(i) > maxLen) maxLen = lengths(i)
-        i += 1
-      }
-      // the reference construction (hbCreateDecodeTables):
-      // perm = symbols sorted by (length, symbol)
-      var pp = 0
-      var l = minLen
-      while (l <= maxLen) {
-        i = 0
-        while (i < n) { if (lengths(i) == l) { perm(pp) = i; pp += 1 }; i += 1 }
-        l += 1
-      }
-      i = 0
-      while (i < n) { base(lengths(i) + 1) += 1; i += 1 }
-      i = 1
-      while (i < base.length) { base(i) += base(i - 1); i += 1 }
-      var vec = 0
-      l = minLen
-      while (l <= maxLen) {
-        vec += base(l + 1) - base(l)
-        limit(l) = vec - 1
-        vec <<= 1
-        l += 1
-      }
-      l = minLen + 1
-      while (l <= maxLen) {
-        base(l) = ((limit(l - 1) + 1) << 1) - base(l)
-        l += 1
-      }
-    }
-    def read(br: Bits): Int = {
-      var l = minLen
-      var code = br.bits(minLen)
-      while (l <= maxLen && code > limit(l)) {
-        code = (code << 1) | br.bit()
-        l += 1
-      }
-      if (l > maxLen && code > limit(maxLen)) fail("bzip2: invalid huffman bits")
-      val idx = code - base(l)
-      if (idx < 0 || idx >= perm.length) fail("bzip2: huffman index out of range")
-      perm(idx)
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // one block
-  // ------------------------------------------------------------------
-
-  /** Decode ONE block whose 48-bit magic starts at `bitPos`; returns
-    * (payload, storedCrc, bit position after the block's coded data).
-    * `level` = 1..9 (100k x level max block size). */
-  def decodeBlock(b: Array[Byte], bitPos: Long, level: Int): (Array[Byte], Int, Long) = {
-    val br = new Bits(b, bitPos, b.length.toLong * 8)
-    if (br.bits48() != BlockMagic) fail("bzip2: bad block magic")
-    val storedCrc = br.bits(32)
-    if (br.bit() != 0) fail("bzip2: deprecated 'randomized' blocks unsupported (named refusal)")
-    val origPtr = br.bits(24)
-    // symbol map
-    val used = new Array[Boolean](256)
-    val ranges = br.bits(16)
-    var r = 0
-    while (r < 16) {
-      if (((ranges >> (15 - r)) & 1) == 1) {
-        val m = br.bits(16)
-        var k = 0
-        while (k < 16) { if (((m >> (15 - k)) & 1) == 1) used(r * 16 + k) = true; k += 1 }
-      }
-      r += 1
-    }
-    val seqToUnseq = (0 until 256).filter(used).toArray
-    val nUsed = seqToUnseq.length
-    if (nUsed == 0) fail("bzip2: empty symbol map")
-    val alphaSize = nUsed + 2
-    val eob = alphaSize - 1
-    val nGroups = br.bits(3)
-    if (nGroups < 2 || nGroups > 6) fail("bzip2: bad group count")
-    val nSelectors = br.bits(15)
-    if (nSelectors < 1) fail("bzip2: no selectors")
-    // selector MTF
-    val selectors = new Array[Int](nSelectors)
-    val gmtf = Array.tabulate(nGroups)(identity)
-    var s = 0
-    while (s < nSelectors) {
-      var j = 0
-      while (br.bit() == 1) { j += 1; if (j >= nGroups) fail("bzip2: selector overflow") }
-      val v = gmtf(j)
-      while (j > 0) { gmtf(j) = gmtf(j - 1); j -= 1 }
-      gmtf(0) = v
-      selectors(s) = v
-      s += 1
-    }
-    // code lengths per group
-    val huffs = new Array[Huff](nGroups)
-    var g = 0
-    while (g < nGroups) {
-      val lens = new Array[Int](alphaSize)
-      var cur = br.bits(5)
-      var sym = 0
-      while (sym < alphaSize) {
-        var guard = 0
-        while (br.bit() == 1) {
-          if (br.bit() == 1) cur -= 1 else cur += 1
-          guard += 1
-          if (guard > 50 || cur < 1 || cur > 23) fail("bzip2: code length delta out of range")
-        }
-        lens(sym) = cur
-        sym += 1
-      }
-      huffs(g) = new Huff(lens, alphaSize)
-      g += 1
-    }
-    // MTF + RLE2 decode into the BWT column
-    val maxBlock = level * 100000
-    val bwt = new Array[Byte](maxBlock)
-    var blockLen = 0
-    val mtf = seqToUnseq.clone()
-    var groupPos = 0
-    var groupCount = 0
-    var huff: Huff = null
-    def nextSym(): Int = {
-      if (groupCount == 0) {
-        if (groupPos >= nSelectors) fail("bzip2: selectors exhausted")
-        huff = huffs(selectors(groupPos))
-        groupPos += 1
-        groupCount = 50
-      }
-      groupCount -= 1
-      huff.read(br)
-    }
-    var sym2 = nextSym()
-    while (sym2 != eob) {
-      if (sym2 <= 1) {
-        // RUNA/RUNB: bijective base 2 run of mtf(0)
-        var run = 0L
-        var shift = 0
-        while (sym2 <= 1) {
-          run += (sym2 + 1).toLong << shift
-          shift += 1
-          if (shift > 40) fail("bzip2: absurd run length")
-          sym2 = nextSym()
-        }
-        if (blockLen + run > maxBlock) fail("bzip2: block overrun (run)")
-        val byte = mtf(0)
-        var k = 0L
-        while (k < run) { bwt(blockLen) = byte.toByte; blockLen += 1; k += 1 }
-      } else {
-        // MTF value sym2-1
-        val j0 = sym2 - 1
-        if (j0 >= mtf.length) fail("bzip2: MTF index out of range")
-        val v = mtf(j0)
-        var j = j0
-        while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-        mtf(0) = v
-        if (blockLen + 1 > maxBlock) fail("bzip2: block overrun")
-        bwt(blockLen) = v.toByte
-        blockLen += 1
-        sym2 = nextSym()
-      }
-    }
-    if (origPtr >= blockLen) fail("bzip2: origPtr out of range")
-    // inverse BWT (T-vector)
-    val counts = new Array[Int](256)
-    var i = 0
-    while (i < blockLen) { counts(bwt(i) & 0xff) += 1; i += 1 }
-    val starts = new Array[Int](256)
-    var acc = 0
-    i = 0
-    while (i < 256) { starts(i) = acc; acc += counts(i); i += 1 }
-    val tvec = new Array[Int](blockLen)
-    val fill = starts.clone()
-    i = 0
-    while (i < blockLen) {
-      val c = bwt(i) & 0xff
-      tvec(fill(c)) = i
-      fill(c) += 1
-      i += 1
-    }
-    // walk + RLE1 + CRC
-    val out = new java.io.ByteArrayOutputStream(blockLen + (blockLen >> 2))
-    val crc = new Crc
-    var tpos = tvec(origPtr)
-    var runByte = -1
-    var runLen = 0
-    i = 0
-    while (i < blockLen) {
-      val c = bwt(tpos) & 0xff
-      tpos = tvec(tpos)
-      if (runLen == 4) {
-        // the previous 4 bytes were equal: c is the extra-count byte
-        var k = 0
-        while (k < c) { out.write(runByte); crc.update(runByte); k += 1 }
-        runByte = -1
-        runLen = 0
-      } else {
-        if (c == runByte) runLen += 1 else { runByte = c; runLen = 1 }
-        out.write(c)
-        crc.update(c)
-      }
-      i += 1
-    }
-    if (crc.value != storedCrc) fail("bzip2: block CRC mismatch")
-    (out.toByteArray, storedCrc, br.pos)
-  }
-
-  // ------------------------------------------------------------------
-  // whole-stream / multistream decode
-  // ------------------------------------------------------------------
-
-  /** Decode a whole (possibly multistream) .bz2 file. */
-  def decode(b: Array[Byte]): Array[Byte] =
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      var byteOff = 0
-      while (byteOff < b.length) {
-        if (b.length - byteOff < 4) fail("bzip2: truncated stream header")
-        if (b(byteOff) != 'B' || b(byteOff + 1) != 'Z' || b(byteOff + 2) != 'h') fail("bzip2: bad stream magic")
-        val level = b(byteOff + 3) - '0'
-        if (level < 1 || level > 9) fail("bzip2: bad level digit")
-        var bitPos = (byteOff + 4).toLong * 8
-        var combined = 0
-        var done = false
-        while (!done) {
-          val peek = new Bits(b, bitPos, b.length.toLong * 8)
-          val magic = peek.bits48()
-          if (magic == EosMagic) {
-            val stored = peek.bits(32)
-            if (stored != combined) fail("bzip2: combined CRC mismatch")
-            // streams are byte-padded; next stream starts at the next byte
-            byteOff = ((peek.pos + 7) / 8).toInt
-            done = true
-          } else if (magic == BlockMagic) {
-            val (payload, blockCrc, after) = decodeBlock(b, bitPos, level)
-            out.write(payload)
-            combined = ((combined << 1) | (combined >>> 31)) ^ blockCrc
-            bitPos = after
-          } else fail("bzip2: expected block or end-of-stream magic")
-        }
-      }
-      out.toByteArray
-    } catch {
-      case e: Bzip2Error => throw e
-      case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException |
-          _: IndexOutOfBoundsException =>
-        fail("bzip2: malformed input (out-of-range field)")
-    }
-
-  // ------------------------------------------------------------------
-  // split scan
-  // ------------------------------------------------------------------
-
-  /** Bit positions of every block magic whose start lies in byte range
-    * [startByte, endByte) — the scan each task runs over its own
-    * range. Candidates that fail to decode should be dropped by the
-    * caller (48-bit false positives are possible in principle). */
-  def blockCandidates(b: Array[Byte], startByte: Long, endByte: Long): Seq[Long] = {
-    // byte-stepped: roll an 8-byte big-endian window and test all 8 bit
-    // alignments per byte (1 load + 8 shift-compares per byte — the
-    // whole-corpus scan cost at 100 TB, so constant factors matter).
-    // After pushing byte i, the low 56 bits hold bytes (i-6..i); the
-    // 48-bit field at bit k of byte s=i-6 is (low56 >>> (8-k)).
-    val out = List.newBuilder[Long]
-    val s0 = startByte.toInt
-    if (b.length - s0 < 7) return Nil
-    var w = 0L
-    var j = 0
-    while (j < 6) { w = (w << 8) | (b(s0 + j) & 0xffL); j += 1 }
-    var i = s0 + 6
-    val lastExclusive = math.min(endByte + 6, b.length.toLong).toInt
-    val endBit = endByte * 8
-    while (i < lastExclusive) {
-      w = (w << 8) | (b(i) & 0xffL)
-      val low56 = w & 0x00ffffffffffffffL
-      val s = (i - 6).toLong
-      var k = 0
-      while (k < 8) {
-        if (((low56 >>> (8 - k)) & 0xffffffffffffL) == BlockMagic) {
-          val bit = s * 8 + k
-          if (bit >= startByte * 8 && bit < endBit) out += bit
-        }
-        k += 1
-      }
-      i += 1
-    }
-    out.result()
-  }
-
-  /** Blocks whose magic STARTS in [startByte, endByte): decoded
-    * payloads keyed by bit position (exactly-once ownership across a
-    * byte-range partition); false-positive candidates are dropped.
-    * With `failOnTruncation`, a candidate whose decode runs off the
-    * END of `b` propagates [[TruncatedError]] instead of being
-    * dropped — callers holding a partial file read (range scans) must
-    * grow the buffer and retry, or a REAL block extending past the
-    * tail read silently loses data as a "false positive". Leave it
-    * false only when `b` is the whole file (then truncation IS
-    * corruption). */
-  def blocksInRange(b: Array[Byte], startByte: Long, endByte: Long, level: Int,
-      failOnTruncation: Boolean = false): Seq[(Long, Array[Byte])] =
-    blockCandidates(b, startByte, endByte).flatMap { bitPos =>
-      try Some((bitPos, decodeBlock(b, bitPos, level)._1))
-      catch {
-        case e: TruncatedError if failOnTruncation => throw e
-        case _: Bzip2Error => None
-      }
-    }
-
-  // ------------------------------------------------------------------
-  // minimal conforming encoder (cycle driver)
-  // ------------------------------------------------------------------
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    def bits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        n += 1
-        if (n == 8) { out.write(cur); cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def bits48(v: Long): Unit = { bits(((v >> 24) & 0xffffff).toInt, 24); bits((v & 0xffffff).toInt, 24) }
-    def pad(): Unit = if (n > 0) { out.write(cur << (8 - n)); cur = 0; n = 0 }
-    def result(): Array[Byte] = { pad(); out.toByteArray }
-  }
-
-  /** BWT of `s` by prefix-doubling rotation sort; returns (lastColumn,
-    * origPtr). O(n log^2 n), serial — sized for in-task blocks. */
-  private def bwt(s: Array[Byte]): (Array[Byte], Int) = {
-    val n = s.length
-    if (n == 0) return (Array.emptyByteArray, 0)
-    var rank = Array.tabulate(n)(i => (s(i) & 0xff))
-    val idx = Array.tabulate(n)(identity)
-    var k = 1
-    var done = false
-    while (!done && k < n) {
-      val key = (i: Int) => (rank(i).toLong << 32) | (rank((i + k) % n).toLong & 0xffffffffL)
-      val sortedIdx = idx.sortBy(key)
-      val newRank = new Array[Int](n)
-      var r = 0
-      var i = 1
-      newRank(sortedIdx(0)) = 0
-      while (i < n) {
-        if (key(sortedIdx(i)) != key(sortedIdx(i - 1))) r += 1
-        newRank(sortedIdx(i)) = r
-        i += 1
-      }
-      System.arraycopy(sortedIdx, 0, idx, 0, n)
-      rank = newRank
-      done = r == n - 1
-      k <<= 1
-    }
-    val sorted = if (done) idx else idx.sortBy(i => rank(i))
-    val last = new Array[Byte](n)
-    var orig = -1
-    var i = 0
-    while (i < n) {
-      val rot = sorted(i)
-      last(i) = s((rot + n - 1) % n)
-      if (rot == 0) orig = i
-      i += 1
-    }
-    (last, orig)
-  }
-
-  /** Compress `data` into a REAL single-stream bzip2 file (level-bound
-    * blocks, two identical Huffman tables — the format's minimum —
-    * with a complete two-length canonical code). Any conforming
-    * decoder reads it; cross-checked against libbz2 at build time. */
-  def encode(data: Array[Byte], level: Int = 1): Array[Byte] = {
-    require(level >= 1 && level <= 9)
-    val limit = level * 100000
-    val w = new BitWriter
-    w.bits('B', 8); w.bits('Z', 8); w.bits('h', 8); w.bits('0' + level, 8)
-    var combined = 0
-    var off = 0
-    while (off < data.length) { // empty input: header + EOS only, like the reference
-
-      // take a chunk whose RLE1 form fits the block limit (RLE1 worst
-      // case expands 4 -> 5)
-      val take = math.min(data.length - off, limit * 4 / 5 - 8)
-      val crc = new Crc
-      var i = off
-      val end = off + take
-      while (i < end) { crc.update(data(i) & 0xff); i += 1 }
-      // RLE1: runs of 4..259 identical bytes become 4 bytes + count
-      val rle = new java.io.ByteArrayOutputStream(take + 16)
-      i = off
-      while (i < end) {
-        val c = data(i)
-        var run = 1
-        while (i + run < end && run < 259 && data(i + run) == c) run += 1
-        if (run >= 4) {
-          rle.write(c); rle.write(c); rle.write(c); rle.write(c)
-          rle.write(run - 4)
-        } else {
-          var r = 0
-          while (r < run) { rle.write(c); r += 1 }
-        }
-        i += run
-      }
-      val block = rle.toByteArray
-      require(block.length <= limit, "bz2 encoder: RLE1 block overflow")
-      val (lastCol, origPtr) = bwt(block)
-      // MTF + RLE2
-      val used = new Array[Boolean](256)
-      block.foreach(b0 => used(b0 & 0xff) = true)
-      val seq = (0 until 256).filter(used).toArray
-      val alphaSize = seq.length + 2
-      val eob = alphaSize - 1
-      val mtf = seq.clone()
-      val syms = new java.util.ArrayList[Int](block.length + 8)
-      var zeroRun = 0L
-      // bijective base-2: run N = sum of digits in {1,2} times 2^i;
-      // RUNA carries digit 1, RUNB digit 2 (the decoder's inverse)
-      def flushRun(): Unit = {
-        var v = zeroRun
-        while (v > 0) {
-          syms.add(((v - 1) % 2).toInt) // 0 = RUNA, 1 = RUNB
-          v = (v - 1) / 2
-        }
-        zeroRun = 0
-      }
-      var p = 0
-      while (p < lastCol.length) {
-        val c = lastCol(p) & 0xff
-        var j = 0
-        while (mtf(j) != c) j += 1
-        if (j == 0) zeroRun += 1
-        else {
-          flushRun()
-          syms.add(j + 1)
-          while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-          mtf(0) = c
-        }
-        p += 1
-      }
-      flushRun()
-      syms.add(eob)
-      // complete two-length canonical code over alphaSize
-      var m = 1
-      while ((1 << m) < alphaSize) m += 1
-      val nShort = (1 << m) - alphaSize // symbols at length m-1 (0 when power of two)
-      val lens = Array.tabulate(alphaSize)(s0 => if (s0 < nShort) m - 1 else m)
-      // canonical codes in (length, symbol) order = ascending here
-      val codes = new Array[(Int, Int)](alphaSize) // (code, len)
-      var code = 0
-      var s0 = 0
-      while (s0 < alphaSize) {
-        if (s0 > 0 && lens(s0) > lens(s0 - 1)) code <<= 1
-        codes(s0) = (code, lens(s0))
-        code += 1
-        s0 += 1
-      }
-      // block header
-      w.bits48(BlockMagic)
-      w.bits(crc.value, 32)
-      combined = ((combined << 1) | (combined >>> 31)) ^ crc.value
-      w.bits(0, 1) // not randomized
-      w.bits(origPtr, 24)
-      var rgx = 0
-      var rangeMask = 0
-      while (rgx < 16) {
-        var any = false
-        var k2 = 0
-        while (k2 < 16) { if (used(rgx * 16 + k2)) any = true; k2 += 1 }
-        if (any) rangeMask |= 1 << (15 - rgx)
-        rgx += 1
-      }
-      w.bits(rangeMask, 16)
-      rgx = 0
-      while (rgx < 16) {
-        if (((rangeMask >> (15 - rgx)) & 1) == 1) {
-          var m2 = 0
-          var k2 = 0
-          while (k2 < 16) { if (used(rgx * 16 + k2)) m2 |= 1 << (15 - k2); k2 += 1 }
-          w.bits(m2, 16)
-        }
-        rgx += 1
-      }
-      w.bits(2, 3) // nGroups = 2 (format minimum), identical tables
-      val nSel = (syms.size() + 49) / 50
-      w.bits(nSel, 15)
-      var sl = 0
-      while (sl < nSel) { w.bits(0, 1); sl += 1 } // selector 0, MTF-coded as '0'
-      var gidx = 0
-      while (gidx < 2) {
-        var cur = lens(0)
-        w.bits(cur, 5)
-        var t = 0
-        while (t < alphaSize) {
-          while (cur < lens(t)) { w.bits(2, 2); cur += 1 } // '10' = increment
-          while (cur > lens(t)) { w.bits(3, 2); cur -= 1 } // '11' = decrement
-          w.bits(0, 1)
-          t += 1
-        }
-        gidx += 1
-      }
-      var t2 = 0
-      while (t2 < syms.size()) {
-        val (c2, l2) = codes(syms.get(t2))
-        w.bits(c2, l2)
-        t2 += 1
-      }
-      off = end
-    }
-    w.bits48(EosMagic)
-    w.bits(combined, 32)
-    w.result()
-  }
-
-  /** Lines of a (multistream or multi-block) `.bz2` on any Hadoop
-    * filesystem: tasks scan owned byte ranges for bit-aligned block
-    * magics and decode those blocks independently — the Hadoop
-    * splittable-bzip2 shape, no index needed. NOTE: a line spanning
-    * two blocks belongs to the block it STARTS in only if callers
-    * reassemble; for the line-oriented shards this face targets
-    * (multistream dumps put whole documents in blocks) the partial
-    * first/last lines of interior blocks are emitted as-is with
-    * their block position, letting a downstream regroup stitch them
-    * (same contract as Hadoop's LineRecordReader over bzip2). */
-  def lines(spark: SparkSession, path: String, splitSize: Long = 32L << 20): DataFrame = {
-    import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf.value)
-    val len = fs.getFileStatus(hp).getLen
-    val head = {
-      val in = fs.open(hp)
-      try { val a = new Array[Byte](4); in.readFully(0, a); a } finally in.close()
-    }
-    if (!(head(0) == 'B' && head(1) == 'Z' && head(2) == 'h')) fail("bzip2: bad stream magic")
-    val level = head(3) - '0'
-    val ranges = (0L until len by splitSize).map(s => (s, math.min(s + splitSize, len)))
-    spark.sparkContext
-      .parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { case (s, e) =>
-        val fs1 = new org.apache.hadoop.fs.Path(path).getFileSystem(conf.value)
-        val in = fs1.open(new org.apache.hadoop.fs.Path(path))
-        try {
-          // a block that starts in-range may extend past the range end:
-          // start with a generous tail (max payload = level*100k, but a
-          // PATHOLOGICAL block can compress LARGER — 23-bit symbols give
-          // ~2.6 MB worst case), and GROW on TruncatedError until the
-          // decode completes (the Tar.entries / WarcZst grow-until-
-          // complete pattern). At tail == len truncation IS corruption
-          // and the candidate drops as a false positive.
-          // growth is CAPPED: a real bzip2 block cannot compress past
-          // ~2.6 MB (23-bit symbols over a level*100k payload), so 64 MiB
-          // of tail covers every conforming stream with two orders of
-          // margin; past the cap a still-truncating candidate is a false
-          // positive decoding garbage off the buffer end (treated as
-          // corruption and dropped), never an unbounded whole-file read
-          val extraCap = 64L << 20
-          var extra = (level.toLong * 100000) + (1 << 20)
-          var blocks: Seq[(Long, Array[Byte])] = null
-          while (blocks == null) {
-            val tail = math.min(len, e + extra)
-            val buf = new Array[Byte]((tail - s).toInt)
-            in.readFully(s, buf)
-            val growable = tail < len && extra < extraCap
-            try blocks = blocksInRange(buf, 0, e - s, level, failOnTruncation = growable)
-            catch { case _: TruncatedError => extra = math.min(extra * 2, extraCap) }
-          }
-          blocks.iterator.flatMap { case (bitPos, payload) =>
-            new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-              .split("\n", -1)
-              .iterator
-              .filter(_.nonEmpty)
-              .map(line => (s * 8 + bitPos, line))
-          }.toSeq
-        } finally in.close()
-      }
-      .toDF("block_bit_pos", "line")
+  /** One bzip2 stream at 100 kB blocks. */
+  def encode(data: Array[Byte]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val os = new BZip2CompressorOutputStream(bos, Level)
+    try os.write(data)
+    finally os.close()
+    bos.toByteArray
   }
 
   // ------------------------------------------------------------------
@@ -681,13 +62,9 @@ object Bzip2 {
   // ------------------------------------------------------------------
 
   /** Per (event_type, id%16 shard): the shard's jsonl cycles through
-    * the REAL bzip2 codec in-task — encode (RLE1 + prefix-doubling
-    * BWT + MTF/RLE2 + canonical Huffman), whole decode byte-equal,
-    * and a bit-aligned block split-ownership sweep at three byte
-    * split sizes (each must reproduce the block set exactly once) —
-    * then counts/char sums with closed forms the oracle states.
-    * Cross-decoder conformance (libbz2 both directions) is
-    * Bzip2Spec's gate. */
+    * bzip2 in-task — encode, then whole decode byte-equal — then
+    * counts/char sums with closed forms the oracle states.
+    * Cross-decoder conformance (libbz2 fixtures) is Bzip2Spec's gate. */
   def bz2Query(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import s.implicits._
@@ -696,16 +73,7 @@ object Bzip2 {
       val sorted = ids.sorted
       val lines = sorted.map(id => s"""{"id":$id,"w":"w${id % 79}"}""")
       val payload = lines.mkString("", "\n", "\n").getBytes(utf8)
-      val enc = Bzip2.encode(payload, level = 1)
-      require(java.util.Arrays.equals(Bzip2.decode(enc), payload), "bz2: whole decode drift")
-      val blocks = blocksInRange(enc, 0, enc.length.toLong, 1)
-      require(java.util.Arrays.equals(blocks.iterator.flatMap(_._2).toArray, payload), "bz2: block concat drift")
-      for (split <- Seq(enc.length.toLong + 3, math.max(8L, enc.length.toLong / 3), 33L)) {
-        val got = (0L until enc.length.toLong by split).flatMap { st =>
-          blocksInRange(enc, st, math.min(st + split, enc.length.toLong), 1)
-        }
-        require(got.map(_._1) == blocks.map(_._1), s"bz2: split $split ownership not exactly-once")
-      }
+      require(java.util.Arrays.equals(Bzip2.decode(Bzip2.encode(payload)), payload), "bz2: whole decode drift")
       Seq(lines.length.toLong, lines.map(_.length.toLong).sum)
     }
     graft.Tables

@@ -495,7 +495,7 @@ object SevenZip {
           case IdLzma1 =>
             if (coder.props.length < 1) fail("7z: LZMA1 coder without props")
             Xz.decodeLzma1(coder.props(0) & 0xff, input, 0, input.length, want)
-          case IdBzip2 => Bzip2.decode(input)
+          case IdBzip2 => Bzip2.decode(input, want)
           case IdDeflate =>
             val inf = new java.util.zip.Inflater(true)
             try {

@@ -12,12 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * core count, so per-file tasks are the right unit and no decoder
   * has to be splittable.
   *
-  * When a corpus instead ships as a few HUGE files, use the
-  * format-specific splittable faces directly: [[ZstdSeek.jsonlLines]]
-  * (seekable frames), [[Xz.jsonlLines]] (concatenated streams),
-  * [[Bzip2.lines]] (bit-aligned block scan) — those split WITHIN a
-  * file. Plain `.jsonl`/`.txt` goes through Spark's native splittable
-  * text reader either way.
+  * Plain `.jsonl`/`.txt` and `.bz2` go through Spark's native text
+  * reader, which splits them WITHIN a file (`.bz2` by block, through
+  * Hadoop's `BZip2Codec`), so one huge `.bz2` is never read whole.
+  * When a corpus instead ships as a few HUGE files in another
+  * encoding, use the format-specific splittable faces directly:
+  * [[ZstdSeek.jsonlLines]] (seekable frames), [[Xz.jsonlLines]]
+  * (concatenated streams).
   *
   * gzip here means whole-member decode via the JDK (multi-member
   * concatenation included); WARC-style gz member SPLIT scanning lives
@@ -70,20 +71,27 @@ object TextShards {
   }
 
   /** (path, line) over a glob of shards in ANY supported compression.
-    * One task per compressed shard; plain-text files go through
-    * Spark's splittable text reader and union in. */
+    * One task per compressed shard; plain-text and `.bz2` files go
+    * through Spark's splittable text reader and union in. `path` is
+    * the file's qualified URI on both sides, the spelling
+    * `input_file_name()` gives. */
   def lines(spark: SparkSession, pattern: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val conf = new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val hp = new org.apache.hadoop.fs.Path(pattern)
     val fs = hp.getFileSystem(conf.value)
-    val files = Option(fs.globStatus(hp)).getOrElse(Array.empty)
-      .filter(_.isFile)
-      .map(st => (st.getPath.toString, st.getLen))
+    // qualified the way the filesystem qualifies the paths it LISTS
+    // (what Spark's reader sees), not the way the glob spelled them
+    // (`file:/x` where a listing says `file:///x`)
+    val files = Option(fs.globStatus(hp)).getOrElse(Array.empty).filter(_.isFile)
+      .map(st => fs.makeQualified(new org.apache.hadoop.fs.Path(st.getPath.toUri.getPath)))
       .toSeq
-    val (plain, compressed) = files.partition { case (p, _) =>
-      val l = p.toLowerCase(java.util.Locale.ROOT)
+    // Spark's reader picks its codec by the exact suffix, so only a
+    // lower-case `.bz2` goes there; `.BZ2` decodes here
+    val (plain, compressed) = files.partition { p =>
+      val l = p.getName.toLowerCase(java.util.Locale.ROOT)
+      p.getName.endsWith(".bz2") ||
       !(l.endsWith(".zst") || l.endsWith(".xz") || l.endsWith(".lzma") ||
         l.endsWith(".bz2") || l.endsWith(".gz") || l.endsWith(".lz4") ||
         l.endsWith(".sz") || l.endsWith(".snappy") || l.endsWith(".br"))
@@ -92,26 +100,26 @@ object TextShards {
       if (compressed.isEmpty) None
       else Some(
         spark.sparkContext
-          .parallelize(compressed, compressed.size)
-          .flatMap { case (path, _) =>
-            val fs1 = new org.apache.hadoop.fs.Path(path).getFileSystem(conf.value)
-            val in = fs1.open(new org.apache.hadoop.fs.Path(path))
+          .parallelize(compressed.map(_.toUri.toString), compressed.size)
+          .flatMap { uri =>
+            val path = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
+            val in = path.getFileSystem(conf.value).open(path)
             val bytes =
               try in.readAllBytes()
               finally in.close()
-            val payload = decodeShard(path, bytes)
+            val payload = decodeShard(path.getName, bytes)
             new String(payload, java.nio.charset.StandardCharsets.UTF_8)
               .split("\n", -1)
               .iterator
               .filter(_.nonEmpty)
-              .map(line => (path, line))
+              .map(line => (uri, line))
           }
           .toDF("path", "line"))
     val plainDf =
       if (plain.isEmpty) None
       else Some(
         spark.read
-          .textFile(plain.map(_._1): _*)
+          .textFile(plain.map(_.toString): _*)
           .select(input_file_name().as("path"), col("value").as("line"))
           .where(length(col("line")) > 0))
     (compressedDf, plainDf) match {
@@ -175,7 +183,7 @@ object TextShards {
       val flavors = Seq(
         "s.jsonl.zst" -> Zstd.encode(payload),
         "s.jsonl.xz" -> Xz.encodeRawXz(payload),
-        "s.jsonl.bz2" -> Bzip2.encode(payload, level = 1),
+        "s.jsonl.bz2" -> Bzip2.encode(payload),
         "s.jsonl.gz" -> gz,
         "s.jsonl.lz4" -> Lz4.encode(payload),
         "s.jsonl.sz" -> Snappy.framedEncode(payload),

@@ -187,7 +187,7 @@ object Zip {
         case 12 => // bzip2: the payload is one complete bzip2 stream
           if (e.uncompressedSize > Int.MaxValue - 8) fail(s"zip: entry too large: ${e.name}")
           val res =
-            try Bzip2.decode(java.util.Arrays.copyOfRange(buf, dataOff, (dataOff + e.compressedSize).toInt))
+            try Bzip2.decode(java.util.Arrays.copyOfRange(buf, dataOff, (dataOff + e.compressedSize).toInt), e.uncompressedSize)
             catch { case b: Bzip2.Bzip2Error => fail(s"zip: corrupt bzip2 data (${b.getMessage}): ${e.name}") }
           if (res.length.toLong != e.uncompressedSize)
             fail(s"zip: bzip2 entry decoded ${res.length} of ${e.uncompressedSize}: ${e.name}")

@@ -2,16 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.sources.Bzip2
+import graft.sources.{Bzip2, TextShards}
 
-/** bzip2 conformance. Decoder pinned byte-exactly against REAL libbz2
-  * output (python's stdlib bz2 binding) across levels 1..9,
-  * multi-block and multistream files; encoder round-trips through the
-  * decoder and was cross-checked byte-exact through libbz2 itself at
-  * build time (6/6 incl. a periodic input that stresses BWT rotation
-  * ties — see tools/Bz2 history in NOTES_r15). The bit-aligned block
-  * split scan is swept through both the pure function and the real
-  * Spark face. */
+/** bzip2 conformance. The commons-compress facade decodes REAL libbz2
+  * output (python's stdlib bz2 binding) byte-exactly across levels
+  * 1..9, multi-block and multistream files, and round-trips its own
+  * encoder. Splitting within a `.bz2` belongs to Spark's text source:
+  * [[TextShards.lines]] over the multi-block and multistream fixtures
+  * must return the exact line multiset at any split size. */
 class Bzip2Spec extends SparkSuite {
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -40,48 +38,44 @@ class Bzip2Spec extends SparkSuite {
       ("z" * 100000).getBytes(Utf8), // long RLE1 runs
       Array.tabulate(250000)(i => ((i * 16807) >> 3).toByte) // multi-block at level 1
     ).foreach { data =>
-      val enc = Bzip2.encode(data, level = 1)
+      val enc = Bzip2.encode(data)
       assert(java.util.Arrays.equals(Bzip2.decode(enc), data), s"round-trip drift at ${data.length} B")
     }
   }
 
-  test("split scan: bit-aligned block ownership is exactly-once over any byte partition") {
-    val bz = Files.readAllBytes(new java.io.File(dir, "text_l1_multiblock.bz2").toPath)
-    val want = Files.readAllBytes(new java.io.File(dir, "text_l1_multiblock.bin").toPath)
-    val whole = Bzip2.blocksInRange(bz, 0, bz.length.toLong, 1)
-    assert(whole.length >= 4, s"fixture must be multi-block, got ${whole.length}")
-    assert(java.util.Arrays.equals(whole.flatMap(_._2).toArray, want), "block concat differs from payload")
-    for (split <- Seq(bz.length.toLong + 1, bz.length.toLong / 3, 64L)) {
-      val got = (0L until bz.length.toLong by split).flatMap { s =>
-        Bzip2.blocksInRange(bz, s, math.min(s + split, bz.length.toLong), 1)
-      }
-      assert(got.map(_._1) == whole.map(_._1), s"split $split: block set drift")
-    }
+  test("decode limit: a stream past the caller's declared size refuses at limit + 1 bytes") {
+    val data = ("z" * 100000).getBytes(Utf8)
+    val enc = Bzip2.encode(data)
+    assert(java.util.Arrays.equals(Bzip2.decode(enc, data.length.toLong), data))
+    intercept[Bzip2.Bzip2Error](Bzip2.decode(enc, data.length - 1L))
+    assert(Bzip2.decode(Array.emptyByteArray, 0L).isEmpty)
+    assert(Bzip2.decode(Bzip2Bomb.stream).length == 1 << 24)
+    val bomb = Bzip2Bomb.payload
+    val used = Bzip2Bomb.allocated(intercept[Bzip2.Bzip2Error](Bzip2.decode(bomb, 100L)))
+    assert(used < (64L << 20), s"bomb allocated ${used >> 20} MiB before the refusal")
   }
 
-  test("lines(): the real Spark face — split sweep over a multi-block jsonl shard") {
-    val tmp = Files.createTempDirectory("bz2-lines")
+  test("lines(): Spark splits multi-block and multistream .bz2 with exact lines") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
     try {
-      val lines = (0 until 5000).map(i => s"""{"id":$i,"w":"${"q" * (i % 37)}"}""")
-      val data = lines.mkString("", "\n", "\n").getBytes(Utf8)
-      val enc = Bzip2.encode(data, level = 1) // ~150 KB payload -> 2+ blocks
-      val p = tmp.resolve("docs.jsonl.bz2")
-      Files.write(p, enc)
-      for (split <- Seq(enc.length.toLong + 7, enc.length.toLong / 2, 2048L)) {
-        val got = Bzip2.lines(spark, p.toString, splitSize = split).collect().map(_.getString(1))
-        // block-interior partial lines: whole lines must dominate and
-        // every complete line must appear exactly once after stitching
-        // (here blocks split mid-payload, so compare the CONCATENATED
-        // text reconstructed in block order)
-        val byPos = Bzip2.lines(spark, p.toString, splitSize = split)
-          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-        assert(got.length >= lines.length - 4 && got.length <= lines.length + 4, s"split $split: line count far off")
+      for (n <- Seq("jsonl_l1_multiblock", "concat_2streams")) {
+        val bz = new java.io.File(dir, n + ".bz2")
+        val want = new String(Files.readAllBytes(new java.io.File(dir, n + ".bin").toPath), Utf8)
+          .split("\n").filter(_.nonEmpty).sorted.toSeq
+        for (split <- Seq(bz.length + 7, bz.length / 3, 2048L)) {
+          spark.conf.set(key, split)
+          val df = TextShards.lines(spark, bz.getAbsolutePath)
+          if (split < bz.length) assert(df.rdd.getNumPartitions > 1, s"$n at split $split: not split")
+          val got = df.collect()
+          assert(got.map(_.getString(1)).sorted.toSeq == want, s"$n at split $split: line multiset drift")
+          assert(got.map(_.getString(0)).distinct.toSeq == Seq(bz.getAbsoluteFile.toPath.toUri.toString),
+            s"$n at split $split: path drift")
+        }
       }
-      // block-order reconstruction equals the payload minus newlines
-      val blocks = Bzip2.blocksInRange(enc, 0, enc.length.toLong, 1)
-      assert(java.util.Arrays.equals(blocks.flatMap(_._2).toArray, data))
-    } finally {
-      tmp.toFile.listFiles().foreach(_.delete()); Files.deleteIfExists(tmp)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
@@ -95,11 +89,11 @@ class Bzip2Spec extends SparkSuite {
       try { Bzip2.decode(bad); () }
       catch { case _: Bzip2.Bzip2Error => () }
     }
-    // flip the randomized bit (bit 80 of the stream = after header+magic+crc)
+    // flip the randomized bit (bit 80 of the stream = after header+magic+crc):
+    // the block then de-randomizes like libbz2 does and its CRC refuses it
     val bad2 = good.clone()
     val bitIdx = (4 + 6 + 4) * 8L // header(4) + block magic(6) + crc(4)
     bad2((bitIdx >> 3).toInt) = (bad2((bitIdx >> 3).toInt) ^ (1 << (7 - (bitIdx & 7)).toInt)).toByte
-    val e = intercept[Bzip2.Bzip2Error](Bzip2.decode(bad2))
-    assert(e.getMessage.contains("randomized"))
+    intercept[Bzip2.Bzip2Error](Bzip2.decode(bad2))
   }
 }

@@ -15,11 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * zstd-jni (com.github.luben), lz4-java (net.jpountz frame streams),
   * snappy-java (org.xerial raw + framed), XZ for Java (org.tukaani —
   * LZMA2 + ALL 8 BCJ filters incl. RISC-V, 1.10), commons-compress
-  * (bzip2 streams; ZipFile reads our method-12/93 archives through
-  * the same live codecs). Brotli has no in-JVM reference decoder in this
-  * container (commons-compress needs the absent org.brotli:dec) — its
-  * lane is a self round-trip here, with real-producer conformance
-  * carried by BrotliSpec's pinned fixtures.
+  * (ZipFile reads our method-12/93 archives through the same live
+  * codecs; bzip2 itself has no in-tree encoder left to grade). Brotli
+  * has no in-JVM reference decoder in this container
+  * (commons-compress needs the absent org.brotli:dec) — its lane is a
+  * self round-trip here, with real-producer conformance carried by
+  * BrotliSpec's pinned fixtures.
   *
   * Corpus shapes (all deterministic, seed 20260816): empty / 1-byte,
   * non-ASCII UTF-8 text, high-byte-dense random, exact block-size
@@ -192,22 +193,6 @@ class EncoderDifferentialFuzzSpec extends AnyFunSuite {
       val os = new org.tukaani.xz.XZOutputStream(bos, filters)
       os.write(data); os.close()
       same(graft.sources.Xz.decode(bos.toByteArray), data, s"tukaani xz/bcj=$id over $cname (our decoder)")
-    }
-  }
-
-  // ----------------------------------------------------------------- bzip2
-
-  test("bzip2: our encoder -> commons-compress; commons-compress -> our decoder") {
-    import graft.sources.Bzip2
-    for ((cname, data) <- corpus) {
-      val in = new org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream(
-        new java.io.ByteArrayInputStream(Bzip2.encode(data)))
-      val back = try in.readAllBytes() finally in.close()
-      same(back, data, s"bzip2 over $cname (commons-compress rejects our stream?)")
-      val bos = new java.io.ByteArrayOutputStream()
-      val os = new org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream(bos)
-      os.write(data); os.close()
-      same(Bzip2.decode(bos.toByteArray), data, s"commons-compress bzip2 over $cname (our decoder)")
     }
   }
 

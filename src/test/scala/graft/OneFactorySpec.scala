@@ -12,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the only callers of the codec libraries behind them,
   * `ParquetMeta` and `OrcMeta` the only callers of parquet-mr and
   * orc-core, `ArrowIpc` and `ArrowSource` the only callers of
-  * arrow-vector and `AvroOcf` the only caller of avro-java, so a
-  * second builder, release loop, endian helper, codec or format entry
-  * point cannot grow back anywhere in main code. */
+  * arrow-vector, `AvroOcf` the only caller of avro-java and `Bzip2`
+  * the only caller of commons-compress, so a second builder, release
+  * loop, endian helper, codec or format entry point cannot grow back
+  * anywhere in main code. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -48,6 +49,13 @@ class OneFactorySpec extends AnyFunSuite {
     assert(matching("""org\.apache\.arrow""") ===
       Seq("graft/sources/ArrowIpc.scala", "graft/sources/ArrowSource.scala"))
     assert(matching("""org\.apache\.avro""") === Seq("graft/sources/AvroOcf.scala"))
+  }
+
+  test("commons-compress is referenced only from Bzip2, Hadoop's bzip2 internals nowhere") {
+    assert(matching("""org\.apache\.commons\.compress""") === Seq("graft/sources/Bzip2.scala"))
+    val hadoopBzip2 = """org\.apache\.hadoop\.io\.compress\.bzip2"""
+    assert(hadoopBzip2.r.findFirstIn("import org.apache.hadoop.io.compress.bzip2.CBZip2InputStream").isDefined)
+    assert(matching(hadoopBzip2) === Seq.empty)
   }
 
   test("the getPersistentRDDs unpersist loop appears only in Lanes") {

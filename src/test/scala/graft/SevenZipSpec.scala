@@ -131,6 +131,14 @@ class SevenZipSpec extends SparkSuite {
     assert(e.getMessage.contains("PPMd"), e.getMessage)
   }
 
+  test("bzip2 bomb: a 2 GiB coder output declaring 100 bytes refuses with SevenZipError") {
+    val folder = SevenZip.Folder(Seq(SevenZip.Coder(0x040202L, 1, 1, Array.emptyByteArray)),
+      Nil, Seq(0), Seq(100L), None)
+    val payload = Bzip2Bomb.payload
+    val used = Bzip2Bomb.allocated(intercept[SevenZip.SevenZipError](SevenZip.decodeFolder(folder, Seq(payload))))
+    assert(used < (64L << 20), s"bomb allocated ${used >> 20} MiB before the refusal")
+  }
+
   test("malformed input raises SevenZipError, never raw index errors") {
     val good = Files.readAllBytes(new java.io.File(dir, "codec_lzma2.7z").toPath)
     // truncations at every interesting boundary

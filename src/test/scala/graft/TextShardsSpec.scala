@@ -7,7 +7,8 @@ import graft.text.Brotli
 
 /** The one-front-door shard-set face: a directory holding the SAME
   * corpus split across shards in nine different encodings (seekable
-  * zstd, xz, bzip2, gzip, lz4, snappy framed + hadoop, brotli, plain) must come back as exactly
+  * zstd, xz, bzip2 under both suffix cases, gzip, lz4, snappy framed +
+  * hadoop, brotli, plain) must come back as exactly
   * the union of all lines through [[TextShards.lines]], with the
   * plain files routed through Spark's splittable text reader. Also
   * pins the misnamed-shard magic sniff. */
@@ -22,13 +23,14 @@ class TextShardsSpec extends SparkSuite {
   }
 
   test("lines(): a mixed-encoding shard directory yields exactly the union of all shard lines") {
-    val dir = Files.createTempDirectory("shards")
+    val dir = Files.createTempDirectory("shards dir") // a space: paths must encode alike
     try {
       val mk = (tag: String, n: Int) => (0 until n).map(i => s"""{"shard":"$tag","i":$i}""")
       val shards: Seq[(String, Seq[String], Array[Byte] => Array[Byte])] = Seq(
         ("a.jsonl.zst", mk("zst", 120), (b: Array[Byte]) => Zstd.encode(b)),
         ("b.jsonl.xz", mk("xz", 80), (b: Array[Byte]) => Xz.encodeRawXz(b)),
-        ("c.jsonl.bz2", mk("bz2", 200), (b: Array[Byte]) => Bzip2.encode(b, 1)),
+        ("c.jsonl.bz2", mk("bz2", 200), (b: Array[Byte]) => Bzip2.encode(b)),
+        ("j.JSONL.BZ2", mk("BZ2", 30), (b: Array[Byte]) => Bzip2.encode(b)),
         ("d.jsonl.gz", mk("gz", 60), gzip _),
         ("e.jsonl.br", mk("br", 90), (b: Array[Byte]) => Brotli.encodeRaw(b)),
         ("g.jsonl.lz4", mk("lz4", 110), (b: Array[Byte]) => Lz4.encode(b)),
@@ -43,11 +45,11 @@ class TextShardsSpec extends SparkSuite {
       val got = TextShards.lines(spark, dir.toString + "/*").collect()
       assert(got.length == expected.length, s"${got.length} lines, want ${expected.length}")
       assert(got.map(_.getString(1)).sorted.toSeq == expected, "line multiset drift")
-      // per-path attribution survives
-      val byPath = got.groupBy(r => r.getString(0).split('/').last)
-      shards.foreach { case (name, lines, _) =>
-        assert(byPath(name).length == lines.length, s"$name: per-shard count drift")
-      }
+      // per-path attribution survives, every row spelling its path as
+      // the file's URI whichever reader produced it
+      val byPath = got.groupBy(_.getString(0)).map { case (p, rows) => p -> rows.length }
+      assert(byPath == shards.map { case (name, lines, _) => dir.resolve(name).toUri.toString -> lines.length }.toMap,
+        s"per-shard paths/counts drift: $byPath")
     } finally {
       dir.toFile.listFiles().foreach(_.delete()); Files.deleteIfExists(dir)
     }
@@ -73,7 +75,7 @@ class TextShardsSpec extends SparkSuite {
         // drop more shards in different encodings — the r16 codecs ride
         // the same dispatch, so the stream twin inherits them
         Files.write(dir.resolve("two.jsonl.bz2"),
-          Bzip2.encode(mk("b", 25).mkString("", "\n", "\n").getBytes(Utf8), 1))
+          Bzip2.encode(mk("b", 25).mkString("", "\n", "\n").getBytes(Utf8)))
         Files.write(dir.resolve("three.jsonl.lz4"),
           Lz4.encode(mk("c", 15).mkString("", "\n", "\n").getBytes(Utf8)))
         Files.write(dir.resolve("four.jsonl.sz"),
@@ -97,7 +99,7 @@ class TextShardsSpec extends SparkSuite {
     val payload = (0 until 50).map(i => s"line $i").mkString("", "\n", "\n").getBytes(Utf8)
     assert(java.util.Arrays.equals(TextShards.decodeShard("x.bin", Zstd.encode(payload)), payload))
     assert(java.util.Arrays.equals(TextShards.decodeShard("x.bin", Xz.encodeRawXz(payload)), payload))
-    assert(java.util.Arrays.equals(TextShards.decodeShard("x.bin", Bzip2.encode(payload, 1)), payload))
+    assert(java.util.Arrays.equals(TextShards.decodeShard("x.bin", Bzip2.encode(payload)), payload))
     assert(java.util.Arrays.equals(TextShards.decodeShard("x.bin", gzip(payload)), payload))
     // multi-member gz (cat of two gzips) decodes fully through the JDK path
     val two = gzip(payload.take(100)) ++ gzip(payload.drop(100))

@@ -174,6 +174,14 @@ class ZipSpec extends SparkSuite {
     intercept[Zip.ZipError](Zip.decodeEntry(bad, eb))
   }
 
+  test("method 12 bomb: a 2 GiB bzip2 payload declaring 100 bytes refuses with ZipError") {
+    val payload = Bzip2Bomb.payload
+    val buf = Array[Byte](0x50, 0x4b, 0x03, 0x04) ++ new Array[Byte](26) ++ payload
+    val e = Zip.Entry("bomb.bin", 12, payload.length.toLong, 100L, 0L, 0L, 0)
+    val used = Bzip2Bomb.allocated(intercept[Zip.ZipError](Zip.decodeEntry(buf, e)))
+    assert(used < (64L << 20), s"bomb allocated ${used >> 20} MiB before the refusal")
+  }
+
   test("method 14 flag semantics: the LZMA fixture's EOS-marked streams decode with the known size") {
     // python-zipfile sets general-purpose bit 1 (EOS marker present);
     // the reader decodes exactly usize bytes and never reads the marker
